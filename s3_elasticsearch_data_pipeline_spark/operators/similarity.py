@@ -771,6 +771,16 @@ def _query_rows_over_cap(rows, max_rows: int) -> bool:
     return len(rows) * dim * 8 > MAX_DRIVER_QUERY_BYTES
 
 
+def _projections_over_leaf(df: DataFrame) -> bool:
+    """True when ``df``'s optimized plan is projections over one leaf
+    relation: no filter, join or aggregate can discard rows, so every
+    row the scan reads is a row the frame returns."""
+    node = df._jdf.queryExecution().optimizedPlan()
+    while node.children().size() == 1 and node.nodeName() == "Project":
+        node = node.children().apply(0)
+    return node.children().size() == 0
+
+
 def _collect_queries_if_serving_sized(queries: DataFrame):
     """Cap-guarded driver fetch of a query frame — the
     ``brute_force_topk_arrow`` acquisition pattern shared by the IVF
@@ -779,10 +789,20 @@ def _collect_queries_if_serving_sized(queries: DataFrame):
     numpy arrays, or None when the frame exceeds
     :data:`MAX_DRIVER_QUERIES` rows or
     :data:`MAX_DRIVER_QUERY_BYTES` of embedding payload (callers then
-    keep the fully distributed join plan)."""
+    keep the fully distributed join plan).
+
+    A limit collect scans one partition, then scales up, so a one-row
+    request spread over several partitions costs two or more jobs. A
+    frame that is projections over one relation reads only the rows it
+    returns, so it is coalesced to one partition first: one job, and
+    the single task stops after ``cap+1`` rows. A filtered (selective)
+    frame keeps the scale-up, which scans its partitions in parallel
+    instead of serially in one task."""
     import numpy as np
-    rows = (queries.select("vec_id", "embedding")
-            .limit(MAX_DRIVER_QUERIES + 1).collect())
+    frame = queries.select("vec_id", "embedding")
+    if _projections_over_leaf(frame):
+        frame = frame.coalesce(1)
+    rows = frame.limit(MAX_DRIVER_QUERIES + 1).collect()
     if _query_rows_over_cap(rows, MAX_DRIVER_QUERIES):
         return None
     if not rows:
@@ -2249,9 +2269,12 @@ def _ivfpq_probe_driver_path(spark, path: str, q, books, residual: bool,
             if outs:
                 yield pd.concat(outs, ignore_index=True)
 
-    cand = (spark.read.parquet(path + "/cells")
-            .where(F.col("cell").isin(probed))
-            .select("vec_id", "cell", "codes")
+    # ONE read of the probed cells feeds both branches (each read
+    # pays its own schema-inference job); column pruning still splits
+    # them into a codes scan and an embedding scan
+    cells = (spark.read.parquet(path + "/cells")
+             .where(F.col("cell").isin(probed)))
+    cand = (cells.select("vec_id", "cell", "codes")
             .mapInPandas(
                 adc_scan,
                 "query_id long, neighbor_id long, adc_dist double"))
@@ -2259,10 +2282,8 @@ def _ivfpq_probe_driver_path(spark, path: str, q, books, residual: bool,
                                                      "neighbor_id")
     shortlist = (cand.withColumn("rank", F.row_number().over(w_short))
                  .where(F.col("rank") <= rerank).drop("rank"))
-    nv = (spark.read.parquet(path + "/cells")
-          .where(F.col("cell").isin(probed))
-          .select(F.col("vec_id").alias("neighbor_id"),
-                  F.col("embedding").alias("__nv")))
+    nv = cells.select(F.col("vec_id").alias("neighbor_id"),
+                      F.col("embedding").alias("__nv"))
     # query vectors are driver data already — a local relation
     # broadcasts without re-executing the caller's query plan; the
     # collected doubles are bit-preserved, so the JVM cosine sees the
@@ -2334,8 +2355,10 @@ def ivfpq_probe_topk(spark, path: str, queries: DataFrame, k: int = 10,
     # driver path: ONE collect replaces the distributed assign pass,
     # the probed-set aggregate, and the cells⋈tables cogroup — see
     # :func:`_ivfpq_probe_driver_path` (r11; the measured ~20 small
-    # driver-blocking jobs per call collapse to ~8). Over-cap frames
-    # keep the fully distributed plan below, bit-identical results.
+    # driver-blocking jobs per call collapse to 6 for a one-row
+    # request: the query fetch, one schema read of the cell store and
+    # the four stages of the result plan). Over-cap frames keep the
+    # fully distributed plan below, bit-identical results.
     fetched = _collect_queries_if_serving_sized(queries)
     if fetched is not None:
         return _ivfpq_probe_driver_path(spark, path, q, books, residual,
@@ -2385,9 +2408,9 @@ def ivfpq_probe_topk(spark, path: str, queries: DataFrame, k: int = 10,
         return spark.createDataFrame(
             [], "query_id long, neighbor_id long, sim double, rank int")
 
-    codes_scan = (spark.read.parquet(path + "/cells")
-                  .where(F.col("cell").isin(probed))
-                  .select("vec_id", "cell", "codes"))
+    cells = (spark.read.parquet(path + "/cells")
+             .where(F.col("cell").isin(probed)))
+    codes_scan = cells.select("vec_id", "cell", "codes")
 
     def adc(left, right):
         import pandas as pd
@@ -2411,12 +2434,10 @@ def ivfpq_probe_topk(spark, path: str, queries: DataFrame, k: int = 10,
                                                      "neighbor_id")
     shortlist = (cand.withColumn("rank", F.row_number().over(w_short))
                  .where(F.col("rank") <= rerank).drop("rank"))
-    # exact rerank: raw vectors only for shortlist rows, read from the
+    # exact rerank: raw vectors only for shortlist rows, from the
     # SAME pruned cell directories (second scan, embedding column)
-    nv = (spark.read.parquet(path + "/cells")
-          .where(F.col("cell").isin(probed))
-          .select(F.col("vec_id").alias("neighbor_id"),
-                  F.col("embedding").alias("__nv")))
+    nv = cells.select(F.col("vec_id").alias("neighbor_id"),
+                      F.col("embedding").alias("__nv"))
     qv = queries.select(F.col("vec_id").alias("query_id"),
                         F.col("embedding").cast("array<double>")
                         .alias("__qv"))

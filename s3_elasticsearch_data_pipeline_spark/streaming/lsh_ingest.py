@@ -31,9 +31,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.errors import AnalysisException
 
+from s3_elasticsearch_data_pipeline_spark.functions.textfns import tokens
 from s3_elasticsearch_data_pipeline_spark.operators.dedup import (
     _lsh_banded, _resolve_bucket_cap, drop_hot_buckets, portable_hash60,
     sig_agreement)
+from s3_elasticsearch_data_pipeline_spark.session import (
+    persistent_rdd_ids, release_persistent_rdds)
 
 
 def _read_optional_parquet(spark: SparkSession, path: str):
@@ -99,6 +102,33 @@ def _check_and_pin_hash_mode(index_path: str, hash_mode: str) -> None:
     os.replace(tmp, marker)
 
 
+_JOB_DESCRIPTION = "spark.job.description"
+
+
+def _banded_with_fallback(df: DataFrame, n: int, num_hashes: int,
+                          bands: int, hash_mode: str) -> DataFrame:
+    """The batch's probe rows: the LSH band rows of every doc with at
+    least ``n`` tokens, plus one exact-text fallback row (band −1,
+    bucket = text hash, constant signature) for every other doc —
+    fewer than ``n`` tokens, empty text or null text. The fallback
+    predicate is the exact complement of ``_lsh_banded``'s shingle
+    filter, so a doc lands in exactly one channel without a second
+    banding pass to find out which."""
+    text_hash = (portable_hash60 if hash_mode == "portable"
+                 else F.xxhash64)
+    banded = _lsh_banded(df, n, num_hashes, bands, hash_mode)
+    # size(tokens(null)) is null: the coalesce routes null text here
+    shingled = F.coalesce(F.size(tokens(F.col("text"))) >= n,
+                          F.lit(False))
+    short = (df.where(~shingled)
+             .select("doc_id",
+                     F.array_repeat(text_hash("text"), num_hashes)
+                     .alias("sig"),
+                     F.lit(-1).alias("band"),
+                     text_hash("text").alias("bucket")))
+    return banded.unionByName(short)
+
+
 def lsh_ingest_stream(spark: SparkSession, source_path: str,
                       corpus_path: str, index_path: str,
                       checkpoint_path: str, n: int = 3,
@@ -144,6 +174,13 @@ def lsh_ingest_stream(spark: SparkSession, source_path: str,
     kill in the torn window between a completed write and the
     checkpoint commit, so tests can assert the replay heals it.
 
+    Jobs: each epoch decides admission once (a cached frame of the
+    dropped doc ids feeds both writes) and labels its jobs per phase
+    with ``setJobDescription`` — ``lsh_ingest epoch=<id>: probe
+    build | admission decision | corpus write | index write`` — so the
+    status store can attribute them; the epoch's checkpoint and cache
+    are released before it returns.
+
     ``hash_mode="portable"``: the engine-portable hash family for the
     whole admission decision — signatures, band buckets, AND the
     exact-text fallback channel (md5-low-60 instead of xxhash64) — so
@@ -167,71 +204,92 @@ def lsh_ingest_stream(spark: SparkSession, source_path: str,
 
     est = sig_agreement(F.col("p.sig"), F.col("i.sig"), num_hashes)
 
-    text_hash = (portable_hash60 if hash_mode == "portable"
-                 else F.xxhash64)
-
-    def _banded_with_fallback(df: DataFrame) -> DataFrame:
-        banded = _lsh_banded(df, n, num_hashes, bands, hash_mode)
-        short = (df.join(banded.select("doc_id").distinct(),
-                         "doc_id", "left_anti")
-                 .select("doc_id",
-                         F.array_repeat(text_hash("text"), num_hashes)
-                         .alias("sig"),
-                         F.lit(-1).alias("band"),
-                         text_hash("text").alias("bucket")))
-        return banded.unionByName(short)
-
-    def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        sess = batch_df.sparkSession
-        probe = _banded_with_fallback(batch_df) \
-            .localCheckpoint(eager=True)
+    def admission_drops(probe: DataFrame, epoch_id: int) -> DataFrame:
+        """Doc ids of the batch that lose admission: a match against
+        the persisted index, or against a lower id of the same batch."""
         # join inputs get the hot-bucket cap (band −1 exempt); the
-        # UNCAPPED probe frame still feeds the index append below —
-        # capped docs are admitted but must stay visible to later
-        # cool-bucket arrivals
+        # UNCAPPED probe frame still feeds the index append — capped
+        # docs are admitted but must stay visible to later cool-bucket
+        # arrivals
         cool_probe = drop_hot_buckets(probe, max_bucket_docs,
                                       exempt_band=-1)
+        # vs lower-id docs of the SAME batch (deterministic greedy:
+        # the lower id is admitted unless it matched the corpus)
+        a, b = cool_probe.alias("p"), cool_probe.alias("i")
+        dropped = (
+            a.join(b, (F.col("p.band") == F.col("i.band"))
+                   & (F.col("p.bucket") == F.col("i.bucket"))
+                   & (F.col("p.doc_id") > F.col("i.doc_id")))
+            .where(est >= threshold)
+            .select(F.col("p.doc_id").alias("doc_id")))
         # vs the persisted index (everything admitted by prior epochs,
         # EXCLUDING any half-written copy of this very epoch — replay
         # must see the same prior-state the failed attempt saw)
-        index = _read_optional_parquet(sess, index_path)
-        matched_corpus = None
+        index = _read_optional_parquet(probe.sparkSession, index_path)
         if index is not None:
             prior = drop_hot_buckets(
                 index.where(F.col("epoch") != epoch_id),
                 max_bucket_docs, exempt_band=-1)
-            matched_corpus = (
+            dropped = dropped.unionByName(
                 cool_probe.alias("p")
                 .join(prior.alias("i"),
                       (F.col("p.band") == F.col("i.band"))
                       & (F.col("p.bucket") == F.col("i.bucket")))
                 .where(est >= threshold)
-                .select(F.col("p.doc_id").alias("doc_id")).distinct())
-        # vs lower-id docs of the SAME batch (deterministic greedy:
-        # the lower id is admitted unless it matched the corpus)
-        a, b = cool_probe.alias("p"), cool_probe.alias("i")
-        matched_batch = (
-            a.join(b, (F.col("p.band") == F.col("i.band"))
-                   & (F.col("p.bucket") == F.col("i.bucket"))
-                   & (F.col("p.doc_id") > F.col("i.doc_id")))
-            .where(est >= threshold)
-            .select(F.col("p.doc_id").alias("doc_id")).distinct())
-        dropped = (matched_batch if matched_corpus is None
-                   else matched_corpus.unionByName(matched_batch)
-                   .distinct())
-        survivors = batch_df.join(dropped, "doc_id", "left_anti")
-        # per-epoch overwrite = idempotent replay (no duplicate rows if
-        # the epoch reruns after a failure before checkpoint commit)
-        (survivors.write.mode("overwrite")
-         .parquet(os.path.join(corpus_path, f"epoch={epoch_id}")))
-        fault("after_corpus_write", epoch_id)
-        (probe.join(dropped, "doc_id", "left_anti")
-         .select("doc_id", "sig", "band", "bucket")
-         .write.mode("overwrite")
-         .parquet(os.path.join(index_path, f"epoch={epoch_id}")))
-        fault("after_index_write", epoch_id)
+                .select(F.col("p.doc_id").alias("doc_id")))
+        return dropped.distinct()
+
+    def handle(batch_df: DataFrame, epoch_id: int) -> None:
+        if batch_df.isEmpty():
+            return
+        sess = batch_df.sparkSession
+        sc = sess.sparkContext
+        prior_description = sc.getLocalProperty(_JOB_DESCRIPTION)
+        pinned_before = persistent_rdd_ids(sess)
+        dropped = None
+
+        def phase(name: str) -> None:
+            sc.setJobDescription(f"lsh_ingest epoch={epoch_id}: {name}")
+
+        try:
+            phase("probe build")
+            probe = _banded_with_fallback(
+                batch_df, n, num_hashes, bands, hash_mode) \
+                .localCheckpoint(eager=True)
+            # the decision runs ONCE: both writes below read the cached
+            # ids (a lazy frame re-ran the whole probe join per write),
+            # and the action records their real size, so each
+            # anti-join plans as a broadcast instead of shuffling both
+            # sides
+            phase("admission decision")
+            dropped = admission_drops(probe, epoch_id).persist()
+            any_dropped = dropped.count() > 0
+
+            def admitted(df: DataFrame) -> DataFrame:
+                return (df.join(dropped, "doc_id", "left_anti")
+                        if any_dropped else df)
+
+            # per-epoch overwrite = idempotent replay (no duplicate
+            # rows if the epoch reruns after a failure before
+            # checkpoint commit)
+            phase("corpus write")
+            (admitted(batch_df).write.mode("overwrite")
+             .parquet(os.path.join(corpus_path, f"epoch={epoch_id}")))
+            fault("after_corpus_write", epoch_id)
+            phase("index write")
+            (admitted(probe)
+             .select("doc_id", "sig", "band", "bucket")
+             .write.mode("overwrite")
+             .parquet(os.path.join(index_path, f"epoch={epoch_id}")))
+            fault("after_index_write", epoch_id)
+        finally:
+            # free the epoch's probe checkpoint and decision cache
+            # (also on a failed epoch: the replay rebuilds both)
+            if dropped is not None:
+                dropped.unpersist()
+            release_persistent_rdds(
+                sess, persistent_rdd_ids(sess) - pinned_before)
+            sc.setLocalProperty(_JOB_DESCRIPTION, prior_description)
 
     q = (stream.writeStream
          .foreachBatch(handle)

@@ -109,8 +109,9 @@ def test_index_surface_job_counts_pinned(spark, emb, tmp_path):
         "ivfpq_append": 3,
         # query collect + ADC scan + shortlist/rerank (r11: driver
         # path — no distributed assign, no probed-set aggregate, no
-        # cells⋈tables cogroup; param loads driver-side. 20 -> 7)
-        "ivfpq_probe": 7,
+        # cells⋈tables cogroup; param loads driver-side. 20 -> 7;
+        # one cells read feeds the ADC scan and the rerank, 7 -> 6)
+        "ivfpq_probe": 6,
         # hyperplane projection + bucket join + rerank; NO dims probe
         "lsh_topk": 7,
     }
@@ -162,6 +163,9 @@ def test_two_level_index_job_counts_pinned(spark, tmp_path):
             lambda: sim.ivfpq_probe_topk(spark, d + "/ivfpq",
                                          queries).collect()),
     }
+    # the probe queries are a FILTERED frame, so their fetch keeps the
+    # limit scale-up, whose job count grows with the partition count:
+    # the probe pins hold at the default 32 cores (SPARK_GRAFT_CPUS)
     pinned = {
         # emptiness probe + corpus count + hash-sample collect +
         # assign/write + supers write + centroids write
@@ -177,8 +181,9 @@ def test_two_level_index_job_counts_pinned(spark, tmp_path):
         "ivfpq2l_build": 11,
         # r11: loads driver-side, 17 -> 3
         "ivfpq2l_append": 3,
-        # r11: driver path + driver-side loads, 28 -> 12
-        "ivfpq2l_probe": 12,
+        # r11: driver path + driver-side loads, 28 -> 12; one cells
+        # read for the ADC scan and the rerank, 12 -> 10
+        "ivfpq2l_probe": 10,
     }
     assert got == pinned, {k: (got[k], pinned[k]) for k in got
                            if got[k] != pinned[k]}
@@ -207,11 +212,35 @@ def test_indexed_margin_mine_job_counts_pinned(spark, emb, tmp_path):
     # here are read from the OTHER index's cell store, adding its scan
     # jobs) + the final margin collect; re-measured r10 after the
     # driver-path probe landed (27/28 -> 23) and r11 after the
-    # kilobyte param loads moved to pyarrow driver reads (23 -> 15).
+    # kilobyte param loads moved to pyarrow driver reads (23 -> 15),
+    # and once unfiltered query scans were fetched from one partition
+    # in one job rather than by a limit scale-up (15 -> 11).
     # The ±1 band covers the known AQE stage-materialization flap —
     # the band still fails loudly on a real regression (a stray
     # per-call probe or rebuild adds ~10 jobs).
-    assert got in (14, 15, 16), got
+    assert got in (10, 11, 12), got
+
+
+def test_query_fetch_is_one_job_unless_filtered(spark, sf_smoke):
+    """The probe's query fetch coalesces a frame that is projections
+    over one relation, so a one-row request spread over several
+    partitions is one job, not a limit scale-up. A filtered frame is
+    left alone: one task would scan every partition serially to find
+    its few rows."""
+    spread = spark.createDataFrame(
+        spark.sparkContext.parallelize([(3, [3.0, 1.0])], 4),
+        "vec_id long, embedding array<double>")
+    assert sim._projections_over_leaf(spread.select("vec_id",
+                                                    "embedding"))
+    got = _count_jobs(spark, "jc-query-fetch",
+                      lambda: sim._collect_queries_if_serving_sized(spread))
+    assert got == 1, got
+    ids, emb = sim._collect_queries_if_serving_sized(spread)
+    assert ids.tolist() == [3] and emb.tolist() == [[3.0, 1.0]]
+    scan = spark.read.parquet(os.path.join(sf_smoke, "embeddings.parquet"))
+    assert sim._projections_over_leaf(scan.select("vec_id", "embedding"))
+    assert not sim._projections_over_leaf(
+        scan.where("vec_id < 5").select("vec_id", "embedding"))
 
 
 def test_corpus_training_set_v2_job_count_pinned(spark, sf_smoke):

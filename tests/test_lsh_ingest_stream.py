@@ -243,3 +243,93 @@ def test_hash_mode_repin_allowed_while_index_empty(tmp_path):
     _check_and_pin_hash_mode(index, "portable")  # recorded mode still ok
     # no stray temp file left behind
     assert not os.path.exists(os.path.join(index, "_HASH_MODE.tmp"))
+
+
+def test_fallback_channel_routes_the_docs_the_banding_skips(spark):
+    """Every doc the banding skips (null text, empty or blank text,
+    fewer than ``n`` tokens) takes the exact-text fallback row, and
+    every doc it bands takes none: the token-count predicate selects
+    the same rows as the anti-join against the banded doc ids that it
+    replaced."""
+    from s3_elasticsearch_data_pipeline_spark.operators.dedup import (
+        _lsh_banded, portable_hash60)
+    from s3_elasticsearch_data_pipeline_spark.streaming.lsh_ingest import (
+        _banded_with_fallback)
+    n, num_hashes, bands = 3, 16, 4
+    docs = spark.createDataFrame(
+        [(1, None), (2, ""), (3, "   "), (4, "two tokens"),
+         (5, "exactly three tokens"), (6, "  padded   three  tokens "),
+         (7, " ".join(f"word{i}" for i in range(40))), (8, "tiny")],
+        "doc_id long, text string")
+
+    def anti_join_definition(df, hash_mode):
+        text_hash = (portable_hash60 if hash_mode == "portable"
+                     else F.xxhash64)
+        banded = _lsh_banded(df, n, num_hashes, bands, hash_mode)
+        short = (df.join(banded.select("doc_id").distinct(), "doc_id",
+                         "left_anti")
+                 .select("doc_id",
+                         F.array_repeat(text_hash("text"), num_hashes)
+                         .alias("sig"),
+                         F.lit(-1).alias("band"),
+                         text_hash("text").alias("bucket")))
+        return banded.unionByName(short)
+
+    def rows(df):
+        return sorted((r["doc_id"], tuple(r["sig"]), r["band"],
+                       r["bucket"]) for r in df.collect())
+
+    for hash_mode in ("xxhash64", "portable"):
+        got = rows(_banded_with_fallback(docs, n, num_hashes, bands,
+                                         hash_mode))
+        assert got == rows(anti_join_definition(docs, hash_mode))
+        assert {d for d, _, band, _ in got if band == -1} == \
+            {1, 2, 3, 4, 8}
+
+
+def test_epoch_corpus_and_index_admit_the_same_docs(spark, sf_smoke,
+                                                    tmp_path):
+    """One admission decision per epoch feeds both writes: in every
+    ``epoch=`` partition the corpus doc ids equal the distinct index
+    doc ids, across drops holding in-batch and cross-batch near-dups
+    and short exact copies."""
+    from s3_elasticsearch_data_pipeline_spark.streaming.lsh_ingest import (
+        _read_optional_parquet)
+    src = str(tmp_path / "src")
+    corpus, index = str(tmp_path / "c"), str(tmp_path / "i")
+    docs = _docs(spark, sf_smoke).select("doc_id", "text")
+    base = docs.where(F.col("doc_id") < 20)
+    shorts = spark.createDataFrame([(900, "hello world"), (901, "tiny")],
+                                   "doc_id long, text string")
+    # drop 1: in-batch near-dups (re-spaced copies under higher ids)
+    (base.unionByName(shorts)
+     .unionByName(base.where(F.col("doc_id") % 2 == 0).select(
+         (F.col("doc_id") + 500_000).alias("doc_id"),
+         F.regexp_replace("text", " ", "  ").alias("text")))
+     .write.parquet(src))
+    args = (spark, src, corpus, index, str(tmp_path / "k"))
+    lsh_ingest_stream(*args)
+    # drop 2: cross-batch copies of drop 1, fresh docs and an in-batch
+    # copy of a fresh doc
+    fresh = docs.where((F.col("doc_id") >= 20) & (F.col("doc_id") < 35))
+    (base.withColumn("doc_id", F.col("doc_id") + 100_000)
+     .unionByName(shorts.withColumn("doc_id", F.col("doc_id") + 100_000))
+     .unionByName(fresh)
+     .unionByName(fresh.where(F.col("doc_id") == 20)
+                  .withColumn("doc_id", F.lit(600_000).cast("long")))
+     .write.mode("append").parquet(src))
+    lsh_ingest_stream(*args)
+
+    def ids_by_epoch(df):
+        out: dict[int, set[int]] = {}
+        for r in df.select("epoch", "doc_id").distinct().collect():
+            out.setdefault(r["epoch"], set()).add(r["doc_id"])
+        return out
+
+    admitted = ids_by_epoch(_read_optional_parquet(spark, corpus))
+    indexed = ids_by_epoch(_read_optional_parquet(spark, index))
+    assert len(admitted) == 2 and admitted == indexed
+    offered = {r["doc_id"] for r in
+               spark.read.parquet(src).select("doc_id").collect()}
+    assert sum(map(len, admitted.values())) < len(offered)
+    assert not any(i >= 100_000 for ids in admitted.values() for i in ids)
