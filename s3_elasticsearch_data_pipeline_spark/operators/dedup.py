@@ -1595,6 +1595,10 @@ def duplicate_spans(documents: DataFrame, k: int = 10,
                                 "start": np.concatenate(starts_out),
                                 "h": np.concatenate(hs_out)})
 
+    # Measured rejection: a .repartition("h") after the mapInPandas (so
+    # the dup aggregate and the spans⋈dup join could share one
+    # exchange) got no exchange reuse — both AQE stage jobs still ran
+    # the Python kernel, and the call stayed at 12 jobs.
     spans = (base.where(F.col("n_tokens") >= k)
              .select("doc_id", "th")
              .mapInPandas(span_hashes,

@@ -15,7 +15,7 @@ any IEEE-754 engine.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -31,6 +31,8 @@ RANK_ROW_BYTES = 32
 #: serving-sized graph. (The old limit was a 10M-node COUNT — ~300 MB,
 #: the very size its own comment called past any sane threshold.)
 BROADCAST_RANKS_BUDGET_BYTES = 64 * 1024 * 1024
+
+_JOB_DESCRIPTION = "spark.job.description"
 
 #: r11: the AQE-off window moved to ``session.aqe_disabled`` — one
 #: shared lock for every scoped toggle in the package.
@@ -68,7 +70,22 @@ def pagerank(edges: DataFrame, iters: int = 3, damping: float = 0.85,
     The per-node contribution sums accumulate in DECIMAL(28,14) — exact,
     so both strategies produce bit-identical ranks regardless of
     partitioning or summation order.
+
+    Jobs carry the description ``pagerank: degrees`` or ``pagerank:
+    iterate``; the caller's description is restored on return.
     """
+    sc = edges.sparkSession.sparkContext
+    prior_description = sc.getLocalProperty(_JOB_DESCRIPTION)
+    try:
+        return _pagerank(edges, iters, damping, broadcast_ranks,
+                         broadcast_budget_bytes, materialize)
+    finally:
+        sc.setLocalProperty(_JOB_DESCRIPTION, prior_description)
+
+
+def _pagerank(edges: DataFrame, iters: int, damping: float,
+              broadcast_ranks: bool | None, broadcast_budget_bytes: int,
+              materialize: bool) -> DataFrame:
     # Materialize the incoming edge plan ONCE: callers typically hand in
     # an expensive pipeline (join+distinct), and the degree pass, the
     # edges_d checkpoint, and the node-set derivation would otherwise
@@ -82,15 +99,26 @@ def pagerank(edges: DataFrame, iters: int = 3, damping: float = 0.85,
     from s3_elasticsearch_data_pipeline_spark.session import (
         persistent_rdd_ids, release_persistent_rdds)
     spark = edges.sparkSession
+    spark.sparkContext.setJobDescription("pagerank: degrees")
     before = persistent_rdd_ids(spark)
     # lazy edge checkpoint, materialized as a side effect of the eager
     # degree checkpoint right below — one pass over the edge plan, not
     # two (the degree aggregate has to scan every edge anyway)
     edges = edges.localCheckpoint(eager=False)
+    # node count — a driver-safe scalar, never the rows — observed on
+    # the degree checkpoint's own action: the eager checkpoint fills
+    # the observation with no job of its own, where ``deg.count()``
+    # cost 2. Unnamed, so concurrent calls cannot collide on a metric
+    # name. Measured rejection: running this checkpoint under
+    # aqe_disabled saved one more job (18 -> 17) but fanned every
+    # later stage out to 32-way tasks.
+    n_obs = Observation()
     deg = (edges.groupBy(F.col("src").alias("node"))
            .agg(F.count(F.lit(1)).alias("__deg"))
+           .observe(n_obs, F.count(F.lit(1)).alias("n"))
            .localCheckpoint(eager=True))
-    n = deg.count()  # node count — a driver-safe scalar, never the rows
+    n = n_obs.get["n"]
+    spark.sparkContext.setJobDescription("pagerank: iterate")
     if broadcast_ranks is None:
         broadcast_ranks = n * RANK_ROW_BYTES <= broadcast_budget_bytes
     hint = F.broadcast if broadcast_ranks else (lambda d: d)

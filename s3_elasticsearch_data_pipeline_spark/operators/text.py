@@ -44,10 +44,11 @@ def token_counts(documents: DataFrame) -> DataFrame:
                     .alias("n_distinct_tokens")))
 
 
-def quality_scores(documents: DataFrame) -> DataFrame:
-    """Heuristic quality scoring: length, lexical diversity, stopword
-    rate, punctuation/alpha balance — the standard cheap pre-filters a
-    training-data pipeline applies before expensive model scoring."""
+def _quality_score_cols(documents: DataFrame):
+    """``(documents + __toks, {name: expression})`` — the per-row
+    quality columns, built ONCE for both :func:`quality_scores` (which
+    projects them) and :func:`quality_kept_rows` (which filters on
+    them), so the two forms cannot drift."""
     toks = F.col("__toks")  # named column — see token_counts note
     documents = documents.withColumn("__toks", tokens(F.col("text")))
     n_tok = F.size(toks)
@@ -71,13 +72,22 @@ def quality_scores(documents: DataFrame) -> DataFrame:
 
     quality = round6(0.3 * length_score + 0.3 * diversity
                      + 0.2 * alpha_ratio + 0.2 * stop_score)
+    return documents, {
+        "n_tokens": n_tok,
+        "lexical_diversity": round6(diversity),
+        "alpha_ratio": round6(alpha_ratio),
+        "n_stopword_hits": n_stop,
+        "quality_score": quality,
+    }
+
+
+def quality_scores(documents: DataFrame) -> DataFrame:
+    """Heuristic quality scoring: length, lexical diversity, stopword
+    rate, punctuation/alpha balance — the standard cheap pre-filters a
+    training-data pipeline applies before expensive model scoring."""
+    documents, cols = _quality_score_cols(documents)
     return documents.select(
-        "doc_id",
-        n_tok.alias("n_tokens"),
-        round6(diversity).alias("lexical_diversity"),
-        round6(alpha_ratio).alias("alpha_ratio"),
-        n_stop.alias("n_stopword_hits"),
-        quality.alias("quality_score"))
+        "doc_id", *[c.alias(name) for name, c in cols.items()])
 
 
 def language_id(documents: DataFrame) -> DataFrame:
@@ -168,20 +178,37 @@ def idf_table(documents: DataFrame) -> DataFrame:
                     .alias("idf")))
 
 
+def quality_kept_rows(documents: DataFrame, min_quality: float = 0.55,
+                      langs: tuple[str, ...] = ("en", "de", "fr", "es"),
+                      min_tokens: int = 20,
+                      max_tokens: int = 1000) -> DataFrame:
+    """The ``documents`` rows (every input column) that pass the
+    curation filter chain: language allowlist + token-length window +
+    heuristic quality threshold, applied as ONE filtered scan.
+
+    The score is a per-row expression (:func:`_quality_score_cols`),
+    so no join is needed. ``doc_id`` is the documents key — the DuckDB
+    twin inner-joins the scores back on it and every fixture has
+    unique ids — and under that contract this filter returns exactly
+    the rows of a ``doc_id`` semi-join of ``documents`` against
+    ``quality_scores(documents)``, with one scan and tokenization of
+    the input instead of two."""
+    scored, cols = _quality_score_cols(documents)
+    return (scored.where(F.col("lang").isin(*langs)
+                         & (cols["quality_score"] >= min_quality)
+                         & cols["n_tokens"].between(min_tokens, max_tokens))
+            .drop("__toks"))
+
+
 def quality_filter(documents: DataFrame, min_quality: float = 0.55,
                    langs: tuple[str, ...] = ("en", "de", "fr", "es"),
                    min_tokens: int = 20, max_tokens: int = 1000) -> DataFrame:
-    """The canonical corpus-curation filter chain: language allowlist +
-    token-length window + heuristic quality threshold, returning the
-    surviving document rows. Composes quality_scores via a semi-join on
-    doc_id; at scale both sides partition on doc_id so the join is
-    co-located after the score shuffle."""
-    scored = quality_scores(documents)
-    keep = (scored.where((F.col("quality_score") >= min_quality)
-                         & F.col("n_tokens").between(min_tokens, max_tokens))
-            .select("doc_id"))
-    return (documents.where(F.col("lang").isin(*langs))
-            .join(keep, "doc_id", "left_semi")
+    """The canonical corpus-curation filter chain → surviving document
+    rows ``(doc_id, lang, source, n_chars)``: :func:`quality_kept_rows`
+    (one filtered scan; same rows as a semi-join on the unique
+    ``doc_id`` key) plus a projection."""
+    return (quality_kept_rows(documents, min_quality, langs,
+                              min_tokens, max_tokens)
             .select("doc_id", "lang", "source", "n_chars"))
 
 

@@ -4761,11 +4761,13 @@ def q_corpus_curation_pipeline(spark, sf_dir):
     exact dedup (min id per content hash) -> eval-set decontamination
     (drop anything sharing a 4-gram with the src0 benchmark slice) ->
     deterministic train/val/test split. Every stage is the registered
-    operator composed unchanged; the oracle composes their SQL twins."""
+    operator (or its shared expression builder) composed unchanged; the
+    oracle composes their SQL twins."""
     docs = _t(spark, sf_dir, "documents")
-    kept = text.quality_filter(docs)                       # id,lang,source,..
-    kept_docs = docs.join(kept.select("doc_id"), "doc_id", "left_semi")
-    surv = (kept_docs.select(F.md5("text").alias("h"), "doc_id")
+    # the filter chain as ONE filtered scan of the document rows (text
+    # included, for the dedup hash) — no semi-join back onto docs
+    kept = text.quality_kept_rows(docs)
+    surv = (kept.select(F.md5("text").alias("h"), "doc_id")
             .groupBy("h").agg(F.min("doc_id").alias("doc_id"))
             .select("doc_id"))
     contaminated = text.contamination_overlap(docs).select("doc_id")
@@ -4773,9 +4775,13 @@ def q_corpus_curation_pipeline(spark, sf_dir):
              .where(F.col("source") != "src0")
              .join(surv, "doc_id", "left_semi")
              .join(contaminated, "doc_id", "left_anti"))
-    split = text.dataset_split(clean).select("doc_id", "split")
-    return clean.join(split, "doc_id").select("doc_id", "lang", "source",
-                                              "split")
+    # split attached INLINE (the shared expression dataset_split uses):
+    # joining dataset_split(clean) back on doc_id would be a self-join
+    # whose right side re-runs the quality filter, the dedup aggregate
+    # and the contamination screen; doc_id is unique, so same rows
+    _, split_col = text.split_assignment_cols()
+    return clean.select("doc_id", "lang", "source",
+                        split_col.alias("split"))
 
 
 @register("text_repetition_scores", """
@@ -6122,9 +6128,8 @@ def q_corpus_training_set_v2(spark, sf_dir):
     from s3_elasticsearch_data_pipeline_spark.operators import ml
     docs = _t(spark, sf_dir, "documents")
     emb = _t(spark, sf_dir, "embeddings")
-    kept = text.quality_filter(docs)
-    kept_docs = docs.join(kept.select("doc_id"), "doc_id", "left_semi")
-    surv = (kept_docs.select(F.md5("text").alias("h"), "doc_id")
+    kept = text.quality_kept_rows(docs)
+    surv = (kept.select(F.md5("text").alias("h"), "doc_id")
             .groupBy("h").agg(F.min("doc_id").alias("doc_id"))
             .select("doc_id"))
     contaminated = text.contamination_overlap(docs).select("doc_id")

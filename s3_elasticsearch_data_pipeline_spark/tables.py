@@ -10,8 +10,10 @@ from __future__ import annotations
 
 import os
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region", "nation", "customer", "supplier", "part",
@@ -34,11 +36,62 @@ def table_path(sf_dir: str, name: str) -> str:
 NANOS_TS_COLS: dict[str, tuple[str, ...]] = {"events": ("ts",)}
 
 
+#: Session confs that change what parquet schema inference returns for
+#: one file; part of every :data:`_SCHEMA_CACHE` key.
+_SCHEMA_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.caseSensitive",
+)
+
+#: (qualified path, length, mtime, inference confs) → inferred
+#: StructType. Inferring a parquet schema runs one Spark job per read;
+#: a file with the same (length, mtime) has the same footer, so later
+#: loads pass the memoized schema instead (the :data:`_ROW_GROUP_CACHE`
+#: argument). Keyed on the Hadoop ``FileStatus``, so it holds for any
+#: Hadoop-FS URI (``file://``, ``s3a://``), not only bare local paths.
+#: Two racing first loads of one file both infer and store the same
+#: schema, so the memo needs no lock.
+_SCHEMA_CACHE: dict[tuple, StructType] = {}
+
+
+def _schema_key(spark: SparkSession, path: str) -> tuple | None:
+    """Memo key of a parquet FILE, or None for a directory or a path
+    the FileSystem cannot stat (the plain read then raises as before)."""
+    jvm = spark._jvm
+    try:
+        p = jvm.org.apache.hadoop.fs.Path(path)
+        fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
+        st = fs.getFileStatus(p)
+    except Py4JJavaError:
+        return None
+    if not st.isFile():
+        return None
+    confs = tuple(spark.conf.get(c, None) for c in _SCHEMA_INFERENCE_CONFS)
+    return (fs.makeQualified(st.getPath()).toString(), st.getLen(),
+            st.getModificationTime(), confs)
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers a file's schema once per
+    (file version, inference confs) — see :data:`_SCHEMA_CACHE`."""
+    key = _schema_key(spark, path)
+    schema = _SCHEMA_CACHE.get(key) if key is not None else None
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    if key is not None:
+        _SCHEMA_CACHE[key] = df.schema
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     nanos_cols = NANOS_TS_COLS.get(name, ())
     if nanos_cols:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(table_path(sf_dir, name))
+    df = _read_parquet(spark, table_path(sf_dir, name))
     dtypes = dict(df.dtypes)
     for c in nanos_cols:
         if dtypes.get(c) == "bigint":
@@ -55,7 +108,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 #: (path, size, mtime) → row-group count; parquet footers are immutable
-#: for a given (size, mtime), so entries never go stale.
+#: for a given (size, mtime), so entries never go stale. The same
+#: argument keys :data:`_SCHEMA_CACHE`, the inferred-schema memo of
+#: :func:`load_table`.
 _ROW_GROUP_CACHE: dict[tuple[str, int, float], int] = {}
 
 

@@ -38,6 +38,9 @@ FAST_CORE = (
     "text_quality_scores",
     "text_bpe_encode",
     "text_unigram_encode",
+    "corpus_quality_filter",
+    "corpus_curation_pipeline",
+    "corpus_training_set",
     "corpus_training_set_v2",
     "graph_pagerank_trade",
     "image_decode_jpeg",

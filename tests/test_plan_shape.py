@@ -592,9 +592,10 @@ def test_corpus_broadcasts_are_stats_driven_and_flip_at_scale(
     assert names_expected == {
         # r11: 4 -> 2 — inline shuffle assignment stopped the shuf
         # branch from re-executing (and re-broadcasting) the curated
-        # subtree
-        "corpus_training_set": 2,
-        "corpus_curation_pipeline": 2,
+        # subtree; 2 -> 1 — inline split assignment did the same for
+        # the split self-join's right side
+        "corpus_training_set": 1,
+        "corpus_curation_pipeline": 1,
         "contamination_ngram_overlap": 1,
         "multimodal_curation": 0,
         # r9: the production dedup-at-ingest's per-side hot-bucket

@@ -96,9 +96,11 @@ FLIP_SURVIVORS = {
     # r11: 4 -> 2 — the dataset_shuffle self-join left the v1 plan
     # (shuffle assignment attached inline), so the curated subtree
     # (and its two eval-gram broadcasts) is no longer duplicated
-    # across the mixed/shuf branches
-    "corpus_training_set": 2,
-    "corpus_curation_pipeline": 2,
+    # across the mixed/shuf branches. 2 -> 1: the split attaches
+    # inline too, so the contamination screen (one eval-gram
+    # broadcast) runs once instead of on both sides of a self-join
+    "corpus_training_set": 1,
+    "corpus_curation_pipeline": 1,
     "contamination_ngram_overlap": 1,
     "multimodal_curation": 0,
     # r9: the production dedup-at-ingest exposes the shared hot-bucket
