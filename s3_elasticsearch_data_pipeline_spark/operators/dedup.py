@@ -36,6 +36,8 @@ from s3_elasticsearch_data_pipeline_spark.functions.textfns import (
 from s3_elasticsearch_data_pipeline_spark.tables import (
     parallelize_for_compute)
 from s3_elasticsearch_data_pipeline_spark.functions.vector import cosine
+from s3_elasticsearch_data_pipeline_spark.operators.quantizer import (
+    _TARGET_CELL_OCCUPANCY, _quantizer_cells_fn, _train_quantizer)
 
 
 def exact_dedup(documents: DataFrame) -> DataFrame:
@@ -787,233 +789,6 @@ def connected_components(pairs: DataFrame, max_iter: int = 25,
     return labels
 
 
-#: Target vectors per blocking cell under auto-sizing: n_cells ∝ n
-#: keeps the within-cell pair term LINEAR in the corpus (occupancy
-#: constant), where the r6 sqrt rule kept occupancy ~sqrt(8n) and the
-#: within-cell term ~n^1.5 — at 10^10 vectors that is ~3×10^5-row
-#: cells whose scoring dwarfs the scan. 64 also resolves the auto rule
-#: to 8 cells at the 500-vector oracle SFs, which is what the DuckDB
-#: twins encode.
-_TARGET_CELL_OCCUPANCY = 64
-
-#: Cell count at which assignment switches from one flat k-means
-#: quantizer to the two-level (coarse → sub) construction. Flat
-#: assignment is O(n·n_cells) — fine until a few dozen cells, and the
-#: oracle SFs must stay flat (the unrolled k-means CTE replays the
-#: flat trainer); past this, training n_cells centroids directly is
-#: the bottleneck and the two-level path costs O(n·(n_super+n_sub))
-#: = O(n·sqrt(n_cells)) instead.
-_TWO_LEVEL_MIN_CELLS = 64
-
-
-def _lloyd_cosine_np(x, k: int, iters: int):
-    """Driver-side Lloyd with the same ASSIGNMENT/UPDATE RULE as the
-    distributed ``similarity._kmeans_centroids`` (cosine argmax
-    assignment, mean centroid rounded to 6, init = first ``k`` rows —
-    callers pass rows already sorted by vec_id). NOT bit-identical to
-    the distributed trainer on the same rows: this path rounds with
-    correctly-rounded Python ``round`` over a numpy pairwise-summed
-    mean, while the distributed trainer uses ``F.round(F.avg(...), 6)``
-    (HALF_UP over the engine's accumulation order) — the two can
-    differ at rounding boundaries, so no SQL twin may ever be pinned
-    to a two-level-trained path without first unifying the rounding.
-    Used to train the per-supercluster sub-quantizers of the two-level
-    blocking on bounded samples, the FAISS practice for coarse
-    quantizers (training never needs the full corpus; only assignment
-    touches it)."""
-    import numpy as np
-    k = min(k, len(x))
-    c = x[:k].copy()
-    for _ in range(iters):
-        e = x / np.maximum(np.linalg.norm(x, axis=1, keepdims=True),
-                           1e-30)
-        cn = c / np.maximum(np.linalg.norm(c, axis=1, keepdims=True),
-                            1e-30)
-        assign = (e @ cn.T).argmax(axis=1)
-        for j in range(k):
-            mask = assign == j
-            if mask.any():
-                c[j] = np.array([round(float(v), 6)
-                                 for v in x[mask].mean(axis=0)])
-    return c
-
-
-#: Driver budget for the two-level training sample (rows). 128k rows
-#: at 64 dims ≈ 67 MB — kilobyte-scale vs executor memory, and enough
-#: for ~39 training rows per centroid (the FAISS floor,
-#: :func:`similarity.recommended_train_sample`) up to ~3.3k cells.
-#: Past that the per-centroid sample thins gracefully (quantizer
-#: quality degrades smoothly; recall is protected by multi-assign +
-#: exact rerank, not by centroid precision).
-_TWO_LEVEL_TRAIN_BUDGET_ROWS = 128 * 1024
-
-
-def _train_two_level_centroids(embeddings: DataFrame, n_cells: int,
-                               iters: int, n_rows: int | None = None):
-    """Two-level coarse quantizer for corpus-proportional cell counts
-    (n_cells ∝ n): a flat trainer assigns every vector against every
-    centroid per Lloyd round — O(n·n_cells) = O(n²/occupancy), the
-    exact blow-up constant occupancy was meant to remove. Instead,
-    the FAISS recipe — quantizers train on a SAMPLE, only assignment
-    touches the corpus:
-
-    1. ONE deterministic hash-sample (``xxhash64(vec_id) % p == 0``,
-       sized to ~39 rows per centroid within
-       :data:`_TWO_LEVEL_TRAIN_BUDGET_ROWS`) collected to the driver —
-       the only training job, corpus-size-independent;
-    2. ``n_super = ceil(sqrt(n_cells))`` superclusters via driver
-       Lloyd (:func:`_lloyd_cosine_np`, same semantics as the
-       distributed trainer), then per supercluster
-       ``n_sub = ceil(n_cells/n_super)`` sub-centroids on the
-       sample rows that land there.
-
-    Assignment then chains two small matmuls (super, then sub) —
-    O(n·sqrt(n_cells)) total. Returns (super_centroids,
-    sub_centroid_list, offsets) where global cell id =
-    ``offsets[s] + local_sub_index``. Centroid storage is
-    n_cells × dims — inherent to any IVF-family structure at that
-    cell count (FAISS holds the same matrix in RAM)."""
-    import math
-
-    import numpy as np
-
-    n_super = max(2, math.ceil(math.sqrt(n_cells)))
-    n_sub = math.ceil(n_cells / n_super)
-    want = min(_TWO_LEVEL_TRAIN_BUDGET_ROWS,
-               max(2048, 39 * n_super * n_sub))
-    n = embeddings.count() if n_rows is None else n_rows
-    # ceiling division: a floored divisor lets n just under 2·want
-    # collect nearly twice the documented driver budget
-    p = max(1, -(-n // want))
-    rows = (embeddings.select("vec_id", "embedding")
-            .where(F.pmod(F.xxhash64(F.col("vec_id")), p) == 0)
-            .collect())
-    rows.sort(key=lambda r: r["vec_id"])  # deterministic Lloyd init
-    x = np.array([list(r["embedding"]) for r in rows],
-                 dtype=np.float64)
-    super_cents = _lloyd_cosine_np(x, n_super, iters)
-    cn = super_cents / np.maximum(
-        np.linalg.norm(super_cents, axis=1, keepdims=True), 1e-30)
-    e = x / np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-30)
-    assign = (e @ cn.T).argmax(axis=1)
-    subs, offsets = [], {}
-    next_id = 0
-    for s in range(len(super_cents)):
-        xs = x[assign == s]
-        if not len(xs):
-            # empty supercluster: its own centroid is the one cell, so
-            # any future vector landing there still has a home
-            sub = super_cents[s:s + 1].copy()
-        else:
-            sub = _lloyd_cosine_np(xs, n_sub, iters)
-        subs.append(sub)
-        offsets[s] = next_id
-        next_id += len(sub)
-    return super_cents, subs, offsets
-
-
-def _two_level_assign_fn(super_cents, subs, offsets, n_assign: int):
-    """Arrow-batched two-level multi-assignment: probe the ``n_assign``
-    nearest superclusters, take the ``n_assign`` best sub-cells inside
-    each, keep the overall ``n_assign`` best by cosine (stable
-    tie-break: super rank, then sub order — deterministic under any
-    partitioning). Emits (vec_id, cell, vec) rows exactly like the
-    flat assigner, so the pair kernel downstream is unchanged."""
-    import numpy as np
-
-    sub_norm = [s / np.maximum(np.linalg.norm(s, axis=1, keepdims=True),
-                               1e-30) for s in subs]
-    sup_norm = (super_cents
-                / np.maximum(np.linalg.norm(super_cents, axis=1,
-                                            keepdims=True), 1e-30))
-    off = offsets
-
-    def run(batches):
-        import pandas as pd
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            emb = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            n = len(emb)
-            e = emb / np.maximum(
-                np.linalg.norm(emb, axis=1, keepdims=True), 1e-30)
-            n_probe = min(n_assign, len(sup_norm))
-            sup_order = np.argsort(-(e @ sup_norm.T), axis=1,
-                                   kind="stable")[:, :n_probe]
-            width = n_probe * n_assign
-            cand_sims = np.full((n, width), -np.inf)
-            cand_cells = np.full((n, width), -1, dtype=np.int64)
-            for j in range(n_probe):
-                col = sup_order[:, j]
-                for s in np.unique(col):
-                    rows = np.nonzero(col == s)[0]
-                    sims = e[rows] @ sub_norm[s].T
-                    take = min(n_assign, sims.shape[1])
-                    ord_ = np.argsort(-sims, axis=1,
-                                      kind="stable")[:, :take]
-                    lo = j * n_assign
-                    cand_sims[rows[:, None], lo + np.arange(take)] = \
-                        np.take_along_axis(sims, ord_, axis=1)
-                    cand_cells[rows[:, None], lo + np.arange(take)] = \
-                        off[int(s)] + ord_
-            pick = np.argsort(-cand_sims, axis=1,
-                              kind="stable")[:, :n_assign]
-            cells = np.take_along_axis(cand_cells, pick, axis=1)
-            sims = np.take_along_axis(cand_sims, pick, axis=1)
-            valid = np.isfinite(sims).reshape(-1)
-            take_n = cells.shape[1]
-            yield pd.DataFrame({
-                "vec_id": pdf["vec_id"].to_numpy()
-                .repeat(take_n)[valid],
-                "cell": cells.reshape(-1)[valid],
-                "vec": [v for v, ok in zip(
-                    np.repeat(emb, take_n, axis=0), valid) if ok],
-            })
-
-    return run
-
-
-def _blocking_assign_fn(train: DataFrame, n_cells: int, iters: int,
-                        n_assign: int, n_rows: int | None = None):
-    """The shared cell-blocking assigner: train a coarse quantizer on
-    ``train`` (flat below :data:`_TWO_LEVEL_MIN_CELLS`, two-level
-    above — see :func:`_train_two_level_centroids`) and return a
-    ``mapInPandas`` function emitting (vec_id, cell, vec) rows with
-    each vector multi-assigned to its ``n_assign`` nearest cells.
-    Used by both the within-corpus blocked near-dup and the
-    dedup-at-ingest probe (which assigns BATCH vectors against cells
-    trained on the prior corpus)."""
-    import numpy as np
-
-    from s3_elasticsearch_data_pipeline_spark.operators.similarity import (
-        _kmeans_centroids, _nearest_cells)
-
-    if n_cells >= _TWO_LEVEL_MIN_CELLS:
-        return _two_level_assign_fn(
-            *_train_two_level_centroids(train, n_cells, iters,
-                                        n_rows=n_rows), n_assign)
-    centroids = _kmeans_centroids(train, n_cells, iters)
-
-    def assign_fn(batches):
-        import pandas as pd
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            emb = np.stack(pdf["embedding"].to_numpy()) \
-                .astype(np.float64)
-            # THE shared cell-assignment kernel (clamps take when the
-            # corpus trained fewer centroids than n_assign)
-            order = _nearest_cells(emb, centroids, n_assign)
-            take = order.shape[1]
-            yield pd.DataFrame({
-                "vec_id": pdf["vec_id"].to_numpy().repeat(take),
-                "cell": order.reshape(-1),
-                "vec": list(np.repeat(emb, take, axis=0)),
-            })
-
-    return assign_fn
-
-
 def embedding_blocked_near_dup(embeddings: DataFrame,
                                threshold: float = 0.3,
                                n_cells: int | None = None,
@@ -1034,11 +809,11 @@ def embedding_blocked_near_dup(embeddings: DataFrame,
     kept occupancy ~sqrt(8n), so the within-cell pair term grew ~n^1.5;
     constant occupancy makes it linear). n_cells ∝ n is untrainable
     flat (assignment alone is O(n·n_cells)), so past
-    ``_TWO_LEVEL_MIN_CELLS`` the quantizer becomes two-level —
-    sqrt(n_cells) superclusters trained corpus-wide, sub-quantizers
-    trained driver-side on bounded per-super samples, assignment two
-    chained matmuls = O(n·sqrt(n_cells)) (see
-    :func:`_train_two_level_centroids`). At both oracle SFs
+    ``quantizer.IVF_TWO_LEVEL_MIN_CELLS`` the quantizer becomes
+    two-level — sqrt(n_cells) superclusters, sub-quantizers trained
+    driver-side on bounded per-super samples, assignment two chained
+    matmuls = O(n·sqrt(n_cells)) (see
+    :func:`quantizer._train_two_level_centroids`). At both oracle SFs
     (500 vectors) the rule resolves to 8 FLAT cells, which is what the
     DuckDB twins encode; the one extra ``count()`` is metadata-fast on
     parquet sources.
@@ -1063,13 +838,13 @@ def embedding_blocked_near_dup(embeddings: DataFrame,
         return embeddings.sparkSession.createDataFrame(
             [], "vec_id_a long, vec_id_b long, cosine_sim double")
     import math
-    import numpy as np
     n_rows = None
     if n_cells is None:
         n_rows = embeddings.count()
         n_cells = max(8, math.ceil(n_rows / _TARGET_CELL_OCCUPANCY))
-    assign_fn = _blocking_assign_fn(embeddings, n_cells, iters,
-                                    n_assign, n_rows=n_rows)
+    assign_fn = _quantizer_cells_fn(
+        _train_quantizer(embeddings, n_cells, iters, n_rows=n_rows),
+        n_assign, carry_vec=True)
     cells = (embeddings.select("vec_id", "embedding")
              .mapInPandas(assign_fn,
                           "vec_id long, cell int, vec array<double>"))
@@ -1315,7 +1090,7 @@ def incremental_semantic_dedup(embeddings: DataFrame,
         cells  = coarse quantizer trained on the PRIOR CORPUS only
                  (add-after-train, like the IVF ingest loops) — flat
                  k-means at small cell counts, the two-level sample-
-                 trained quantizer past ``_TWO_LEVEL_MIN_CELLS``;
+                 trained quantizer past the two-level gate;
         probe  = batch multi-assigned to its ``n_assign`` nearest
                  cells, cogrouped per cell against the corpus rows of
                  the same cells — candidates only where cells collide,
@@ -1345,8 +1120,9 @@ def incremental_semantic_dedup(embeddings: DataFrame,
     if n_cells is None:
         n_rows = corpus.count()
         n_cells = max(8, math.ceil(n_rows / _TARGET_CELL_OCCUPANCY))
-    assign_fn = _blocking_assign_fn(corpus, n_cells, iters, n_assign,
-                                    n_rows=n_rows)
+    assign_fn = _quantizer_cells_fn(
+        _train_quantizer(corpus, n_cells, iters, n_rows=n_rows),
+        n_assign, carry_vec=True)
     schema = "vec_id long, cell int, vec array<double>"
     corpus_cells = (corpus.select("vec_id", "embedding")
                     .mapInPandas(assign_fn, schema))

@@ -17,7 +17,7 @@ contributions), making training bit-reproducible on any cluster shape.
 ``n_cells`` semantics split (vs the index family): the domain
 operators (:func:`domain_mixture` / :func:`domain_reweight`) take a
 FIXED ``n_cells`` (default 8) and honor it verbatim, while the index
-builders route through ``similarity.auto_n_cells`` occupancy sizing.
+builders route through ``quantizer.auto_n_cells`` occupancy sizing.
 Deliberate: an index's cell count is a PHYSICAL tuning knob (target
 rows-per-cell for probe cost — the engine should pick it from corpus
 size), but a domain count is a MODELING choice (DoReMi/Pile mix over
@@ -35,6 +35,8 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from s3_elasticsearch_data_pipeline_spark.operators.quantizer import (
+    _Quantizer, _kmeans_centroids, _quantizer_cells_fn)
 from s3_elasticsearch_data_pipeline_spark.tables import (
     parallelize_for_compute)
 
@@ -233,14 +235,12 @@ def domain_mixture(documents: DataFrame, embeddings: DataFrame,
     and low diversity are the down-weighting candidates.
 
     Determinism/scale: the shared coarse-quantizer trainer
-    (``similarity._kmeans_centroids`` — deterministic init, round-6
+    (``quantizer._kmeans_centroids`` — deterministic init, round-6
     centroid updates) and one single-assignment pass; per-domain stats
     aggregate exactly (share and avg length derive from integer/exact
     DECIMAL sums with a single double division each — no
     summation-order noise for the oracle to chase). One shuffle, on
     the cell key."""
-    from s3_elasticsearch_data_pipeline_spark.operators.similarity import (
-        _cell_assign_fn, _kmeans_centroids)
     # null embeddings (or null elements) can't be domain-assigned and
     # would crash np.stack in the Arrow kernels — same pre-filter as
     # embedding_blocked_near_dup / incremental_semantic_dedup. The
@@ -250,9 +250,9 @@ def domain_mixture(documents: DataFrame, embeddings: DataFrame,
     embeddings = embeddings.where(
         F.col("embedding").isNotNull()
         & F.forall("embedding", lambda x: x.isNotNull()))
-    cents = _kmeans_centroids(embeddings, n_cells, iters)
+    q = _Quantizer(_kmeans_centroids(embeddings, n_cells, iters))
     assigned = (embeddings.select("vec_id", "embedding")
-                .mapInPandas(_cell_assign_fn(cents, 1),
+                .mapInPandas(_quantizer_cells_fn(q, 1),
                              "vec_id long, cell int"))
     total = embeddings.count()
     joined = assigned.join(
@@ -326,8 +326,6 @@ def domain_reweight(documents: DataFrame, embeddings: DataFrame,
     recomputes them bit-identically. One shuffle (the count), one
     assignment pass; documents without a (non-null) embedding can't
     be domain-assigned and are excluded, like the report."""
-    from s3_elasticsearch_data_pipeline_spark.operators.similarity import (
-        _cell_assign_fn, _kmeans_centroids)
     if mode not in ("downsample", "resample"):  # before any Spark job
         raise ValueError("domain_reweight: unknown mode %r "
                          "(downsample|resample)" % (mode,))
@@ -352,10 +350,10 @@ def domain_reweight(documents: DataFrame, embeddings: DataFrame,
                  .select("embedding").collect())
     if not init_rows:
         return spark.createDataFrame([], out_schema)
-    cents = _kmeans_centroids(embeddings, n_cells, iters,
-                              init_rows=init_rows)
+    q = _Quantizer(_kmeans_centroids(embeddings, n_cells, iters,
+                                     init_rows=init_rows))
     assigned = (embeddings.select("vec_id", "embedding")
-                .mapInPandas(_cell_assign_fn(cents, 1),
+                .mapInPandas(_quantizer_cells_fn(q, 1),
                              "vec_id long, cell int"))
     # AQE-off scope (r11): this is an n_cells-row aggregate — AQE's
     # per-stage re-plan turns the one collect into two driver-blocking

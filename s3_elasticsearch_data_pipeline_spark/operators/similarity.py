@@ -31,6 +31,10 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from s3_elasticsearch_data_pipeline_spark.functions.vector import cosine
+from s3_elasticsearch_data_pipeline_spark.operators.quantizer import (
+    _init_rows, _load_quantizer, _q_nearest_cells, _quantizer_cells_fn,
+    _read_param_table, _train_quantizer, _write_centroid_tables,
+    auto_n_cells)
 
 
 def _rademacher_plane(plane_id: int, dims: int) -> list[float]:
@@ -185,398 +189,6 @@ def embedding_centroids(embeddings: DataFrame) -> DataFrame:
             .agg(F.round(F.avg("component"), 8).alias("centroid")))
 
 
-def _kmeans_centroids(embeddings: DataFrame, n_cells: int,
-                      iters: int, init_rows=None) -> "np.ndarray":
-    """Deterministic mini k-means for IVF coarse cells: init = the
-    ``n_cells`` lowest vec_ids, then Lloyd iterations with assignment
-    in Arrow/numpy and centroid update as a posexplode aggregate. The
-    (n_cells × dims) centroid matrix is driver-collected each round —
-    kilobytes, independent of corpus size. ``init_rows`` lets a caller
-    that already fetched the init sample (doubling as its emptiness
-    probe — one job instead of two) pass it through."""
-    import numpy as np
-    init = (init_rows if init_rows is not None
-            else embeddings.orderBy("vec_id").limit(n_cells)
-            .select("embedding").collect())
-    centroids = np.array([list(r[0]) for r in init], dtype=np.float64)
-
-    for _ in range(iters):
-        cents = centroids  # capture for the closure
-
-        def assign(batches):
-            import pandas as pd
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                emb = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-                # cosine assignment on normalized rows
-                e = emb / np.linalg.norm(emb, axis=1, keepdims=True)
-                c = cents / np.linalg.norm(cents, axis=1, keepdims=True)
-                cell = (e @ c.T).argmax(axis=1)
-                yield pd.DataFrame({"cell": cell,
-                                    "embedding": list(emb)})
-
-        assigned = embeddings.select("embedding").mapInPandas(
-            assign, "cell int, embedding array<double>")
-        rows = (assigned
-                .select("cell", F.posexplode("embedding")
-                        .alias("dim", "component"))
-                .groupBy("cell", "dim")
-                .agg(F.round(F.avg("component"), 6).alias("c"))  # order-stable
-                .collect())
-        new = centroids.copy()
-        for r in rows:
-            new[r.cell][r.dim] = r.c
-        centroids = new
-    return centroids
-
-
-def _nearest_cells(emb, centroids, n_take: int):
-    """THE cosine nearest-cell math (normalize both sides, one matmul,
-    stable argsort so ties break to the lowest cell index on every
-    partitioning): (N, take) cell indices. Every IVF/IVF-PQ surface —
-    inline search, index build, ingest append, persisted probe — MUST
-    route through this one kernel: the build/probe equivalence
-    contracts are pinned to index-build cell assignment and query cell
-    probing staying in exact lockstep. ``n_take`` is clamped to the
-    trained cell count (tiny corpora train fewer centroids than
-    n_cells; a ragged repeat/reshape would crash otherwise)."""
-    import numpy as np
-    e = emb / np.linalg.norm(emb, axis=1, keepdims=True)
-    c = centroids / np.linalg.norm(centroids, axis=1, keepdims=True)
-    sims = e @ c.T
-    take = min(n_take, centroids.shape[0])
-    return np.argsort(-sims, axis=1, kind="stable")[:, :take]
-
-
-def _cell_assign_fn(centroids, n_take: int):
-    """Arrow-batched cell assignment against a fixed centroid matrix
-    (kilobytes, shipped in the closure) — mapInPandas wrapper around
-    :func:`_nearest_cells`."""
-    import numpy as np
-
-    def run(batches):
-        import pandas as pd
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            emb = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            order = _nearest_cells(emb, centroids, n_take)
-            yield pd.DataFrame({
-                "vec_id": pdf["vec_id"].to_numpy()
-                .repeat(order.shape[1]),
-                "cell": order.reshape(-1),
-            })
-    return run
-
-
-#: Cell count at which index TRAINING and ASSIGNMENT switch from the
-#: flat construction (distributed Lloyd over the full corpus +
-#: one-matmul nearest-cell assignment) to the two-level construction
-#: r7 built for dedup blocking (``dedup._train_two_level_centroids``).
-#: Flat training is O(n·n_cells) per Lloyd round — the n^1.5 class at
-#: FAISS-style n_cells ∝ √n — and the oracle SFs must stay flat (the
-#: unrolled k-means CTEs replay the flat trainer); past this gate,
-#: training moves to a bounded driver sample and assignment to two
-#: chained matmuls, O(n·√n_cells). Same gate value as
-#: ``dedup._TWO_LEVEL_MIN_CELLS``.
-IVF_TWO_LEVEL_MIN_CELLS = 64
-
-
-class _Quantizer:
-    """The coarse quantizer of an IVF-family index: always carries the
-    FLAT (n_cells × dims) centroid matrix (global cell id = row — the
-    residual-encode and persistence contract), plus the two-level
-    structure (super centroids, per-super sub-centroid blocks, global
-    id offsets) when trained past :data:`IVF_TWO_LEVEL_MIN_CELLS`.
-    Global sub-cell ids are CONTIGUOUS per super, so
-    ``centroids[offsets[s]:offsets[s]+len(subs[s])] == subs[s]``."""
-
-    __slots__ = ("centroids", "super_cents", "subs", "offsets")
-
-    def __init__(self, centroids, super_cents=None, subs=None,
-                 offsets=None):
-        self.centroids = centroids
-        self.super_cents = super_cents
-        self.subs = subs
-        self.offsets = offsets
-
-    @property
-    def two_level(self) -> bool:
-        return self.super_cents is not None
-
-
-def _as_quantizer(q):
-    """Accept either a raw centroid matrix (the pre-r8 calling
-    convention — tests and flat-only callers still pass ndarrays) or a
-    :class:`_Quantizer`."""
-    return q if isinstance(q, _Quantizer) else _Quantizer(q)
-
-
-def _train_quantizer(embeddings: DataFrame, n_cells: int, iters: int,
-                     init_rows=None) -> _Quantizer:
-    """Train the coarse quantizer for an IVF/IVF-PQ index. Below
-    :data:`IVF_TWO_LEVEL_MIN_CELLS`: the distributed flat trainer,
-    byte-identical to the pre-r8 behavior (and to the unrolled k-means
-    oracle CTEs). At or above: the two-level FAISS-style construction
-    — quantizers train on a bounded deterministic driver sample
-    (``dedup._train_two_level_centroids``), only assignment touches
-    the corpus — with the sub-centroids flattened into the global
-    (n_cells × dims) matrix the persistence layer and residual encode
-    already speak."""
-    if n_cells < IVF_TWO_LEVEL_MIN_CELLS:
-        return _Quantizer(_kmeans_centroids(embeddings, n_cells, iters,
-                                            init_rows=init_rows))
-    import numpy as np
-
-    from s3_elasticsearch_data_pipeline_spark.operators.dedup import (
-        _train_two_level_centroids)
-    sup, subs, offsets = _train_two_level_centroids(
-        embeddings.select("vec_id", "embedding"), n_cells, iters)
-    return _Quantizer(np.vstack(subs), sup, subs, offsets)
-
-
-def _two_level_nearest_cells(emb, super_cents, subs, offsets,
-                             n_take: int):
-    """The two-level twin of :func:`_nearest_cells`: probe the
-    ``n_take`` nearest superclusters, rank each one's sub-cells, keep
-    the overall ``n_take`` best GLOBAL cell ids by cosine (stable
-    tie-break: supercluster rank, then sub order — deterministic under
-    any partitioning). Returns an (N, ≤n_take·n_take) → sliced
-    (N, n_take) id matrix that may contain ``-1`` padding when fewer
-    candidates exist than requested (tiny quantizers); callers mask
-    negatives. Cost per row: O(n_super + n_probe·max_sub) =
-    O(√n_cells), vs the flat kernel's O(n_cells)."""
-    import numpy as np
-    e = emb / np.maximum(np.linalg.norm(emb, axis=1, keepdims=True),
-                         1e-30)
-    sup = super_cents / np.maximum(
-        np.linalg.norm(super_cents, axis=1, keepdims=True), 1e-30)
-    sub_norm = [s / np.maximum(np.linalg.norm(s, axis=1, keepdims=True),
-                               1e-30) for s in subs]
-    n = len(emb)
-    n_probe = min(n_take, len(sup))
-    sup_order = np.argsort(-(e @ sup.T), axis=1,
-                           kind="stable")[:, :n_probe]
-    width = n_probe * n_take
-    cand_sims = np.full((n, width), -np.inf)
-    cand_cells = np.full((n, width), -1, dtype=np.int64)
-    for j in range(n_probe):
-        col = sup_order[:, j]
-        for s in np.unique(col):
-            rows = np.nonzero(col == s)[0]
-            sims = e[rows] @ sub_norm[s].T
-            take = min(n_take, sims.shape[1])
-            ord_ = np.argsort(-sims, axis=1, kind="stable")[:, :take]
-            lo = j * n_take
-            cand_sims[rows[:, None], lo + np.arange(take)] = \
-                np.take_along_axis(sims, ord_, axis=1)
-            cand_cells[rows[:, None], lo + np.arange(take)] = \
-                offsets[int(s)] + ord_
-    pick = np.argsort(-cand_sims, axis=1, kind="stable")[:, :n_take]
-    return np.take_along_axis(cand_cells, pick, axis=1)
-
-
-def auto_n_cells(n_vectors: int) -> int:
-    """Constant-target-occupancy IVF sizing — THE sizing rule for
-    every auto-sized index build (the inline ANN miner, the mine-only
-    registry surface): ``max(16, ceil(n / occupancy))``. One shared
-    definition so a change to the rule cannot desync the surfaces
-    that claim bit-identity with each other (the r8 fixed-cell-count
-    trap measured 7.3× at 10×; this rule measured 1.17×)."""
-    import math
-
-    from s3_elasticsearch_data_pipeline_spark.operators.dedup import (
-        _TARGET_CELL_OCCUPANCY)
-    return max(16, math.ceil(n_vectors / _TARGET_CELL_OCCUPANCY))
-
-
-def _q_nearest_cells(q: _Quantizer, emb, n_take: int):
-    """Quantizer-dispatching nearest-cells: the flat kernel
-    (:func:`_nearest_cells` — never padded) below the two-level gate,
-    the chained two-matmul kernel (may pad with -1) above it."""
-    if not q.two_level:
-        return _nearest_cells(emb, q.centroids, n_take)
-    return _two_level_nearest_cells(emb, q.super_cents, q.subs,
-                                    q.offsets, n_take)
-
-
-def _quantizer_cells_fn(q: _Quantizer, n_take: int,
-                        carry_vec: bool = False):
-    """Arrow-batched (vec_id, cell[, vec]) assignment against a
-    quantizer — the dispatching twin of :func:`_cell_assign_fn`
-    (bit-identical to it on flat quantizers); -1 padding rows from a
-    tiny two-level quantizer are dropped. ``carry_vec=True`` also
-    emits the embedding per assignment row — the cell-store shape the
-    streaming semantic ingest persists (ONE definition of the
-    padding-drop contract for every assignment site)."""
-    import numpy as np
-
-    def run(batches):
-        import pandas as pd
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            emb = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            order = _q_nearest_cells(q, emb, n_take)
-            take = order.shape[1]
-            ids = pdf["vec_id"].to_numpy().repeat(take)
-            cells = order.reshape(-1)
-            ok = cells >= 0
-            out = {"vec_id": ids[ok], "cell": cells[ok]}
-            if carry_vec:
-                out["vec"] = list(np.repeat(emb, take, axis=0)[ok])
-            yield pd.DataFrame(out)
-    return run
-
-
-def _write_centroid_tables(spark, path: str, q: _Quantizer) -> None:
-    """Persist the quantizer's kilobyte parameter tables. Flat:
-    ``{path}/centroids`` (cell, centroid) — byte-identical to the
-    pre-r8 layout, so old indexes and old readers interoperate.
-    Two-level: the COMMIT MARKER is ``{path}/centroids``. Any stale
-    centroid table is DELETED first, then ``{path}/supers`` (super,
-    centroid) is written, then ``{path}/centroids`` (gaining a
-    ``super`` column) is written last — so a crash anywhere before
-    the final write leaves no centroid table and reads as UNTRAINED,
-    never as a mixed-generation quantizer (old centroids routing into
-    new supers). :func:`_load_quantizer` additionally validates
-    super/offset consistency so even an externally-produced torn pair
-    fails loudly instead of mis-routing probes. A flat overwrite of a
-    previously two-level path needs no cleanup: staleness is decided
-    by the ``super`` column, not by the supers directory."""
-    if not q.two_level:
-        (spark.createDataFrame(
-            [(i, [float(x) for x in q.centroids[i]])
-             for i in range(len(q.centroids))],
-            "cell int, centroid array<double>")
-         .write.mode("overwrite").parquet(path + "/centroids"))
-        return
-    import shutil
-    shutil.rmtree(path + "/centroids", ignore_errors=True)
-    (spark.createDataFrame(
-        [(s, [float(x) for x in q.super_cents[s]])
-         for s in range(len(q.super_cents))],
-        "super int, centroid array<double>")
-     .write.mode("overwrite").parquet(path + "/supers"))
-    rows = []
-    for s in sorted(q.offsets):
-        for i in range(len(q.subs[s])):
-            cell = q.offsets[s] + i
-            rows.append((cell, [float(x) for x in q.subs[s][i]], s))
-    (spark.createDataFrame(
-        rows, "cell int, centroid array<double>, super int")
-     .write.mode("overwrite").parquet(path + "/centroids"))
-
-
-def _read_param_table(spark, path: str):
-    """Driver-side read of one KILOBYTE parameter table (centroids /
-    supers / codebooks / meta) as a list of dict rows, or None when
-    absent/empty/unreadable.
-
-    r11: these tables are kilobytes BY DESIGN (the quantizer any IVF
-    structure holds in RAM), yet each Spark-side
-    ``read.parquet(...).orderBy(...).collect()`` scheduled 2-4 jobs
-    (schema inference + range-partition sampling + the collect) —
-    10 of the PQ probe's measured 17 per-call jobs were parameter
-    loads. pyarrow reads the same files driver-side with ZERO jobs
-    (`_SUCCESS` markers are skipped by its default ``_``/``.`` prefix
-    filter); callers sort driver-side. The Spark read remains as the
-    fallback for storage pyarrow cannot reach (the local-FS fast path
-    mirrors the ``os.path.exists`` checks these loaders already
-    perform)."""
-    import os
-    if not os.path.exists(path):
-        return None
-    try:
-        import pyarrow.parquet as pq
-        rows = pq.read_table(path).to_pylist()
-    except Exception:
-        try:
-            rows = [r.asDict() for r in
-                    spark.read.parquet(path).collect()]
-        except Exception:  # torn/empty dir → schema inference fails
-            return None
-    return rows or None
-
-
-def _load_quantizer(spark, path: str):
-    """The persisted coarse quantizer at ``path``, or None when
-    untrained — including the torn two-level write (centroids rows
-    carry a ``super`` column but the supers table is absent/empty):
-    per the :func:`_write_centroid_tables` order that state is
-    impossible from a completed write, so it reads as untrained and
-    the caller retrains deterministically. Centroid storage is
-    n_cells × dims — the matrix any IVF structure holds in RAM."""
-    import numpy as np
-    rows = _read_param_table(spark, path + "/centroids")
-    if rows is None:
-        return None
-    rows.sort(key=lambda r: r["cell"])
-    flat = np.array([list(r["centroid"]) for r in rows],
-                    dtype=np.float64)
-    if "super" not in rows[0]:
-        return _Quantizer(flat)
-    srows = _read_param_table(spark, path + "/supers")
-    if srows is None:
-        return None
-    srows.sort(key=lambda r: r["super"])
-    sup = np.array([list(r["centroid"]) for r in srows],
-                   dtype=np.float64)
-    subs, offsets = [], {}
-    by_super: dict[int, list] = {}
-    for r in rows:  # already in ascending-cell order
-        by_super.setdefault(r["super"], []).append(r)
-    # Torn-pair validation: the centroid table is the commit marker
-    # (written last by _write_centroid_tables), so a completed write
-    # always references exactly the supers it was trained with.  A
-    # mismatch here means the two tables are from different
-    # generations (e.g. an external copy, or a pre-commit-marker
-    # writer crashed mid-rebuild) — fail loudly rather than build a
-    # quantizer that routes probes into the wrong sub-centroid blocks.
-    if set(by_super) != set(range(len(srows))):
-        raise ValueError(
-            "torn IVF index at %r: centroids reference supers %r but "
-            "the supers table has %d rows — the two parameter tables "
-            "are from different generations; rebuild the index"
-            % (path, sorted(by_super), len(srows)))
-    expect = 0
-    for s in range(len(srows)):
-        block = by_super[s]
-        if [r["cell"] for r in block] != list(
-                range(expect, expect + len(block))):
-            raise ValueError(
-                "torn IVF index at %r: super %d's cells %r are not "
-                "the contiguous block starting at %d — the parameter "
-                "tables are from different generations; rebuild the "
-                "index" % (path, s, [r["cell"] for r in block],
-                           expect))
-        offsets[s] = expect
-        expect += len(block)
-        subs.append(np.array([list(r["centroid"]) for r in block],
-                             dtype=np.float64))
-    return _Quantizer(flat, sup, subs, offsets)
-
-
-def _load_centroids(spark, path: str):
-    """The kilobyte centroid table of a persisted IVF index as an
-    (n_cells × dims) ndarray, or None when the index is untrained —
-    including the never-bootstrapped case where the centroid dir does
-    not exist yet (a streaming ingest that saw only empty batches).
-    Any other read failure propagates: a corrupt centroid table must
-    not be mistaken for 'untrained'."""
-    import os
-
-    import numpy as np
-    if not os.path.exists(path + "/centroids"):
-        return None
-    rows = (spark.read.parquet(path + "/centroids")
-            .orderBy("cell").collect())
-    if not rows:
-        return None
-    return np.array([list(r["centroid"]) for r in rows], dtype=np.float64)
-
-
 def _guard_not_stream_layout(path: str, op: str) -> None:
     """Refuse batch appends into a STREAM-built cell store. Streaming
     ingest lands files under ``{index}/cells/epoch=<id>/cell=<c>/``;
@@ -617,12 +229,11 @@ def _guard_not_batch_layout(path: str, op: str) -> None:
             "index_append for this index instead." % (op, path))
 
 
-def _assign_and_write(embeddings: DataFrame, centroids, cells_dir: str,
+def _assign_and_write(embeddings: DataFrame, q, cells_dir: str,
                       mode: str) -> None:
-    """Assign every vector its nearest cell and write into the
-    cell-partitioned store at ``cells_dir`` (callers pass
-    ``{index}/cells`` or a per-epoch subdir of it). ``centroids`` is a
-    :class:`_Quantizer` or a raw flat matrix. Repartitions on the
+    """Assign every vector its nearest cell under the quantizer ``q``
+    and write into the cell-partitioned store at ``cells_dir`` (callers
+    pass ``{index}/cells`` or a per-epoch subdir of it). Repartitions on the
     partition column BEFORE the partitioned write: otherwise every
     upstream task opens a writer per cell it sees — up to tasks ×
     n_cells tiny files (the classic partitioned-write small-files bug;
@@ -631,8 +242,7 @@ def _assign_and_write(embeddings: DataFrame, centroids, cells_dir: str,
     file size with spark.sql.files.maxRecordsPerFile instead of more
     partitions."""
     assigned = (embeddings.select("vec_id", "embedding")
-                .mapInPandas(_quantizer_cells_fn(_as_quantizer(centroids),
-                                                 1),
+                .mapInPandas(_quantizer_cells_fn(q, 1),
                              "vec_id long, cell int")
                 .join(embeddings.select(
                     "vec_id",
@@ -659,7 +269,7 @@ def build_ivf_index(embeddings: DataFrame, path: str,
     init + stable argmax, so rebuilds are bit-identical and the
     inline ``ivf_topk`` agrees with build+probe exactly (tested).
 
-    ``n_cells`` at or above :data:`IVF_TWO_LEVEL_MIN_CELLS` switches
+    ``n_cells`` at or above :data:`quantizer.IVF_TWO_LEVEL_MIN_CELLS` switches
     training to the sample-based two-level quantizer and assignment
     to the chained two-matmul kernel — O(n·√n_cells) instead of the
     flat trainer's O(n·n_cells) per Lloyd round (the n^1.5 class at
@@ -668,15 +278,7 @@ def build_ivf_index(embeddings: DataFrame, path: str,
     through the identical quantizer.
     """
     spark = embeddings.sparkSession
-    # one probe job: for the flat path the k-means init fetch doubles
-    # as the emptiness check (see build_ivfpq_index); the two-level
-    # path trains from a hash sample, so its probe is limit(1) — a
-    # limit(n_cells) collect at FAISS-style cell counts would drag
-    # n_cells rows to the driver for nothing
-    flat = n_cells < IVF_TWO_LEVEL_MIN_CELLS
-    init_rows = (embeddings.orderBy("vec_id")
-                 .limit(n_cells if flat else 1)
-                 .select("embedding").collect())
+    init_rows = _init_rows(embeddings, n_cells)  # also the empty probe
     if not init_rows:
         spark.createDataFrame([], "vec_id long, cell int, "
                                   "embedding array<double>") \
@@ -685,8 +287,7 @@ def build_ivf_index(embeddings: DataFrame, path: str,
         spark.createDataFrame([], "cell int, centroid array<double>") \
              .write.mode("overwrite").parquet(path + "/centroids")
         return
-    q = _train_quantizer(embeddings, n_cells, iters,
-                         init_rows=init_rows if flat else None)
+    q = _train_quantizer(embeddings, n_cells, iters, init_rows=init_rows)
     _assign_and_write(embeddings, q, path + "/cells", "overwrite")
     _write_centroid_tables(spark, path, q)
 
@@ -991,18 +592,14 @@ def ivf_topk(embeddings: DataFrame, queries: DataFrame, k: int = 10,
     (cells are the IVF index); queries touch only probed partitions —
     partition pruning IS the index lookup. Deterministic end-to-end
     (fixed init, argmax ties break to the lowest cell index).
-    ``n_cells`` past :data:`IVF_TWO_LEVEL_MIN_CELLS` trains/assigns
+    ``n_cells`` past :data:`quantizer.IVF_TWO_LEVEL_MIN_CELLS` trains/assigns
     through the two-level quantizer, like the persisted builder.
     """
-    flat = n_cells < IVF_TWO_LEVEL_MIN_CELLS
-    init_rows = (embeddings.orderBy("vec_id")
-                 .limit(n_cells if flat else 1)
-                 .select("embedding").collect())  # probe + init, one job
+    init_rows = _init_rows(embeddings, n_cells)  # probe + init, one job
     if not init_rows:
         return embeddings.sparkSession.createDataFrame(
             [], "query_id long, neighbor_id long, sim double, rank int")
-    q = _train_quantizer(embeddings, n_cells, iters,
-                         init_rows=init_rows if flat else None)
+    q = _train_quantizer(embeddings, n_cells, iters, init_rows=init_rows)
     # corpus assignment CARRIES the vector through the kernel
     # (carry_vec — the streaming cell-store shape) instead of joining
     # the assignment back to the embedding table: one Arrow pass, no
@@ -1269,7 +866,7 @@ def margin_bitext_pairs_ann(embeddings: DataFrame, k: int = 4,
     leaves the probe quadratic/n_cells: measured 7.3× wall on 10×
     data at n_cells=16). At every oracle SF and at sf0.1 the rule
     resolves to 16 flat cells, which is what the DuckDB twin encodes;
-    past :data:`IVF_TWO_LEVEL_MIN_CELLS` the quantizer goes
+    past :data:`quantizer.IVF_TWO_LEVEL_MIN_CELLS` the quantizer goes
     two-level. The two ``count()`` jobs are metadata-fast on parquet
     sources.
 
@@ -1611,7 +1208,7 @@ def _pq_train(x, m: int, k_codes: int, iters: int):
     trains on x − centroid[cell] residuals of the same sample).
 
     Centroid updates round to 6 decimals — the same cross-engine
-    determinism discipline as :func:`_kmeans_centroids` (where the
+    determinism discipline as :func:`quantizer._kmeans_centroids` (where the
     posexplode aggregate rounds for order-stability): the quantization
     noise is far below the codebook's own distortion, and it makes the
     whole trainer replayable as an unrolled SQL CTE so the PQ family's
@@ -1997,18 +1594,35 @@ def _load_ivfpq_residual(spark, path: str) -> bool:
     return bool(rows and rows[0]["residual"])
 
 
-def _ivfpq_assign_encode_fn(centroids, books, residual: bool):
+def _load_ivfpq_params(spark, path: str):
+    """(quantizer, codebooks, residual) of the persisted IVF-PQ index
+    at ``path``, or None when it is untrained — the one loader append,
+    probe and the streaming ingest share. The codebooks table is the
+    commit marker (:func:`_write_ivfpq_params` writes meta first and
+    codebooks last), so any torn prefix of a crashed bootstrap reads
+    as untrained and is retrained deterministically; in particular a
+    residual=True bootstrap can never recover as residual=False. A
+    table that is present but unreadable raises
+    (:func:`quantizer._read_param_table`)."""
+    books = _load_codebooks(spark, path)
+    if books is None:
+        return None
+    q = _load_quantizer(spark, path)
+    if q is None:
+        return None
+    return q, books, _load_ivfpq_residual(spark, path)
+
+
+def _ivfpq_assign_encode_fn(q, books, residual: bool):
     """Arrow-batched assign+encode kernel shared by the IVF-PQ BUILDER
     and incremental APPEND (one definition — the probe-equivalence
     contracts require ingest paths to assign and encode identically):
-    nearest cell via the quantizer (``centroids`` is a
-    :class:`_Quantizer` or a raw flat matrix), then PQ codes over the
+    nearest cell via the quantizer ``q``, then PQ codes over the
     raw vector (``residual=False``) or over x − centroid[cell]
     (``residual=True``, the FAISS IVFPQ encoding — residuals have
     smaller magnitude than raw vectors, so the same 8-byte code budget
     quantizes finer)."""
     import numpy as np
-    q = _as_quantizer(centroids)
     m, _, sub = books.shape
 
     def run(batches):
@@ -2032,14 +1646,13 @@ def _ivfpq_assign_encode_fn(centroids, books, residual: bool):
     return run
 
 
-def _ivfpq_append_cells(embeddings: DataFrame, centroids, books,
+def _ivfpq_append_cells(embeddings: DataFrame, q, books,
                         residual: bool, cells_dir: str, mode: str) -> None:
     encoded = (embeddings
                .select("vec_id",
                        F.col("embedding").cast("array<double>")
                        .alias("embedding"))
-               .mapInPandas(_ivfpq_assign_encode_fn(centroids, books,
-                                                    residual),
+               .mapInPandas(_ivfpq_assign_encode_fn(q, books, residual),
                             "vec_id long, cell int, codes array<bigint>, "
                             "embedding array<double>"))
     (encoded.repartition("cell")  # see _assign_and_write: one shuffle
@@ -2077,18 +1690,13 @@ def build_ivfpq_index(embeddings: DataFrame, path: str,
     ``train_sample=256`` fits the small test fixtures; size a real
     corpus with :func:`recommended_train_sample` (≥39 points per
     centroid — the measured-MSE rationale lives on that function).
-    ``n_cells`` past :data:`IVF_TWO_LEVEL_MIN_CELLS` trains/assigns
+    ``n_cells`` past :data:`quantizer.IVF_TWO_LEVEL_MIN_CELLS` trains/assigns
     the coarse stage through the two-level quantizer (persisted
     alongside, so append/probe stay in lockstep)."""
     spark = embeddings.sparkSession
-    # ONE probe job: for the flat path the k-means init fetch doubles
-    # as the emptiness check (the separate .first() probe cost an
-    # extra Spark job per build — same fix ann_lsh_topk got in r5);
-    # the two-level path probes limit(1) and trains from a hash sample
-    flat = n_cells < IVF_TWO_LEVEL_MIN_CELLS
-    init_rows = (embeddings.orderBy("vec_id")
-                 .limit(n_cells if flat else 1)
-                 .select("embedding").collect())
+    # ONE probe job (the separate .first() probe cost an extra Spark
+    # job per build — same fix ann_lsh_topk got in r5)
+    init_rows = _init_rows(embeddings, n_cells)
     if not init_rows:
         spark.createDataFrame(
             [], "vec_id long, codes array<bigint>, "
@@ -2105,7 +1713,7 @@ def build_ivfpq_index(embeddings: DataFrame, path: str,
         return
     q, books = _train_ivfpq_params(
         embeddings, n_cells, iters, m, k_codes, train_sample, pq_iters,
-        residual, init_rows=init_rows if flat else None)
+        residual, init_rows=init_rows)
     _ivfpq_append_cells(embeddings, q, books, residual,
                         path + "/cells", "overwrite")
     _write_ivfpq_params(spark, path, q, books, residual)
@@ -2135,15 +1743,15 @@ def _train_ivfpq_params(embeddings: DataFrame, n_cells: int, iters: int,
     return q, books
 
 
-def _write_ivfpq_params(spark, path: str, centroids, books,
+def _write_ivfpq_params(spark, path: str, q, books,
                         residual: bool) -> None:
     """Persist the kilobyte parameter tables — overwrite-idempotent, so
     a replayed bootstrap epoch rewrites byte-identical state. WRITE
     ORDER IS THE CRASH CONTRACT: meta (residual flag) first, the
     quantizer tables second (supers before centroids — see
     ``_write_centroid_tables``), CODEBOOKS LAST — readers treat the
-    codebooks table as the commit marker (``_params_if_trained``
-    requires all three), so a process killed in any torn prefix leaves
+    codebooks table as the commit marker (:func:`_load_ivfpq_params`),
+    so a process killed in any torn prefix leaves
     an index that reads as UNTRAINED and is deterministically
     retrained on replay. The reverse order had a silent-corruption
     window: codebooks committed but meta missing made a residual=True
@@ -2152,7 +1760,7 @@ def _write_ivfpq_params(spark, path: str, centroids, books,
     m = books.shape[0]
     (spark.createDataFrame([(bool(residual),)], "residual boolean")
      .write.mode("overwrite").parquet(path + "/meta"))
-    _write_centroid_tables(spark, path, _as_quantizer(centroids))
+    _write_centroid_tables(spark, path, q)
     (spark.createDataFrame(
         [(j, c, [float(v) for v in books[j, c]])
          for j in range(m) for c in range(books.shape[1])],
@@ -2169,9 +1777,8 @@ def ivfpq_index_append(spark, path: str,
     inside cell directories, cost ~ batch size). The shared
     :func:`_ivfpq_assign_encode_fn` kernel guarantees appended vectors
     land exactly where the bulk build would put them (tested)."""
-    q = _load_quantizer(spark, path)
-    books = _load_codebooks(spark, path)
-    if q is None or books is None:
+    params = _load_ivfpq_params(spark, path)
+    if params is None:
         raise ValueError(
             "ivfpq_index_append: index at %r is untrained — build it "
             "with build_ivfpq_index first (appending would create "
@@ -2179,9 +1786,8 @@ def ivfpq_index_append(spark, path: str,
     _guard_not_stream_layout(path, "ivfpq_index_append")
     if new_embeddings.select("embedding").first() is None:
         return
-    residual = _load_ivfpq_residual(spark, path)
-    _ivfpq_append_cells(new_embeddings, q, books, residual,
-                        path + "/cells", "append")
+    _ivfpq_append_cells(new_embeddings, *params, path + "/cells",
+                        "append")
 
 
 def _pq_query_tables(qm, books):
@@ -2335,8 +1941,8 @@ def ivfpq_probe_topk(spark, path: str, queries: DataFrame, k: int = 10,
     query's probed cells with the same codebooks.
 
     Checkpoint hygiene: NOTHING is pinned — the probed-cell set comes
-    from a separate cheap argmax kernel (``_cell_assign_fn``, same
-    ``_nearest_cells`` math) and the ADC-table kernel runs lazily
+    from a separate cheap argmax kernel (``_quantizer_cells_fn``, same
+    nearest-cell math) and the ADC-table kernel runs lazily
     inside the cogroup. The earlier eager-checkpoint design pinned one
     query-sized RDD per probe call for the session lifetime — the
     exact degradation SCALING.md measures (2.5→14 s over eight calls);
@@ -2344,13 +1950,12 @@ def ivfpq_probe_topk(spark, path: str, queries: DataFrame, k: int = 10,
     which is kilobytes against a corpus-sized index."""
     import numpy as np
 
-    q = _load_quantizer(spark, path)
-    books = _load_codebooks(spark, path)
-    if q is None or books is None:
+    params = _load_ivfpq_params(spark, path)
+    if params is None:
         return spark.createDataFrame(
             [], "query_id long, neighbor_id long, sim double, rank int")
+    q, books, residual = params
     m, k_codes, sub = books.shape
-    residual = _load_ivfpq_residual(spark, path)
     # Serving-sized query batches (≤ the row AND byte caps) take the
     # driver path: ONE collect replaces the distributed assign pass,
     # the probed-set aggregate, and the cells⋈tables cogroup — see

@@ -160,7 +160,7 @@ def _viterbi_pieces(unit: str, probs: dict, max_piece: int) -> list:
 def _segment_fn(probs: dict, max_piece: int):
     """mapInPandas kernel: (unit, n) -> (unit, n, pieces). The probs
     dict is vocab-sized driver state (kilobytes), closed over like the
-    k-means centroid kernel (similarity._cell_assign_fn)."""
+    k-means cell kernel (quantizer._quantizer_cells_fn)."""
     def run(batches):
         import pandas as pd
         for pdf in batches:

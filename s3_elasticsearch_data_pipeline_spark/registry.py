@@ -647,7 +647,7 @@ def _kmeans_cte_sql(n_cells: int, train_pred: str = "TRUE") -> str:
     ``n_cells`` lowest vec_ids of the TRAINING set, 2 Lloyd rounds,
     cosine assignment with ties to the lowest cell, centroid update =
     round(avg, 6) per dim, memberless cells keep their previous
-    centroid — exactly ``similarity._kmeans_centroids``. Yields CTEs
+    centroid — exactly ``quantizer._kmeans_centroids``. Yields CTEs
     ``vecs`` (all vectors), ``tvecs`` (training set) and ``c2`` (final
     centroids) for the caller to compose assignment/probing over."""
     assign = _KMEANS_ASSIGN_CTE

@@ -11,8 +11,10 @@ caught by the reconciliation pass (``data-s3-elastic-transfer.py:
 - ``Trigger.AvailableNow`` gives run-to-completion batch semantics
   with streaming bookkeeping — the modern replacement for the
   reference's whole lifecycle A;
-- ``foreachBatch`` + the keyed idempotent upsert keeps the sink
-  contract (S10) identical to the batch path.
+- a keyed idempotent upsert per epoch keeps the sink contract (S10)
+  identical to the batch path.
+
+Both loaders run on the drain loop (``streaming.epochs``).
 """
 
 from __future__ import annotations
@@ -21,6 +23,7 @@ from pyspark.sql import SparkSession
 
 from s3_elasticsearch_data_pipeline_spark.sinks import es_wire
 from s3_elasticsearch_data_pipeline_spark.sinks.keyed import upsert_by_key
+from s3_elasticsearch_data_pipeline_spark.streaming.epochs import drain
 
 
 def incremental_stream_load(spark: SparkSession, source_path: str,
@@ -34,24 +37,13 @@ def incremental_stream_load(spark: SparkSession, source_path: str,
     Run repeatedly — each call processes exactly the files that arrived
     since the last call, then returns (AvailableNow drains and stops).
     """
-    static = spark.read.parquet(source_path)
-    stream = (spark.readStream
-              .schema(static.schema)
-              .option("basePath", source_path)
-              .parquet(source_path))
-
-    def write_batch(batch_df, _epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def write_batch(batch_df, _epoch_id: int, phase) -> None:
+        phase("upsert")
         upsert_by_key(batch_df.sparkSession, batch_df, sink_path,
                       key_col=key_col, partition_col=partition_col)
 
-    q = (stream.writeStream
-         .foreachBatch(write_batch)
-         .option("checkpointLocation", checkpoint_path)
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
+    drain(spark, "incremental_stream_load", source_path,
+          checkpoint_path, write_batch)
 
 
 def incremental_stream_to_es(spark: SparkSession, source_path: str,
@@ -69,16 +61,10 @@ def incremental_stream_to_es(spark: SparkSession, source_path: str,
     198-223``) but without the driver funnel. Returns one
     :class:`~..sinks.es_wire.BulkReport` per non-empty micro-batch.
     """
-    static = spark.read.parquet(source_path)
-    stream = (spark.readStream
-              .schema(static.schema)
-              .option("basePath", source_path)
-              .parquet(source_path))
     reports: list[es_wire.BulkReport] = []
 
-    def write_batch(batch_df, _epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def write_batch(batch_df, _epoch_id: int, phase) -> None:
+        phase("bulk write")
         rep = es_wire.write_df(batch_df, url, index,
                                id_col=id_col, **wire_kwargs)
         reports.append(rep)
@@ -93,10 +79,6 @@ def incremental_stream_to_es(spark: SparkSession, source_path: str,
                 f"batches, {rep.rows_failed} rows; samples: "
                 f"{rep.error_samples}")
 
-    q = (stream.writeStream
-         .foreachBatch(write_batch)
-         .option("checkpointLocation", checkpoint_path)
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
+    drain(spark, "incremental_stream_to_es", source_path,
+          checkpoint_path, write_batch)
     return reports

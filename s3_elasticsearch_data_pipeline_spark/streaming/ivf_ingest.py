@@ -5,18 +5,15 @@ embedding batches arrive, with effectively-once epoch semantics.
 The batch operators show the shape once (``similarity.build_ivf_index``
 trains + bulk-loads, ``similarity.ivf_index_append`` adds a batch
 against the persisted centroids). This module runs that loop
-continuously with Structured Streaming:
+continuously on the drain loop (``streaming.epochs``):
 
-- the checkpoint's file log decides WHAT is new (no hand-rolled diff);
 - the FIRST non-empty micro-batch trains the coarse centroids
   (deterministic k-means, so a replayed bootstrap epoch rewrites
   byte-identical centroids); every later batch assigns against the
   PERSISTED centroids — FAISS's add-after-train contract, streamed;
 - each epoch's vectors land under
-  ``{index}/cells/epoch=<id>/cell=<c>/`` with per-epoch OVERWRITE, so
-  a replayed epoch (failure before checkpoint commit) rewrites the
-  same files instead of appending duplicates — effectively-once index
-  state without a transactional table format. The probe
+  ``{index}/cells/epoch=<id>/cell=<c>/`` with per-epoch overwrite
+  (the loop's replay rule). The probe
   (``similarity.ivf_probe_topk``) reads the two-level hive layout
   unchanged: the ``cell`` partition column still prunes at the
   directory level, ``epoch`` is just along for the ride
@@ -33,21 +30,12 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from s3_elasticsearch_data_pipeline_spark.operators.quantizer import (
+    _load_quantizer, _train_quantizer, _write_centroid_tables)
 from s3_elasticsearch_data_pipeline_spark.operators.similarity import (
-    _assign_and_write, _guard_not_batch_layout, _load_quantizer,
-    _train_quantizer, _write_centroid_tables)
-from s3_elasticsearch_data_pipeline_spark.streaming.lsh_ingest import (
-    _read_optional_parquet)
-
-
-def _centroids_if_trained(spark: SparkSession, index_path: str):
-    """The persisted quantizer, or None before the bootstrap epoch
-    (only the not-yet-trained case maps to None — an unreadable
-    centroid table must propagate, not silently retrain and orphan the
-    cells already assigned under the old centroids)."""
-    if _read_optional_parquet(spark, index_path + "/centroids") is None:
-        return None
-    return _load_quantizer(spark, index_path)
+    _assign_and_write, _guard_not_batch_layout)
+from s3_elasticsearch_data_pipeline_spark.streaming.epochs import (
+    _read_optional_parquet, drain)
 
 
 def ivf_ingest_stream(spark: SparkSession, source_path: str,
@@ -55,53 +43,44 @@ def ivf_ingest_stream(spark: SparkSession, source_path: str,
                       n_cells: int = 16, iters: int = 2,
                       schema=None, fault_hook=None) -> None:
     """Drain all new embedding files into the persisted IVF index
-    (``Trigger.AvailableNow`` — call repeatedly; each call processes
+    (``streaming.epochs.drain``: call repeatedly; each call processes
     exactly the files that arrived since the last call).
 
-    ``fault_hook(stage, epoch_id)``: crash-consistency seam — called
-    after each sink write (stages ``"after_centroids_write"`` on the
-    bootstrap epoch and ``"after_cells_write"`` every epoch); a hook
-    that raises simulates a process kill in the torn window between a
-    completed write and the checkpoint commit."""
+    ``fault_hook(stage, epoch_id)``: called after the
+    ``"after_centroids_write"`` (bootstrap epoch only) and
+    ``"after_cells_write"`` stages."""
     fault = fault_hook or (lambda stage, epoch_id: None)
     _guard_not_batch_layout(index_path, "ivf_ingest_stream")
-    if schema is None:
-        schema = spark.read.parquet(source_path).schema
-    stream = (spark.readStream
-              .schema(schema)
-              .option("basePath", source_path)
-              .parquet(source_path))
 
-    def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def handle(batch_df: DataFrame, epoch_id: int, phase) -> None:
         sess = batch_df.sparkSession
-        centroids = _centroids_if_trained(sess, index_path)
-        if centroids is None:
+        # None only before the bootstrap epoch: an unreadable centroid
+        # table raises instead of silently retraining and orphaning
+        # the cells already assigned under the old centroids
+        q = _load_quantizer(sess, index_path)
+        if q is None:
             # bootstrap: train on this batch. Deterministic training
             # (flat k-means, or the two-level quantizer past the
             # n_cells gate — hash-sampled, partition-invariant) ⇒ a
             # replay of this epoch rewrites identical tables, so the
             # overwrite is idempotent.
-            centroids = _train_quantizer(batch_df, n_cells, iters)
-            _write_centroid_tables(sess, index_path, centroids)
+            phase("train")
+            q = _train_quantizer(batch_df, n_cells, iters)
+            phase("centroids write")
+            _write_centroid_tables(sess, index_path, q)
             fault("after_centroids_write", epoch_id)
-        # per-epoch subdir of the cell store + overwrite = idempotent
-        # replay; hive discovery reads cells/epoch=<id>/cell=<c> as
-        # two partition columns, and the probe's cell filter prunes
+        # hive discovery reads cells/epoch=<id>/cell=<c> as two
+        # partition columns, and the probe's cell filter prunes
         # exactly as it does on the flat batch layout
+        phase("cells write")
         _assign_and_write(
-            batch_df, centroids,
+            batch_df, q,
             os.path.join(index_path, "cells", f"epoch={epoch_id}"),
             "overwrite")
         fault("after_cells_write", epoch_id)
 
-    q = (stream.writeStream
-         .foreachBatch(handle)
-         .option("checkpointLocation", checkpoint_path)
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
+    drain(spark, "ivf_ingest", source_path, checkpoint_path, handle,
+          schema=schema)
 
 
 def read_index_cells(spark: SparkSession, index_path: str):

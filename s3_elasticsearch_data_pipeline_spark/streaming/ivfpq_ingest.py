@@ -4,9 +4,9 @@
 codes + raw vectors, centroid/codebook/meta parameter tables) current
 as embedding batches arrive, with effectively-once epoch semantics.
 
-Same contract as the IVF stream:
+Same contract as the IVF stream, on the same drain loop
+(``streaming.epochs``):
 
-- the checkpoint's file log decides WHAT is new;
 - the FIRST non-empty micro-batch trains coarse centroids AND PQ
   codebooks (deterministic — a replayed bootstrap epoch rewrites
   byte-identical parameter tables, including the residual flag);
@@ -14,8 +14,7 @@ Same contract as the IVF stream:
   through the SAME kernel the batch builder and ``ivfpq_index_append``
   use (no drift possible between streamed and batch-built indexes);
 - each epoch lands under ``{index}/cells/epoch=<id>/cell=<c>/`` with
-  per-epoch OVERWRITE — a replayed epoch rewrites the same files, so
-  the index is effectively-once without a transactional table format.
+  per-epoch overwrite (the loop's replay rule).
   ``similarity.ivfpq_probe_topk`` reads the hive layout unchanged: the
   ``cell`` filter still prunes directories, ``epoch`` rides along.
 
@@ -31,33 +30,9 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from s3_elasticsearch_data_pipeline_spark.operators.similarity import (
-    _guard_not_batch_layout, _ivfpq_append_cells, _load_codebooks,
-    _load_ivfpq_residual, _load_quantizer, _train_ivfpq_params,
-    _write_ivfpq_params)
-from s3_elasticsearch_data_pipeline_spark.streaming.lsh_ingest import (
-    _read_optional_parquet)
-
-
-def _params_if_trained(spark: SparkSession, index_path: str):
-    """(centroids, books, residual) from the persisted parameter
-    tables, or None before the bootstrap epoch. ALL THREE tables (meta,
-    centroids, codebooks) must be present: ``_write_ivfpq_params``
-    writes meta first and codebooks last, so any torn prefix from a
-    crash mid-bootstrap reads as untrained and the replay retrains
-    deterministically — in particular a residual=True bootstrap can
-    never recover as residual=False (the silent-quantization-corruption
-    window a codebooks-before-meta order had)."""
-    if (_read_optional_parquet(spark, index_path + "/meta") is None
-            or _read_optional_parquet(spark,
-                                      index_path + "/centroids") is None
-            or _read_optional_parquet(spark,
-                                      index_path + "/codebooks") is None):
-        return None
-    centroids = _load_quantizer(spark, index_path)
-    books = _load_codebooks(spark, index_path)
-    if centroids is None or books is None:
-        return None
-    return centroids, books, _load_ivfpq_residual(spark, index_path)
+    _guard_not_batch_layout, _ivfpq_append_cells, _load_ivfpq_params,
+    _train_ivfpq_params, _write_ivfpq_params)
+from s3_elasticsearch_data_pipeline_spark.streaming.epochs import drain
 
 
 def ivfpq_ingest_stream(spark: SparkSession, source_path: str,
@@ -67,51 +42,37 @@ def ivfpq_ingest_stream(spark: SparkSession, source_path: str,
                         pq_iters: int = 8, residual: bool = False,
                         schema=None, fault_hook=None) -> None:
     """Drain all new embedding files into the persisted IVF-PQ index
-    (``Trigger.AvailableNow`` — call repeatedly; each call processes
+    (``streaming.epochs.drain``: call repeatedly; each call processes
     exactly the files that arrived since the last call). ``residual``
     applies at BOOTSTRAP only; later calls follow the index's persisted
     flag.
 
-    ``fault_hook(stage, epoch_id)``: crash-consistency seam — called
-    after each sink write (``"after_params_write"`` on the bootstrap
-    epoch, ``"after_cells_write"`` every epoch); a hook that raises
-    simulates a process kill in the torn window between a completed
-    write and the checkpoint commit."""
+    ``fault_hook(stage, epoch_id)``: called after the
+    ``"after_params_write"`` (bootstrap epoch only) and
+    ``"after_cells_write"`` stages."""
     fault = fault_hook or (lambda stage, epoch_id: None)
     _guard_not_batch_layout(index_path, "ivfpq_ingest_stream")
-    if schema is None:
-        schema = spark.read.parquet(source_path).schema
-    stream = (spark.readStream
-              .schema(schema)
-              .option("basePath", source_path)
-              .parquet(source_path))
 
-    def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def handle(batch_df: DataFrame, epoch_id: int, phase) -> None:
         sess = batch_df.sparkSession
-        params = _params_if_trained(sess, index_path)
+        params = _load_ivfpq_params(sess, index_path)
         if params is None:
             # bootstrap: train on this batch; deterministic training ⇒
             # a replay rewrites identical parameter tables
-            centroids, books = _train_ivfpq_params(
+            phase("train")
+            q, books = _train_ivfpq_params(
                 batch_df, n_cells, iters, m, k_codes, train_sample,
                 pq_iters, residual)
-            _write_ivfpq_params(sess, index_path, centroids, books,
-                                residual)
-            res_mode = residual
+            phase("params write")
+            _write_ivfpq_params(sess, index_path, q, books, residual)
+            params = q, books, residual
             fault("after_params_write", epoch_id)
-        else:
-            centroids, books, res_mode = params
+        phase("cells write")
         _ivfpq_append_cells(
-            batch_df, centroids, books, res_mode,
+            batch_df, *params,
             os.path.join(index_path, "cells", f"epoch={epoch_id}"),
             "overwrite")
         fault("after_cells_write", epoch_id)
 
-    q = (stream.writeStream
-         .foreachBatch(handle)
-         .option("checkpointLocation", checkpoint_path)
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
+    drain(spark, "ivfpq_ingest", source_path, checkpoint_path, handle,
+          schema=schema)

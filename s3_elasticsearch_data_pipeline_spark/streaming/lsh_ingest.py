@@ -6,15 +6,12 @@ shape once: probe an incoming batch against the PERSISTED MinHash-LSH
 band index, drop near-duplicates, admit the rest. This module runs
 that loop continuously over a document feed with Structured Streaming:
 
-- the checkpoint's file log decides WHAT is new (no hand-rolled diff);
 - each micro-batch is probed against the index as persisted by all
   PRIOR batches, then against itself (lower doc_id wins), so admission
   order is deterministic;
 - survivors append to the corpus sink and their band rows append to
-  the index — both written under ``epoch=<id>`` subdirectories with
-  per-epoch overwrite, so a replayed epoch (failure before checkpoint
-  commit) rewrites the same files instead of duplicating them:
-  effectively-once corpus state without a transactional table format.
+  the index, both under ``epoch=<id>`` (the replay rule of the drain
+  loop, ``streaming.epochs``).
 
 Scale shape: the probe equi-joins (band, bucket) — candidates only
 where a band collides, never corpus×batch; the index is bands×docs
@@ -29,30 +26,14 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.errors import AnalysisException
 
 from s3_elasticsearch_data_pipeline_spark.functions.textfns import tokens
 from s3_elasticsearch_data_pipeline_spark.operators.dedup import (
     _lsh_banded, _resolve_bucket_cap, drop_hot_buckets, portable_hash60,
     sig_agreement)
-from s3_elasticsearch_data_pipeline_spark.session import (
-    persistent_rdd_ids, release_persistent_rdds)
-
-
-def _read_optional_parquet(spark: SparkSession, path: str):
-    """The index/corpus don't exist before the first admitted batch —
-    ONLY that case maps to None. Any other read failure (corrupt
-    footer, IO fault) must propagate: silently treating a broken index
-    as 'empty' would admit every near-duplicate in the batch and
-    pollute the corpus with no error signal."""
-    if not os.path.exists(path):
-        return None
-    try:
-        return spark.read.option("basePath", path).parquet(path)
-    except AnalysisException as e:
-        if "PATH_NOT_FOUND" in str(e) or "UNABLE_TO_INFER_SCHEMA" in str(e):
-            return None  # dir exists but holds no parquet yet
-        raise
+# read_corpus is re-exported: callers import it from this module
+from s3_elasticsearch_data_pipeline_spark.streaming.epochs import (
+    _read_optional_parquet, drain, read_corpus)  # noqa: F401
 
 
 _HASH_MODE_MARKER = "_HASH_MODE"
@@ -102,9 +83,6 @@ def _check_and_pin_hash_mode(index_path: str, hash_mode: str) -> None:
     os.replace(tmp, marker)
 
 
-_JOB_DESCRIPTION = "spark.job.description"
-
-
 def _banded_with_fallback(df: DataFrame, n: int, num_hashes: int,
                           bands: int, hash_mode: str) -> DataFrame:
     """The batch's probe rows: the LSH band rows of every doc with at
@@ -138,7 +116,7 @@ def lsh_ingest_stream(spark: SparkSession, source_path: str,
                       fault_hook=None,
                       hash_mode: str = "xxhash64") -> None:
     """Drain all new document files through the dedup-at-ingest loop
-    (``Trigger.AvailableNow`` — run repeatedly; each call processes
+    (``streaming.epochs.drain``: run repeatedly; each call processes
     exactly the files that arrived since the last call).
 
     Admission rule (deterministic): a document is DROPPED when its
@@ -154,8 +132,7 @@ def lsh_ingest_stream(spark: SparkSession, source_path: str,
     future drop).
 
     ``schema``: pass the source schema to skip the batch-read
-    inference pass (which lists the whole source tree on every call);
-    when omitted it is derived from ``source_path`` once per call.
+    inference pass (which lists the whole source tree on every call).
 
     ``max_bucket_docs``: the hot-bucket guard
     (``operators.dedup.drop_hot_buckets``) applied to every probe join
@@ -168,18 +145,13 @@ def lsh_ingest_stream(spark: SparkSession, source_path: str,
     production loop df²-safe; ``None`` is the explicit exhaustive
     opt-out the registry oracle query passes.
 
-    ``fault_hook(stage, epoch_id)``: crash-consistency seam — called
-    after each sink write (stages ``"after_corpus_write"`` and
-    ``"after_index_write"``); a hook that raises simulates a process
-    kill in the torn window between a completed write and the
-    checkpoint commit, so tests can assert the replay heals it.
+    ``fault_hook(stage, epoch_id)``: called after the
+    ``"after_corpus_write"`` and ``"after_index_write"`` stages.
 
     Jobs: each epoch decides admission once (a cached frame of the
-    dropped doc ids feeds both writes) and labels its jobs per phase
-    with ``setJobDescription`` — ``lsh_ingest epoch=<id>: probe
-    build | admission decision | corpus write | index write`` — so the
-    status store can attribute them; the epoch's checkpoint and cache
-    are released before it returns.
+    dropped doc ids feeds both writes); its phases are ``probe
+    build``, ``admission decision``, ``corpus write`` and ``index
+    write``.
 
     ``hash_mode="portable"``: the engine-portable hash family for the
     whole admission decision — signatures, band buckets, AND the
@@ -195,13 +167,6 @@ def lsh_ingest_stream(spark: SparkSession, source_path: str,
     fault = fault_hook or (lambda stage, epoch_id: None)
     _check_and_pin_hash_mode(index_path, hash_mode)
     max_bucket_docs = _resolve_bucket_cap(max_bucket_docs)
-    if schema is None:
-        schema = spark.read.parquet(source_path).schema
-    stream = (spark.readStream
-              .schema(schema)
-              .option("basePath", source_path)
-              .parquet(source_path))
-
     est = sig_agreement(F.col("p.sig"), F.col("i.sig"), num_hashes)
 
     def admission_drops(probe: DataFrame, epoch_id: int) -> DataFrame:
@@ -239,18 +204,8 @@ def lsh_ingest_stream(spark: SparkSession, source_path: str,
                 .select(F.col("p.doc_id").alias("doc_id")))
         return dropped.distinct()
 
-    def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        sess = batch_df.sparkSession
-        sc = sess.sparkContext
-        prior_description = sc.getLocalProperty(_JOB_DESCRIPTION)
-        pinned_before = persistent_rdd_ids(sess)
+    def handle(batch_df: DataFrame, epoch_id: int, phase) -> None:
         dropped = None
-
-        def phase(name: str) -> None:
-            sc.setJobDescription(f"lsh_ingest epoch={epoch_id}: {name}")
-
         try:
             phase("probe build")
             probe = _banded_with_fallback(
@@ -283,23 +238,10 @@ def lsh_ingest_stream(spark: SparkSession, source_path: str,
              .parquet(os.path.join(index_path, f"epoch={epoch_id}")))
             fault("after_index_write", epoch_id)
         finally:
-            # free the epoch's probe checkpoint and decision cache
-            # (also on a failed epoch: the replay rebuilds both)
+            # the decision cache leaves the cache manager too (the
+            # drain loop frees the probe checkpoint)
             if dropped is not None:
                 dropped.unpersist()
-            release_persistent_rdds(
-                sess, persistent_rdd_ids(sess) - pinned_before)
-            sc.setLocalProperty(_JOB_DESCRIPTION, prior_description)
 
-    q = (stream.writeStream
-         .foreachBatch(handle)
-         .option("checkpointLocation", checkpoint_path)
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
-
-
-def read_corpus(spark: SparkSession, corpus_path: str):
-    """The admitted corpus across all epochs (hive ``epoch=`` layout)."""
-    df = _read_optional_parquet(spark, corpus_path)
-    return df.drop("epoch") if df is not None else None
+    drain(spark, "lsh_ingest", source_path, checkpoint_path, handle,
+          schema=schema)

@@ -14,20 +14,18 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from s3_elasticsearch_data_pipeline_spark.streaming.epochs import drain
+
 
 def rollup_stream(spark: SparkSession, source_path: str, rollup_path: str,
                   checkpoint_path: str, partition_key: str = "month",
                   dim: str = "event_type", value_col: str = "value") -> None:
     """Drain all unseen source files into rollup partial batches
-    (Trigger.AvailableNow — run-to-completion semantics), then return.
-    Finalize with plans.rollup.read_rollup."""
-    static = spark.read.parquet(source_path)
-    stream = (spark.readStream
-              .schema(static.schema)
-              .option("basePath", source_path)
-              .parquet(source_path))
-
-    def add_partials(batch_df, _batch_id):
+    (``streaming.epochs.drain``: run-to-completion semantics), then
+    return. Finalize with plans.rollup.read_rollup. An empty epoch
+    appends nothing, so the loop's emptiness check is skipped."""
+    def add_partials(batch_df, _batch_id, phase):
+        phase("partials write")
         (batch_df
          .groupBy(partition_key, dim)
          .agg(F.count(F.lit(1)).alias("n_rows"),
@@ -40,9 +38,5 @@ def rollup_stream(spark: SparkSession, source_path: str, rollup_path: str,
          .write.mode("append").partitionBy(partition_key)
          .format("parquet").save(rollup_path))
 
-    (stream.writeStream
-     .foreachBatch(add_partials)
-     .option("checkpointLocation", checkpoint_path)
-     .trigger(availableNow=True)
-     .start()
-     .awaitTermination())
+    drain(spark, "rollup_stream", source_path, checkpoint_path,
+          add_partials, skip_empty=False)

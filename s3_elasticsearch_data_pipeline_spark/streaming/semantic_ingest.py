@@ -4,9 +4,8 @@
 batch/streaming symmetry with ``operators.dedup
 .incremental_semantic_dedup``.
 
-Loop shape (Structured Streaming, ``Trigger.AvailableNow``):
+Loop shape (the drain loop, ``streaming.epochs``):
 
-- the checkpoint's file log decides WHAT is new;
 - the FIRST non-empty micro-batch trains the coarse blocking cells
   (deterministic k-means — a replayed bootstrap epoch rewrites
   byte-identical centroids); every later batch assigns against the
@@ -17,10 +16,8 @@ Loop shape (Structured Streaming, ``Trigger.AvailableNow``):
   (deterministic greedy admission, exactly the lsh_ingest rule);
   round-6 cosine ≥ ``threshold`` drops the vector;
 - survivors append to the corpus sink and their (vec_id, cell, vec)
-  rows append to the cell store — both under ``epoch=<id>`` subdirs
-  with per-epoch OVERWRITE, so a replayed epoch (failure before
-  checkpoint commit) rewrites the same files: effectively-once
-  corpus state without a transactional table format.
+  rows append to the cell store, both under ``epoch=<id>`` (the
+  loop's replay rule).
 
 Scale shape: the probe cogroups on the compact cell key — candidates
 only where cells collide, never batch × corpus; the cell store is
@@ -40,24 +37,13 @@ from pyspark.sql import functions as F
 
 from s3_elasticsearch_data_pipeline_spark.operators.dedup import (
     _PAIR_SCHEMA, _blocked_cross_kernel, _blocked_pair_kernel)
-from s3_elasticsearch_data_pipeline_spark.operators.similarity import (
+from s3_elasticsearch_data_pipeline_spark.operators.quantizer import (
     _load_quantizer, _quantizer_cells_fn, _train_quantizer,
     _write_centroid_tables)
-from s3_elasticsearch_data_pipeline_spark.streaming.lsh_ingest import (
-    _read_optional_parquet)
+from s3_elasticsearch_data_pipeline_spark.streaming.epochs import (
+    _read_optional_parquet, drain, read_corpus)
 
 _CELL_SCHEMA = "vec_id long, cell int, vec array<double>"
-
-
-def _fixed_centroid_assign_fn(quantizer, n_assign: int):
-    """(vec_id, cell, vec) multi-assignment against a FIXED persisted
-    quantizer: the SHARED dispatching kernel
-    (``similarity._quantizer_cells_fn`` — flat below 64 cells,
-    two-stage probe above, -1 padding rows dropped) with the vec
-    column carried for the cell store. One definition of the
-    assignment/padding contract for every site, so ingest assignment
-    cannot drift off the batch operators."""
-    return _quantizer_cells_fn(quantizer, n_assign, carry_vec=True)
 
 
 def semantic_ingest_stream(spark: SparkSession, source_path: str,
@@ -68,8 +54,8 @@ def semantic_ingest_stream(spark: SparkSession, source_path: str,
                            iters: int = 2, schema=None,
                            fault_hook=None) -> None:
     """Drain all new embedding files through the semantic dedup-at-
-    ingest loop (run repeatedly; each call processes exactly the files
-    that arrived since the last call).
+    ingest loop (``streaming.epochs.drain``: run repeatedly; each call
+    processes exactly the files that arrived since the last call).
 
     Admission rule (deterministic): a vector is DROPPED when its
     round-6 cosine against any already-admitted vector sharing a
@@ -79,23 +65,12 @@ def semantic_ingest_stream(spark: SparkSession, source_path: str,
     arrivals probe. Null embeddings are admitted unprobed (no cosine
     is defined for them; a production pipeline filters them upstream).
 
-    ``fault_hook(stage, epoch_id)``: crash-consistency seam — stages
+    ``fault_hook(stage, epoch_id)``: called after the
     ``"after_centroids_write"`` (bootstrap epoch only),
-    ``"after_corpus_write"`` and ``"after_index_write"``; a hook that
-    raises simulates a kill in the torn window between a completed
-    write and the checkpoint commit, so tests can assert replay heals
-    it."""
+    ``"after_corpus_write"`` and ``"after_index_write"`` stages."""
     fault = fault_hook or (lambda stage, epoch_id: None)
-    if schema is None:
-        schema = spark.read.parquet(source_path).schema
-    stream = (spark.readStream
-              .schema(schema)
-              .option("basePath", source_path)
-              .parquet(source_path))
 
-    def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def handle(batch_df: DataFrame, epoch_id: int, phase) -> None:
         sess = batch_df.sparkSession
         probe_src = batch_df.where(
             F.col("embedding").isNotNull()
@@ -106,6 +81,7 @@ def semantic_ingest_stream(spark: SparkSession, source_path: str,
             # untrained/unchanged — a later informative batch still
             # bootstraps (writing EMPTY centroids here would poison
             # every later epoch's probe)
+            phase("corpus write")
             (batch_df.write.mode("overwrite")
              .parquet(os.path.join(corpus_path, f"epoch={epoch_id}")))
             fault("after_corpus_write", epoch_id)
@@ -132,11 +108,15 @@ def semantic_ingest_stream(spark: SparkSession, source_path: str,
             # 64-cell two-level gate — a replayed epoch rewrites
             # byte-identical centroids; two-level above it, same as
             # every other coarse-training site)
+            phase("train")
             q = _train_quantizer(probe_src, n_cells, iters)
+            phase("centroids write")
             _write_centroid_tables(sess, index_path, q)
             fault("after_centroids_write", epoch_id)
+        phase("probe build")
         probe = (probe_src.select("vec_id", "embedding")
-                 .mapInPandas(_fixed_centroid_assign_fn(q, n_assign),
+                 .mapInPandas(_quantizer_cells_fn(q, n_assign,
+                                                  carry_vec=True),
                               _CELL_SCHEMA)
                  .localCheckpoint(eager=True))
         # vs prior epochs' cell store (EXCLUDING any half-written copy
@@ -161,28 +141,19 @@ def semantic_ingest_stream(spark: SparkSession, source_path: str,
         dropped = (in_batch if matched is None
                    else matched.unionByName(in_batch).distinct())
         survivors = batch_df.join(dropped, "vec_id", "left_anti")
+        phase("corpus write")
         (survivors.write.mode("overwrite")
          .parquet(os.path.join(corpus_path, f"epoch={epoch_id}")))
         fault("after_corpus_write", epoch_id)
+        phase("index write")
         (probe.join(dropped, "vec_id", "left_anti")
          .write.mode("overwrite")
          .parquet(os.path.join(index_path, "cells",
                                f"epoch={epoch_id}")))
         fault("after_index_write", epoch_id)
 
-    q = (stream.writeStream
-         .foreachBatch(handle)
-         .option("checkpointLocation", checkpoint_path)
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
-
-
-def read_corpus(spark: SparkSession, corpus_path: str):
-    """The admitted corpus across all epochs (hive ``epoch=`` layout),
-    or None before the first admitted batch."""
-    df = _read_optional_parquet(spark, corpus_path)
-    return df.drop("epoch") if df is not None else None
+    drain(spark, "semantic_ingest", source_path, checkpoint_path, handle,
+          schema=schema)
 
 
 def rebuild_semantic_index(spark: SparkSession, corpus_path: str,
@@ -227,7 +198,8 @@ def rebuild_semantic_index(spark: SparkSession, corpus_path: str,
             "rebuild_semantic_index: corpus has no usable embeddings")
     q = _train_quantizer(probe_src, n_cells, iters)
     assigned = (probe_src.select("vec_id", "embedding")
-                .mapInPandas(_fixed_centroid_assign_fn(q, n_assign),
+                .mapInPandas(_quantizer_cells_fn(q, n_assign,
+                                                 carry_vec=True),
                              _CELL_SCHEMA))
     # stage the new cell store, then: delete the commit marker ->
     # swap cells -> write the marker last. Every crash window reads

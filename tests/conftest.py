@@ -27,3 +27,19 @@ def sf_smoke():
 @pytest.fixture(scope="session")
 def sf_oracle():
     return SF_ORACLE
+
+
+@pytest.fixture(scope="module")
+def big_emb(spark):
+    """4000 vectors in 40 well-separated clusters — large enough that
+    the 64-cell gate engages and IVF recall is meaningful."""
+    import numpy as np
+    rng = np.random.default_rng(42)
+    centers = rng.normal(size=(40, 16)) * 8
+    rows = []
+    for i in range(4000):
+        c = i % 40
+        v = centers[c] + rng.normal(scale=0.6, size=16)
+        rows.append((i, [float(x) for x in v]))
+    return spark.createDataFrame(
+        rows, "vec_id long, embedding array<double>").localCheckpoint()

@@ -15,7 +15,8 @@ import pytest
 pytestmark = pytest.mark.slow
 from pyspark.sql import functions as F
 
-from s3_elasticsearch_data_pipeline_spark.operators import dedup, similarity
+from s3_elasticsearch_data_pipeline_spark.operators import (
+    dedup, quantizer, similarity)
 
 
 @pytest.fixture(scope="module")
@@ -217,50 +218,6 @@ def test_wide_dim_queries_take_distributed_path(spark, embeddings,
     assert bf == bf_driver
 
 
-def test_ivf_index_append_equals_bulk_assign(spark, embeddings, tmp_path):
-    """Appending a batch against persisted centroids must land every
-    vector exactly where a bulk assignment with the SAME centroids
-    would — probe results over (build-half + append-half) equal a
-    probe over an index whose cells hold all vectors assigned by those
-    half-trained centroids (i.e. build(half) then append(rest) is the
-    canonical ingest, not a degraded one)."""
-    half = embeddings.where(F.col("vec_id") % 2 == 0)
-    rest = embeddings.where(F.col("vec_id") % 2 == 1)
-    queries = embeddings.where(F.col("vec_id") < 10)
-    path = str(tmp_path / "ivf_inc")
-    similarity.build_ivf_index(half, path, n_cells=8)
-    similarity.ivf_index_append(spark, path, rest)
-    got = {(r.query_id, r.neighbor_id, r.sim, r.rank)
-           for r in similarity.ivf_probe_topk(
-               spark, path, queries, k=10, n_probe=4).collect()}
-    # reference: every appended vec_id present exactly once in cells
-    cells = spark.read.parquet(path + "/cells")
-    assert cells.count() == embeddings.count()
-    assert cells.select("vec_id").distinct().count() == embeddings.count()
-    # EXACT: the persisted (vec_id, cell) assignment equals a bulk
-    # assignment of the full corpus with the index's own centroids —
-    # append is the canonical ingest, not an approximation of build
-    import numpy as np
-    cents = np.array(
-        [list(r["centroid"]) for r in
-         spark.read.parquet(path + "/centroids").orderBy("cell").collect()],
-        dtype=np.float64)
-    bulk = embeddings.select("vec_id", "embedding").mapInPandas(
-        similarity._cell_assign_fn(cents, 1), "vec_id long, cell int")
-    diff = (cells.select("vec_id", "cell")
-            .exceptAll(bulk).unionAll(
-                bulk.exceptAll(cells.select("vec_id", "cell"))))
-    assert diff.count() == 0
-    # and the probe still finds true neighbors (sanity recall floor)
-    exact = similarity.brute_force_topk(embeddings, queries, k=10)
-    truth = {(r.query_id, r.neighbor_id) for r in exact.collect()}
-    found = {(q, n) for q, n, _, _ in got}
-    assert len(truth & found) / len(truth) >= 0.4
-    # appending an empty batch is a no-op
-    similarity.ivf_index_append(spark, path, rest.where(F.lit(False)))
-    assert spark.read.parquet(path + "/cells").count() == embeddings.count()
-
-
 def test_ivf_append_requires_trained_index(spark, embeddings, tmp_path):
     import pytest
     path = str(tmp_path / "ivf_untrained")
@@ -292,13 +249,13 @@ def test_oracle_fixture_cell_assumption():
 
     import duckdb
 
-    from s3_elasticsearch_data_pipeline_spark.operators.dedup import (
-        _TARGET_CELL_OCCUPANCY, _TWO_LEVEL_MIN_CELLS)
+    from s3_elasticsearch_data_pipeline_spark.operators.quantizer import (
+        _TARGET_CELL_OCCUPANCY, IVF_TWO_LEVEL_MIN_CELLS)
     for sf in ("/root/testdata/sf0.001", "/root/testdata/sf0.01"):
         (n,) = duckdb.sql(
             f"SELECT count(*) FROM '{sf}/embeddings.parquet'").fetchone()
         cells = max(8, math.ceil(n / _TARGET_CELL_OCCUPANCY))
-        assert cells == 8 and cells < _TWO_LEVEL_MIN_CELLS, \
+        assert cells == 8 and cells < IVF_TWO_LEVEL_MIN_CELLS, \
             (sf, n, "regenerated fixture broke the 8-cell oracle pin")
 
 
@@ -776,14 +733,14 @@ def test_ivfpq_probe_equals_pq_topk_on_probed_cells(spark, embeddings,
         got.setdefault(r.query_id, set()).add(
             (r.neighbor_id, r.sim, r.rank))
 
-    centroids = similarity._load_centroids(spark, path)
+    quant = quantizer._load_quantizer(spark, path)
     books = similarity._load_codebooks(spark, path)
     cells_df = spark.read.parquet(path + "/cells")
     for q in queries.select("vec_id", "embedding").collect():
         one = spark.createDataFrame([(q.vec_id, list(q.embedding))],
                                     "vec_id long, embedding array<double>")
         probed = sorted({r.cell for r in one.mapInPandas(
-            similarity._cell_assign_fn(centroids, 4),
+            quantizer._quantizer_cells_fn(quant, 4),
             "vec_id long, cell int").collect()})
         sub_corpus = (cells_df.where(F.col("cell").isin(probed))
                       .select("vec_id", F.lit(0).alias("label"),
@@ -921,9 +878,9 @@ def test_ivfpq_append_equals_bulk_assign(spark, embeddings, tmp_path):
         spark, p1, queries, k=10, n_probe=4).collect()))
     # reference: same half-trained params, bulk-assigned over ALL rows
     p2 = str(tmp_path / "bulk")
-    centroids = similarity._load_centroids(spark, p1)
+    q = quantizer._load_quantizer(spark, p1)
     books = similarity._load_codebooks(spark, p1)
-    similarity._ivfpq_append_cells(embeddings, centroids, books, False,
+    similarity._ivfpq_append_cells(embeddings, q, books, False,
                                    p2 + "/cells", "overwrite")
     for d in ("centroids", "codebooks", "meta"):
         shutil.copytree(p1 + "/" + d, p2 + "/" + d)
@@ -972,7 +929,7 @@ def test_ivfpq_residual_mode_recall_and_determinism(spark, embeddings,
                                  residual=False)
 
     def recon_mse(p, residual):
-        cents = similarity._load_centroids(spark, p)
+        cents = quantizer._load_quantizer(spark, p).centroids
         books = similarity._load_codebooks(spark, p)
         m, _, sub = books.shape
         rows = spark.read.parquet(p + "/cells") \
@@ -1017,7 +974,7 @@ def test_pq_train_sample_sizing_rule(spark, sized):
 
 
 def test_two_level_blocking_recall_on_planted_pairs(spark):
-    """The r7 two-level quantizer path (n_cells >= _TWO_LEVEL_MIN_CELLS
+    """The r7 two-level quantizer path (n_cells >= IVF_TWO_LEVEL_MIN_CELLS
     — corpus-proportional cells, super→sub chained assignment) must
     behave like the flat path where it matters: planted near-dup twins
     (base vector + tiny perturbation) are recovered with high recall,
@@ -1026,8 +983,8 @@ def test_two_level_blocking_recall_on_planted_pairs(spark):
     past the switch."""
     import numpy as np
 
-    from s3_elasticsearch_data_pipeline_spark.operators.dedup import (
-        _TWO_LEVEL_MIN_CELLS)
+    from s3_elasticsearch_data_pipeline_spark.operators.quantizer import (
+        IVF_TWO_LEVEL_MIN_CELLS)
     rng = np.random.default_rng(11)
     dims, n_base, n_twins = 16, 6000, 120
     base = rng.normal(size=(n_base, dims))
@@ -1041,7 +998,7 @@ def test_two_level_blocking_recall_on_planted_pairs(spark):
     pairs = dedup.embedding_blocked_near_dup(emb, threshold=0.99)
     got = {(r.vec_id_a, r.vec_id_b) for r in pairs.collect()}
     # auto rule must have chosen the two-level path at this size
-    assert (n_base + n_twins) / 64 >= _TWO_LEVEL_MIN_CELLS
+    assert (n_base + n_twins) / 64 >= IVF_TWO_LEVEL_MIN_CELLS
     planted = {(int(s), 100_000 + int(s)) for s in twin_ids}
     recall = len(got & planted) / len(planted)
     assert recall >= 0.95, f"two-level recall {recall}"
@@ -1094,27 +1051,6 @@ def test_margin_bitext_planted_pair_and_hub_suppression(spark):
     # every mined pair involving the hub must margin below the planted
     hub_margins = [r["margin"] for r in mined if r["tgt_id"] == 2001]
     assert all(m < top["margin"] for m in hub_margins)
-
-
-def test_two_level_blocking_partition_invariant(spark):
-    """The two-level path must be partition-invariant end to end: the
-    training sample is hash-selected (not partition-dependent), the
-    driver Lloyd is deterministic, and assignment is per-row pure —
-    so wildly different input partitionings must yield the identical
-    pair set."""
-    import numpy as np
-    rng = np.random.default_rng(3)
-    rows = [(i, [float(x) for x in rng.normal(size=12)])
-            for i in range(5000)]
-    emb = spark.createDataFrame(rows,
-                                "vec_id long, embedding array<double>")
-    a = {(r.vec_id_a, r.vec_id_b, r.cosine_sim) for r in
-         dedup.embedding_blocked_near_dup(
-             emb.repartition(3), threshold=0.7).collect()}
-    b = {(r.vec_id_a, r.vec_id_b, r.cosine_sim) for r in
-         dedup.embedding_blocked_near_dup(
-             emb.repartition(17), threshold=0.7).collect()}
-    assert a == b
 
 
 def test_margin_bitext_direction_strategies(spark, embeddings):
@@ -1206,52 +1142,6 @@ def test_margin_bitext_ann_no_cross_join(spark, embeddings):
 # ---------------------------------------------------------------------------
 
 
-@pytest.fixture(scope="module")
-def big_emb(spark):
-    """4000 vectors in 40 well-separated clusters — large enough that
-    the 64-cell gate engages and IVF recall is meaningful."""
-    import numpy as np
-    rng = np.random.default_rng(42)
-    centers = rng.normal(size=(40, 16)) * 8
-    rows = []
-    for i in range(4000):
-        c = i % 40
-        v = centers[c] + rng.normal(scale=0.6, size=16)
-        rows.append((i, [float(x) for x in v]))
-    return spark.createDataFrame(
-        rows, "vec_id long, embedding array<double>").localCheckpoint()
-
-
-def test_ivf_two_level_inline_equals_build_probe(spark, big_emb,
-                                                 tmp_path):
-    """The build/probe lockstep contract must hold THROUGH the
-    two-level gate: inline ivf_topk(n_cells=64) and
-    build_ivf_index(n_cells=64) + ivf_probe_topk return bit-identical
-    results (same quantizer training, same assignment kernel on both
-    the corpus and query sides, exact parquet float64 roundtrip of the
-    supers/centroids tables)."""
-    queries = big_emb.where("vec_id < 8")
-    inline = {tuple(r) for r in similarity.ivf_topk(
-        big_emb, queries, k=5, n_cells=64).collect()}
-    path = str(tmp_path / "ivf64")
-    similarity.build_ivf_index(big_emb, path, n_cells=64)
-    # the persisted layout carries the two-level structure
-    q = similarity._load_quantizer(spark, path)
-    assert q.two_level and len(q.centroids) >= 64
-    probed = {tuple(r) for r in similarity.ivf_probe_topk(
-        spark, path, queries, k=5).collect()}
-    # ivf_topk excludes self-matches; ivf_probe_topk (pq contract)
-    # does not — align by dropping self rows before comparing
-    probed = {t for t in probed if t[0] != t[1]}
-    inline_top = {t[:2] for t in inline}
-    probed_top = {t[:2] for t in probed}
-    # rank columns can shift by the self-row removal; compare the
-    # (query, neighbor, sim) triples
-    assert ({t[:3] for t in inline} - {t[:3] for t in probed}
-            == set()), "inline result must be a subset after self-drop"
-    assert inline_top <= probed_top
-
-
 def test_ivf_two_level_planted_recall(spark, big_emb):
     """Approximate recall through the two-level quantizer: a query's
     planted near-twin (same cluster, tiny offset) must be retrieved at
@@ -1286,7 +1176,7 @@ def test_ivfpq_two_level_append_probe_lockstep(spark, big_emb,
     p1 = str(tmp_path / "full")
     # build on half, append rest — the production loop
     similarity.build_ivfpq_index(half, p1, n_cells=64, residual=True)
-    assert similarity._load_quantizer(spark, p1).two_level
+    assert quantizer._load_quantizer(spark, p1).two_level
     similarity.ivfpq_index_append(spark, p1, rest)
     got1 = {tuple(r) for r in similarity.ivfpq_probe_topk(
         spark, p1, queries, k=5).collect()}
@@ -1303,31 +1193,6 @@ def test_ivfpq_two_level_append_probe_lockstep(spark, big_emb,
     assert got1 == got2
 
 
-def test_two_level_quantizer_roundtrip(spark, big_emb, tmp_path):
-    """_write_centroid_tables/_load_quantizer must roundtrip the
-    two-level structure exactly: flat matrix, supers, per-super
-    blocks, offsets — and a FLAT overwrite of the same path must read
-    back as flat (staleness decided by the super column, not the
-    leftover supers directory)."""
-    import numpy as np
-    q = similarity._train_quantizer(big_emb, 64, 2)
-    path = str(tmp_path / "idx")
-    similarity._write_centroid_tables(spark, path, q)
-    r = similarity._load_quantizer(spark, path)
-    assert r.two_level
-    np.testing.assert_array_equal(q.centroids, r.centroids)
-    np.testing.assert_array_equal(q.super_cents, r.super_cents)
-    assert q.offsets == r.offsets
-    for a, b in zip(q.subs, r.subs):
-        np.testing.assert_array_equal(a, b)
-    # flat overwrite wins over the stale supers dir
-    flat_q = similarity._train_quantizer(big_emb, 8, 1)
-    similarity._write_centroid_tables(spark, path, flat_q)
-    r2 = similarity._load_quantizer(spark, path)
-    assert not r2.two_level
-    np.testing.assert_array_equal(flat_q.centroids, r2.centroids)
-
-
 def test_two_level_rebuild_crash_reads_untrained(spark, big_emb,
                                                  tmp_path):
     """Rebuild-in-place crash contract: the centroid table is the
@@ -1336,13 +1201,13 @@ def test_two_level_rebuild_crash_reads_untrained(spark, big_emb,
     supers landed — leaves no centroid table and reads as UNTRAINED,
     never as a mixed-generation quantizer."""
     import shutil
-    q_old = similarity._train_quantizer(big_emb, 64, 2)
+    q_old = quantizer._train_quantizer(big_emb, 64, 2)
     path = str(tmp_path / "idx")
-    similarity._write_centroid_tables(spark, path, q_old)
-    assert similarity._load_quantizer(spark, path).two_level
+    quantizer._write_centroid_tables(spark, path, q_old)
+    assert quantizer._load_quantizer(spark, path).two_level
     # simulate the rebuild crashing right after the new supers write:
     # commit-marker order = rmtree(centroids) -> write supers -> CRASH
-    q_new = similarity._train_quantizer(
+    q_new = quantizer._train_quantizer(
         big_emb.where("vec_id % 3 = 0"), 64, 2)
     shutil.rmtree(path + "/centroids")
     (spark.createDataFrame(
@@ -1350,44 +1215,11 @@ def test_two_level_rebuild_crash_reads_untrained(spark, big_emb,
          for s in range(len(q_new.super_cents))],
         "super int, centroid array<double>")
      .write.mode("overwrite").parquet(path + "/supers"))
-    assert similarity._load_quantizer(spark, path) is None
+    assert quantizer._load_quantizer(spark, path) is None
     # recovery: a completed rebuild over the crashed state loads clean
-    similarity._write_centroid_tables(spark, path, q_new)
-    r = similarity._load_quantizer(spark, path)
+    quantizer._write_centroid_tables(spark, path, q_new)
+    r = quantizer._load_quantizer(spark, path)
     assert r.two_level and r.offsets == q_new.offsets
-
-
-def test_load_quantizer_rejects_torn_pair(spark, big_emb, tmp_path):
-    """Externally-torn parameter tables (centroids and supers from
-    different generations — impossible from our own writer, possible
-    from a partial copy) must fail loudly with a torn-index error,
-    not silently route probes into the wrong sub-centroid blocks."""
-    import pytest
-    q = similarity._train_quantizer(big_emb, 64, 2)
-    path = str(tmp_path / "idx")
-    similarity._write_centroid_tables(spark, path, q)
-    # generation mismatch: replace supers with a table of a different
-    # super count than the centroids reference
-    (spark.createDataFrame(
-        [(s, [float(x) for x in q.super_cents[s]])
-         for s in range(max(1, len(q.super_cents) // 2))],
-        "super int, centroid array<double>")
-     .write.mode("overwrite").parquet(path + "/supers"))
-    with pytest.raises(ValueError, match="torn IVF index"):
-        similarity._load_quantizer(spark, path)
-    # offset corruption: right super count, non-contiguous cell ids
-    (spark.createDataFrame(
-        [(s, [float(x) for x in q.super_cents[s]])
-         for s in range(len(q.super_cents))],
-        "super int, centroid array<double>")
-     .write.mode("overwrite").parquet(path + "/supers"))
-    rows = [(1000 + i, [0.0, 0.0], s)
-            for s in range(len(q.super_cents)) for i in (0, 1)]
-    (spark.createDataFrame(
-        rows, "cell int, centroid array<double>, super int")
-     .write.mode("overwrite").parquet(path + "/centroids"))
-    with pytest.raises(ValueError, match="torn IVF index"):
-        similarity._load_quantizer(spark, path)
 
 
 def test_margin_bitext_indexed_equals_inline(spark, embeddings,

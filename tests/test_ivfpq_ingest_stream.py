@@ -132,8 +132,6 @@ def test_stream_ivfpq_torn_bootstrap_params_read_as_untrained(
     residual=False with residual-trained codebooks."""
     import shutil
 
-    from s3_elasticsearch_data_pipeline_spark.streaming.ivfpq_ingest \
-        import _params_if_trained
     emb = (load_table(spark, sf_oracle, "embeddings")
            .select("vec_id", "embedding").where(F.col("vec_id") < 200))
     src, index, ckpt = _paths(tmp_path, "torn")
@@ -148,7 +146,7 @@ def test_stream_ivfpq_torn_bootstrap_params_read_as_untrained(
                             residual=True, fault_hook=boom)
     # simulate the torn prefix: params written, commit marker removed
     shutil.rmtree(index + "/codebooks")
-    assert _params_if_trained(spark, index) is None, \
+    assert similarity._load_ivfpq_params(spark, index) is None, \
         "meta+centroids without codebooks must read as untrained"
     # recovery drain re-bootstraps (caller re-passes the flag) — the
     # healed index is residual and fully populated

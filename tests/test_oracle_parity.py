@@ -31,9 +31,12 @@ FAST_CORE = (
     "agg_stats_pack",
     "timeseries_gapfill",
     "dedup_minhash_lsh",
+    "dedup_embedding_blocked",
     "dedup_incremental_semantic",
     "dedup_duplicate_spans",
     "sim_topk_pq",
+    "sim_ivf_incremental",
+    "stream_ivfpq_ingest",
     "sim_margin_bitext_mine",
     "text_quality_scores",
     "text_bpe_encode",

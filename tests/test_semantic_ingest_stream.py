@@ -151,13 +151,13 @@ def test_all_null_first_batch_does_not_poison_bootstrap(spark, sf_smoke,
 def test_bootstrap_centroids_identical_to_flat_trainer(spark, sf_smoke,
                                                        tmp_path):
     """r9 routed the bootstrap through the SHARED quantizer trainer
-    (similarity._train_quantizer). Below the 64-cell two-level gate
+    (quantizer._train_quantizer). Below the 64-cell two-level gate
     that must be byte-identical to the pre-r9 path (_kmeans_centroids
     on the probeable batch) — the persisted centroid table proves it,
     and the DuckDB twin's unrolled-k-means replay stays valid."""
     import numpy as np
 
-    from s3_elasticsearch_data_pipeline_spark.operators.similarity import (
+    from s3_elasticsearch_data_pipeline_spark.operators.quantizer import (
         _kmeans_centroids)
     src = str(tmp_path / "src")
     corpus, index = str(tmp_path / "c"), str(tmp_path / "i")
@@ -184,7 +184,7 @@ def test_rebuild_semantic_index_on_drifted_corpus(spark, sf_smoke,
     against the rebuilt index (same dedup contract)."""
     import numpy as np
 
-    from s3_elasticsearch_data_pipeline_spark.operators.similarity import (
+    from s3_elasticsearch_data_pipeline_spark.operators.quantizer import (
         _kmeans_centroids)
     from s3_elasticsearch_data_pipeline_spark.streaming.semantic_ingest \
         import rebuild_semantic_index
@@ -256,7 +256,7 @@ def test_rebuild_crash_window_reads_untrained_and_heals(spark, sf_smoke,
     import os as _os
     import shutil
 
-    from s3_elasticsearch_data_pipeline_spark.operators.similarity import (
+    from s3_elasticsearch_data_pipeline_spark.operators.quantizer import (
         _load_quantizer)
     from s3_elasticsearch_data_pipeline_spark.streaming.semantic_ingest \
         import rebuild_semantic_index

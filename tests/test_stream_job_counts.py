@@ -75,23 +75,23 @@ def emb_writer(spark, tmp_path):
     return write, tmp_path
 
 
+def _write_docs(spark, src: str, batch_no: int) -> None:
+    rows = [(batch_no * 1000 + i,
+             f"document number {i} in batch {batch_no} "
+             f"with several words of text") for i in range(30)]
+    (spark.createDataFrame(rows, "doc_id long, text string")
+     .coalesce(1).write.mode("append").parquet(src))
+
+
 def test_lsh_ingest_epoch_job_counts(spark, tmp_path):
     from s3_elasticsearch_data_pipeline_spark.streaming.lsh_ingest import (
         lsh_ingest_stream)
     src = str(tmp_path / "src")
-
-    def docs(batch_no):
-        rows = [(batch_no * 1000 + i,
-                 f"document number {i} in batch {batch_no} "
-                 f"with several words of text") for i in range(30)]
-        (spark.createDataFrame(rows, "doc_id long, text string")
-         .coalesce(1).write.mode("append").parquet(src))
-
-    docs(0)
+    _write_docs(spark, src, 0)
     args = (spark, src, str(tmp_path / "c"), str(tmp_path / "i"))
     boot = _jobs_during(
         spark, lambda: lsh_ingest_stream(*args, str(tmp_path / "k")))
-    docs(1)
+    _write_docs(spark, src, 1)
     steady = _jobs_during(
         spark, lambda: lsh_ingest_stream(*args, str(tmp_path / "k")))
     # the admission decision is cached once and broadcast into both
@@ -113,8 +113,10 @@ def test_ivf_ingest_epoch_job_counts(spark, emb_writer):
     # bootstrap: schema read + isEmpty + k-means training (init fetch
     # + 2x assign/agg collect) + centroids write + assign/cells write;
     # steady swaps training for the quantizer load — a pyarrow driver
-    # read since r11, zero Spark jobs (10 -> 6)
-    assert (boot, steady) == (11, 6), (boot, steady)
+    # read since r11, zero Spark jobs (10 -> 6); the "is it trained?"
+    # decision is that load alone, no Spark re-read of the centroid
+    # table to tell absent from broken (6 -> 5)
+    assert (boot, steady) == (11, 5), (boot, steady)
 
 
 def test_ivfpq_ingest_epoch_job_counts(spark, emb_writer):
@@ -127,8 +129,10 @@ def test_ivfpq_ingest_epoch_job_counts(spark, emb_writer):
     write(1)
     steady = _jobs_during(spark, lambda: ivfpq_ingest_stream(*args))
     # r11: the steady epoch's quantizer/codebooks/meta loads are
-    # pyarrow driver reads — zero Spark jobs (17 -> 7)
-    assert (boot, steady) == (13, 7), (boot, steady)
+    # pyarrow driver reads — zero Spark jobs (17 -> 7); the shared
+    # params loader no longer re-reads meta, centroids and codebooks
+    # through Spark first (7 -> 4)
+    assert (boot, steady) == (13, 4), (boot, steady)
 
 
 def test_semantic_ingest_epoch_job_counts(spark, emb_writer):
@@ -145,3 +149,55 @@ def test_semantic_ingest_epoch_job_counts(spark, emb_writer):
     # the centroid table in one job; r11 (21 -> 17): that load is a
     # pyarrow driver read now — zero Spark jobs
     assert (boot, steady) == (18, 17), (boot, steady)
+
+
+def _descriptions_after(spark, job_id: int) -> list:
+    """Description of every job with an id above ``job_id``."""
+    jobs = spark.sparkContext._jsc.sc().statusStore().jobsList(None)
+    out = []
+    for i in range(jobs.size()):
+        j = jobs.apply(i)
+        if j.jobId() > job_id:
+            d = j.description()
+            out.append(d.get() if d.isDefined() else None)
+    return out
+
+
+@pytest.mark.parametrize("stream", ["lsh_ingest", "ivf_ingest",
+                                    "ivfpq_ingest", "semantic_ingest"])
+def test_ingest_epoch_bookkeeping(spark, emb_writer, stream):
+    """The drain loop's bookkeeping holds for every ingest: each job of
+    an epoch is described ``<stream> epoch=<id>: <phase>`` (with the
+    source schema passed, the loop runs no job outside an epoch), and
+    a call leaves the session's persisted and checkpointed RDDs as it
+    found them — including the probe checkpoints of the lsh and
+    semantic epochs."""
+    import importlib
+    import re
+
+    from s3_elasticsearch_data_pipeline_spark.session import (
+        persistent_rdd_ids)
+    write, tmp_path = emb_writer
+    mod = importlib.import_module(
+        f"s3_elasticsearch_data_pipeline_spark.streaming.{stream}")
+    ingest = getattr(mod, f"{stream}_stream")
+    src = str(tmp_path / "src")
+    if stream == "lsh_ingest":
+        def write(batch_no):
+            _write_docs(spark, src, batch_no)
+    sinks = [str(tmp_path / d) for d in (
+        ("c", "i", "k") if stream in ("lsh_ingest", "semantic_ingest")
+        else ("i", "k"))]
+    for epoch in (0, 1):
+        write(epoch)
+        schema = spark.read.parquet(src).schema
+        before = _stable_max_job_id(spark)
+        pinned = persistent_rdd_ids(spark)
+        ingest(spark, src, *sinks, schema=schema)
+        _stable_max_job_id(spark)
+        descs = _descriptions_after(spark, before)
+        assert descs, stream
+        label = re.compile(rf"{stream} epoch={epoch}: [a-z ]+$")
+        assert all(d is not None and label.match(d) for d in descs), descs
+        assert f"{stream} epoch={epoch}: batch check" in descs
+        assert persistent_rdd_ids(spark) == pinned, stream

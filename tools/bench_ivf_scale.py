@@ -30,7 +30,7 @@ import numpy as np
 sys.path.insert(0, "/root/repo")
 
 from s3_elasticsearch_data_pipeline_spark.operators import (  # noqa: E402
-    similarity as sim)
+    quantizer, similarity as sim)
 from s3_elasticsearch_data_pipeline_spark.session import (  # noqa: E402
     get_spark)
 
@@ -71,9 +71,10 @@ def main() -> None:
     out = {}
     modes = ["two_level"] + (["flat"] if flat_too else [])
     for mode in modes:
-        gate = sim.IVF_TWO_LEVEL_MIN_CELLS
+        gate = quantizer.IVF_TWO_LEVEL_MIN_CELLS
         if mode == "flat":
-            sim.IVF_TWO_LEVEL_MIN_CELLS = 10 ** 9  # lift the gate
+            # lift the one gate: every build path reads it from there
+            quantizer.IVF_TWO_LEVEL_MIN_CELLS = 10 ** 9
         try:
             for n, cells in SCALES:
                 emb = synth(spark, n)
@@ -89,7 +90,7 @@ def main() -> None:
                 shutil.rmtree(d, ignore_errors=True)
                 emb.unpersist()
         finally:
-            sim.IVF_TWO_LEVEL_MIN_CELLS = gate
+            quantizer.IVF_TWO_LEVEL_MIN_CELLS = gate
     summary = {"metric": "ivf_build_10x10x_ratio",
                "two_level": round(out["two_level_200000"]
                                   / out["two_level_20000"], 2)}

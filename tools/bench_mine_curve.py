@@ -35,7 +35,7 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from bench_scale import BASE, _drain, replicate  # noqa: E402
 from s3_elasticsearch_data_pipeline_spark.operators import (  # noqa: E402
-    similarity as sim)
+    quantizer, similarity as sim)
 from s3_elasticsearch_data_pipeline_spark.session import (  # noqa: E402
     get_spark)
 from tools.bench_graph_curve import _fit_exponent  # noqa: E402
@@ -50,9 +50,9 @@ def build_indexes(spark, sf_dir: str, out: str) -> None:
     a = emb.where(F.col("label") % 2 == 0).select("vec_id", "embedding")
     b = emb.where(F.col("label") % 2 == 1).select("vec_id", "embedding")
     sim.build_ivf_index(a, out + "/src",
-                        n_cells=sim.auto_n_cells(a.count()))
+                        n_cells=quantizer.auto_n_cells(a.count()))
     sim.build_ivf_index(b, out + "/tgt",
-                        n_cells=sim.auto_n_cells(b.count()))
+                        n_cells=quantizer.auto_n_cells(b.count()))
 
 
 def scored_pairs(spark, idx: str) -> int:
@@ -61,7 +61,7 @@ def scored_pairs(spark, idx: str) -> int:
     vectors (read from its cell store, like the miner does)."""
     total = 0
     for probe_side, query_side in (("tgt", "src"), ("src", "tgt")):
-        q = sim._load_quantizer(spark, f"{idx}/{probe_side}")
+        q = quantizer._load_quantizer(spark, f"{idx}/{probe_side}")
         occ_rows = (spark.read.parquet(f"{idx}/{probe_side}/cells")
                     .groupBy("cell").count().collect())
         occ = {r["cell"]: r["count"] for r in occ_rows}
@@ -69,7 +69,7 @@ def scored_pairs(spark, idx: str) -> int:
             [list(r["embedding"]) for r in
              spark.read.parquet(f"{idx}/{query_side}/cells")
              .select("embedding").collect()], dtype=np.float64)
-        order = sim._q_nearest_cells(q, qvecs, N_PROBE)
+        order = quantizer._q_nearest_cells(q, qvecs, N_PROBE)
         for row in order:
             total += sum(occ.get(int(c), 0) for c in row if c >= 0)
     return total
