@@ -11,37 +11,27 @@ scheduled by policy (e.g. compact partitions averaging < 32 MB/file).
 from __future__ import annotations
 
 import math
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from s3_elasticsearch_data_pipeline_spark.session import scoped_conf
 
 
 def partition_file_stats(spark: SparkSession, path: str,
                          partition_key: str = "month") -> DataFrame:
     """Per-partition layout stats from file metadata + row counts:
     (partition, n_files, bytes, n_rows). The bytes/file ratio is the
-    compaction trigger."""
-    df = spark.read.parquet(path)
-    with_file = df.select(F.col(partition_key),
-                          F.input_file_name().alias("__file"))
-    per_file = (with_file.groupBy(partition_key, "__file")
-                .agg(F.count(F.lit(1)).alias("__rows")))
-    sizes = {}
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            if f.endswith(".parquet"):
-                full = os.path.join(root, f)
-                sizes[os.path.basename(full)] = os.path.getsize(full)
-    size_df = spark.createDataFrame(
-        [(k, v) for k, v in sizes.items()] or [("", 0)],
-        "__base string, __bytes long")
-    per_file = per_file.withColumn(
-        "__base", F.element_at(F.split("__file", "/"), -1))
-    return (per_file.join(size_df, "__base", "left")
-            .groupBy(partition_key)
+    compaction trigger. Each file's size comes from the scan's own
+    ``_metadata``, so no listing of the table is needed."""
+    per_file = (spark.read.parquet(path)
+                .groupBy(partition_key,
+                         F.col("_metadata.file_path").alias("__file"))
+                .agg(F.count(F.lit(1)).alias("__rows"),
+                     F.max("_metadata.file_size").alias("__bytes")))
+    return (per_file.groupBy(partition_key)
             .agg(F.count(F.lit(1)).alias("n_files"),
-                 F.sum(F.coalesce("__bytes", F.lit(0))).alias("bytes"),
+                 F.sum("__bytes").alias("bytes"),
                  F.sum("__rows").alias("n_rows")))
 
 
@@ -64,17 +54,13 @@ def compact_partitions(spark: SparkSession, path: str,
     committer's delete-then-rename inside ONE partition swap, which is
     non-atomic on plain filesystems/object stores — the standard
     Hive-style-overwrite caveat; a transactional table format closes
-    it. The partitionOverwriteMode override is restored on exit (a
-    session-global leak would silently change unrelated writers'
-    overwrite semantics from whole-table to matched-partitions).
+    it. The partitionOverwriteMode override is scoped to this call.
     """
     stats = {r[0]: r for r in
              partition_file_stats(spark, path, partition_key)
              .where(F.col(partition_key).isin(partitions)).collect()}
-    mode_key = "spark.sql.sources.partitionOverwriteMode"
-    prior = spark.conf.get(mode_key, "static")
-    spark.conf.set(mode_key, "dynamic")
-    try:
+    with scoped_conf(spark, "spark.sql.sources.partitionOverwriteMode",
+                     "dynamic"):
         df = spark.read.parquet(path)
         for part in partitions:
             row = stats.get(part)
@@ -84,8 +70,6 @@ def compact_partitions(spark: SparkSession, path: str,
              .repartition(n_files)
              .write.mode("overwrite").partitionBy(partition_key)
              .format("parquet").save(path))
-    finally:
-        spark.conf.set(mode_key, prior)
 
 
 def observed_write(df, path: str, mode: str = "overwrite",

@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from s3_elasticsearch_data_pipeline_spark import storage
+
 #: Target vectors per cell under auto-sizing: n_cells ∝ n keeps the
 #: within-cell pair term LINEAR in the corpus (occupancy constant),
 #: where the r6 sqrt rule kept occupancy ~sqrt(8n) and the within-cell
@@ -394,8 +396,7 @@ def _write_centroid_tables(spark, path: str, q: _Quantizer) -> None:
             "cell int, centroid array<double>")
          .write.mode("overwrite").parquet(path + "/centroids"))
         return
-    import shutil
-    shutil.rmtree(path + "/centroids", ignore_errors=True)
+    storage.delete(spark, path + "/centroids")
     (spark.createDataFrame(
         [(s, [float(x) for x in q.super_cents[s]])
          for s in range(len(q.super_cents))],

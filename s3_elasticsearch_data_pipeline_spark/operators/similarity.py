@@ -30,6 +30,7 @@ import hashlib
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from s3_elasticsearch_data_pipeline_spark import storage
 from s3_elasticsearch_data_pipeline_spark.functions.vector import cosine
 from s3_elasticsearch_data_pipeline_spark.operators.quantizer import (
     _init_rows, _load_quantizer, _q_nearest_cells, _quantizer_cells_fn,
@@ -189,44 +190,27 @@ def embedding_centroids(embeddings: DataFrame) -> DataFrame:
             .agg(F.round(F.avg("component"), 8).alias("centroid")))
 
 
-def _guard_not_stream_layout(path: str, op: str) -> None:
-    """Refuse batch appends into a STREAM-built cell store. Streaming
-    ingest lands files under ``{index}/cells/epoch=<id>/cell=<c>/``;
-    a batch append would write ``cell=<c>`` at the top level, and the
-    mixed directory depths break parquet partition discovery for every
-    subsequent probe read of ``{path}/cells`` — the parameter tables
-    load fine, so without this guard the append is silently accepted
-    and the index bricks later, at read time."""
-    import os
-    cells = path + "/cells"
-    if not os.path.isdir(cells):
+def _guard_cell_layout(spark, path: str, op: str, refused: str) -> None:
+    """Refuse a write that would mix the two cell-store layouts under
+    ``{path}/cells``: a batch build lands flat ``cell=<c>/`` dirs, a
+    streaming ingest lands ``epoch=<id>/cell=<c>/``. Mixed directory
+    depths break parquet partition discovery for every later probe
+    read, while the parameter tables still load fine — so without this
+    guard the write is silently accepted and the index bricks later,
+    at read time. ``refused`` is the child prefix of the other layout:
+    ``"epoch="`` for a batch append, ``"cell="`` for a streaming
+    ingest."""
+    if not any(e.startswith(refused)
+               for e in storage.children(spark, path + "/cells")):
         return
-    if any(e.startswith("epoch=") for e in os.listdir(cells)):
-        raise ValueError(
-            "%s: index at %r was built by a streaming ingest "
-            "(cells/epoch=<id>/ layout); batch appends would corrupt "
-            "partition discovery. Feed new batches through the "
-            "streaming ingest for this index instead." % (op, path))
-
-
-def _guard_not_batch_layout(path: str, op: str) -> None:
-    """The reverse guard of :func:`_guard_not_stream_layout`: refuse a
-    STREAMING ingest pointed at a batch-built index. The stream lands
-    files under ``cells/epoch=<id>/cell=<c>/``; a flat batch layout
-    already has top-level ``cell=<c>`` dirs, and mixing the two depths
-    bricks every later probe read the same way the other direction
-    does — the parameter tables load fine, so without this guard the
-    ingest is silently accepted at write time."""
-    import os
-    cells = path + "/cells"
-    if not os.path.isdir(cells):
-        return
-    if any(e.startswith("cell=") for e in os.listdir(cells)):
-        raise ValueError(
-            "%s: index at %r was built by a batch build (flat "
-            "cells/cell=<c> layout); streaming epochs would corrupt "
-            "partition discovery. Append new batches with the batch "
-            "index_append for this index instead." % (op, path))
+    built_by, feed = (("a streaming ingest", "the streaming ingest")
+                      if refused == "epoch=" else
+                      ("a batch build", "the batch index_append"))
+    raise ValueError(
+        f"{op}: index at {path!r} was built by {built_by} "
+        f"(cells/{refused}<..> layout); mixing layouts would corrupt "
+        f"partition discovery. Feed new batches through {feed} for "
+        f"this index instead.")
 
 
 def _assign_and_write(embeddings: DataFrame, q, cells_dir: str,
@@ -308,7 +292,7 @@ def ivf_index_append(spark, path: str, new_embeddings: DataFrame) -> None:
             "with build_ivf_index first (appending to an untrained "
             "index would silently create a single unsearchable cell)"
             % path)
-    _guard_not_stream_layout(path, "ivf_index_append")
+    _guard_cell_layout(spark, path, "ivf_index_append", "epoch=")
     if new_embeddings.select("embedding").first() is None:
         return
     _assign_and_write(new_embeddings, q, path + "/cells", "append")
@@ -1783,7 +1767,7 @@ def ivfpq_index_append(spark, path: str,
             "ivfpq_index_append: index at %r is untrained — build it "
             "with build_ivfpq_index first (appending would create "
             "unsearchable cells)" % path)
-    _guard_not_stream_layout(path, "ivfpq_index_append")
+    _guard_cell_layout(spark, path, "ivfpq_index_append", "epoch=")
     if new_embeddings.select("embedding").first() is None:
         return
     _ivfpq_append_cells(new_embeddings, *params, path + "/cells",

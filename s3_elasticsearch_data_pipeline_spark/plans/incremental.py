@@ -19,12 +19,12 @@ catch-up pass, as in the reference.
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from s3_elasticsearch_data_pipeline_spark import storage
 from s3_elasticsearch_data_pipeline_spark.operators.diff import missing_partitions
 from s3_elasticsearch_data_pipeline_spark.operators.projection import (
     typed_projection, validate_and_clean)
@@ -58,7 +58,7 @@ def read_load_log(spark: SparkSession, sink_path: str) -> DataFrame | None:
     observable twin of the reference's ES terms-agg sink-state read
     (``data-s3-elastic-transfer.py:45-88``) at metadata cost."""
     path = load_log_path(sink_path)
-    if not os.path.exists(path):
+    if not storage.exists(spark, path):
         return None
     return spark.read.parquet(path)
 
@@ -82,7 +82,7 @@ def incremental_load(spark: SparkSession, source: DataFrame, sink_path: str,
         sink = log.select(F.col("partition_key").alias(key))
     else:
         sink = (spark.read.parquet(sink_path)
-                if os.path.exists(sink_path) else None)
+                if storage.exists(spark, sink_path) else None)
     todo_df = plan_missing_partitions(source, sink, key)
     # Partition keys are low-cardinality by design (calendar months in
     # the reference) — collecting just the KEY LIST is driver-safe at

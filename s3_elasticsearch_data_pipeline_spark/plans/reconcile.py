@@ -18,12 +18,12 @@ prunes the scan to mismatched partitions only; the runtime bloom filter
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from s3_elasticsearch_data_pipeline_spark import storage
 from s3_elasticsearch_data_pipeline_spark.operators.diff import (
     count_mismatches, fetch_rows_for_ids, missing_ids)
 from s3_elasticsearch_data_pipeline_spark.sinks.keyed import upsert_by_key
@@ -57,7 +57,7 @@ def reconcile(spark: SparkSession, source: DataFrame, sink_path: str,
     forever. Count-equal partitions that hide one orphan plus one
     missing row stay invisible either way (J4 compares counts — the
     documented contract)."""
-    if not os.path.exists(sink_path):
+    if not storage.exists(spark, sink_path):
         raise FileNotFoundError(
             f"serving table {sink_path} does not exist; run incremental_load first")
     sink = spark.read.parquet(sink_path)

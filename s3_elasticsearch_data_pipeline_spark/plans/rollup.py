@@ -27,10 +27,10 @@ table history size.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from s3_elasticsearch_data_pipeline_spark import storage
 
 
 def maintain_rollup(spark: SparkSession, source: DataFrame,
@@ -40,7 +40,7 @@ def maintain_rollup(spark: SparkSession, source: DataFrame,
                     value_col: str = "value") -> list[str]:
     """Bring the rollup current; returns the partition keys added."""
     src_parts = source.select(partition_key).distinct()
-    if os.path.exists(rollup_path):
+    if storage.exists(spark, rollup_path):
         done = (spark.read.parquet(rollup_path)
                 .select(F.col(partition_key).cast("string")
                         .alias(partition_key))

@@ -72,6 +72,22 @@ _AQE_SCOPE_LOCK = threading.Lock()
 
 
 @contextlib.contextmanager
+def scoped_conf(spark: SparkSession, key: str, value: str):
+    """Set a session conf for the ``with`` body, then restore the prior
+    value exactly: re-set when it was set, unset when it was absent (a
+    session-global leak would silently change unrelated later work)."""
+    prior = spark.conf.get(key, None)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        if prior is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prior)
+
+
+@contextlib.contextmanager
 def aqe_disabled(spark: SparkSession):
     """Scope AQE off around a small materializing action whose plan
     gains nothing from runtime re-optimization (kilobyte aggregates,
@@ -82,14 +98,9 @@ def aqe_disabled(spark: SparkSession):
     queries planned concurrently in this session would also see AQE
     off — multi-tenant services should hand such operators a session
     clone."""
-    key = "spark.sql.adaptive.enabled"
-    with _AQE_SCOPE_LOCK:
-        prior = spark.conf.get(key, "true")
-        try:
-            spark.conf.set(key, "false")
-            yield
-        finally:
-            spark.conf.set(key, prior)
+    with _AQE_SCOPE_LOCK, scoped_conf(spark, "spark.sql.adaptive.enabled",
+                                      "false"):
+        yield
 
 
 def persistent_rdd_ids(spark: SparkSession) -> set[int]:

@@ -14,6 +14,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from s3_elasticsearch_data_pipeline_spark import storage
+
 
 def write_bucketed(df: DataFrame, table_name: str, key: str,
                    buckets: int = 16,
@@ -24,13 +26,10 @@ def write_bucketed(df: DataFrame, table_name: str, key: str,
     managed-table directory (in-memory catalog is gone, files are not)
     is removed before the write, else saveAsTable refuses the location.
     """
-    import shutil
-    from urllib.parse import urlparse
-
     spark = df.sparkSession
     spark.sql(f"DROP TABLE IF EXISTS {table_name}")
-    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    shutil.rmtree(f"{warehouse}/{table_name.lower()}", ignore_errors=True)
+    storage.delete(spark, spark.conf.get("spark.sql.warehouse.dir")
+                   + f"/{table_name.lower()}")
     writer = (df.write.mode("overwrite")
               .bucketBy(buckets, key))
     if sort_by is not None:

@@ -24,10 +24,14 @@ sink afterwards.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from s3_elasticsearch_data_pipeline_spark import storage
+from s3_elasticsearch_data_pipeline_spark.session import (
+    persistent_rdd_ids, release_persistent_rdds, scoped_conf)
+
+_OVERWRITE_MODE = "spark.sql.sources.partitionOverwriteMode"
 
 
 def upsert_by_key(spark: SparkSession, incoming: DataFrame, path: str,
@@ -36,16 +40,11 @@ def upsert_by_key(spark: SparkSession, incoming: DataFrame, path: str,
 
     Only partitions present in ``incoming`` are rewritten (dynamic
     partition overwrite), so cost scales with the delta, not the table.
-    The overwrite-mode override is scoped to this call (a session-
-    global leak would silently flip unrelated writers from whole-table
-    to matched-partition overwrite semantics).
+    The overwrite-mode override is scoped to this call.
     """
-    mode_key = "spark.sql.sources.partitionOverwriteMode"
-    prior = spark.conf.get(mode_key, "static")
-    spark.conf.set(mode_key, "dynamic")
-    try:
+    with scoped_conf(spark, _OVERWRITE_MODE, "dynamic"):
         incoming = incoming.withColumn("_prio", F.lit(0))
-        if os.path.exists(path):
+        if storage.exists(spark, path):
             existing = spark.read.parquet(path).withColumn("_prio", F.lit(1))
             # Restrict existing rows to the touched partitions:
             # everything else is untouched on disk by dynamic
@@ -68,8 +67,6 @@ def upsert_by_key(spark: SparkSession, incoming: DataFrame, path: str,
         # the classic partitioned-write small-files bug)
         (deduped.repartition(partition_col).write.mode("overwrite")
          .partitionBy(partition_col).format("parquet").save(path))
-    finally:
-        spark.conf.set(mode_key, prior)
 
 
 def delete_by_key(spark: SparkSession, doomed_ids: DataFrame, path: str,
@@ -90,12 +87,8 @@ def delete_by_key(spark: SparkSession, doomed_ids: DataFrame, path: str,
     matches neither. (Locally; a production deployment routes deletes
     through a table format's MERGE/DELETE for snapshot isolation, same
     note as the upsert's read-overwrite caveat.)"""
-    if not os.path.exists(path):
+    if not storage.exists(spark, path):
         return 0
-    from urllib.parse import unquote, urlparse
-
-    from s3_elasticsearch_data_pipeline_spark.session import (
-        persistent_rdd_ids, release_persistent_rdds)
     before = persistent_rdd_ids(spark)
     try:
         existing = spark.read.parquet(path)
@@ -110,9 +103,6 @@ def delete_by_key(spark: SparkSession, doomed_ids: DataFrame, path: str,
         n = stats["n"]
         if not n:
             return 0
-        # URI → local paths (input_file_name yields file:///… URIs)
-        touched_dirs = sorted(
-            unquote(urlparse(d).path) for d in stats["dirs"])
         dir_expr = F.regexp_replace(F.input_file_name(), "/[^/]*$", "")
         keep = (existing.withColumn("__dir", dir_expr)
                 .where(F.col("__dir").isin(list(stats["dirs"])))
@@ -123,20 +113,14 @@ def delete_by_key(spark: SparkSession, doomed_ids: DataFrame, path: str,
         # overwrite, a dir whose listing is unchanged was not rewritten
         # (overwrite always mints new part-file names) — its every row
         # was doomed, so the directory itself goes
-        listing_before = {d: set(os.listdir(d)) for d in touched_dirs
-                          if os.path.isdir(d)}
-        mode_key = "spark.sql.sources.partitionOverwriteMode"
-        prior = spark.conf.get(mode_key, "static")
-        spark.conf.set(mode_key, "dynamic")
-        try:
+        listing_before = {d: storage.children(spark, d) for d in
+                          map(storage.from_file_uri, stats["dirs"])}
+        with scoped_conf(spark, _OVERWRITE_MODE, "dynamic"):
             (keep.repartition(partition_col).write.mode("overwrite")
              .partitionBy(partition_col).format("parquet").save(path))
-        finally:
-            spark.conf.set(mode_key, prior)
-        import shutil
         for d, files in listing_before.items():
-            if os.path.isdir(d) and set(os.listdir(d)) == files:
-                shutil.rmtree(d)
+            if files and storage.children(spark, d) == files:
+                storage.delete(spark, d)
         return n
     finally:
         release_persistent_rdds(spark, persistent_rdd_ids(spark) - before)

@@ -1,0 +1,113 @@
+"""The one module that touches persisted state (indexes, markers, sinks,
+load logs, rollups, stream sources), through the Hadoop ``FileSystem``
+of each path: a bare path, a ``file://`` and an ``s3a://`` URI read the
+same. Paths are spelled as Spark's readers take them (Hadoop
+``Path(str)``); a scan's percent-encoded ``input_file_name()`` URIs go
+through :func:`from_file_uri` first.
+
+- :func:`exists`, :func:`is_dir`;
+- :func:`children`: child names without hidden ``_``/``.`` entries
+  (markers, ``_SUCCESS``, checksums); a missing path has none;
+- :func:`delete`: recursive; a missing path is a no-op;
+- :func:`rename`: ``src`` onto ``dst``, replacing ``dst``;
+- :func:`read_text` / :func:`write_text`: a small marker (None when
+  absent), written to a temp sibling that is renamed over it. A local
+  FS rename replaces a file in one step: readers see the old or the new
+  value. Where rename refuses an existing target (HDFS, S3A) the old
+  marker is deleted first: a reader in that instant sees none, never a
+  torn one (an object-store upload appears whole when it closes);
+- :func:`file_status`: (qualified path, length, mtime) of a file.
+
+Every call is a driver-side metadata call: none starts a Spark job.
+"""
+
+from __future__ import annotations
+
+from urllib.parse import unquote
+
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import SparkSession
+
+
+def _fs(spark: SparkSession, path: str):
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
+
+
+def from_file_uri(uri: str) -> str:
+    """Path spelling of a scanned file's URI (a Hive-escaped
+    ``month=2024%3A01`` dir arrives as ``month=2024%253A01``)."""
+    return unquote(uri)
+
+
+def exists(spark: SparkSession, path: str) -> bool:
+    fs, p = _fs(spark, path)
+    return fs.exists(p)
+
+
+def is_dir(spark: SparkSession, path: str) -> bool:
+    fs, p = _fs(spark, path)
+    return fs.isDirectory(p)
+
+
+def children(spark: SparkSession, path: str) -> list[str]:
+    fs, p = _fs(spark, path)
+    if not fs.isDirectory(p):
+        return []
+    # all names in one py4j call, not three per child: py4j passes a
+    # Path[] only as an Object, the erased type genericWrapArray takes
+    jvm = spark._jvm
+    paths = jvm.org.apache.hadoop.fs.FileUtil.stat2Paths(fs.listStatus(p))
+    listed = jvm.scala.Predef.genericWrapArray(paths).mkString("\n")
+    names = (s.rsplit("/", 1)[-1] for s in listed.split("\n") if s)
+    return sorted(n for n in names if not n.startswith(("_", ".")))
+
+
+def delete(spark: SparkSession, path: str) -> None:
+    fs, p = _fs(spark, path)
+    fs.delete(p, True)
+
+
+def rename(spark: SparkSession, src: str, dst: str) -> None:
+    fs, s = _fs(spark, src)
+    d = spark._jvm.org.apache.hadoop.fs.Path(dst)
+    # never rename a directory onto an existing one: Hadoop moves it
+    # INSIDE the target instead of replacing it
+    if fs.isDirectory(s) or not fs.rename(s, d):
+        fs.delete(d, True)
+        if not fs.rename(s, d):
+            raise IOError(f"rename {src} -> {dst} failed")
+
+
+def read_text(spark: SparkSession, path: str) -> str | None:
+    fs, p = _fs(spark, path)
+    if not fs.exists(p):
+        return None
+    stream = fs.open(p)
+    try:
+        return stream.readAllBytes().decode("utf-8")
+    finally:
+        stream.close()
+
+
+def write_text(spark: SparkSession, path: str, text: str) -> None:
+    fs, p = _fs(spark, path + ".tmp")
+    stream = fs.create(p, True)
+    try:
+        stream.write(text.encode("utf-8"))
+    finally:
+        stream.close()
+    rename(spark, path + ".tmp", path)
+
+
+def file_status(spark: SparkSession, path: str) -> tuple | None:
+    """None for a directory or a path the FileSystem cannot stat."""
+    try:
+        fs, p = _fs(spark, path)
+        st = fs.getFileStatus(p)
+    except Py4JJavaError:
+        return None
+    if not st.isFile():
+        return None
+    return (fs.makeQualified(st.getPath()).toString(), st.getLen(),
+            st.getModificationTime())

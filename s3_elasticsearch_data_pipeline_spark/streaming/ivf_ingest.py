@@ -26,14 +26,12 @@ Centroid drift remains a REBUILD decision (collapse epochs through
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 
 from s3_elasticsearch_data_pipeline_spark.operators.quantizer import (
     _load_quantizer, _train_quantizer, _write_centroid_tables)
 from s3_elasticsearch_data_pipeline_spark.operators.similarity import (
-    _assign_and_write, _guard_not_batch_layout)
+    _assign_and_write, _guard_cell_layout)
 from s3_elasticsearch_data_pipeline_spark.streaming.epochs import (
     _read_optional_parquet, drain)
 
@@ -50,7 +48,7 @@ def ivf_ingest_stream(spark: SparkSession, source_path: str,
     ``"after_centroids_write"`` (bootstrap epoch only) and
     ``"after_cells_write"`` stages."""
     fault = fault_hook or (lambda stage, epoch_id: None)
-    _guard_not_batch_layout(index_path, "ivf_ingest_stream")
+    _guard_cell_layout(spark, index_path, "ivf_ingest_stream", "cell=")
 
     def handle(batch_df: DataFrame, epoch_id: int, phase) -> None:
         sess = batch_df.sparkSession
@@ -75,7 +73,7 @@ def ivf_ingest_stream(spark: SparkSession, source_path: str,
         phase("cells write")
         _assign_and_write(
             batch_df, q,
-            os.path.join(index_path, "cells", f"epoch={epoch_id}"),
+            f"{index_path}/cells/epoch={epoch_id}",
             "overwrite")
         fault("after_cells_write", epoch_id)
 

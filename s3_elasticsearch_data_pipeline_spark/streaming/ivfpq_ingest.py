@@ -25,12 +25,10 @@ add-after-train contract.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 
 from s3_elasticsearch_data_pipeline_spark.operators.similarity import (
-    _guard_not_batch_layout, _ivfpq_append_cells, _load_ivfpq_params,
+    _guard_cell_layout, _ivfpq_append_cells, _load_ivfpq_params,
     _train_ivfpq_params, _write_ivfpq_params)
 from s3_elasticsearch_data_pipeline_spark.streaming.epochs import drain
 
@@ -51,7 +49,7 @@ def ivfpq_ingest_stream(spark: SparkSession, source_path: str,
     ``"after_params_write"`` (bootstrap epoch only) and
     ``"after_cells_write"`` stages."""
     fault = fault_hook or (lambda stage, epoch_id: None)
-    _guard_not_batch_layout(index_path, "ivfpq_ingest_stream")
+    _guard_cell_layout(spark, index_path, "ivfpq_ingest_stream", "cell=")
 
     def handle(batch_df: DataFrame, epoch_id: int, phase) -> None:
         sess = batch_df.sparkSession
@@ -70,7 +68,7 @@ def ivfpq_ingest_stream(spark: SparkSession, source_path: str,
         phase("cells write")
         _ivfpq_append_cells(
             batch_df, *params,
-            os.path.join(index_path, "cells", f"epoch={epoch_id}"),
+            f"{index_path}/cells/epoch={epoch_id}",
             "overwrite")
         fault("after_cells_write", epoch_id)
 

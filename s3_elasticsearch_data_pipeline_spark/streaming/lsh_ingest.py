@@ -22,11 +22,10 @@ can heal offline.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from s3_elasticsearch_data_pipeline_spark import storage
 from s3_elasticsearch_data_pipeline_spark.functions.textfns import tokens
 from s3_elasticsearch_data_pipeline_spark.operators.dedup import (
     _lsh_banded, _resolve_bucket_cap, drop_hot_buckets, portable_hash60,
@@ -39,7 +38,8 @@ from s3_elasticsearch_data_pipeline_spark.streaming.epochs import (
 _HASH_MODE_MARKER = "_HASH_MODE"
 
 
-def _check_and_pin_hash_mode(index_path: str, hash_mode: str) -> None:
+def _check_and_pin_hash_mode(spark: SparkSession, index_path: str,
+                             hash_mode: str) -> None:
     """Fail fast if ``index_path`` was built with a different
     ``hash_mode`` than this call's — mixed-mode probes never collide,
     which would silently admit every near-duplicate. The mode is
@@ -48,12 +48,12 @@ def _check_and_pin_hash_mode(index_path: str, hash_mode: str) -> None:
     the first epoch; an index that predates the marker (parquet
     present, marker absent) is refused for the same reason — the
     build mode is unknowable, so probing it is a guess."""
-    marker = os.path.join(index_path, _HASH_MODE_MARKER)
-    has_index = os.path.isdir(index_path) and any(
-        e.startswith("epoch=") for e in os.listdir(index_path))
-    if os.path.exists(marker):
-        with open(marker, encoding="utf-8") as fh:
-            built_with = fh.read().strip()
+    marker = f"{index_path}/{_HASH_MODE_MARKER}"
+    has_index = any(e.startswith("epoch=")
+                    for e in storage.children(spark, index_path))
+    built_with = storage.read_text(spark, marker)
+    if built_with is not None:
+        built_with = built_with.strip()
         if built_with == hash_mode:
             return
         if has_index:
@@ -74,13 +74,7 @@ def _check_and_pin_hash_mode(index_path: str, hash_mode: str) -> None:
             f"marker — its build hash_mode is unknown, so probing it "
             f"would be a guess (a mismatch silently disables dedup). "
             f"Write the marker with the known build mode, or rebuild.")
-    os.makedirs(index_path, exist_ok=True)
-    # temp-file + atomic rename: two concurrent first runs racing the
-    # marker each land a complete value (never an interleaved torn one)
-    tmp = marker + ".tmp"
-    with open(tmp, "w", encoding="utf-8") as fh:
-        fh.write(hash_mode)
-    os.replace(tmp, marker)
+    storage.write_text(spark, marker, hash_mode)
 
 
 def _banded_with_fallback(df: DataFrame, n: int, num_hashes: int,
@@ -165,7 +159,7 @@ def lsh_ingest_stream(spark: SparkSession, source_path: str,
     call fails fast on disagreement instead of bypassing dedup.
     """
     fault = fault_hook or (lambda stage, epoch_id: None)
-    _check_and_pin_hash_mode(index_path, hash_mode)
+    _check_and_pin_hash_mode(spark, index_path, hash_mode)
     max_bucket_docs = _resolve_bucket_cap(max_bucket_docs)
     est = sig_agreement(F.col("p.sig"), F.col("i.sig"), num_hashes)
 
@@ -229,13 +223,13 @@ def lsh_ingest_stream(spark: SparkSession, source_path: str,
             # checkpoint commit)
             phase("corpus write")
             (admitted(batch_df).write.mode("overwrite")
-             .parquet(os.path.join(corpus_path, f"epoch={epoch_id}")))
+             .parquet(f"{corpus_path}/epoch={epoch_id}"))
             fault("after_corpus_write", epoch_id)
             phase("index write")
             (admitted(probe)
              .select("doc_id", "sig", "band", "bucket")
              .write.mode("overwrite")
-             .parquet(os.path.join(index_path, f"epoch={epoch_id}")))
+             .parquet(f"{index_path}/epoch={epoch_id}"))
             fault("after_index_write", epoch_id)
         finally:
             # the decision cache leaves the cache manager too (the

@@ -30,11 +30,10 @@ the same contract as the IVF ingest's centroid drift.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from s3_elasticsearch_data_pipeline_spark import storage
 from s3_elasticsearch_data_pipeline_spark.operators.dedup import (
     _PAIR_SCHEMA, _blocked_cross_kernel, _blocked_pair_kernel)
 from s3_elasticsearch_data_pipeline_spark.operators.quantizer import (
@@ -83,7 +82,7 @@ def semantic_ingest_stream(spark: SparkSession, source_path: str,
             # every later epoch's probe)
             phase("corpus write")
             (batch_df.write.mode("overwrite")
-             .parquet(os.path.join(corpus_path, f"epoch={epoch_id}")))
+             .parquet(f"{corpus_path}/epoch={epoch_id}"))
             fault("after_corpus_write", epoch_id)
             return
         q = _load_quantizer(sess, index_path)
@@ -96,8 +95,7 @@ def semantic_ingest_stream(spark: SparkSession, source_path: str,
             # this batch's centroids probing cells assigned under the
             # rebuild's never-committed quantizer, missing near-dups
             # forever — so refuse and demand the documented recovery.
-            cells_dir = os.path.join(index_path, "cells")
-            if os.path.isdir(cells_dir) and os.listdir(cells_dir):
+            if storage.children(sess, f"{index_path}/cells"):
                 raise ValueError(
                     "semantic index at %r has a cell store but no "
                     "centroid table — a rebuild_semantic_index crashed "
@@ -143,13 +141,12 @@ def semantic_ingest_stream(spark: SparkSession, source_path: str,
         survivors = batch_df.join(dropped, "vec_id", "left_anti")
         phase("corpus write")
         (survivors.write.mode("overwrite")
-         .parquet(os.path.join(corpus_path, f"epoch={epoch_id}")))
+         .parquet(f"{corpus_path}/epoch={epoch_id}"))
         fault("after_corpus_write", epoch_id)
         phase("index write")
         (probe.join(dropped, "vec_id", "left_anti")
          .write.mode("overwrite")
-         .parquet(os.path.join(index_path, "cells",
-                               f"epoch={epoch_id}")))
+         .parquet(f"{index_path}/cells/epoch={epoch_id}"))
         fault("after_index_write", epoch_id)
 
     drain(spark, "semantic_ingest", source_path, checkpoint_path, handle,
@@ -183,8 +180,6 @@ def rebuild_semantic_index(spark: SparkSession, corpus_path: str,
     ``maintenance.compact_partitions`` — an ingest racing a crashed
     rebuild would re-bootstrap on its own batch). Returns the number
     of cell rows written."""
-    import shutil
-
     corpus = read_corpus(spark, corpus_path)
     if corpus is None:
         raise ValueError(
@@ -204,16 +199,12 @@ def rebuild_semantic_index(spark: SparkSession, corpus_path: str,
     # stage the new cell store, then: delete the commit marker ->
     # swap cells -> write the marker last. Every crash window reads
     # UNTRAINED (centroids absent), never old-centroids-over-new-cells.
-    cells_dir = os.path.join(index_path, "cells")
-    tmp_dir = os.path.join(index_path, "cells.rebuild")
-    shutil.rmtree(tmp_dir, ignore_errors=True)
-    assigned.write.mode("overwrite").parquet(
-        os.path.join(tmp_dir, "epoch=-1"))
+    cells_dir, tmp_dir = f"{index_path}/cells", f"{index_path}/cells.rebuild"
+    storage.delete(spark, tmp_dir)
+    assigned.write.mode("overwrite").parquet(f"{tmp_dir}/epoch=-1")
     n_rows = spark.read.option("basePath", tmp_dir).parquet(tmp_dir).count()
-    shutil.rmtree(os.path.join(index_path, "centroids"),
-                  ignore_errors=True)                 # commit marker off
-    shutil.rmtree(os.path.join(index_path, "supers"), ignore_errors=True)
-    shutil.rmtree(cells_dir, ignore_errors=True)
-    os.replace(tmp_dir, cells_dir)
+    storage.delete(spark, f"{index_path}/centroids")  # commit marker off
+    storage.delete(spark, f"{index_path}/supers")
+    storage.rename(spark, tmp_dir, cells_dir)
     _write_centroid_tables(spark, index_path, q)      # commit marker on
     return n_rows

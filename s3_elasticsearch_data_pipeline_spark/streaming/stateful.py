@@ -23,8 +23,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from s3_elasticsearch_data_pipeline_spark.streaming.windowed import (  # noqa: E501
-    _nanos_scoped)
+from s3_elasticsearch_data_pipeline_spark.streaming.windowed import (
+    _file_stream, _nanos_scoped)
 
 OUTPUT_SCHEMA = "user_id long, n_events long, total_value double, last_ts timestamp"
 STATE_SCHEMA = "n_events long, total_value double, last_ts timestamp"
@@ -55,15 +55,7 @@ def running_user_totals(spark: SparkSession, events_path: str) -> DataFrame:
     the checkpoint's state store, partitioned by user hash — the same
     shuffle key as a batch groupBy, so skew/AQE reasoning carries over.
     """
-    import os
-    static = spark.read.parquet(events_path)
-    stream_path = (events_path if os.path.isdir(events_path)
-                   else events_path + "*")
-    stream = (spark.readStream.schema(static.schema)
-              .format("parquet").load(stream_path))
-    from .windowed import _with_utc_ts
-    stream = _with_utc_ts(stream, static.schema)
-    updated = (stream
+    updated = (_file_stream(spark, events_path)
                .select("user_id", "ts", "value")
                .groupBy("user_id")
                .applyInPandasWithState(
@@ -95,8 +87,6 @@ def running_user_totals_tws(spark: SparkSession,
     when eviction policies are needed. Kept alongside the legacy-API
     twin so the two are equivalence-tested — a migration template.
     """
-    import os
-
     # The new API's Python runner speaks protobuf to the JVM; gate on
     # the dependency so environments without it get a clear pointer to
     # the equivalent legacy-API operator instead of a worker crash.
@@ -136,14 +126,7 @@ def running_user_totals_tws(spark: SparkSession,
         def close(self) -> None:
             pass
 
-    static = spark.read.parquet(events_path)
-    stream_path = (events_path if os.path.isdir(events_path)
-                   else events_path + "*")
-    stream = (spark.readStream.schema(static.schema)
-              .format("parquet").load(stream_path))
-    from .windowed import _with_utc_ts
-    stream = _with_utc_ts(stream, static.schema)
-    updated = (stream
+    updated = (_file_stream(spark, events_path)
                .select("user_id", "ts", "value")
                .groupBy("user_id")
                .transformWithStateInPandas(

@@ -10,13 +10,13 @@ what Structured Streaming's incremental execution model guarantees.
 from __future__ import annotations
 
 import functools
-import os
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-_NANOS_KEY = "spark.sql.legacy.parquet.nanosAsLong"
+from s3_elasticsearch_data_pipeline_spark import storage
+from s3_elasticsearch_data_pipeline_spark.session import scoped_conf
 
 
 def _nanos_scoped(fn):
@@ -31,15 +31,9 @@ def _nanos_scoped(fn):
 
     @functools.wraps(fn)
     def wrapper(spark, *args, **kwargs):
-        prev = spark.conf.get(_NANOS_KEY, None)
-        spark.conf.set(_NANOS_KEY, "true")
-        try:
+        with scoped_conf(spark, "spark.sql.legacy.parquet.nanosAsLong",
+                         "true"):
             return fn(spark, *args, **kwargs)
-        finally:
-            if prev is None:
-                spark.conf.unset(_NANOS_KEY)
-            else:
-                spark.conf.set(_NANOS_KEY, prev)
     return wrapper
 
 
@@ -70,16 +64,7 @@ def stream_tumbling_agg(spark: SparkSession, events_path: str,
     (windows older than it are finalized and evicted), and the memory
     sink becomes a real sink with ``Trigger.AvailableNow`` checkpoints.
     """
-    # events.ts is parquet TIMESTAMP(NANOS): readable only as long
-    # (see tables.NANOS_TS_COLS), converted to µs below.
-    static = spark.read.parquet(events_path)
-    # The file-stream source wants a directory or glob, not a bare
-    # file — turn a single-file path into an exact-match glob.
-    stream_path = events_path if os.path.isdir(events_path) else events_path + "*"
-    stream = (spark.readStream.schema(static.schema)
-              .format("parquet").load(stream_path))
-    stream = _with_utc_ts(stream, static.schema)
-    agg = (stream
+    agg = (_file_stream(spark, events_path)
            .withWatermark("ts", watermark)
            .groupBy(F.window("ts", f"{minutes} minutes").alias("w"),
                     F.col("event_type"))
@@ -110,13 +95,7 @@ def stream_session_agg(spark: SparkSession, events_path: str,
     Equivalent batch semantics: the lag-gap sessionization
     (operators.windows.sessionize) with the same gap — which is the
     SQL oracle the driver checks."""
-    static = spark.read.parquet(events_path)
-    stream_path = (events_path if os.path.isdir(events_path)
-                   else events_path + "*")
-    stream = (spark.readStream.schema(static.schema)
-              .format("parquet").load(stream_path))
-    stream = _with_utc_ts(stream, static.schema)
-    agg = (stream
+    agg = (_file_stream(spark, events_path)
            .withWatermark("ts", watermark)
            .groupBy(F.session_window("ts", f"{gap_minutes} minutes")
                     .alias("w"),
@@ -137,14 +116,14 @@ def stream_session_agg(spark: SparkSession, events_path: str,
                     "n_events", "session_value"))
 
 
-def _events_stream(spark: SparkSession, events_path: str):
-    """File-source stream over the events table with the nanos→µs ts
-    conversion (see stream_tumbling_agg)."""
-    static = spark.read.parquet(events_path)
-    stream_path = (events_path if os.path.isdir(events_path)
-                   else events_path + "*")
-    stream = (spark.readStream.schema(static.schema)
-              .format("parquet").load(stream_path))
+def _file_stream(spark: SparkSession, path: str) -> DataFrame:
+    """File-source stream over a parquet table, with the schema of its
+    batch read and ``ts`` normalized (see :func:`_with_utc_ts`). The
+    file source wants a directory or glob, so a single-file table is
+    read through an exact-match glob."""
+    static = spark.read.parquet(path)
+    stream = (spark.readStream.schema(static.schema).format("parquet")
+              .load(path if storage.is_dir(spark, path) else path + "*"))
     return _with_utc_ts(stream, static.schema)
 
 
@@ -169,8 +148,8 @@ def stream_dedup_events(spark: SparkSession, events_path: str,
     horizon and is evicted past it, which is what keeps this runnable
     forever on an unbounded 100 TB/day feed (a plain dropDuplicates
     would accumulate state without bound)."""
-    doubled = _events_stream(spark, events_path).unionByName(
-        _events_stream(spark, events_path))
+    doubled = _file_stream(spark, events_path).unionByName(
+        _file_stream(spark, events_path))
     deduped = (doubled
                .withWatermark("ts", watermark)
                .dropDuplicatesWithinWatermark(["event_id"])
@@ -189,13 +168,13 @@ def stream_stream_purchase_attribution(spark: SparkSession,
     time-range predicate plus both-side watermarks let the state store
     evict rows once the horizon passes — the unbounded-safe form of
     funnel attribution."""
-    clicks = (_events_stream(spark, events_path)
+    clicks = (_file_stream(spark, events_path)
               .where(F.col("event_type") == "click")
               .select(F.col("event_id").alias("click_id"),
                       F.col("user_id").alias("click_user"),
                       F.col("ts").alias("click_ts"))
               .withWatermark("click_ts", "2 hours"))
-    purchases = (_events_stream(spark, events_path)
+    purchases = (_file_stream(spark, events_path)
                  .where(F.col("event_type") == "purchase")
                  .select(F.col("event_id").alias("purchase_id"),
                          "user_id", F.col("ts").alias("purchase_ts"))
@@ -220,13 +199,7 @@ def stream_sliding_agg(spark: SparkSession, events_path: str,
     tumbling variant; at scale the watermark evicts expired windows so
     state stays proportional to the active window count, not history.
     """
-    static = spark.read.parquet(events_path)
-    stream_path = (events_path if os.path.isdir(events_path)
-                   else events_path + "*")
-    stream = (spark.readStream.schema(static.schema)
-              .format("parquet").load(stream_path))
-    stream = _with_utc_ts(stream, static.schema)
-    agg = (stream
+    agg = (_file_stream(spark, events_path)
            .withWatermark("ts", watermark)
            .groupBy(F.window("ts", f"{width_minutes} minutes",
                              f"{slide_minutes} minutes").alias("w"),
@@ -265,7 +238,7 @@ def stream_static_enrich(spark: SparkSession, events_path: str,
     At 100 TB/day the same plan holds as long as the dim fits the
     broadcast budget; a big dim instead pre-buckets both sides.
     """
-    stream = _events_stream(spark, events_path)
+    stream = _file_stream(spark, events_path)
     if join_expr is None:
         join_expr = stream["user_id"] == dim["c_custkey"]
     enriched = stream.join(F.broadcast(dim), join_expr)
@@ -291,12 +264,7 @@ def stream_ohlc(spark: SparkSession, events_path: str,
     under streaming, but an order-picking aggregate is, and both
     select the same deterministic endpoints.
     """
-    static = spark.read.parquet(events_path)
-    stream_path = (events_path if os.path.isdir(events_path)
-                   else events_path + "*")
-    stream = (spark.readStream.schema(static.schema)
-              .format("parquet").load(stream_path))
-    stream = _with_utc_ts(stream, static.schema)
+    stream = _file_stream(spark, events_path)
     order = F.struct("ts", "event_id")
     agg = (stream
            .withWatermark("ts", watermark)
@@ -328,11 +296,7 @@ def stream_wordcount_topk(spark: SparkSession, documents_path: str,
     vocabulary head over the same corpus — streaming incremental
     execution must converge to it exactly.
     """
-    static = spark.read.parquet(documents_path)
-    stream_path = (documents_path if os.path.isdir(documents_path)
-                   else documents_path + "*")
-    stream = (spark.readStream.schema(static.schema)
-              .format("parquet").load(stream_path))
+    stream = _file_stream(spark, documents_path)
     toks = stream.select(
         "doc_id",
         F.explode(F.filter(F.split(F.col("text"), r"\s+"),

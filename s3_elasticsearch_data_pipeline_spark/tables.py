@@ -10,10 +10,11 @@ from __future__ import annotations
 
 import os
 
-from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
+
+from s3_elasticsearch_data_pipeline_spark import storage
 
 TABLES = (
     "region", "nation", "customer", "supplier", "part",
@@ -60,18 +61,11 @@ _SCHEMA_CACHE: dict[tuple, StructType] = {}
 def _schema_key(spark: SparkSession, path: str) -> tuple | None:
     """Memo key of a parquet FILE, or None for a directory or a path
     the FileSystem cannot stat (the plain read then raises as before)."""
-    jvm = spark._jvm
-    try:
-        p = jvm.org.apache.hadoop.fs.Path(path)
-        fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-        st = fs.getFileStatus(p)
-    except Py4JJavaError:
-        return None
-    if not st.isFile():
+    status = storage.file_status(spark, path)
+    if status is None:
         return None
     confs = tuple(spark.conf.get(c, None) for c in _SCHEMA_INFERENCE_CONFS)
-    return (fs.makeQualified(st.getPath()).toString(), st.getLen(),
-            st.getModificationTime(), confs)
+    return status + (confs,)
 
 
 def _read_parquet(spark: SparkSession, path: str) -> DataFrame:

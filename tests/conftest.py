@@ -13,6 +13,13 @@ SF_SMOKE = "/root/testdata/sf0.001"
 SF_ORACLE = "/root/testdata/sf0.01"
 
 
+def spelled(path, spelling: str) -> str:
+    """``path`` as a bare local path (``"bare"``) or as its ``file://``
+    URI (``"file_uri"``): persisted state must read the same through
+    both spellings of one directory."""
+    return ("file://" if spelling == "file_uri" else "") + str(path)
+
+
 @pytest.fixture(scope="session")
 def spark():
     spark = get_spark("tests")

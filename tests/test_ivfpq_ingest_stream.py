@@ -14,10 +14,11 @@ from s3_elasticsearch_data_pipeline_spark.operators import similarity
 from s3_elasticsearch_data_pipeline_spark.streaming.ivfpq_ingest import (
     ivfpq_ingest_stream)
 from s3_elasticsearch_data_pipeline_spark.tables import load_table
+from tests.conftest import spelled
 
 
-def _paths(tmp_path, name):
-    base = str(tmp_path / name)
+def _paths(root, name):
+    base = f"{root}/{name}"
     return (os.path.join(base, "src"), os.path.join(base, "index"),
             os.path.join(base, "ckpt"))
 
@@ -164,7 +165,8 @@ def test_stream_ivfpq_torn_bootstrap_params_read_as_untrained(
 
 
 def test_batch_append_onto_stream_layout_is_refused(spark, sf_oracle,
-                                                    tmp_path):
+                                                    tmp_path,
+                                                    spelling="bare"):
     """A stream-built index lays files as cells/epoch=K/cell=N; a batch
     append would write cells/cell=N next to them — parameter loading
     succeeds, so without the guard the append is silently accepted and
@@ -174,7 +176,8 @@ def test_batch_append_onto_stream_layout_is_refused(spark, sf_oracle,
     emb = (load_table(spark, sf_oracle, "embeddings")
            .select("vec_id", "embedding"))
     queries = emb.where(F.col("vec_id") < 5)
-    src, index, ckpt = _paths(tmp_path, "guard")
+    root = spelled(tmp_path, spelling)
+    src, index, ckpt = _paths(root, "guard")
     emb.where(F.col("vec_id") % 2 == 0).write.parquet(src)
     ivfpq_ingest_stream(spark, src, index, ckpt, n_cells=8)
     before = {(r.query_id, r.neighbor_id, r.sim, r.rank)
@@ -191,12 +194,18 @@ def test_batch_append_onto_stream_layout_is_refused(spark, sf_oracle,
     # same guard on the plain-IVF append (shared layout contract)
     from s3_elasticsearch_data_pipeline_spark.streaming.ivf_ingest import (
         ivf_ingest_stream)
-    src2, index2, ckpt2 = _paths(tmp_path, "guard_ivf")
+    src2, index2, ckpt2 = _paths(root, "guard_ivf")
     emb.where(F.col("vec_id") % 2 == 0).write.parquet(src2)
     ivf_ingest_stream(spark, src2, index2, ckpt2, n_cells=8)
     with pytest.raises(ValueError, match="streaming ingest"):
         similarity.ivf_index_append(
             spark, index2, emb.where(F.col("vec_id") % 2 == 1))
+
+
+def test_batch_append_onto_stream_layout_is_refused_file_uri(
+        spark, sf_oracle, tmp_path):
+    test_batch_append_onto_stream_layout_is_refused(
+        spark, sf_oracle, tmp_path, "file_uri")
 
 
 def test_stream_ingest_onto_batch_layout_is_refused(spark, sf_oracle,

@@ -16,6 +16,7 @@ from s3_elasticsearch_data_pipeline_spark.plans.incremental import incremental_l
 from s3_elasticsearch_data_pipeline_spark.plans.reconcile import reconcile
 from s3_elasticsearch_data_pipeline_spark.streaming.incremental_stream import (
     incremental_stream_load)
+from tests.conftest import spelled
 
 
 @pytest.fixture
@@ -28,14 +29,19 @@ def source(spark, sf_smoke):
                     F.col("o_totalprice").alias("value")))
 
 
-def test_incremental_load_idempotent(spark, source, tmp_path):
-    sink = str(tmp_path / "serving")
+def test_incremental_load_idempotent(spark, source, tmp_path,
+                                     spelling="bare"):
+    sink = spelled(tmp_path, spelling) + "/serving"
     r1 = incremental_load(spark, source, sink)
     assert r1.rows_loaded == source.count()
     assert len(r1.partitions_loaded) > 0
     r2 = incremental_load(spark, source, sink)
     assert r2.partitions_loaded == [] and r2.rows_loaded == 0
     assert spark.read.parquet(sink).count() == source.count()
+
+
+def test_incremental_load_idempotent_file_uri(spark, source, tmp_path):
+    test_incremental_load_idempotent(spark, source, tmp_path, "file_uri")
 
 
 def test_incremental_load_skips_loaded_partition(spark, source, tmp_path):
@@ -51,8 +57,9 @@ def test_incremental_load_skips_loaded_partition(spark, source, tmp_path):
     assert sorted(r.partitions_loaded) == sorted(m for m in months if m != first)
 
 
-def test_reconcile_restores_missing_rows(spark, source, tmp_path):
-    sink = str(tmp_path / "serving")
+def test_reconcile_restores_missing_rows(spark, source, tmp_path,
+                                        spelling="bare"):
+    sink = spelled(tmp_path, spelling) + "/serving"
     incremental_load(spark, source, sink)
     # damage: drop 25 rows from one month
     serving = spark.read.parquet(sink)
@@ -64,8 +71,8 @@ def test_reconcile_restores_missing_rows(spark, source, tmp_path):
     kept = serving.join(doomed, "id", "left_anti")
     tmp2 = str(tmp_path / "serving2")
     kept.write.partitionBy("month").parquet(tmp2)
-    shutil.rmtree(sink)
-    os.rename(tmp2, sink)
+    shutil.rmtree(tmp_path / "serving")
+    os.rename(tmp2, tmp_path / "serving")
 
     report = reconcile(spark, source, sink)
     assert report.mismatched_partitions == [victim_month]
@@ -76,6 +83,10 @@ def test_reconcile_restores_missing_rows(spark, source, tmp_path):
     # second pass: clean
     again = reconcile(spark, source, sink)
     assert again.mismatched_partitions == [] and again.rows_repaired == 0
+
+
+def test_reconcile_restores_missing_rows_file_uri(spark, source, tmp_path):
+    test_reconcile_restores_missing_rows(spark, source, tmp_path, "file_uri")
 
 
 def test_backfill_and_describe(spark, source, tmp_path):
@@ -319,22 +330,23 @@ def test_delete_by_key_removes_emptied_partition_dirs(spark, source,
 
 
 def test_delete_by_key_handles_null_and_escaped_partition_values(
-        spark, tmp_path):
+        spark, tmp_path, spelling="bare"):
     """Partition values that don't round-trip through str()-to-dirname
     — null (lands in __HIVE_DEFAULT_PARTITION__) and Hive-escaped
     specials (e.g. ':') — must still delete correctly: the touched set
     comes from the victim rows' actual FILES, not a rendered path."""
     from s3_elasticsearch_data_pipeline_spark.sinks.keyed import (
         delete_by_key)
-    sink = str(tmp_path / "serving")
+    sink = spelled(tmp_path, spelling) + "/serving"
+    local = tmp_path / "serving"
     df = spark.createDataFrame(
         [("a", None, 1.0), ("b", None, 2.0),
          ("c", "2024:01", 3.0), ("d", "2024:01", 4.0),
          ("e", "2024-02", 5.0)],
         "id string, month string, value double")
     df.write.partitionBy("month").parquet(sink)
-    assert os.path.isdir(
-        os.path.join(sink, "month=__HIVE_DEFAULT_PARTITION__"))
+    assert {"month=__HIVE_DEFAULT_PARTITION__",
+            "month=2024%3A01"} <= set(os.listdir(local))
     # delete one row from the null partition and one from the escaped
     doom = spark.createDataFrame([("a",), ("c",)], "id string")
     assert delete_by_key(spark, doom, sink) == 2
@@ -343,7 +355,13 @@ def test_delete_by_key_handles_null_and_escaped_partition_values(
     # now empty both partitions out entirely — dirs must disappear
     doom2 = spark.createDataFrame([("b",), ("d",)], "id string")
     assert delete_by_key(spark, doom2, sink) == 2
-    assert not os.path.isdir(
-        os.path.join(sink, "month=__HIVE_DEFAULT_PARTITION__"))
+    assert sorted(d for d in os.listdir(local)
+                  if d.startswith("month=")) == ["month=2024-02"]
     left = {(r.id, r.month) for r in spark.read.parquet(sink).collect()}
     assert left == {("e", "2024-02")}
+
+
+def test_delete_by_key_handles_null_and_escaped_partition_values_file_uri(
+        spark, tmp_path):
+    test_delete_by_key_handles_null_and_escaped_partition_values(
+        spark, tmp_path, "file_uri")

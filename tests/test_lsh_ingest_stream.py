@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from s3_elasticsearch_data_pipeline_spark.streaming.lsh_ingest import (
     lsh_ingest_stream, read_corpus)
+from tests.conftest import spelled
 
 
 def _docs(spark, sf_smoke):
@@ -192,57 +193,68 @@ def test_incremental_lsh_cap_admits_hot_keeps_cool_identical(
             == {i for i in uncapped if i < 500_000})
 
 
-def test_hash_mode_pinned_with_index(spark, sf_smoke, tmp_path):
+def test_hash_mode_pinned_with_index(spark, sf_smoke, tmp_path,
+                                     spelling="bare"):
     """The persisted band index records its build hash_mode and a
     mismatched re-run fails fast instead of silently never colliding
     (which would admit every duplicate); a pre-marker legacy index is
     refused outright because its mode is unknowable."""
     import pytest
-    src = str(tmp_path / "src")
-    corpus, index = str(tmp_path / "c"), str(tmp_path / "i")
+    root = spelled(tmp_path, spelling)
+    src, corpus, index = root + "/src", root + "/c", root + "/i"
     _docs(spark, sf_smoke).where(F.col("doc_id") < 20).write.parquet(src)
-    lsh_ingest_stream(spark, src, corpus, index, str(tmp_path / "k1"))
-    # marker written with the default mode
-    with open(os.path.join(index, "_HASH_MODE")) as fh:
+    lsh_ingest_stream(spark, src, corpus, index, root + "/k1")
+    # marker written with the default mode, inside the index
+    with open(tmp_path / "i" / "_HASH_MODE") as fh:
         assert fh.read().strip() == "xxhash64"
     # same mode re-runs fine (no new files -> no-op)
-    lsh_ingest_stream(spark, src, corpus, index, str(tmp_path / "k1"))
+    lsh_ingest_stream(spark, src, corpus, index, root + "/k1")
     # a different mode against the same index must fail fast
     with pytest.raises(ValueError, match="hash_mode"):
         lsh_ingest_stream(spark, src, corpus, index,
-                          str(tmp_path / "k2"), hash_mode="portable")
+                          root + "/k2", hash_mode="portable")
     # legacy index (epochs present, marker absent) is refused
-    os.remove(os.path.join(index, "_HASH_MODE"))
+    os.remove(tmp_path / "i" / "_HASH_MODE")
     with pytest.raises(ValueError, match="_HASH_MODE"):
-        lsh_ingest_stream(spark, src, corpus, index, str(tmp_path / "k3"))
+        lsh_ingest_stream(spark, src, corpus, index, root + "/k3")
 
 
-def test_hash_mode_repin_allowed_while_index_empty(tmp_path):
+def test_hash_mode_pinned_with_index_file_uri(spark, sf_smoke, tmp_path):
+    test_hash_mode_pinned_with_index(spark, sf_smoke, tmp_path, "file_uri")
+
+
+def test_hash_mode_repin_allowed_while_index_empty(spark, tmp_path,
+                                                   spelling="bare"):
     """A first run that dies before producing any epoch must not wedge
     the index on its hash_mode: with zero epoch= directories a retry
     under a DIFFERENT mode re-pins the marker (the index is empty, so
     a rebuild-equivalent restart is safe); once an epoch exists the
     mismatch fails fast as before. Marker writes are atomic
-    (temp + os.replace) so concurrent first runs never tear it."""
+    (temp + rename) so concurrent first runs never tear it."""
     import pytest
 
     from s3_elasticsearch_data_pipeline_spark.streaming.lsh_ingest import (
         _check_and_pin_hash_mode)
-    index = str(tmp_path / "i")
-    _check_and_pin_hash_mode(index, "xxhash64")  # first attempt pins
-    with open(os.path.join(index, "_HASH_MODE")) as fh:
+    index, local = spelled(tmp_path, spelling) + "/i", str(tmp_path / "i")
+    _check_and_pin_hash_mode(spark, index, "xxhash64")  # first attempt pins
+    with open(os.path.join(local, "_HASH_MODE")) as fh:
         assert fh.read() == "xxhash64"
     # no epochs yet -> a different mode RE-pins instead of raising
-    _check_and_pin_hash_mode(index, "portable")
-    with open(os.path.join(index, "_HASH_MODE")) as fh:
+    _check_and_pin_hash_mode(spark, index, "portable")
+    with open(os.path.join(local, "_HASH_MODE")) as fh:
         assert fh.read() == "portable"
     # an epoch directory freezes the mode
-    os.makedirs(os.path.join(index, "epoch=0"))
+    os.makedirs(os.path.join(local, "epoch=0"))
     with pytest.raises(ValueError, match="hash_mode"):
-        _check_and_pin_hash_mode(index, "xxhash64")
-    _check_and_pin_hash_mode(index, "portable")  # recorded mode still ok
+        _check_and_pin_hash_mode(spark, index, "xxhash64")
+    _check_and_pin_hash_mode(spark, index, "portable")  # recorded mode ok
     # no stray temp file left behind
-    assert not os.path.exists(os.path.join(index, "_HASH_MODE.tmp"))
+    assert not os.path.exists(os.path.join(local, "_HASH_MODE.tmp"))
+
+
+def test_hash_mode_repin_allowed_while_index_empty_file_uri(spark, tmp_path):
+    test_hash_mode_repin_allowed_while_index_empty(spark, tmp_path,
+                                                   "file_uri")
 
 
 def test_fallback_channel_routes_the_docs_the_banding_skips(spark):

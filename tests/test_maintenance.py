@@ -68,6 +68,8 @@ def test_compaction_preserves_rows_and_reduces_files(spark, monthly_events,
     other_files_before = len(
         glob.glob(os.path.join(path, f"month={months[-1]}", "*.parquet")))
 
+    mode_key = "spark.sql.sources.partitionOverwriteMode"
+    prior_mode = spark.conf.get(mode_key, None)
     compact_partitions(spark, path, [target])
 
     stats2 = {r["month"]: r for r in
@@ -82,9 +84,32 @@ def test_compaction_preserves_rows_and_reduces_files(spark, monthly_events,
         path, f"month={months[-1]}", "*.parquet"))) == other_files_before
     # the dynamic-overwrite override must not leak into the session:
     # an unrelated writer relying on the static default would silently
-    # switch from whole-table to matched-partition overwrites
-    assert spark.conf.get(
-        "spark.sql.sources.partitionOverwriteMode") == "static"
+    # switch from whole-table to matched-partition overwrites. The
+    # prior state comes back exactly: unset stays unset (the static
+    # default), a set value is set again
+    assert spark.conf.get(mode_key, None) == prior_mode
+    assert spark.conf.get(mode_key).lower() == "static"
+
+
+def test_partition_file_stats_bytes_are_each_files_own_size(spark,
+                                                           tmp_path):
+    """One write task names its part file the same way in every
+    partition, so each partition's ``bytes`` must come from its own
+    file, not from a lookup by file name."""
+    path = str(tmp_path / "tbl")
+    rows = [(f"m{m}", "x" * 40 * i) for m, n in ((1, 10), (2, 200),
+                                               (3, 2000))
+            for i in range(n)]
+    (spark.createDataFrame(rows, "month string, text string")
+     .coalesce(1).write.partitionBy("month").parquet(path))
+    on_disk = {}
+    for m in ("m1", "m2", "m3"):
+        (part,) = glob.glob(os.path.join(path, f"month={m}", "*.parquet"))
+        on_disk[m] = os.path.getsize(part)
+    assert len(set(on_disk.values())) == 3
+    got = {r["month"]: r["bytes"]
+           for r in partition_file_stats(spark, path).collect()}
+    assert got == on_disk
 
 
 def test_streaming_rollup_exactly_once_including_late_files(spark,

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from s3_elasticsearch_data_pipeline_spark.streaming.semantic_ingest import (
     read_corpus, semantic_ingest_stream)
+from tests.conftest import spelled
 
 
 def _embs(spark, sf_smoke):
@@ -247,7 +248,8 @@ def test_rebuild_semantic_index_on_drifted_corpus(spark, sf_smoke,
 
 
 def test_rebuild_crash_window_reads_untrained_and_heals(spark, sf_smoke,
-                                                        tmp_path):
+                                                        tmp_path,
+                                                        spelling="bare"):
     """The rebuild's commit-marker discipline: simulate a crash AFTER
     the cell-store swap but BEFORE the centroid write (the torn
     window) — the index must read as untrained (never old centroids
@@ -260,18 +262,17 @@ def test_rebuild_crash_window_reads_untrained_and_heals(spark, sf_smoke,
         _load_quantizer)
     from s3_elasticsearch_data_pipeline_spark.streaming.semantic_ingest \
         import rebuild_semantic_index
-    src = str(tmp_path / "src")
-    corpus, index = str(tmp_path / "c"), str(tmp_path / "i")
+    root = spelled(tmp_path, spelling)
+    src, corpus, index = root + "/src", root + "/c", root + "/i"
     _embs(spark, sf_smoke).where(F.col("vec_id") < 150).write.parquet(src)
-    semantic_ingest_stream(spark, src, corpus, index,
-                           str(tmp_path / "k"))
+    semantic_ingest_stream(spark, src, corpus, index, root + "/k")
     # uncrashed rebuild = the reference final state
     n_ref = rebuild_semantic_index(spark, corpus, index)
     ref_cents = sorted(map(tuple, (
         (r["cell"], tuple(r["centroid"])) for r in
         spark.read.parquet(index + "/centroids").collect())))
     # simulate the torn window: marker off + cells already swapped
-    shutil.rmtree(index + "/centroids")
+    shutil.rmtree(tmp_path / "i" / "centroids")
     assert _load_quantizer(spark, index) is None, \
         "torn rebuild window must read as untrained"
     # an ingest racing the crashed rebuild must REFUSE to bootstrap
@@ -281,8 +282,7 @@ def test_rebuild_crash_window_reads_untrained_and_heals(spark, sf_smoke,
         (F.col("vec_id") >= 200) & (F.col("vec_id") < 220)) \
         .write.mode("append").parquet(src)
     with pytest.raises(Exception, match="rebuild_semantic_index"):
-        semantic_ingest_stream(spark, src, corpus, index,
-                               str(tmp_path / "k"))
+        semantic_ingest_stream(spark, src, corpus, index, root + "/k")
     # heal by re-running (the documented recovery)
     n2 = rebuild_semantic_index(spark, corpus, index)
     assert n2 == n_ref
@@ -290,4 +290,10 @@ def test_rebuild_crash_window_reads_untrained_and_heals(spark, sf_smoke,
         (r["cell"], tuple(r["centroid"])) for r in
         spark.read.parquet(index + "/centroids").collect())))
     assert got_cents == ref_cents
-    assert not _os.path.exists(index + "/cells.rebuild")
+    assert not _os.path.exists(tmp_path / "i" / "cells.rebuild")
+
+
+def test_rebuild_crash_window_reads_untrained_and_heals_file_uri(
+        spark, sf_smoke, tmp_path):
+    test_rebuild_crash_window_reads_untrained_and_heals(
+        spark, sf_smoke, tmp_path, "file_uri")

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from s3_elasticsearch_data_pipeline_spark.sinks.es import (
     DEFAULT_ES_OPTIONS, es_write_options, write_to_es)
 from s3_elasticsearch_data_pipeline_spark.sinks.keyed import upsert_by_key
+from tests.conftest import spelled
 
 
 def test_es_options_keyed_upsert():
@@ -58,8 +59,10 @@ def test_write_to_es_propagates_genuine_write_failures():
         "Connection refused: es-node-7:9200"))
 
 
-def test_upsert_last_write_wins(spark, tmp_path):
-    path = str(tmp_path / "serving")
+def test_upsert_last_write_wins(spark, tmp_path, spelling="bare"):
+    """Incoming rows win by key; keys the update does not carry (``b``)
+    survive in the partition it rewrites."""
+    path = spelled(tmp_path, spelling) + "/serving"
     v1 = spark.createDataFrame(
         [("a", "2024-01", 1.0), ("b", "2024-01", 2.0)],
         "id string, month string, value double")
@@ -71,8 +74,13 @@ def test_upsert_last_write_wins(spark, tmp_path):
     got = {r.id: r.value for r in spark.read.parquet(path).collect()}
     assert got == {"a": 99.0, "b": 2.0, "c": 3.0}
     # hive layout: months are directories; untouched partitions survive
-    assert sorted(d for d in os.listdir(path) if d.startswith("month=")) == \
+    assert sorted(d for d in os.listdir(tmp_path / "serving")
+                  if d.startswith("month=")) == \
         ["month=2024-01", "month=2024-02"]
+
+
+def test_upsert_last_write_wins_file_uri(spark, tmp_path):
+    test_upsert_last_write_wins(spark, tmp_path, "file_uri")
 
 
 def test_csv_json_round_trip(spark, tmp_path):
