@@ -18,6 +18,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
+from s3_elasticsearch_data_pipeline_spark.session import (
+    aqe_disabled, job_phases, persistent_rdd_ids, release_persistent_rdds)
+
 
 #: Estimated broadcast bytes per rank-vector row: 8 B double + a short
 #: node key + JVM object/hash-relation overhead. Deliberately on the
@@ -31,8 +34,6 @@ RANK_ROW_BYTES = 32
 #: serving-sized graph. (The old limit was a 10M-node COUNT — ~300 MB,
 #: the very size its own comment called past any sane threshold.)
 BROADCAST_RANKS_BUDGET_BYTES = 64 * 1024 * 1024
-
-_JOB_DESCRIPTION = "spark.job.description"
 
 #: r11: the AQE-off window moved to ``session.aqe_disabled`` — one
 #: shared lock for every scoped toggle in the package.
@@ -74,18 +75,14 @@ def pagerank(edges: DataFrame, iters: int = 3, damping: float = 0.85,
     Jobs carry the description ``pagerank: degrees`` or ``pagerank:
     iterate``; the caller's description is restored on return.
     """
-    sc = edges.sparkSession.sparkContext
-    prior_description = sc.getLocalProperty(_JOB_DESCRIPTION)
-    try:
+    with job_phases(edges.sparkSession, "pagerank") as phase:
         return _pagerank(edges, iters, damping, broadcast_ranks,
-                         broadcast_budget_bytes, materialize)
-    finally:
-        sc.setLocalProperty(_JOB_DESCRIPTION, prior_description)
+                         broadcast_budget_bytes, materialize, phase)
 
 
 def _pagerank(edges: DataFrame, iters: int, damping: float,
               broadcast_ranks: bool | None, broadcast_budget_bytes: int,
-              materialize: bool) -> DataFrame:
+              materialize: bool, phase) -> DataFrame:
     # Materialize the incoming edge plan ONCE: callers typically hand in
     # an expensive pipeline (join+distinct), and the degree pass, the
     # edges_d checkpoint, and the node-set derivation would otherwise
@@ -96,10 +93,8 @@ def _pagerank(edges: DataFrame, iters: int, damping: float,
     # measured 2.5 s → 14 s over eight calls in one session). The
     # returned ranks are eagerly checkpointed LAST, so they are
     # self-contained and never named by the release diff.
-    from s3_elasticsearch_data_pipeline_spark.session import (
-        persistent_rdd_ids, release_persistent_rdds)
     spark = edges.sparkSession
-    spark.sparkContext.setJobDescription("pagerank: degrees")
+    phase("degrees")
     before = persistent_rdd_ids(spark)
     # lazy edge checkpoint, materialized as a side effect of the eager
     # degree checkpoint right below — one pass over the edge plan, not
@@ -118,7 +113,7 @@ def _pagerank(edges: DataFrame, iters: int, damping: float,
            .observe(n_obs, F.count(F.lit(1)).alias("n"))
            .localCheckpoint(eager=True))
     n = n_obs.get["n"]
-    spark.sparkContext.setJobDescription("pagerank: iterate")
+    phase("iterate")
     if broadcast_ranks is None:
         broadcast_ranks = n * RANK_ROW_BYTES <= broadcast_budget_bytes
     hint = F.broadcast if broadcast_ranks else (lambda d: d)
@@ -185,8 +180,6 @@ def _pagerank(edges: DataFrame, iters: int, damping: float,
     # multi-tenant service should hand pagerank its own session clone.
     mid = persistent_rdd_ids(spark)
     if broadcast_ranks:
-        from s3_elasticsearch_data_pipeline_spark.session import (
-            aqe_disabled)
         with aqe_disabled(spark):
             out = out.localCheckpoint(eager=True)
     else:

@@ -36,6 +36,8 @@ from s3_elasticsearch_data_pipeline_spark.operators.quantizer import (
     _init_rows, _load_quantizer, _q_nearest_cells, _quantizer_cells_fn,
     _read_param_table, _train_quantizer, _write_centroid_tables,
     auto_n_cells)
+from s3_elasticsearch_data_pipeline_spark.session import (
+    job_phases, log_decision)
 
 
 def _rademacher_plane(plane_id: int, dims: int) -> list[float]:
@@ -337,7 +339,24 @@ def _score_pairs_arrow(matched: DataFrame) -> DataFrame:
         .otherwise(F.col("sim")))
 
 
-def _query_rows_over_cap(rows, max_rows: int) -> bool:
+def serving_cap_tripped(site: str, n_rows: int, row_bytes: int,
+                        max_rows: int) -> bool:
+    """THE serving-size switch: True when ``n_rows`` rows of
+    ``row_bytes`` each are too many for a driver-resident path — more
+    than ``max_rows`` rows, or more than :data:`MAX_DRIVER_QUERY_BYTES`
+    in all (the byte cap applies whatever ``max_rows`` says). Every
+    call logs its outcome as a decision event
+    (:func:`session.log_decision`) naming ``site`` and the cap that
+    tripped."""
+    cap = ("rows" if n_rows > max_rows
+           else "bytes" if n_rows * row_bytes > MAX_DRIVER_QUERY_BYTES
+           else None)
+    log_decision(site, "distributed" if cap else "driver", n_rows,
+                 n_rows * row_bytes, cap)
+    return cap is not None
+
+
+def _query_rows_over_cap(rows, max_rows: int, site: str) -> bool:
     """Shared over-cap predicate for the driver-resident query paths.
 
     Cap semantics (documented per the r10 advice): the cap counts RAW
@@ -348,12 +367,8 @@ def _query_rows_over_cap(rows, max_rows: int) -> bool:
     rows × dim × 8 must stay under :data:`MAX_DRIVER_QUERY_BYTES` —
     the row cap alone let the closure grow linearly with embedding
     dim (r11, VERDICT item 7)."""
-    if len(rows) > max_rows:
-        return True
-    if not rows:
-        return False
-    dim = len(rows[0]["embedding"] or ())
-    return len(rows) * dim * 8 > MAX_DRIVER_QUERY_BYTES
+    dim = len(rows[0]["embedding"] or ()) if rows else 0
+    return serving_cap_tripped(site, len(rows), dim * 8, max_rows)
 
 
 def _projections_over_leaf(df: DataFrame) -> bool:
@@ -388,7 +403,8 @@ def _collect_queries_if_serving_sized(queries: DataFrame):
     if _projections_over_leaf(frame):
         frame = frame.coalesce(1)
     rows = frame.limit(MAX_DRIVER_QUERIES + 1).collect()
-    if _query_rows_over_cap(rows, MAX_DRIVER_QUERIES):
+    if _query_rows_over_cap(rows, MAX_DRIVER_QUERIES,
+                            "similarity.serving_queries"):
         return None
     if not rows:
         return (np.empty(0, dtype=np.int64),
@@ -1082,7 +1098,8 @@ def brute_force_topk_arrow(embeddings: DataFrame, queries: DataFrame,
     # would execute the query plan twice)
     q_rows = (queries.select("vec_id", "embedding").orderBy("vec_id")
               .limit(max_driver_queries + 1).collect())
-    if _query_rows_over_cap(q_rows, max_driver_queries):
+    if _query_rows_over_cap(q_rows, max_driver_queries,
+                            "similarity.brute_force_topk_arrow"):
         return brute_force_topk(embeddings, queries, k)
     if not q_rows:
         return embeddings.sparkSession.createDataFrame(
@@ -1476,7 +1493,8 @@ def pq_topk(embeddings: DataFrame, queries: DataFrame, k: int = 10,
     codes_df = product_quantize(embeddings, m, k_codes, train_sample,
                                 iters, _books=books)  # reuse, not retrain
 
-    over_cap = _query_rows_over_cap(q_rows, max_driver_queries)
+    over_cap = _query_rows_over_cap(q_rows, max_driver_queries,
+                                    "similarity.pq_topk")
     if over_cap:
         # corpus-sized query frame: never funnel it through the driver.
         # The two count() jobs only SIZE the block/chunk grid — on
@@ -1760,18 +1778,25 @@ def ivfpq_index_append(spark, path: str,
     retrain, no touch of existing cells; parquet append adds files
     inside cell directories, cost ~ batch size). The shared
     :func:`_ivfpq_assign_encode_fn` kernel guarantees appended vectors
-    land exactly where the bulk build would put them (tested)."""
-    params = _load_ivfpq_params(spark, path)
-    if params is None:
-        raise ValueError(
-            "ivfpq_index_append: index at %r is untrained — build it "
-            "with build_ivfpq_index first (appending would create "
-            "unsearchable cells)" % path)
-    _guard_cell_layout(spark, path, "ivfpq_index_append", "epoch=")
-    if new_embeddings.select("embedding").first() is None:
-        return
-    _ivfpq_append_cells(new_embeddings, *params, path + "/cells",
-                        "append")
+    land exactly where the bulk build would put them (tested).
+
+    Jobs are described ``ivfpq_index_append: <phase>`` (``params
+    load``, ``batch check``, ``cells write``)."""
+    with job_phases(spark, "ivfpq_index_append") as phase:
+        phase("params load")
+        params = _load_ivfpq_params(spark, path)
+        if params is None:
+            raise ValueError(
+                "ivfpq_index_append: index at %r is untrained — build it "
+                "with build_ivfpq_index first (appending would create "
+                "unsearchable cells)" % path)
+        _guard_cell_layout(spark, path, "ivfpq_index_append", "epoch=")
+        phase("batch check")
+        if new_embeddings.select("embedding").first() is None:
+            return
+        phase("cells write")
+        _ivfpq_append_cells(new_embeddings, *params, path + "/cells",
+                            "append")
 
 
 def _pq_query_tables(qm, books):
@@ -1931,9 +1956,22 @@ def ivfpq_probe_topk(spark, path: str, queries: DataFrame, k: int = 10,
     query-sized RDD per probe call for the session lifetime — the
     exact degradation SCALING.md measures (2.5→14 s over eight calls);
     the price here is scanning the (request-sized) query frame twice,
-    which is kilobytes against a corpus-sized index."""
+    which is kilobytes against a corpus-sized index.
+
+    Jobs run inside the call are described ``ivfpq_probe_topk:
+    <phase>``; the returned frame's own jobs run later, under the
+    description of the caller that drains it.
+    """
+    with job_phases(spark, "ivfpq_probe_topk") as phase:
+        return _ivfpq_probe_topk(spark, path, queries, k, n_probe, rerank,
+                                 phase)
+
+
+def _ivfpq_probe_topk(spark, path: str, queries: DataFrame, k: int,
+                      n_probe: int, rerank: int, phase) -> DataFrame:
     import numpy as np
 
+    phase("params load")
     params = _load_ivfpq_params(spark, path)
     if params is None:
         return spark.createDataFrame(
@@ -1948,8 +1986,10 @@ def ivfpq_probe_topk(spark, path: str, queries: DataFrame, k: int = 10,
     # request: the query fetch, one schema read of the cell store and
     # the four stages of the result plan). Over-cap frames keep the
     # fully distributed plan below, bit-identical results.
+    phase("query fetch")
     fetched = _collect_queries_if_serving_sized(queries)
     if fetched is not None:
+        phase("cell read")
         return _ivfpq_probe_driver_path(spark, path, q, books, residual,
                                         fetched, k, n_probe, rerank)
 
@@ -1988,6 +2028,7 @@ def ivfpq_probe_topk(spark, path: str, queries: DataFrame, k: int = 10,
     # probed set via the cheap cells-only kernel (no ADC tables, no
     # checkpoint) — same quantizer math, so the sets agree; an empty
     # probed set doubles as the emptiness check (no .first() job)
+    phase("probed cells")
     probed = sorted(r["cell"]
                     for r in queries.select("vec_id", "embedding")
                     .mapInPandas(_quantizer_cells_fn(q, n_probe),
@@ -1997,6 +2038,7 @@ def ivfpq_probe_topk(spark, path: str, queries: DataFrame, k: int = 10,
         return spark.createDataFrame(
             [], "query_id long, neighbor_id long, sim double, rank int")
 
+    phase("cell read")
     cells = (spark.read.parquet(path + "/cells")
              .where(F.col("cell").isin(probed)))
     codes_scan = cells.select("vec_id", "cell", "codes")
@@ -2034,6 +2076,7 @@ def ivfpq_probe_topk(spark, path: str, queries: DataFrame, k: int = 10,
     # matches are NOT excluded — the equivalence contract with pq_topk
     # is exact, and a query inside the corpus legitimately retrieves
     # itself at sim 1.0
+    phase("query size")
     reranked = (shortlist
                 .join(_query_join_hint(queries)(qv), "query_id")
                 .join(nv, "neighbor_id")

@@ -62,6 +62,7 @@ def get_spark(app_name: str = "s3_elasticsearch_data_pipeline_spark",
 
 
 import contextlib
+import logging
 import threading
 
 #: Serializes AQE-toggle windows across operators (conf toggles are
@@ -101,6 +102,49 @@ def aqe_disabled(spark: SparkSession):
     with _AQE_SCOPE_LOCK, scoped_conf(spark, "spark.sql.adaptive.enabled",
                                       "false"):
         yield
+
+
+_JOB_DESCRIPTION = "spark.job.description"
+
+
+@contextlib.contextmanager
+def job_phases(spark: SparkSession, prefix: str):
+    """Label the jobs of the ``with`` body by phase: the body gets a
+    ``phase(label)`` callable, and every job started after a call to
+    it is described ``<prefix>: <label>`` in the status store
+    (``jobsList``), so a call's cost splits by phase. The description
+    in place before the body is restored afterwards, also when the
+    body raises. Descriptions are thread-local, like every Spark local
+    property."""
+    sc = spark.sparkContext
+    prior = sc.getLocalProperty(_JOB_DESCRIPTION)
+
+    def phase(label: str) -> None:
+        sc.setJobDescription(f"{prefix}: {label}")
+
+    try:
+        yield phase
+    finally:
+        sc.setLocalProperty(_JOB_DESCRIPTION, prior)
+
+
+#: The one logger of automatic strategy decisions (driver vs
+#: distributed path and the like). Each record carries the fields
+#: ``site``, ``path``, ``rows``, ``bytes`` and ``cap`` as attributes.
+DECISION_LOGGER = "s3_elasticsearch_data_pipeline_spark.decisions"
+
+
+def log_decision(site: str, path: str, rows: int, nbytes: int,
+                 cap: str | None) -> None:
+    """Record one automatic decision: at ``site`` the engine took
+    ``path`` for ``rows`` rows of ``nbytes`` driver bytes; ``cap``
+    names the limit that tripped (``"rows"`` or ``"bytes"``), or is
+    None when none did."""
+    fields = {"site": site, "path": path, "rows": rows, "bytes": nbytes,
+              "cap": cap}
+    logging.getLogger(DECISION_LOGGER).info(
+        "decision site=%s path=%s rows=%d bytes=%d cap=%s",
+        site, path, rows, nbytes, cap, extra=fields)
 
 
 def persistent_rdd_ids(spark: SparkSession) -> set[int]:

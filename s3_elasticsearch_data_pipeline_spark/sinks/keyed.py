@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 from s3_elasticsearch_data_pipeline_spark import storage
 from s3_elasticsearch_data_pipeline_spark.session import (
-    persistent_rdd_ids, release_persistent_rdds, scoped_conf)
+    job_phases, persistent_rdd_ids, release_persistent_rdds, scoped_conf)
 
 _OVERWRITE_MODE = "spark.sql.sources.partitionOverwriteMode"
 
@@ -40,11 +40,15 @@ def upsert_by_key(spark: SparkSession, incoming: DataFrame, path: str,
 
     Only partitions present in ``incoming`` are rewritten (dynamic
     partition overwrite), so cost scales with the delta, not the table.
-    The overwrite-mode override is scoped to this call.
+    The overwrite-mode override is scoped to this call. Jobs are
+    described ``upsert_by_key: <phase>`` (``sink read``, ``merge
+    write``).
     """
-    with scoped_conf(spark, _OVERWRITE_MODE, "dynamic"):
+    with job_phases(spark, "upsert_by_key") as phase, \
+            scoped_conf(spark, _OVERWRITE_MODE, "dynamic"):
         incoming = incoming.withColumn("_prio", F.lit(0))
         if storage.exists(spark, path):
+            phase("sink read")
             existing = spark.read.parquet(path).withColumn("_prio", F.lit(1))
             # Restrict existing rows to the touched partitions:
             # everything else is untouched on disk by dynamic
@@ -65,6 +69,7 @@ def upsert_by_key(spark: SparkSession, incoming: DataFrame, path: str,
         # hash-partitioned on key_col, so every task would otherwise
         # open a writer per month it sees (tasks × months tiny files —
         # the classic partitioned-write small-files bug)
+        phase("merge write")
         (deduped.repartition(partition_col).write.mode("overwrite")
          .partitionBy(partition_col).format("parquet").save(path))
 

@@ -22,9 +22,9 @@ once here:
 - **Job labels.** Every job of an epoch is described
   ``<name> epoch=<id>: <phase>`` in the status store, so an epoch's
   cost splits by phase. The handler names its phases through the
-  ``phase`` callable it receives; the emptiness check runs as phase
-  ``batch check``. The description that was in place before the epoch
-  is restored afterwards.
+  ``phase`` callable it receives (:func:`session.job_phases`); the
+  emptiness check runs as phase ``batch check``. The description that
+  was in place before the epoch is restored afterwards.
 - **No leaked blocks.** Every RDD the epoch persists or checkpoints is
   released when the handler returns — also when it fails, since a
   replay rebuilds them (single-controller discipline, see
@@ -51,9 +51,7 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
 from s3_elasticsearch_data_pipeline_spark.session import (
-    persistent_rdd_ids, release_persistent_rdds)
-
-_JOB_DESCRIPTION = "spark.job.description"
+    job_phases, persistent_rdd_ids, release_persistent_rdds)
 
 
 def drain(spark: SparkSession, name: str, source_path: str,
@@ -72,23 +70,17 @@ def drain(spark: SparkSession, name: str, source_path: str,
 
     def run(batch_df: DataFrame, epoch_id: int) -> None:
         sess = batch_df.sparkSession
-        sc = sess.sparkContext
-        prior_description = sc.getLocalProperty(_JOB_DESCRIPTION)
         pinned_before = persistent_rdd_ids(sess)
-
-        def phase(label: str) -> None:
-            sc.setJobDescription(f"{name} epoch={epoch_id}: {label}")
-
-        try:
-            if skip_empty:
-                phase("batch check")
-                if batch_df.isEmpty():
-                    return
-            handle(batch_df, epoch_id, phase)
-        finally:
-            release_persistent_rdds(
-                sess, persistent_rdd_ids(sess) - pinned_before)
-            sc.setLocalProperty(_JOB_DESCRIPTION, prior_description)
+        with job_phases(sess, f"{name} epoch={epoch_id}") as phase:
+            try:
+                if skip_empty:
+                    phase("batch check")
+                    if batch_df.isEmpty():
+                        return
+                handle(batch_df, epoch_id, phase)
+            finally:
+                release_persistent_rdds(
+                    sess, persistent_rdd_ids(sess) - pinned_before)
 
     (stream.writeStream
      .foreachBatch(run)
@@ -98,15 +90,18 @@ def drain(spark: SparkSession, name: str, source_path: str,
      .awaitTermination())
 
 
-def _read_optional_parquet(spark: SparkSession, path: str):
+def _read_optional_parquet(spark: SparkSession, path: str, schema=None):
     """The epoch-partitioned sink at ``path``, or None before the first
     epoch wrote to it — ONLY that case (path absent, or present with no
     parquet yet) maps to None. Any other read failure (corrupt footer,
     IO fault) propagates: silently treating a broken index as 'empty'
     would admit every near-duplicate in the batch and pollute the
-    corpus with no error signal."""
+    corpus with no error signal. A caller that knows the sink's
+    ``schema`` (partition column included) skips the inference job; a
+    present sink without parquet then reads as empty, not None."""
+    reader = spark.read if schema is None else spark.read.schema(schema)
     try:
-        return spark.read.option("basePath", path).parquet(path)
+        return reader.option("basePath", path).parquet(path)
     except AnalysisException as e:
         if "PATH_NOT_FOUND" in str(e) or "UNABLE_TO_INFER_SCHEMA" in str(e):
             return None

@@ -17,19 +17,25 @@ Scale shape: the probe equi-joins (band, bucket) — candidates only
 where a band collides, never corpus×batch; the index is bands×docs
 compact rows (the thing a 100 TB pipeline persists anyway); per-epoch
 index appends are small files that ``maintenance.compact_partitions``
-can heal offline.
+can heal offline. A serving-sized micro-batch skips the distributed
+plan: it fetches only the index rows its buckets select and decides
+on the driver (see ``lsh_ingest_stream``, *Jobs*).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 from s3_elasticsearch_data_pipeline_spark import storage
 from s3_elasticsearch_data_pipeline_spark.functions.textfns import tokens
 from s3_elasticsearch_data_pipeline_spark.operators.dedup import (
     _lsh_banded, _resolve_bucket_cap, drop_hot_buckets, portable_hash60,
     sig_agreement)
+from s3_elasticsearch_data_pipeline_spark.operators.similarity import (
+    MAX_DRIVER_QUERIES, MAX_DRIVER_QUERY_BYTES, serving_cap_tripped)
+from s3_elasticsearch_data_pipeline_spark.session import scoped_conf
 # read_corpus is re-exported: callers import it from this module
 from s3_elasticsearch_data_pipeline_spark.streaming.epochs import (
     _read_optional_parquet, drain, read_corpus)  # noqa: F401
@@ -101,6 +107,123 @@ def _banded_with_fallback(df: DataFrame, n: int, num_hashes: int,
     return banded.unionByName(short)
 
 
+_PROBE_COLUMNS = ("doc_id", "sig", "band", "bucket")
+
+
+def _serving_sized_rows(frame: DataFrame, site: str, num_hashes: int):
+    """The probe-layout rows of ``frame`` in ONE ``limit(cap+1)``
+    collect, or None when they exceed the serving caps of
+    ``similarity`` (:data:`MAX_DRIVER_QUERIES` rows, or
+    :data:`MAX_DRIVER_QUERY_BYTES` of ``num_hashes`` × 8-byte
+    signatures). The switch is logged as a decision event."""
+    # a limit collect scans one partition, then scales up, one job per
+    # round: the first round takes every partition instead, so the
+    # fetch is one job however many partitions (index files) the frame
+    # spans, and each task still stops after cap+1 rows
+    with scoped_conf(frame.sparkSession,
+                     "spark.sql.limit.initialNumPartitions",
+                     str(2**31 - 1)):
+        rows = (frame.select(*_PROBE_COLUMNS)
+                .limit(MAX_DRIVER_QUERIES + 1).collect())
+    if serving_cap_tripped(site, len(rows), num_hashes * 8,
+                           MAX_DRIVER_QUERIES):
+        return None
+    return rows
+
+
+def _joinable(rows, num_hashes: int, max_bucket_docs: int | None):
+    """``(ids, keys, sigs)`` of the rows a probe join can match, with
+    the rules of :func:`drop_hot_buckets` and the Spark equi-join: a
+    null bucket never matches, and under a cap the rows of a
+    ``(band, bucket)`` holding more than ``max_bucket_docs`` of these
+    rows drop out, band −1 exempt. ``keys`` is an (n, 2) array of
+    (band, bucket), ``sigs`` an (n, num_hashes) array."""
+    import numpy as np
+    rows = [r for r in rows if r["bucket"] is not None]
+    keys = np.array([(r["band"], r["bucket"]) for r in rows],
+                    dtype=np.int64).reshape(-1, 2)
+    if max_bucket_docs is not None and len(rows):
+        _, inv, counts = np.unique(keys, axis=0, return_inverse=True,
+                                   return_counts=True)
+        cool = (counts[inv.reshape(-1)] <= max_bucket_docs) \
+            | (keys[:, 0] == -1)
+        rows = [r for r, c in zip(rows, cool) if c]
+        keys = keys[cool]
+    sigs = np.array([r["sig"] for r in rows],
+                    dtype=np.int64).reshape(len(rows), num_hashes)
+    return [r["doc_id"] for r in rows], keys, sigs
+
+
+def _matched(p_keys, p_sigs, i_keys, i_sigs, num_hashes: int,
+             threshold: float, ids=None):
+    """Per ``p`` row: does some ``i`` row share its (band, bucket) with
+    a signature agreement of at least ``threshold``? The agreement is
+    the same double arithmetic as :func:`sig_agreement` (agreeing
+    positions / ``num_hashes``). With ``ids`` = (p ids, i ids), only
+    an ``i`` row of a LOWER id counts. Candidate pairs are scored in
+    chunks whose compared signatures stay within
+    :data:`MAX_DRIVER_QUERY_BYTES`, so a hot bucket never materializes
+    its whole pair space at once."""
+    import numpy as np
+    n_p = len(p_keys)
+    hit = np.zeros(n_p, dtype=bool)
+    if not n_p or not len(i_keys):
+        return hit
+    _, inv = np.unique(np.concatenate([p_keys, i_keys]), axis=0,
+                       return_inverse=True)
+    inv = inv.reshape(-1)
+    gp, gi = inv[:n_p], inv[n_p:]
+    by_group = np.argsort(gi, kind="stable")
+    counts = np.bincount(gi, minlength=int(inv.max()) + 1)
+    starts = np.cumsum(counts) - counts
+    per_p = counts[gp]
+    ends = np.cumsum(per_p)
+    budget = max(MAX_DRIVER_QUERY_BYTES // (num_hashes * 8), 1)
+    lo = 0
+    while lo < n_p:
+        hi = max(int(np.searchsorted(ends, ends[lo] - per_p[lo] + budget,
+                                     side="right")), lo + 1)
+        reps = per_p[lo:hi]
+        total = int(reps.sum())
+        if total:
+            pp = np.repeat(np.arange(lo, hi), reps)
+            offset = np.arange(total) - np.repeat(np.cumsum(reps) - reps,
+                                                  reps)
+            ii = by_group[np.repeat(starts[gp[lo:hi]], reps) + offset]
+            ok = ((p_sigs[pp] == i_sigs[ii]).sum(axis=1) / num_hashes
+                  >= threshold)
+            if ids is not None:
+                ok &= ids[1][ii] < ids[0][pp]
+            hit[pp[ok]] = True
+        lo = hi
+    return hit
+
+
+def _driver_drops(probe_rows, prior_rows, num_hashes: int,
+                  threshold: float, max_bucket_docs: int | None) -> set:
+    """Doc ids of the batch that lose admission, decided on the driver
+    with the rules of the distributed decision: the hot-bucket cap is
+    counted on each side separately (band −1 exempt), a match against
+    a lower id of the same batch or against a prior index row drops
+    the doc, and a null doc id never compares lower or higher, so it
+    takes no part in the in-batch rule and is never dropped (the
+    anti-join keeps it)."""
+    import numpy as np
+    ids, keys, sigs = _joinable(probe_rows, num_hashes, max_bucket_docs)
+    hit = np.zeros(len(ids), dtype=bool)
+    if prior_rows:
+        _, i_keys, i_sigs = _joinable(prior_rows, num_hashes,
+                                      max_bucket_docs)
+        hit |= _matched(keys, sigs, i_keys, i_sigs, num_hashes, threshold)
+    known = np.array([i is not None for i in ids], dtype=bool)
+    if known.any():
+        k_ids = np.asarray([i for i in ids if i is not None])
+        hit[known] |= _matched(keys[known], sigs[known], keys[known],
+                               sigs[known], num_hashes, threshold,
+                               ids=(k_ids, k_ids))
+    return {i for i, h in zip(ids, hit) if h and i is not None}
+
+
 def lsh_ingest_stream(spark: SparkSession, source_path: str,
                       corpus_path: str, index_path: str,
                       checkpoint_path: str, n: int = 3,
@@ -142,10 +265,25 @@ def lsh_ingest_stream(spark: SparkSession, source_path: str,
     ``fault_hook(stage, epoch_id)``: called after the
     ``"after_corpus_write"`` and ``"after_index_write"`` stages.
 
-    Jobs: each epoch decides admission once (a cached frame of the
-    dropped doc ids feeds both writes); its phases are ``probe
-    build``, ``admission decision``, ``corpus write`` and ``index
-    write``.
+    Jobs: each epoch decides admission once, on one of two paths,
+    chosen only by the observed size (the serving caps of
+    ``operators.similarity``; each choice is logged as a decision
+    event, sites ``lsh_ingest.batch`` and ``lsh_ingest.index``):
+
+    - **driver path**, for serving-sized epochs. ``probe build``
+      collects the batch's probe rows with one ``limit(cap+1)``
+      action; ``index fetch`` reads only the prior index rows that
+      share a bucket with the batch, in one pruned scan with a literal
+      bucket filter. The drops are decided on the driver in numpy,
+      with the rules of the distributed plan. ``corpus write`` filters
+      the batch by the dropped ids and ``index write`` writes the kept
+      probe rows. Six jobs for a steady epoch, the batch check
+      included.
+    - **distributed path**, when the batch's probe rows or the fetched
+      index rows exceed the caps: ``probe build`` checkpoints the
+      probe rows, ``admission decision`` caches the dropped doc ids
+      once (the probe joins against the batch and the index), and
+      ``corpus write`` and ``index write`` anti-join against them.
 
     ``hash_mode="portable"``: the engine-portable hash family for the
     whole admission decision — signatures, band buckets, AND the
@@ -198,13 +336,11 @@ def lsh_ingest_stream(spark: SparkSession, source_path: str,
                 .select(F.col("p.doc_id").alias("doc_id")))
         return dropped.distinct()
 
-    def handle(batch_df: DataFrame, epoch_id: int, phase) -> None:
+    def distributed_epoch(batch_df: DataFrame, probe: DataFrame,
+                          epoch_id: int, phase) -> None:
         dropped = None
         try:
-            phase("probe build")
-            probe = _banded_with_fallback(
-                batch_df, n, num_hashes, bands, hash_mode) \
-                .localCheckpoint(eager=True)
+            probe = probe.localCheckpoint(eager=True)
             # the decision runs ONCE: both writes below read the cached
             # ids (a lazy frame re-ran the whole probe join per write),
             # and the action records their real size, so each
@@ -227,7 +363,7 @@ def lsh_ingest_stream(spark: SparkSession, source_path: str,
             fault("after_corpus_write", epoch_id)
             phase("index write")
             (admitted(probe)
-             .select("doc_id", "sig", "band", "bucket")
+             .select(*_PROBE_COLUMNS)
              .write.mode("overwrite")
              .parquet(f"{index_path}/epoch={epoch_id}"))
             fault("after_index_write", epoch_id)
@@ -236,6 +372,65 @@ def lsh_ingest_stream(spark: SparkSession, source_path: str,
             # drain loop frees the probe checkpoint)
             if dropped is not None:
                 dropped.unpersist()
+
+    def prior_rows(spark: SparkSession, probe_rows, layout: StructType,
+                   epoch_id: int):
+        """The prior index rows sharing a bucket with the batch, in one
+        pruned scan (this epoch's own rows excluded, as on replay), or
+        None when they exceed the serving caps."""
+        buckets = sorted({r["bucket"] for r in probe_rows
+                          if r["bucket"] is not None})
+        # the layout the index is written in: no schema-inference job
+        index = _read_optional_parquet(spark, index_path, StructType(
+            layout.fields + [StructField("epoch", IntegerType())]))
+        if index is None or not buckets:
+            return []
+        return _serving_sized_rows(
+            index.where((F.col("epoch") != epoch_id)
+                        & F.col("bucket").isin(buckets)),
+            "lsh_ingest.index", num_hashes)
+
+    def driver_epoch(batch_df: DataFrame, probe_rows, layout: StructType,
+                     prior, epoch_id: int, phase) -> None:
+        drops = _driver_drops(probe_rows, prior, num_hashes, threshold,
+                              max_bucket_docs)
+        admitted = batch_df
+        if drops:
+            # a null id is never dropped, as in the anti-join
+            admitted = batch_df.where(F.col("doc_id").isNull()
+                                      | ~F.col("doc_id").isin(sorted(drops)))
+        phase("corpus write")
+        (admitted.write.mode("overwrite")
+         .parquet(f"{corpus_path}/epoch={epoch_id}"))
+        fault("after_corpus_write", epoch_id)
+        phase("index write")
+        # one file per epoch: every later index fetch opens each file
+        (batch_df.sparkSession
+         .createDataFrame([r for r in probe_rows
+                           if r["doc_id"] not in drops],
+                          layout)
+         .coalesce(1)
+         .write.mode("overwrite")
+         .parquet(f"{index_path}/epoch={epoch_id}"))
+        fault("after_index_write", epoch_id)
+
+    def handle(batch_df: DataFrame, epoch_id: int, phase) -> None:
+        phase("probe build")
+        probe = _banded_with_fallback(batch_df, n, num_hashes, bands,
+                                      hash_mode)
+        probe_rows = _serving_sized_rows(probe, "lsh_ingest.batch",
+                                         num_hashes)
+        if probe_rows is not None:
+            phase("index fetch")
+            layout = probe.select(*_PROBE_COLUMNS).schema
+            prior = prior_rows(batch_df.sparkSession, probe_rows, layout,
+                               epoch_id)
+            if prior is not None:
+                driver_epoch(batch_df, probe_rows, layout, prior,
+                             epoch_id, phase)
+                return
+            phase("probe build")
+        distributed_epoch(batch_df, probe, epoch_id, phase)
 
     drain(spark, "lsh_ingest", source_path, checkpoint_path, handle,
           schema=schema)

@@ -335,6 +335,60 @@ def test_pagerank_labels_its_jobs_per_phase(spark):
                           "caller"}, descs
 
 
+def test_serving_calls_label_their_jobs_per_phase(spark, emb, tmp_path):
+    """Every job run inside ``ivfpq_index_append``, ``upsert_by_key``
+    and ``ivfpq_probe_topk`` is described ``<call>: <phase>``, and the
+    caller's description is back in place after each call; the jobs
+    that drain the probe's returned frame run as the caller's."""
+    import re
+
+    from s3_elasticsearch_data_pipeline_spark.sinks.keyed import (
+        upsert_by_key)
+    sc = spark.sparkContext
+    d = str(tmp_path)
+    sim.build_ivfpq_index(emb, d + "/ivfpq")
+    new_batch = (emb.where("vec_id % 10 = 0")
+                 .withColumn("vec_id", F.col("vec_id") + 100_000))
+    rows = spark.createDataFrame(
+        [(1, "2024-01", 1.0), (2, "2024-02", 2.0)],
+        "id long, month string, value double")
+    upsert_by_key(spark, rows, d + "/sink")
+    queries = emb.orderBy("vec_id").limit(1)
+    probe: list = []
+    calls = {
+        "ivfpq_index_append": lambda: sim.ivfpq_index_append(
+            spark, d + "/ivfpq", new_batch),
+        "upsert_by_key": lambda: upsert_by_key(
+            spark, rows.withColumn("value", F.col("value") + 1),
+            d + "/sink"),
+        "ivfpq_probe_topk": lambda: probe.append(sim.ivfpq_probe_topk(
+            spark, d + "/ivfpq", queries)),
+    }
+    try:
+        for name, call in calls.items():
+            restored = []
+
+            def run():
+                sc.setJobDescription("caller")
+                call()
+                restored.append(sc.getLocalProperty(
+                    "spark.job.description"))
+
+            n = _count_jobs(spark, f"jc-labels-{name}", run)
+            descs = _job_descriptions(spark, f"jc-labels-{name}")
+            assert restored == ["caller"], name
+            assert n and len(descs) == n, (name, n, descs)
+            label = re.compile(rf"{name}: [a-z ]+$")
+            assert all(x is not None and label.match(x)
+                       for x in descs), descs
+        _count_jobs(spark, "jc-labels-drain", lambda: (
+            sc.setJobDescription("caller"), probe[0].collect()))
+        assert set(_job_descriptions(spark, "jc-labels-drain")) == {
+            "caller"}
+    finally:
+        sc.setLocalProperty("spark.job.description", None)
+
+
 @pytest.mark.slow
 def test_maximal_spans_job_count_pinned(spark, sf_smoke):
     """r10: per-call job count for the suffix-ranking flow (K=7

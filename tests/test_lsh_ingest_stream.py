@@ -345,3 +345,163 @@ def test_epoch_corpus_and_index_admit_the_same_docs(spark, sf_smoke,
                spark.read.parquet(src).select("doc_id").collect()}
     assert sum(map(len, admitted.values())) < len(offered)
     assert not any(i >= 100_000 for ids in admitted.values() for i in ids)
+
+
+def _admission_state(spark, sf_smoke, root, hash_mode, cap, caplog):
+    """Run two drops through ``lsh_ingest_stream`` — the second one
+    torn after its index write and replayed — and return the decision
+    events plus, per epoch, the corpus doc ids and the index rows."""
+    import logging
+
+    import pytest
+
+    from s3_elasticsearch_data_pipeline_spark.session import (
+        DECISION_LOGGER)
+    from s3_elasticsearch_data_pipeline_spark.streaming.lsh_ingest import (
+        _read_optional_parquet)
+    src = root + "/src"
+    corpus, index = root + "/c", root + "/i"
+    docs = _docs(spark, sf_smoke).select("doc_id", "text")
+    boiler = ("the quick brown fox jumps over the lazy dog "
+              "again and again " * 3)
+    odd = spark.createDataFrame(
+        [(900, "hello world"), (901, "tiny"), (902, None), (903, None),
+         (904, ""), (905, "   ")] + [(950 + i, boiler) for i in range(6)],
+        "doc_id long, text string")
+    base = docs.where(F.col("doc_id") < 20)
+    # drop 1: in-batch near-dups (re-spaced copies under higher ids),
+    # short and null texts, and a boilerplate family
+    (base.unionByName(odd)
+     .unionByName(base.where(F.col("doc_id") % 3 == 0).select(
+         (F.col("doc_id") + 500_000).alias("doc_id"),
+         F.regexp_replace("text", " ", "  ").alias("text")))
+     .write.parquet(src))
+    caplog.clear()
+    caplog.set_level(logging.INFO, logger=DECISION_LOGGER)
+    args = (spark, src, corpus, index, root + "/k")
+    kw = {"hash_mode": hash_mode, "max_bucket_docs": cap}
+    lsh_ingest_stream(*args, **kw)
+    # drop 2: cross-batch copies of drop 1 and fresh docs
+    (base.withColumn("doc_id", F.col("doc_id") + 100_000)
+     .unionByName(odd.withColumn("doc_id", F.col("doc_id") + 100_000))
+     .unionByName(docs.where((F.col("doc_id") >= 20)
+                             & (F.col("doc_id") < 30)))
+     .write.mode("append").parquet(src))
+
+    def torn(stage, epoch_id):
+        if stage == "after_index_write" and epoch_id == 1:
+            raise RuntimeError("killed in the torn window")
+
+    with pytest.raises(Exception, match="torn window"):
+        lsh_ingest_stream(*args, fault_hook=torn, **kw)
+    lsh_ingest_stream(*args, **kw)  # the replay
+
+    def by_epoch(df, cols):
+        out: dict = {}
+        for r in df.collect():
+            out.setdefault(r["epoch"], set()).add(tuple(
+                tuple(r[c]) if c == "sig" else r[c] for c in cols))
+        return out
+
+    events = [(r.site, r.path) for r in caplog.records
+              if r.name == DECISION_LOGGER and r.site.startswith("lsh")]
+    return (events,
+            by_epoch(_read_optional_parquet(spark, corpus), ["doc_id"]),
+            by_epoch(_read_optional_parquet(spark, index),
+                     ["doc_id", "sig", "band", "bucket"]))
+
+
+def test_driver_and_distributed_admission_agree(
+        spark, sf_smoke, tmp_path, monkeypatch, caplog,
+        cases=(("xxhash64", 3), ("portable", None)), spelling="bare"):
+    """The driver decision of a serving-sized epoch and the distributed
+    plan admit the same docs and write the same index rows, epoch by
+    epoch: in-batch and cross-batch near-dups, a hot bucket under a
+    small cap and the exhaustive ``None`` cap, short, empty and null
+    texts in the fallback channel (a null bucket never matches), both
+    hash modes, and a replay after a torn epoch, which must not match
+    the batch against its own half-written index rows."""
+    from s3_elasticsearch_data_pipeline_spark.streaming import lsh_ingest
+    for hash_mode, cap in cases:
+        root = spelled(tmp_path / f"{hash_mode}-{cap}", spelling)
+        events, corpus, index = _admission_state(
+            spark, sf_smoke, root + "/driver", hash_mode, cap, caplog)
+        assert set(events) == {("lsh_ingest.batch", "driver"),
+                               ("lsh_ingest.index", "driver")}, events
+        with monkeypatch.context() as m:
+            m.setattr(lsh_ingest, "MAX_DRIVER_QUERIES", 0)
+            events, d_corpus, d_index = _admission_state(
+                spark, sf_smoke, root + "/dist", hash_mode, cap, caplog)
+        assert set(events) == {("lsh_ingest.batch", "distributed")}, \
+            events
+        assert (corpus, index) == (d_corpus, d_index), (hash_mode, cap)
+        # the replay admitted fresh docs (matching its own torn index
+        # rows would have dropped them) and rejected the copies of
+        # drop 1's admissions
+        admitted = {e: {d for (d,) in ids} for e, ids in corpus.items()}
+        assert sorted(admitted) == [0, 1]
+        assert admitted[1] & set(range(20, 30))
+        assert not {i + 100_000 for i in admitted[0] if i < 20} \
+            & admitted[1]
+        assert {e: {r[0] for r in rows} for e, rows in index.items()} \
+            == admitted
+
+
+def test_driver_and_distributed_admission_agree_file_uri(
+        spark, sf_smoke, tmp_path, monkeypatch, caplog):
+    test_driver_and_distributed_admission_agree(
+        spark, sf_smoke, tmp_path, monkeypatch, caplog,
+        cases=(("portable", 3),), spelling="file_uri")
+
+
+def test_driver_decision_matches_a_pairwise_reference(monkeypatch):
+    """The vectorised driver decision equals a plain pairwise reading
+    of the admission rules on random probe and index rows with bucket
+    collisions, hot buckets, band −1 rows, null buckets and null doc
+    ids, under both caps and with the pair scoring split into the
+    smallest chunks."""
+    import random
+    from collections import Counter
+
+    from pyspark.sql import Row
+
+    from s3_elasticsearch_data_pipeline_spark.streaming import lsh_ingest
+    rng = random.Random(7)
+    h, threshold = 8, 0.5
+
+    def rows(n, id0):
+        return [Row(doc_id=None if rng.random() < 0.05 else id0 + i,
+                    sig=[rng.randrange(3) for _ in range(h)],
+                    band=rng.choice([-1, 0, 1]),
+                    bucket=None if rng.random() < 0.05
+                    else rng.randrange(6))
+                for i in range(n) for _ in range(rng.randrange(1, 3))]
+
+    def reference(probe, prior, cap):
+        def cool(side):
+            side = [r for r in side if r.bucket is not None]
+            n = Counter((r.band, r.bucket) for r in side if r.band != -1)
+            return [r for r in side if cap is None or r.band == -1
+                    or n[(r.band, r.bucket)] <= cap]
+
+        def hit(p, i):
+            return ((p.band, p.bucket) == (i.band, i.bucket)
+                    and sum(a == b for a, b in zip(p.sig, i.sig)) / h
+                    >= threshold)
+        probe, prior = cool(probe), cool(prior)
+        return {p.doc_id for p in probe if p.doc_id is not None and (
+            any(hit(p, i) for i in prior)
+            or any(hit(p, i) and i.doc_id is not None
+                   and i.doc_id < p.doc_id for i in probe))}
+
+    for trial in range(6):
+        probe, prior = rows(40, 1000), rows(60, 0)
+        for cap in (None, 3):
+            want = reference(probe, prior, cap)
+            assert lsh_ingest._driver_drops(probe, prior, h, threshold,
+                                            cap) == want
+            with monkeypatch.context() as m:
+                m.setattr(lsh_ingest, "MAX_DRIVER_QUERY_BYTES", 1)
+                assert lsh_ingest._driver_drops(probe, prior, h,
+                                                threshold, cap) == want
+        assert want and want != {r.doc_id for r in probe} - {None}

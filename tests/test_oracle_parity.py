@@ -37,6 +37,7 @@ FAST_CORE = (
     "sim_topk_pq",
     "sim_ivf_incremental",
     "stream_ivfpq_ingest",
+    "stream_lsh_ingest",
     "sim_margin_bitext_mine",
     "text_quality_scores",
     "text_bpe_encode",
