@@ -356,19 +356,43 @@ def serving_cap_tripped(site: str, n_rows: int, row_bytes: int,
     return cap is not None
 
 
-def _query_rows_over_cap(rows, max_rows: int, site: str) -> bool:
-    """Shared over-cap predicate for the driver-resident query paths.
+def collect_if_serving_sized(frame: DataFrame, site: str, row_bytes,
+                             max_rows: int | None = None):
+    """THE serving-size fetch: ONE ``limit(max_rows + 1)`` collect of
+    ``frame`` is both the driver-side fetch and the over-cap switch
+    (:func:`serving_cap_tripped`, logged at ``site``). Returns the
+    collected rows, or None when the frame is over the caps and the
+    caller keeps its distributed plan. ``max_rows`` defaults to
+    :data:`MAX_DRIVER_QUERIES`; ``row_bytes`` is the driver bytes of
+    one row, or a function of the collected rows when only they tell
+    (:func:`_embedding_row_bytes`).
 
     Cap semantics (documented per the r10 advice): the cap counts RAW
-    ROWS of the query frame — ``limit(cap+1)`` — not distinct vec_ids;
-    a frame with duplicate ids just over the cap takes the distributed
+    ROWS of the frame — ``limit(cap+1)`` — not distinct ids; a query
+    frame with duplicate ids just over the cap takes the distributed
     plan (results are identical either way, tested). On top of the row
     cap, a BYTE cap bounds what the driver path ships in task closures:
-    rows × dim × 8 must stay under :data:`MAX_DRIVER_QUERY_BYTES` —
+    rows × row bytes must stay under :data:`MAX_DRIVER_QUERY_BYTES` —
     the row cap alone let the closure grow linearly with embedding
-    dim (r11, VERDICT item 7)."""
-    dim = len(rows[0]["embedding"] or ()) if rows else 0
-    return serving_cap_tripped(site, len(rows), dim * 8, max_rows)
+    dim (r11, VERDICT item 7).
+
+    How many rows reach the driver is the caller's to bound: a limit
+    collect scans one partition, then scales up by rounds, and each
+    partition of a round sends up to ``max_rows + 1`` rows."""
+    if max_rows is None:
+        max_rows = MAX_DRIVER_QUERIES
+    rows = frame.limit(max_rows + 1).collect()
+    if callable(row_bytes):
+        row_bytes = row_bytes(rows)
+    if serving_cap_tripped(site, len(rows), row_bytes, max_rows):
+        return None
+    return rows
+
+
+def _embedding_row_bytes(rows) -> int:
+    """Driver bytes of one collected query row: its embedding as
+    doubles."""
+    return 8 * len(rows[0]["embedding"] or ()) if rows else 0
 
 
 def _projections_over_leaf(df: DataFrame) -> bool:
@@ -402,9 +426,9 @@ def _collect_queries_if_serving_sized(queries: DataFrame):
     frame = queries.select("vec_id", "embedding")
     if _projections_over_leaf(frame):
         frame = frame.coalesce(1)
-    rows = frame.limit(MAX_DRIVER_QUERIES + 1).collect()
-    if _query_rows_over_cap(rows, MAX_DRIVER_QUERIES,
-                            "similarity.serving_queries"):
+    rows = collect_if_serving_sized(frame, "similarity.serving_queries",
+                                    _embedding_row_bytes)
+    if rows is None:
         return None
     if not rows:
         return (np.empty(0, dtype=np.int64),
@@ -1096,10 +1120,11 @@ def brute_force_topk_arrow(embeddings: DataFrame, queries: DataFrame,
     # row shows up the frame is over-sized and we switch strategies
     # without ever materializing it driver-side (a separate count()
     # would execute the query plan twice)
-    q_rows = (queries.select("vec_id", "embedding").orderBy("vec_id")
-              .limit(max_driver_queries + 1).collect())
-    if _query_rows_over_cap(q_rows, max_driver_queries,
-                            "similarity.brute_force_topk_arrow"):
+    q_rows = collect_if_serving_sized(
+        queries.select("vec_id", "embedding").orderBy("vec_id"),
+        "similarity.brute_force_topk_arrow", _embedding_row_bytes,
+        max_driver_queries)
+    if q_rows is None:
         return brute_force_topk(embeddings, queries, k)
     if not q_rows:
         return embeddings.sparkSession.createDataFrame(
@@ -1479,22 +1504,22 @@ def pq_topk(embeddings: DataFrame, queries: DataFrame, k: int = 10,
     import numpy as np
     # one action guards AND fetches (cap+1 rows; see
     # brute_force_topk_arrow for why a separate count() is wasteful)
-    q_rows = (queries.select("vec_id", "embedding")
-              .limit(max_driver_queries + 1).collect())
+    q_rows = collect_if_serving_sized(
+        queries.select("vec_id", "embedding"), "similarity.pq_topk",
+        _embedding_row_bytes, max_driver_queries)
+    over_cap = q_rows is None
     # _books: callers with already-trained codebooks (the IVF-PQ probe
     # equivalence test, pipelines sharing one training pass) skip the
     # sample collect + Lloyd loop
     books = (_books if _books is not None else
              _pq_codebooks(embeddings, m, k_codes, train_sample, iters))
-    if books is None or not q_rows:  # empty corpus / queries → empty
+    if books is None or q_rows == []:  # empty corpus / queries → empty
         return embeddings.sparkSession.createDataFrame(
             [], "query_id long, neighbor_id long, sim double, rank int")
 
     codes_df = product_quantize(embeddings, m, k_codes, train_sample,
                                 iters, _books=books)  # reuse, not retrain
 
-    over_cap = _query_rows_over_cap(q_rows, max_driver_queries,
-                                    "similarity.pq_topk")
     if over_cap:
         # corpus-sized query frame: never funnel it through the driver.
         # The two count() jobs only SIZE the block/chunk grid — on

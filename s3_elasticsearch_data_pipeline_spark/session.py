@@ -105,6 +105,9 @@ def aqe_disabled(spark: SparkSession):
 
 
 _JOB_DESCRIPTION = "spark.job.description"
+#: The description the innermost ``job_phases`` body last set, so a
+#: nested body can tell its enclosing phase from a caller's own label.
+_PHASE_DESCRIPTION = "s3_elasticsearch_data_pipeline_spark.phase"
 
 
 @contextlib.contextmanager
@@ -112,20 +115,29 @@ def job_phases(spark: SparkSession, prefix: str):
     """Label the jobs of the ``with`` body by phase: the body gets a
     ``phase(label)`` callable, and every job started after a call to
     it is described ``<prefix>: <label>`` in the status store
-    (``jobsList``), so a call's cost splits by phase. The description
-    in place before the body is restored afterwards, also when the
-    body raises. Descriptions are thread-local, like every Spark local
-    property."""
+    (``jobsList``), so a call's cost splits by phase. Inside the phase
+    of another ``job_phases`` body the label nests under it, ``<outer
+    prefix>: <outer label> / <prefix>: <label>``: a call made inside a
+    streaming epoch keeps the epoch's label. A description the caller
+    set is replaced, not nested. The description in place before the
+    body is restored afterwards, also when the body raises.
+    Descriptions are thread-local, like every Spark local property."""
     sc = spark.sparkContext
     prior = sc.getLocalProperty(_JOB_DESCRIPTION)
+    prior_phase = sc.getLocalProperty(_PHASE_DESCRIPTION)
+    outer = (f"{prior} / " if prior is not None and prior == prior_phase
+             else "")
 
     def phase(label: str) -> None:
-        sc.setJobDescription(f"{prefix}: {label}")
+        description = f"{outer}{prefix}: {label}"
+        sc.setJobDescription(description)
+        sc.setLocalProperty(_PHASE_DESCRIPTION, description)
 
     try:
         yield phase
     finally:
         sc.setLocalProperty(_JOB_DESCRIPTION, prior)
+        sc.setLocalProperty(_PHASE_DESCRIPTION, prior_phase)
 
 
 #: The one logger of automatic strategy decisions (driver vs

@@ -33,8 +33,7 @@ from s3_elasticsearch_data_pipeline_spark.functions.textfns import tokens
 from s3_elasticsearch_data_pipeline_spark.operators.dedup import (
     _lsh_banded, _resolve_bucket_cap, drop_hot_buckets, portable_hash60,
     sig_agreement)
-from s3_elasticsearch_data_pipeline_spark.operators.similarity import (
-    MAX_DRIVER_QUERIES, MAX_DRIVER_QUERY_BYTES, serving_cap_tripped)
+from s3_elasticsearch_data_pipeline_spark.operators import similarity
 from s3_elasticsearch_data_pipeline_spark.session import scoped_conf
 # read_corpus is re-exported: callers import it from this module
 from s3_elasticsearch_data_pipeline_spark.streaming.epochs import (
@@ -110,25 +109,38 @@ def _banded_with_fallback(df: DataFrame, n: int, num_hashes: int,
 _PROBE_COLUMNS = ("doc_id", "sig", "band", "bucket")
 
 
-def _serving_sized_rows(frame: DataFrame, site: str, num_hashes: int):
-    """The probe-layout rows of ``frame`` in ONE ``limit(cap+1)``
-    collect, or None when they exceed the serving caps of
-    ``similarity`` (:data:`MAX_DRIVER_QUERIES` rows, or
-    :data:`MAX_DRIVER_QUERY_BYTES` of ``num_hashes`` × 8-byte
-    signatures). The switch is logged as a decision event."""
-    # a limit collect scans one partition, then scales up, one job per
-    # round: the first round takes every partition instead, so the
-    # fetch is one job however many partitions (index files) the frame
-    # spans, and each task still stops after cap+1 rows
-    with scoped_conf(frame.sparkSession,
+def _probe_rows_if_serving_sized(probe: DataFrame, num_hashes: int):
+    """The batch's probe rows in ONE ``limit(cap+1)`` collect, or None
+    over the serving caps of ``similarity`` (decision site
+    ``lsh_ingest.batch``). The collect runs as one task: it reads the
+    batch's partitions in turn and stops after ``cap+1`` rows, so an
+    over-cap batch sends the driver ``cap+1`` rows and signs only the
+    docs they come from, however many partitions it spans."""
+    return similarity.collect_if_serving_sized(
+        probe.select(*_PROBE_COLUMNS).coalesce(1), "lsh_ingest.batch",
+        num_hashes * 8)
+
+
+def _index_rows_if_serving_sized(index: DataFrame, num_hashes: int):
+    """The rows of a filtered index scan in ONE ``limit(cap+1)``
+    collect, or None over the serving caps (decision site
+    ``lsh_ingest.index``). The scan keeps its parallelism: a limit
+    collect scans one partition, then scales up by rounds, one job
+    each, and each task of a round sends up to ``cap+1`` rows. The
+    first round takes as many partitions as the byte cap holds at
+    ``cap+1`` rows each (at least one), so it sends the driver no more
+    than the byte cap, and an index of up to that many files is
+    fetched in one job; a larger index takes Spark's scale-up
+    rounds."""
+    row_bytes = num_hashes * 8
+    first_round = max(similarity.MAX_DRIVER_QUERY_BYTES
+                      // ((similarity.MAX_DRIVER_QUERIES + 1) * row_bytes),
+                      1)
+    with scoped_conf(index.sparkSession,
                      "spark.sql.limit.initialNumPartitions",
-                     str(2**31 - 1)):
-        rows = (frame.select(*_PROBE_COLUMNS)
-                .limit(MAX_DRIVER_QUERIES + 1).collect())
-    if serving_cap_tripped(site, len(rows), num_hashes * 8,
-                           MAX_DRIVER_QUERIES):
-        return None
-    return rows
+                     str(first_round)):
+        return similarity.collect_if_serving_sized(
+            index.select(*_PROBE_COLUMNS), "lsh_ingest.index", row_bytes)
 
 
 def _joinable(rows, num_hashes: int, max_bucket_docs: int | None):
@@ -162,8 +174,8 @@ def _matched(p_keys, p_sigs, i_keys, i_sigs, num_hashes: int,
     positions / ``num_hashes``). With ``ids`` = (p ids, i ids), only
     an ``i`` row of a LOWER id counts. Candidate pairs are scored in
     chunks whose compared signatures stay within
-    :data:`MAX_DRIVER_QUERY_BYTES`, so a hot bucket never materializes
-    its whole pair space at once."""
+    ``similarity.MAX_DRIVER_QUERY_BYTES``, so a hot bucket never
+    materializes its whole pair space at once."""
     import numpy as np
     n_p = len(p_keys)
     hit = np.zeros(n_p, dtype=bool)
@@ -178,7 +190,7 @@ def _matched(p_keys, p_sigs, i_keys, i_sigs, num_hashes: int,
     starts = np.cumsum(counts) - counts
     per_p = counts[gp]
     ends = np.cumsum(per_p)
-    budget = max(MAX_DRIVER_QUERY_BYTES // (num_hashes * 8), 1)
+    budget = max(similarity.MAX_DRIVER_QUERY_BYTES // (num_hashes * 8), 1)
     lo = 0
     while lo < n_p:
         hi = max(int(np.searchsorted(ends, ends[lo] - per_p[lo] + budget,
@@ -272,17 +284,21 @@ def lsh_ingest_stream(spark: SparkSession, source_path: str,
 
     - **driver path**, for serving-sized epochs. ``probe build``
       collects the batch's probe rows with one ``limit(cap+1)``
-      action; ``index fetch`` reads only the prior index rows that
-      share a bucket with the batch, in one pruned scan with a literal
-      bucket filter. The drops are decided on the driver in numpy,
-      with the rules of the distributed plan. ``corpus write`` filters
-      the batch by the dropped ids and ``index write`` writes the kept
-      probe rows. Six jobs for a steady epoch, the batch check
-      included.
+      action in one task; ``index fetch`` reads only the prior index
+      rows that share a bucket with the batch, in one pruned scan with
+      a literal bucket filter (one job while the index has no more
+      files than the byte cap holds at ``cap+1`` rows each, Spark's
+      limit scale-up rounds beyond). The drops are decided on the
+      driver in numpy, with the rules of the distributed plan.
+      ``corpus write`` filters the batch by the dropped ids and
+      ``index write`` writes the kept probe rows. Six jobs for a
+      steady epoch, the batch check included.
     - **distributed path**, when the batch's probe rows or the fetched
-      index rows exceed the caps: ``probe build`` checkpoints the
-      probe rows, ``admission decision`` caches the dropped doc ids
-      once (the probe joins against the batch and the index), and
+      index rows exceed the caps. The probe is the batch's checkpoint
+      (``probe build``; its capped collect has sent the driver
+      ``cap+1`` rows), or the collected probe rows when only the index
+      fetch was over. ``admission decision`` caches the dropped doc
+      ids once (the probe joins against the batch and the index), and
       ``corpus write`` and ``index write`` anti-join against them.
 
     ``hash_mode="portable"``: the engine-portable hash family for the
@@ -338,9 +354,11 @@ def lsh_ingest_stream(spark: SparkSession, source_path: str,
 
     def distributed_epoch(batch_df: DataFrame, probe: DataFrame,
                           epoch_id: int, phase) -> None:
+        """Admission by the probe joins; ``probe`` is materialized (a
+        checkpoint or the collected rows), so the decision and the
+        index write share one signing of the batch."""
         dropped = None
         try:
-            probe = probe.localCheckpoint(eager=True)
             # the decision runs ONCE: both writes below read the cached
             # ids (a lazy frame re-ran the whole probe join per write),
             # and the action records their real size, so each
@@ -385,10 +403,9 @@ def lsh_ingest_stream(spark: SparkSession, source_path: str,
             layout.fields + [StructField("epoch", IntegerType())]))
         if index is None or not buckets:
             return []
-        return _serving_sized_rows(
+        return _index_rows_if_serving_sized(
             index.where((F.col("epoch") != epoch_id)
-                        & F.col("bucket").isin(buckets)),
-            "lsh_ingest.index", num_hashes)
+                        & F.col("bucket").isin(buckets)), num_hashes)
 
     def driver_epoch(batch_df: DataFrame, probe_rows, layout: StructType,
                      prior, epoch_id: int, phase) -> None:
@@ -418,9 +435,10 @@ def lsh_ingest_stream(spark: SparkSession, source_path: str,
         phase("probe build")
         probe = _banded_with_fallback(batch_df, n, num_hashes, bands,
                                       hash_mode)
-        probe_rows = _serving_sized_rows(probe, "lsh_ingest.batch",
-                                         num_hashes)
-        if probe_rows is not None:
+        probe_rows = _probe_rows_if_serving_sized(probe, num_hashes)
+        if probe_rows is None:
+            probe = probe.localCheckpoint(eager=True)
+        else:
             phase("index fetch")
             layout = probe.select(*_PROBE_COLUMNS).schema
             prior = prior_rows(batch_df.sparkSession, probe_rows, layout,
@@ -429,7 +447,10 @@ def lsh_ingest_stream(spark: SparkSession, source_path: str,
                 driver_epoch(batch_df, probe_rows, layout, prior,
                              epoch_id, phase)
                 return
-            phase("probe build")
+            # the index fetch is over the caps: the distributed plan
+            # probes with the rows already collected, not a re-signing
+            probe = batch_df.sparkSession.createDataFrame(probe_rows,
+                                                          layout)
         distributed_epoch(batch_df, probe, epoch_id, phase)
 
     drain(spark, "lsh_ingest", source_path, checkpoint_path, handle,

@@ -415,12 +415,14 @@ def test_driver_and_distributed_admission_agree(
         spark, sf_smoke, tmp_path, monkeypatch, caplog,
         cases=(("xxhash64", 3), ("portable", None)), spelling="bare"):
     """The driver decision of a serving-sized epoch and the distributed
-    plan admit the same docs and write the same index rows, epoch by
+    plan (for a batch over the caps, or for an index fetch over them)
+    admit the same docs and write the same index rows, epoch by
     epoch: in-batch and cross-batch near-dups, a hot bucket under a
     small cap and the exhaustive ``None`` cap, short, empty and null
     texts in the fallback channel (a null bucket never matches), both
     hash modes, and a replay after a torn epoch, which must not match
     the batch against its own half-written index rows."""
+    from s3_elasticsearch_data_pipeline_spark.operators import similarity
     from s3_elasticsearch_data_pipeline_spark.streaming import lsh_ingest
     for hash_mode, cap in cases:
         root = spelled(tmp_path / f"{hash_mode}-{cap}", spelling)
@@ -429,12 +431,22 @@ def test_driver_and_distributed_admission_agree(
         assert set(events) == {("lsh_ingest.batch", "driver"),
                                ("lsh_ingest.index", "driver")}, events
         with monkeypatch.context() as m:
-            m.setattr(lsh_ingest, "MAX_DRIVER_QUERIES", 0)
+            m.setattr(similarity, "MAX_DRIVER_QUERIES", 0)
             events, d_corpus, d_index = _admission_state(
                 spark, sf_smoke, root + "/dist", hash_mode, cap, caplog)
         assert set(events) == {("lsh_ingest.batch", "distributed")}, \
             events
         assert (corpus, index) == (d_corpus, d_index), (hash_mode, cap)
+        # an over-cap index fetch: the distributed plan probes with the
+        # collected probe rows (the first epoch has no index to fetch)
+        with monkeypatch.context() as m:
+            m.setattr(lsh_ingest, "_index_rows_if_serving_sized",
+                      lambda index, num_hashes: None)
+            events, i_corpus, i_index = _admission_state(
+                spark, sf_smoke, root + "/index-over", hash_mode, cap,
+                caplog)
+        assert set(events) == {("lsh_ingest.batch", "driver")}, events
+        assert (corpus, index) == (i_corpus, i_index), (hash_mode, cap)
         # the replay admitted fresh docs (matching its own torn index
         # rows would have dropped them) and rejected the copies of
         # drop 1's admissions
@@ -465,6 +477,7 @@ def test_driver_decision_matches_a_pairwise_reference(monkeypatch):
 
     from pyspark.sql import Row
 
+    from s3_elasticsearch_data_pipeline_spark.operators import similarity
     from s3_elasticsearch_data_pipeline_spark.streaming import lsh_ingest
     rng = random.Random(7)
     h, threshold = 8, 0.5
@@ -501,7 +514,7 @@ def test_driver_decision_matches_a_pairwise_reference(monkeypatch):
             assert lsh_ingest._driver_drops(probe, prior, h, threshold,
                                             cap) == want
             with monkeypatch.context() as m:
-                m.setattr(lsh_ingest, "MAX_DRIVER_QUERY_BYTES", 1)
+                m.setattr(similarity, "MAX_DRIVER_QUERY_BYTES", 1)
                 assert lsh_ingest._driver_drops(probe, prior, h,
                                                 threshold, cap) == want
         assert want and want != {r.doc_id for r in probe} - {None}

@@ -95,20 +95,19 @@ def test_lsh_ingest_switch_logs_each_side(spark, tmp_path, monkeypatch,
     _ingest(spark, root, family)
     caplog.clear()
     with monkeypatch.context() as m:
-        m.setattr(lsh_ingest, "MAX_DRIVER_QUERIES", 10)
+        m.setattr(similarity, "MAX_DRIVER_QUERIES", 10)
         assert _ingest(spark, root, [(100, boiler)]) == \
             list(range(12)) + [100]
     assert _decisions(caplog, "lsh") == [
         ("lsh_ingest.batch", "driver", 4, 4 * width, None),
         ("lsh_ingest.index", "distributed", 11, 11 * width, "rows")]
 
-    for cap_name, module, attr, value, rows in (
-            ("rows", lsh_ingest, "MAX_DRIVER_QUERIES", 10, 11),
-            ("bytes", similarity, "MAX_DRIVER_QUERY_BYTES", 40 * width,
-             48)):
+    for cap_name, attr, value, rows in (
+            ("rows", "MAX_DRIVER_QUERIES", 10, 11),
+            ("bytes", "MAX_DRIVER_QUERY_BYTES", 40 * width, 48)):
         caplog.clear()
         with monkeypatch.context() as m:
-            m.setattr(module, attr, value)
+            m.setattr(similarity, attr, value)
             got = _ingest(spark, str(tmp_path / f"over-{cap_name}"),
                           family)
         assert got == list(range(12))

@@ -178,33 +178,51 @@ def _persisted_rdds(spark) -> dict:
 
 
 @pytest.mark.parametrize("stream", ["lsh_ingest", "ivf_ingest",
-                                    "ivfpq_ingest", "semantic_ingest"])
+                                    "ivfpq_ingest", "semantic_ingest",
+                                    "incremental_stream_load"])
 def test_ingest_epoch_bookkeeping(spark, emb_writer, stream):
     """The drain loop's bookkeeping holds for every ingest: each job of
-    an epoch is described ``<stream> epoch=<id>: <phase>`` (with the
-    source schema passed, the loop runs no job outside an epoch), and
-    a call leaves the session's persisted and checkpointed RDDs as it
-    found them — including the probe checkpoints of the lsh and
-    semantic epochs."""
+    an epoch is described ``<stream> epoch=<id>: <phase>``, and a
+    labelled call made inside an epoch nests its label under the
+    epoch's (``incremental_stream_load`` upserts through
+    ``upsert_by_key``). With the source schema passed, the loop runs no
+    job outside an epoch; without it, the schema read runs under the
+    caller's description. A call leaves the session's persisted and
+    checkpointed RDDs as it found them — including the probe
+    checkpoints of the lsh and semantic epochs."""
     import importlib
     import re
 
     from s3_elasticsearch_data_pipeline_spark.session import (
         persistent_rdd_ids)
     write, tmp_path = emb_writer
-    mod = importlib.import_module(
-        f"s3_elasticsearch_data_pipeline_spark.streaming.{stream}")
-    ingest = getattr(mod, f"{stream}_stream")
     src = str(tmp_path / "src")
+    takes_schema = stream != "incremental_stream_load"
+    if takes_schema:
+        mod = importlib.import_module(
+            f"s3_elasticsearch_data_pipeline_spark.streaming.{stream}")
+        ingest = getattr(mod, f"{stream}_stream")
+    else:
+        from s3_elasticsearch_data_pipeline_spark.streaming.\
+            incremental_stream import incremental_stream_load as ingest
+
+        def write(batch_no):
+            rows = [(f"r{batch_no}-{i}", f"m{i % 2}", float(i))
+                    for i in range(10)]
+            (spark.createDataFrame(rows, "id string, month string, "
+                                   "value double")
+             .write.partitionBy("month").mode("append").parquet(src))
     if stream == "lsh_ingest":
         def write(batch_no):
             _write_docs(spark, src, batch_no)
     sinks = [str(tmp_path / d) for d in (
         ("c", "i", "k") if stream in ("lsh_ingest", "semantic_ingest")
         else ("i", "k"))]
+    sc = spark.sparkContext
     for epoch in (0, 1):
         write(epoch)
-        schema = spark.read.parquet(src).schema
+        kwargs = ({"schema": spark.read.parquet(src).schema}
+                  if takes_schema else {})
         before = _stable_max_job_id(spark)
         # strong references to the RDDs persisted before the call: the
         # async ContextCleaner cannot reclaim them mid-call, so any that
@@ -212,12 +230,81 @@ def test_ingest_epoch_bookkeeping(spark, emb_writer, stream):
         held = _persisted_rdds(spark)
         pinned = persistent_rdd_ids(spark)
         assert pinned == set(held)
-        ingest(spark, src, *sinks, schema=schema)
+        sc.setJobDescription("caller")
+        try:
+            ingest(spark, src, *sinks, **kwargs)
+            assert sc.getLocalProperty("spark.job.description") == "caller"
+        finally:
+            sc.setLocalProperty("spark.job.description", None)
         _stable_max_job_id(spark)
         descs = _descriptions_after(spark, before)
-        assert descs, stream
-        label = re.compile(rf"{stream} epoch={epoch}: [a-z ]+$")
-        assert all(d is not None and label.match(d) for d in descs), descs
+        in_epoch = [d for d in descs if d != "caller"]
+        assert in_epoch, stream
+        assert ("caller" in descs) != takes_schema, descs
+        label = re.compile(
+            rf"{stream} epoch={epoch}: [a-z ]+( / [a-z_]+: [a-z ]+)*$")
+        assert all(d is not None and label.match(d)
+                   for d in in_epoch), descs
         assert f"{stream} epoch={epoch}: batch check" in descs
+        if not takes_schema:
+            assert (f"{stream} epoch={epoch}: upsert / upsert_by_key: "
+                    f"merge write") in descs, descs
         assert persistent_rdd_ids(spark) == pinned, stream
         del held
+
+
+def _jobs_described(spark, job_id: int, description: str) -> list:
+    """The jobs above ``job_id`` described ``description``, by id."""
+    jobs = spark.sparkContext._jsc.sc().statusStore().jobsList(None)
+    out = []
+    for i in range(jobs.size()):
+        j = jobs.apply(i)
+        d = j.description()
+        if j.jobId() > job_id and d.isDefined() and d.get() == description:
+            out.append(j)
+    return sorted(out, key=lambda j: j.jobId())
+
+
+def test_over_cap_lsh_batch_sends_the_driver_cap_rows(
+        spark, tmp_path, monkeypatch):
+    """An over-cap LSH batch spread over many partitions sends the
+    driver at most ``cap+1`` probe rows: its capped collect is one task
+    that reads the first source file and stops, whatever the partition
+    count. The rest of the epoch is the distributed plan (distinct
+    docs: all admitted)."""
+    from s3_elasticsearch_data_pipeline_spark.operators import similarity
+    from s3_elasticsearch_data_pipeline_spark.streaming.lsh_ingest import (
+        lsh_ingest_stream, read_corpus)
+    src = str(tmp_path / "src")
+    # at least as many input partitions as cores: no compute
+    # repartition
+    n_files, per_file = 2 * spark.sparkContext.defaultParallelism, 20
+    for f in range(n_files):
+        (spark.createDataFrame(
+            [(f * 1000 + i, " ".join(f"w{f}x{i}x{j}" for j in range(6)))
+             for i in range(per_file)], "doc_id long, text string")
+         .coalesce(1).write.mode("append").parquet(src))
+    monkeypatch.setattr(similarity, "MAX_DRIVER_QUERIES", 10)
+    before = _stable_max_job_id(spark)
+    lsh_ingest_stream(spark, src, str(tmp_path / "c"),
+                      str(tmp_path / "i"), str(tmp_path / "k"))
+    _stable_max_job_id(spark)
+    probe_jobs = _jobs_described(spark, before,
+                                 "lsh_ingest epoch=0: probe build")
+    assert _jobs_described(spark, before,
+                           "lsh_ingest epoch=0: admission decision")
+    # the capped collect, then the probe checkpoint over every
+    # partition
+    collect, checkpoint = probe_jobs
+    assert collect.numTasks() == 1
+    assert checkpoint.numTasks() >= spark.sparkContext.defaultParallelism
+    store = spark.sparkContext._jsc.sc().statusStore()
+    read = sum(store.lastStageAttempt(s).inputRecords()
+               for s in _seq(collect.stageIds()))
+    assert read == per_file, read
+    assert read_corpus(spark, str(tmp_path / "c")).count() \
+        == n_files * per_file
+
+
+def _seq(scala_seq) -> list:
+    return [scala_seq.apply(i) for i in range(scala_seq.size())]
