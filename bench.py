@@ -6,18 +6,25 @@
     {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
 Each query is a full pipeline execution, drained DISTRIBUTED — count +
-an overflow-safe hash-sum over every output column reduced to one row
-(the same drain as bench_scale.py). A production pipeline lands results
-in a sink; it does not funnel them through driver ``collect()``, whose
-per-Row Python decoding is linear in OUTPUT rows and drowned the engine
-signal for row-preserving queries (w_sessionize/scd2/zorder measured
-6-8× on 10× data under collect vs 0.9-2.5× under the drain —
-SCALING.md). The hash term keeps Catalyst honest: no output column can
-be pruned out of the timed plan. Timings are per-query wall clock.
+an overflow-safe hash-sum over every output column reduced to one row.
+A production pipeline lands results in a sink; it does not funnel them
+through driver ``collect()``, whose per-Row Python decoding is linear
+in OUTPUT rows and drowned the engine signal for row-preserving queries
+(w_sessionize/scd2/zorder measured 6-8× on 10× data under collect vs
+0.9-2.5× under the drain — SCALING.md). The hash term keeps Catalyst
+honest: no output column can be pruned out of the timed plan. Timings
+are per-query wall clock.
+
+This module is the one home of the timing discipline — ``drain``,
+``warm_up`` and ``timed_run`` (GC before the window, release of every
+persisted RDD after it). ``bench_scale.py``, ``tools/bench_subset.py``
+and ``tools/profile_query.py`` import them rather than keep copies.
 """
 
 from __future__ import annotations
 
+import functools
+import gc
 import json
 import os
 import sys
@@ -28,10 +35,11 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from pyspark.sql import functions as F  # noqa: E402
 
 from s3_elasticsearch_data_pipeline_spark import registry  # noqa: E402
-from s3_elasticsearch_data_pipeline_spark.session import get_spark  # noqa: E402
+from s3_elasticsearch_data_pipeline_spark.session import (  # noqa: E402
+    get_spark, persistent_rdd_ids, release_persistent_rdds)
 
 
-def _drain(df) -> int:
+def drain(df) -> int:
     """Run the query to completion on the executors and return its row
     count — one aggregated row crosses to the driver."""
     h = F.xxhash64(*[F.col(c).cast("string") for c in df.columns])
@@ -39,6 +47,51 @@ def _drain(df) -> int:
                   F.sum(h.cast("decimal(38,0)")).alias("content_hash"))
            .collect()[0])
     return row["n_rows"]
+
+
+def warm_up(spark, sf_dir: str) -> None:
+    """Warm to steady state before timing: parquet footers, Python/Arrow
+    workers, and the JIT for the join/window/hash-agg codegen shapes
+    the headline queries share. A 100 TB deployment runs these plans
+    continuously — cold-JVM compilation is a harness artifact, and
+    without this prelude it lands arbitrarily on whichever queries
+    run first (observed: the same query times 0.5 s early-position
+    vs 3 s late-position across runs)."""
+    qs = registry.queries()
+    drain(qs["a5_global_count"](spark, sf_dir))
+    import pandas as pd  # noqa: F401
+    spark.range(64).mapInPandas(
+        lambda it: (pdf for pdf in it), "id long").count()
+    for warm in ("q5_local_supplier_volume", "w_sessionize", "dedup_exact"):
+        drain(qs[warm](spark, sf_dir))
+
+
+def timed_run(spark, build) -> tuple[float, int]:
+    """Time one ``drain(build())`` and return ``(seconds, rows)``.
+
+    The frame is built INSIDE the window: eager localCheckpoints
+    materialize at plan-construction time and must be charged to the
+    query, not hidden by frame reuse.
+
+    JVM full GC BEFORE the window: ContextCleaner frees dead
+    broadcast/shuffle blocks only after a GC proves them unreachable,
+    and dozens of queries' worth of stale blocks inflated
+    late-positioned queries ~2× vs the same query standalone-warm.
+    Steady-state cost, not a timing trick: a resident service GCs
+    continuously.
+
+    Every persisted RDD is released AFTER the window: localCheckpoint
+    blocks a query pinned (pagerank, tf-idf, …) squeeze the
+    BlockManager and showed up as multi-second eviction stalls in the
+    runs that followed."""
+    spark._jvm.System.gc()
+    t0 = time.perf_counter()
+    rows = drain(build())
+    dt = time.perf_counter() - t0
+    gc.collect()  # release py4j frame refs promptly
+    release_persistent_rdds(spark, persistent_rdd_ids(spark))
+    return dt, rows
+
 
 # Representative mix: reference-parity diff joins + aggregate/window
 # analytics + the LLM-pipeline extension operators.
@@ -132,27 +185,13 @@ def main() -> None:
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     spark = get_spark("bench")
     qs = registry.queries()
-
-    # Warm to steady state before timing: parquet footers, Python/Arrow
-    # workers, and the JIT for the join/window/hash-agg codegen shapes
-    # the headline queries share. A 100 TB deployment runs these plans
-    # continuously — cold-JVM compilation is a harness artifact, and
-    # without this prelude it lands arbitrarily on whichever queries
-    # run first (observed: the same query times 0.5 s early-position
-    # vs 3 s late-position across runs).
-    _drain(qs["a5_global_count"](spark, sf_dir))
-    import pandas as pd  # noqa: F401
-    spark.range(64).mapInPandas(
-        lambda it: (pdf for pdf in it), "id long").count()
-    for warm in ("q5_local_supplier_volume", "w_sessionize", "dedup_exact"):
-        _drain(qs[warm](spark, sf_dir))
+    warm_up(spark, sf_dir)
 
     # best-of-2: the first run pays one-time codegen compilation, which
     # a steady-state 100 TB deployment amortizes; the min is the honest
     # per-query execution cost.
     timings: dict[str, float] = {}
     total = 0.0
-    jsc = spark.sparkContext._jsc.sc()
     # Noise-adaptive best-of-N: the host is a shared microVM — minute-
     # scale neighbor load inflates wall clock 2-3× (measured: identical
     # code+data, 62 s vs 112 s totals an hour apart). Two runs per
@@ -160,7 +199,6 @@ def main() -> None:
     # so take up to two more samples, under a global extra-time budget
     # so a storm can't run the bench unbounded. min stays the honest
     # steady-state cost either way.
-    import gc
     extra_budget = 150.0
     # Best-known per-query minima from prior runs on this class of
     # host (BENCH_REFERENCE.json, regenerated whenever a run beats
@@ -178,23 +216,9 @@ def main() -> None:
     rows_of: dict[str, int] = {}
 
     def one_run(name: str) -> None:
-        # JVM full GC BEFORE every timed window: ContextCleaner frees
-        # dead broadcast/shuffle blocks only after a GC proves them
-        # unreachable, and dozens of queries' worth of stale blocks
-        # inflated late-positioned queries ~2× vs the same query
-        # standalone-warm. Steady-state cost, not a timing trick: a
-        # resident service GCs continuously.
-        spark._jvm.System.gc()
-        t0 = time.perf_counter()
-        rows_of[name] = _drain(qs[name](spark, sf_dir))
-        samples[name].append(time.perf_counter() - t0)
-        # drop localCheckpoint blocks the query pinned (pagerank,
-        # tf-idf, …) BETWEEN runs too — leftover blocks squeeze the
-        # BlockManager and showed up as multi-second eviction stalls
-        gc.collect()  # release py4j frame refs promptly
-        it = jsc.getPersistentRDDs().valuesIterator()
-        while it.hasNext():
-            it.next().unpersist(False)
+        dt, rows_of[name] = timed_run(
+            spark, functools.partial(qs[name], spark, sf_dir))
+        samples[name].append(dt)
 
     def noisy(name: str) -> bool:
         # two triggers: the two fastest samples disagree >20%

@@ -10,6 +10,7 @@ Usage: python bench_scale.py [N]   (default 10)
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import shutil
@@ -21,6 +22,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import functions as F
 
+from bench import timed_run, warm_up
 from s3_elasticsearch_data_pipeline_spark import registry
 from s3_elasticsearch_data_pipeline_spark.session import get_spark
 
@@ -68,28 +70,30 @@ SCALE_QUERIES = (
     "sim_margin_bitext_mine",
 )
 #: Per-family revisit thresholds derived from the MEASURED 3-point
-#: scaling curve (tools/bench_graph_curve.py, r8, clean window): both
-#: graph families' work units grow exactly linearly under replication
-#: (unit_exp 1.0 — suppliers/parts unshifted ⇒ degrees densify, units
-#: don't explode) and wall-per-unit exponents are NEGATIVE (−0.62 /
-#: −0.71), but their clean-window 10× wall ratios (2.38 / 1.94) sit
-#: close enough to the blanket 2.5 revisit line that ordinary host
-#: noise pushes them over every round. Lines = measured clean ratio ×
-#: ~1.4 noise allowance; a genuine superlinear regression still trips
-#: them (and the N×slack failure gate is untouched).
-#: text_repetition_scores (tools/bench_text_curve.py, r9, clean
-#: window): per-row fold work Σ(distinct×total bigrams) exactly
-#: linear (unit_exp 1.0), wall-per-unit −0.6 — the 0.4 s base is
-#: fixed overhead, so the clean 10× wall ratio 2.5 is the noise-floor
-#: shape, not a plan defect. Line = 2.5 × ~1.4 allowance.
-#: sim_margin_bitext_mine (r10 optimization round): the probe-scoring
-#: re-shape halved the 1× base (3.85 → 1.63 s) while the 10× wall
-#: stayed FLAT vs r9 (7.73 vs 7.76 s — the 10× cost is the probed
-#: candidate scan/rerank, which the re-shape also carries, not the
-#: fixed per-call overhead the base shed), so the clean-window ratio
-#: is now ~4.7 by construction, not by regression. Line = measured
-#: 4.7 × ~1.4 allowance; a genuine 10× absolute regression still
-#: trips it (4.7 × 1.63 × 1.4 ≈ 10.7 s vs the 7.7 s measured).
+#: scaling curve (SCALING.md, "Round-8 graph-family 3-point scaling
+#: curve", clean window): both graph families' work units grow exactly
+#: linearly under replication (unit_exp 1.0 — suppliers/parts
+#: unshifted ⇒ degrees densify, units don't explode) and wall-per-unit
+#: exponents are NEGATIVE (−0.62 / −0.71), but their clean-window 10×
+#: wall ratios (2.38 / 1.94) sit close enough to the blanket 2.5
+#: revisit line that ordinary host noise pushes them over every round.
+#: Lines = measured clean ratio × ~1.4 noise allowance; a genuine
+#: superlinear regression still trips them (and the N×slack failure
+#: gate is untouched).
+#: text_repetition_scores (SCALING.md, "Round-9 text_repetition_scores
+#: 3-point curve", clean window): per-row fold work Σ(distinct×total
+#: bigrams) exactly linear (unit_exp 1.0), wall-per-unit −0.6 — the
+#: 0.4 s base is fixed overhead, so the clean 10× wall ratio 2.5 is the
+#: noise-floor shape, not a plan defect. Line = 2.5 × ~1.4 allowance.
+#: sim_margin_bitext_mine (SCALING.md, "Round-10 focused 10x smoke on
+#: the optimized families"): the probe-scoring re-shape halved the 1×
+#: base (3.85 → 1.63 s) while the 10× wall stayed FLAT vs r9 (7.73 vs
+#: 7.76 s — the 10× cost is the probed candidate scan/rerank, which the
+#: re-shape also carries, not the fixed per-call overhead the base
+#: shed), so the clean-window ratio is now ~4.7 by construction, not by
+#: regression. Line = measured 4.7 × ~1.4 allowance; a genuine 10×
+#: absolute regression still trips it (4.7 × 1.63 × 1.4 ≈ 10.7 s vs
+#: the 7.7 s measured).
 FAMILY_REVISIT = {
     "graph_pagerank_trade": 3.4,
     "market_basket_lift": 2.8,
@@ -164,57 +168,32 @@ def replicate(spark, out_dir: str, n: int) -> None:
         (shutil.copytree if os.path.isdir(src) else shutil.copy)(src, dst)
 
 
-def _drain(df) -> None:
-    """Execute the full query distributed and reduce it to ONE row
-    (row count + an overflow-safe hash-sum over every output column, so
-    no column can be pruned away). This is the honest scaling probe:
-    a production pipeline lands results in a sink, it does not funnel
-    them through driver ``collect()`` — and collect's per-Row Python
-    materialization is linear in OUTPUT rows, which for row-preserving
-    shapes (windows, SCD2) drowned the engine signal entirely (round-2
-    measured w_running_totals at "6.7×" on 10× data; with the drain it
-    is ~1.5×, i.e. the 10× sort/shuffle was never the bottleneck —
-    the driver-side Row decoding was)."""
-    h = F.xxhash64(*[F.col(c).cast("string") for c in df.columns])
-    df.agg(F.count(F.lit(1)).alias("n_rows"),
-           F.sum(h.cast("decimal(38,0)")).alias("content_hash")).collect()
-
-
 def time_queries(spark, sf_dir: str,
                  names=SCALE_QUERIES, warm: bool = True,
                  reps: int = 2) -> dict[str, float]:
+    """Best-of-``reps`` ``bench.timed_run`` per query. The drain is the
+    honest scaling probe: a production pipeline lands results in a
+    sink, it does not funnel them through driver ``collect()`` — and
+    collect's per-Row Python materialization is linear in OUTPUT rows,
+    which for row-preserving shapes (windows, SCD2) drowned the engine
+    signal entirely (round-2 measured w_running_totals at "6.7×" on 10×
+    data; with the drain it is ~1.5×, i.e. the 10× sort/shuffle was
+    never the bottleneck — the driver-side Row decoding was)."""
     qs = registry.queries()
-    jsc = spark.sparkContext._jsc.sc()
-
-    def cleanup() -> None:
-        # drop localCheckpoint blocks so pinned frames from one query
-        # don't squeeze the next one's memory (same hygiene as bench.py)
-        it = jsc.getPersistentRDDs().valuesIterator()
-        while it.hasNext():
-            it.next().unpersist(False)
-
     out = {}
     for name in names:
+        build = functools.partial(qs[name], spark, sf_dir)
         if warm:
-            _drain(qs[name](spark, sf_dir))  # untimed warm pass (codegen)
-            cleanup()
-        best = float("inf")
-        for _ in range(reps):
-            # re-invoke the query builder inside the timed region: eager
-            # localCheckpoints materialize at plan-construction time and
-            # must be charged to the query, not hidden by frame reuse
-            t0 = time.perf_counter()
-            _drain(qs[name](spark, sf_dir))
-            best = min(best, time.perf_counter() - t0)
-            cleanup()
-        out[name] = round(best, 3)
+            timed_run(spark, build)  # untimed warm pass (codegen)
+        out[name] = round(min(timed_run(spark, build)[0]
+                              for _ in range(reps)), 3)
     return out
 
 
 def main() -> None:
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 10
     spark = get_spark("bench_scale")
-    spark.range(64).mapInPandas(lambda it: it, "id long").count()
+    warm_up(spark, BASE)
 
     slack = float(os.environ.get("SCALE_SLACK", "1.3"))
     # Revisit (resample-in-a-later-window) anything above this ratio —

@@ -55,13 +55,6 @@ def word_ngrams_from_tokens(toks: Column, n: int = 3) -> Column:
             .otherwise(F.array().cast("array<string>"))
 
 
-def word_ngrams(text: Column, n: int = 3) -> Column:
-    """Shingles directly from a text column. Prefer the two-step
-    ``withColumn("toks", tokens(...))`` + ``word_ngrams_from_tokens``
-    in hot paths (see that function's note on CSE)."""
-    return word_ngrams_from_tokens(tokens(text), n)
-
-
 # Polynomial rolling-hash parameters (Rabin–Karp / Karp–Rabin string
 # fingerprinting): a large prime modulus keeps every intermediate
 # product under 2^63 (acc < 1e9+7, acc*131 + 0x10FFFF < 1.4e11), so

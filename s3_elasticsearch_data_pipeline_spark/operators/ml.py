@@ -221,10 +221,6 @@ def apply_quality_classifier(documents: DataFrame,
         (p >= 0.5).cast("int").alias("predicted"))
 
 
-def _sigmoid(z: float) -> float:
-    return 1.0 / (1.0 + math.exp(-z))
-
-
 def domain_mixture(documents: DataFrame, embeddings: DataFrame,
                    n_cells: int = 8, iters: int = 2) -> DataFrame:
     """Corpus composition by LEARNED domain: k-means cells over the

@@ -37,10 +37,6 @@ def write_bucketed(df: DataFrame, table_name: str, key: str,
     writer.format("parquet").saveAsTable(table_name)
 
 
-def read_bucketed(spark: SparkSession, table_name: str) -> DataFrame:
-    return spark.table(table_name)
-
-
 def cojoin_bucketed(spark: SparkSession, left_table: str, right_table: str,
                     key: str, how: str = "inner") -> DataFrame:
     """Join two tables bucketed on the same key with the same bucket

@@ -129,9 +129,3 @@ def delete_by_key(spark: SparkSession, doomed_ids: DataFrame, path: str,
         return n
     finally:
         release_persistent_rdds(spark, persistent_rdd_ids(spark) - before)
-
-
-def read_serving(spark: SparkSession, path: str) -> DataFrame:
-    """Sink-state scan (S6/S7 stand-in): read the serving table; callers
-    filter/aggregate it like any DataFrame — no pagination concept."""
-    return spark.read.parquet(path)

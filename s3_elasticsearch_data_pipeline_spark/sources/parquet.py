@@ -17,20 +17,11 @@ Every scan in the reference maps to a built-in Spark reader:
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 
 def scan(spark: SparkSession, path: str) -> DataFrame:
     """S1/S2 — parquet scan with partition discovery."""
     return spark.read.parquet(path)
-
-
-def pruned_scan(spark: SparkSession, path: str, partition_col: str,
-                value) -> DataFrame:
-    """S4 — partition-pruned scan. The equality predicate on a hive
-    partition column never touches non-matching directories; tests
-    assert this via the physical plan's partition filters."""
-    return spark.read.parquet(path).where(F.col(partition_col) == F.lit(value))
 
 
 def register_catalog_table(spark: SparkSession, name: str, path: str,

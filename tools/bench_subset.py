@@ -9,15 +9,14 @@ Usage: python tools/bench_subset.py q1 q2 ... [--runs N]
 from __future__ import annotations
 
 import argparse
-import gc
+import functools
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import _drain  # noqa: E402
+from bench import timed_run, warm_up  # noqa: E402
 from s3_elasticsearch_data_pipeline_spark import registry  # noqa: E402
 from s3_elasticsearch_data_pipeline_spark.session import get_spark  # noqa: E402
 
@@ -34,26 +33,11 @@ def main() -> None:
         if q not in qs:
             sys.exit(f"unknown query {q!r}")
 
-    _drain(qs["a5_global_count"](spark, sf_dir))
-    import pandas as pd  # noqa: F401
-    spark.range(64).mapInPandas(
-        lambda it: (pdf for pdf in it), "id long").count()
-    for warm in ("q5_local_supplier_volume", "w_sessionize", "dedup_exact"):
-        _drain(qs[warm](spark, sf_dir))
-
-    jsc = spark.sparkContext._jsc.sc()
+    warm_up(spark, sf_dir)
     out = {}
     for name in args.queries:
-        samples = []
-        for _ in range(args.runs):
-            spark._jvm.System.gc()
-            t0 = time.perf_counter()
-            _drain(qs[name](spark, sf_dir))
-            samples.append(time.perf_counter() - t0)
-            gc.collect()
-            it = jsc.getPersistentRDDs().valuesIterator()
-            while it.hasNext():
-                it.next().unpersist(False)
+        build = functools.partial(qs[name], spark, sf_dir)
+        samples = [timed_run(spark, build)[0] for _ in range(args.runs)]
         out[name] = round(min(samples), 3)
         print(f"# {name}: {out[name]:.3f}s  (all: "
               f"{[round(s, 3) for s in samples]})", file=sys.stderr)

@@ -13,12 +13,13 @@ round-trips correctness too (re-filtered output must equal input).
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
 import numpy as np
 
-sys.path.insert(0, ".")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from s3_elasticsearch_data_pipeline_spark.operators.multimodal import (  # noqa: E402
     _paeth, _png_unfilter)
 

@@ -1,17 +1,21 @@
 #!/usr/bin/env python
 """Per-query profiler for the optimization rounds (guide §1): time a
-registry query in isolation with the noop sink, capture its
-``explain("formatted")`` plan, and break the wall clock down by Spark
-job/stage via the UI REST API.
+registry query in isolation with bench.py's discipline (``warm_up``,
+then ``timed_run`` per run: GC before the window, distributed drain,
+release of every persisted RDD after it), capture its
+``explain("formatted")`` plan, and break the last run's wall clock
+down by Spark job/stage.
 
 Usage:
     python tools/profile_query.py QUERY [--runs N] [--plan-out FILE]
         [--sf-dir DIR] [--stages]
 
-The session mirrors ``session.get_spark`` exactly except that the UI
-is enabled (the REST API is the stage-metrics source; bench.py keeps
-the UI off). Timings here guide optimization; the driver-comparable
-numbers remain bench.py's.
+The session is ``session.get_spark``'s, UI off like bench.py's: the
+job and stage metrics come from the Spark status store
+(``perfbench/layers.StatusStore``), which the driver keeps whether or
+not the UI runs. Each timed run's jobs carry the description
+``QUERY: run I``. Timings here guide optimization; the
+driver-comparable numbers remain bench.py's.
 """
 
 from __future__ import annotations
@@ -21,46 +25,17 @@ import json
 import os
 import sys
 import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession  # noqa: E402
+from bench import timed_run, warm_up  # noqa: E402
+from perfbench.layers import StatusStore  # noqa: E402
+from s3_elasticsearch_data_pipeline_spark import registry  # noqa: E402
+from s3_elasticsearch_data_pipeline_spark.session import (  # noqa: E402
+    get_spark, job_phases)
 
 
-def get_profiling_spark():
-    from s3_elasticsearch_data_pipeline_spark.session import (
-        DEFAULT_SHUFFLE_PARTITIONS)
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    shuffle_partitions = int(os.environ.get(
-        "SPARK_GRAFT_SHUFFLE_PARTITIONS", DEFAULT_SHUFFLE_PARTITIONS))
-    return (
-        SparkSession.builder
-        .master(f"local[{cpus}]")
-        .appName("profile-query")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-        .config("spark.sql.python.filterPushdown.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.ui.enabled", "true")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory",
-                os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        .getOrCreate())
-
-
-def rest(spark, path):
-    ui = spark.sparkContext.uiWebUrl
-    app_id = spark.sparkContext.applicationId
-    with urllib.request.urlopen(f"{ui}/api/v1/applications/{app_id}{path}") as r:
-        return json.load(r)
-
-
-def main() -> None:
+def main(argv: list[str] | None = None) -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("query")
     ap.add_argument("--runs", type=int, default=3)
@@ -70,44 +45,30 @@ def main() -> None:
                                            "/root/testdata/sf0.1"))
     ap.add_argument("--stages", action="store_true",
                     help="dump per-stage metrics of the LAST timed run")
-    args = ap.parse_args()
+    args = ap.parse_args(argv)
 
-    from s3_elasticsearch_data_pipeline_spark import registry
-    spark = get_profiling_spark()
-    spark.sparkContext.setLogLevel("WARN")
+    spark = get_spark("profile-query")
     qs = registry.queries()
     if args.query not in qs:
         sys.exit(f"unknown query {args.query!r}")
+    warm_up(spark, args.sf_dir)
 
-    # warm: parquet footers + python workers + codegen
-    import pandas as pd  # noqa: F401
-    spark.range(64).mapInPandas(lambda it: (pdf for pdf in it),
-                                "id long").count()
+    df = None
 
-    def one_run(tag):
-        spark._jvm.System.gc()
-        spark.sparkContext.setJobDescription(f"{args.query}:{tag}")
-        t0 = time.perf_counter()
+    def build():
+        nonlocal df
         df = qs[args.query](spark, args.sf_dir)
-        df.write.format("noop").mode("overwrite").save()
-        dt = time.perf_counter() - t0
-        spark.sparkContext.setJobDescription(None)
-        import gc
-        gc.collect()
-        jsc = spark.sparkContext._jsc.sc()
-        it = jsc.getPersistentRDDs().valuesIterator()
-        while it.hasNext():
-            it.next().unpersist(False)
-        return dt, df
+        return df
 
     times = []
-    jobs_before = 0
-    for i in range(args.runs):
-        if args.stages and i == args.runs - 1:
-            jobs_before = len(rest(spark, "/jobs"))
-        dt, df = one_run(str(i))
-        times.append(dt)
-        print(f"run {i}: {dt:.3f}s", file=sys.stderr)
+    with job_phases(spark, args.query) as phase:
+        for i in range(args.runs):
+            phase(f"run {i}")
+            t0 = time.time()
+            dt, rows = timed_run(spark, build)
+            window = (t0, time.time())
+            times.append(dt)
+            print(f"run {i}: {dt:.3f}s ({rows} rows)", file=sys.stderr)
 
     print(json.dumps({"query": args.query, "runs": [round(t, 3) for t in times],
                       "min": round(min(times), 3)}))
@@ -117,31 +78,22 @@ def main() -> None:
             df._jdf.queryExecution(), "formatted")
         with open(args.plan_out, "w") as fh:
             fh.write(f"# {args.query} @ {args.sf_dir} "
-                     f"(noop-drained, run min {min(times):.3f}s)\n")
+                     f"(drained, run min {min(times):.3f}s)\n")
             fh.write(plan)
         print(f"plan -> {args.plan_out}", file=sys.stderr)
 
     if args.stages:
-        jobs = rest(spark, "/jobs")
-        new_jobs = [j for j in jobs
-                    if j["jobId"] >= jobs_before]
-        new_jobs.sort(key=lambda j: j["jobId"])
-        stage_info = {s["stageId"]: s for s in rest(spark, "/stages")}
+        store = StatusStore(spark)
         print("\n# last-run jobs (id, dur_s, desc):", file=sys.stderr)
-        for j in new_jobs:
-            t0 = j.get("submissionTime", "")
-            t1 = j.get("completionTime", "")
+        for j in sorted(store.jobs(*window), key=lambda j: j["jobId"]):
+            end = j.get("completionTime")
+            dur = (end - j["submissionTime"]) / 1000 if end else -1
             desc = (j.get("description") or j.get("name", ""))[:90]
-            from datetime import datetime
-
-            def p(ts):
-                return datetime.strptime(ts[:23], "%Y-%m-%dT%H:%M:%S.%f")
-            dur = (p(t1) - p(t0)).total_seconds() if t0 and t1 else -1
             print(f"  job {j['jobId']:>4} {dur:7.3f}s  {desc}",
                   file=sys.stderr)
-            for sid in sorted(j.get("stageIds", [])):
-                s = stage_info.get(sid)
-                if not s or s.get("status") == "SKIPPED":
+            for sid in sorted(j["stageIds"]):
+                s = store.stage(sid)
+                if s.get("status") == "SKIPPED":
                     continue
                 print(f"      stage {sid:>4} {s.get('status','?'):>9} "
                       f"tasks={s.get('numCompleteTasks',0):>3} "
