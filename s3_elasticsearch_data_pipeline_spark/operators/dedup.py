@@ -38,6 +38,7 @@ from s3_elasticsearch_data_pipeline_spark.tables import (
 from s3_elasticsearch_data_pipeline_spark.functions.vector import cosine
 from s3_elasticsearch_data_pipeline_spark.operators.quantizer import (
     _TARGET_CELL_OCCUPANCY, _quantizer_cells_fn, _train_quantizer)
+from s3_elasticsearch_data_pipeline_spark.session import checkpoint_scope
 
 
 def exact_dedup(documents: DataFrame) -> DataFrame:
@@ -730,63 +731,55 @@ def connected_components(pairs: DataFrame, max_iter: int = 25,
     # callers hand in an expensive pipeline (e.g. the full ngram-Jaccard
     # join), and the two union branches would otherwise each recompute
     # it (exchange reuse across union arms is not guaranteed).
-    # Checkpoint-block hygiene (same discipline as pagerank): all
-    # per-round checkpoints are released deterministically on return;
-    # the result is checkpointed last so the release can't name it.
-    from s3_elasticsearch_data_pipeline_spark.session import (
-        persistent_rdd_ids, release_persistent_rdds)
     spark = pairs.sparkSession
-    before = persistent_rdd_ids(spark)
-    # Checkpoint BEFORE probing: the caller's pair plan (typically the
-    # full similarity join) runs exactly once either way — probing the
-    # raw plan first would re-run it from scratch on above-cap inputs,
-    # since a shuffle-heavy limit() still executes every upstream stage.
-    pairs = pairs.select("doc_id_a", "doc_id_b").localCheckpoint(eager=True)
-    dts = dict(pairs.dtypes)
-    if dts["doc_id_a"] == dts["doc_id_b"]:  # mixed-width ids: the driver
-        # path would narrow one side — stay distributed (coerces via
-        # least/greatest like any join)
-        head = pairs.limit(driver_path_max_pairs + 1).toPandas()
-        if len(head) <= driver_path_max_pairs:
-            out = _driver_union_find(spark, head, dts["doc_id_a"],
-                                     drop_self=False)
-            release_persistent_rdds(spark,
-                                    persistent_rdd_ids(spark) - before)
-            return out
-    edges = (pairs.select(F.col("doc_id_a").alias("src"),
-                          F.col("doc_id_b").alias("dst"))
-             .unionByName(pairs.select(F.col("doc_id_b").alias("src"),
-                                       F.col("doc_id_a").alias("dst"))))
-    edges = edges.localCheckpoint(eager=True)
-    labels = (edges.select(F.col("src").alias("doc_id")).distinct()
-              .withColumn("cluster_id", F.col("doc_id"))
-              .localCheckpoint(eager=True))
-    for _ in range(max_iter):
-        nbr = (edges.join(labels, edges.src == labels.doc_id)
-               .groupBy(F.col("dst").alias("nbr_doc"))
-               .agg(F.min("cluster_id").alias("nbr_min")))
-        # Carry the previous label through the update so convergence is a
-        # filter+count on the already-checkpointed frame — not a second
-        # join per round (halves the per-iteration shuffle count).
-        # lazy checkpoint: the convergence count below is the action
-        # that materializes it (ONE job per round, not a checkpoint job
-        # plus a count job); the next round reuses the cached blocks
-        stepped = (labels
-                   .join(nbr, labels.doc_id == nbr.nbr_doc, "left")
-                   .select("doc_id",
-                           F.col("cluster_id").alias("__prev"),
-                           F.least(F.col("cluster_id"),
-                                   F.coalesce("nbr_min", F.col("cluster_id")))
-                           .alias("cluster_id"))
-                   .localCheckpoint(eager=False))
-        changed = stepped.where(F.col("cluster_id") != F.col("__prev")).count()
-        labels = stepped.select("doc_id", "cluster_id")
-        if changed == 0:
-            break
-    mid = persistent_rdd_ids(spark)
-    labels = labels.localCheckpoint(eager=True)
-    release_persistent_rdds(spark, mid - before)
-    return labels
+    with checkpoint_scope(spark) as keep:
+        # Checkpoint BEFORE probing: the caller's pair plan (typically the
+        # full similarity join) runs exactly once either way — probing the
+        # raw plan first would re-run it from scratch on above-cap inputs,
+        # since a shuffle-heavy limit() still executes every upstream stage.
+        pairs = (pairs.select("doc_id_a", "doc_id_b")
+                 .localCheckpoint(eager=True))
+        dts = dict(pairs.dtypes)
+        if dts["doc_id_a"] == dts["doc_id_b"]:  # mixed-width ids: the driver
+            # path would narrow one side — stay distributed (coerces via
+            # least/greatest like any join)
+            head = pairs.limit(driver_path_max_pairs + 1).toPandas()
+            if len(head) <= driver_path_max_pairs:
+                return _driver_union_find(spark, head, dts["doc_id_a"],
+                                          drop_self=False)
+        edges = (pairs.select(F.col("doc_id_a").alias("src"),
+                              F.col("doc_id_b").alias("dst"))
+                 .unionByName(pairs.select(F.col("doc_id_b").alias("src"),
+                                           F.col("doc_id_a").alias("dst"))))
+        edges = edges.localCheckpoint(eager=True)
+        labels = (edges.select(F.col("src").alias("doc_id")).distinct()
+                  .withColumn("cluster_id", F.col("doc_id"))
+                  .localCheckpoint(eager=True))
+        for _ in range(max_iter):
+            nbr = (edges.join(labels, edges.src == labels.doc_id)
+                   .groupBy(F.col("dst").alias("nbr_doc"))
+                   .agg(F.min("cluster_id").alias("nbr_min")))
+            # Carry the previous label through the update so convergence is a
+            # filter+count on the already-checkpointed frame — not a second
+            # join per round (halves the per-iteration shuffle count).
+            # lazy checkpoint: the convergence count below is the action
+            # that materializes it (ONE job per round, not a checkpoint job
+            # plus a count job); the next round reuses the cached blocks
+            stepped = (labels
+                       .join(nbr, labels.doc_id == nbr.nbr_doc, "left")
+                       .select("doc_id",
+                               F.col("cluster_id").alias("__prev"),
+                               F.least(F.col("cluster_id"),
+                                       F.coalesce("nbr_min",
+                                                  F.col("cluster_id")))
+                               .alias("cluster_id"))
+                       .localCheckpoint(eager=False))
+            changed = stepped.where(
+                F.col("cluster_id") != F.col("__prev")).count()
+            labels = stepped.select("doc_id", "cluster_id")
+            if changed == 0:
+                break
+        return keep(labels)
 
 
 def embedding_blocked_near_dup(embeddings: DataFrame,
@@ -885,96 +878,90 @@ def connected_components_star(pairs: DataFrame, max_iter: int = 20,
     contraction is the unchanged scale path. (Star drops self-pair-only
     nodes — mirrored by ``drop_self=True``.)
     """
-    from s3_elasticsearch_data_pipeline_spark.session import (
-        persistent_rdd_ids, release_persistent_rdds)
     spark = pairs.sparkSession
-    before = persistent_rdd_ids(spark)
-    # checkpoint-then-probe: see connected_components (one pass of the
-    # caller's expensive pair plan on BOTH sides of the switch)
-    pairs = pairs.select("doc_id_a", "doc_id_b").localCheckpoint(eager=True)
-    dts = dict(pairs.dtypes)
-    if dts["doc_id_a"] == dts["doc_id_b"]:
-        head = pairs.limit(driver_path_max_pairs + 1).toPandas()
-        if len(head) <= driver_path_max_pairs:
-            out = _driver_union_find(spark, head, dts["doc_id_a"],
-                                     drop_self=True)
-            release_persistent_rdds(spark,
-                                    persistent_rdd_ids(spark) - before)
-            return out
-    edges = (pairs.select(F.col("doc_id_a").alias("a"),
-                          F.col("doc_id_b").alias("b"))
-             .where(F.col("a") != F.col("b"))
-             .select(F.least("a", "b").alias("a"),
-                     F.greatest("a", "b").alias("b"))
-             .distinct().localCheckpoint(eager=True))
-    nodes = (_symmetrize(edges).select(F.col("a").alias("doc_id"))
-             .distinct().localCheckpoint(eager=True))
+    with checkpoint_scope(spark) as keep:
+        # checkpoint-then-probe: see connected_components (one pass of the
+        # caller's expensive pair plan on BOTH sides of the switch)
+        pairs = (pairs.select("doc_id_a", "doc_id_b")
+                 .localCheckpoint(eager=True))
+        dts = dict(pairs.dtypes)
+        if dts["doc_id_a"] == dts["doc_id_b"]:
+            head = pairs.limit(driver_path_max_pairs + 1).toPandas()
+            if len(head) <= driver_path_max_pairs:
+                return _driver_union_find(spark, head, dts["doc_id_a"],
+                                          drop_self=True)
+        edges = (pairs.select(F.col("doc_id_a").alias("a"),
+                              F.col("doc_id_b").alias("b"))
+                 .where(F.col("a") != F.col("b"))
+                 .select(F.least("a", "b").alias("a"),
+                         F.greatest("a", "b").alias("b"))
+                 .distinct().localCheckpoint(eager=True))
+        nodes = (_symmetrize(edges).select(F.col("a").alias("doc_id"))
+                 .distinct().localCheckpoint(eager=True))
 
-    # Fixpoint detection on the canonical (a<b, distinct) edge set via
-    # a one-pass signature — (count, Σ xxhash64(a,b)) — instead of two
-    # exceptAll shuffles per round; equal signatures on consecutive
-    # rounds means an identical set up to an engineered 64-bit-sum
-    # collision (not a property of real dedup graphs). The signature
-    # job doubles as the round's checkpoint materialization.
-    def _sig(e):
-        r = e.agg(F.count(F.lit(1)).alias("c"),
-                  F.sum(F.xxhash64("a", "b").cast("decimal(38,0)"))
-                  .alias("h")).collect()[0]  # decimal: no ANSI overflow
-        return (r["c"], r["h"])
+        # Fixpoint detection on the canonical (a<b, distinct) edge set via
+        # a one-pass signature — (count, Σ xxhash64(a,b)) — instead of two
+        # exceptAll shuffles per round; equal signatures on consecutive
+        # rounds means an identical set up to an engineered 64-bit-sum
+        # collision (not a property of real dedup graphs). The signature
+        # job doubles as the round's checkpoint materialization.
+        def _sig(e):
+            r = e.agg(F.count(F.lit(1)).alias("c"),
+                      F.sum(F.xxhash64("a", "b").cast("decimal(38,0)"))
+                      .alias("h")).collect()[0]  # decimal: no ANSI overflow
+            return (r["c"], r["h"])
 
-    prev_sig = _sig(edges)
-    for _ in range(max_iter):
-        d = _symmetrize(edges).select(F.col("a").alias("u"),
-                                      F.col("b").alias("v"))
-        m = (d.groupBy("u").agg(F.min("v").alias("__mn"))
-             .select("u", F.least("u", "__mn").alias("m")))
-        # large-star: larger neighbors attach to u's min
-        large = (d.join(m, "u").where(F.col("v") > F.col("u"))
-                 .select(F.col("m").alias("a"), F.col("v").alias("b")))
-        e1 = (large.where(F.col("a") != F.col("b"))
-              .select(F.least("a", "b").alias("a"),
-                      F.greatest("a", "b").alias("b"))
-              .distinct().localCheckpoint(eager=False))  # materialized
-        # by this round's signature job (one job per round, not three)
-        # small-star over the large-star output
-        d2 = _symmetrize(e1).select(F.col("a").alias("u"),
-                                    F.col("b").alias("v"))
-        m2 = (d2.groupBy("u").agg(F.min("v").alias("__mn"))
-              .select("u", F.least("u", "__mn").alias("m")))
-        small = (d2.join(m2, "u").where(F.col("v") <= F.col("u"))
-                 .select(F.col("m").alias("a"), F.col("v").alias("b"))
-                 .unionByName(m2.select(F.col("m").alias("a"),
-                                        F.col("u").alias("b"))))
-        e2 = (small.where(F.col("a") != F.col("b"))
-              .select(F.least("a", "b").alias("a"),
-                      F.greatest("a", "b").alias("b"))
-              .distinct().localCheckpoint(eager=False))
-        sig = _sig(e2)
-        prev_edges, edges = edges, e2
-        if sig == prev_sig:
-            # Signature equality is (count, Σ xxhash64) — confirm the
-            # fixpoint EXACTLY, once, at convergence: counts already
-            # match, so one empty one-way exceptAll proves the sets
-            # identical (distinct + equal cardinality). A sum collision
-            # (never observed, but the signature alone can't exclude
-            # it) just keeps iterating instead of silently returning
-            # wrong cluster labels. Cost: one extra job at convergence,
-            # zero in steady rounds.
-            if e2.exceptAll(prev_edges).isEmpty():
-                break
-        prev_sig = sig
+        prev_sig = _sig(edges)
+        for _ in range(max_iter):
+            d = _symmetrize(edges).select(F.col("a").alias("u"),
+                                          F.col("b").alias("v"))
+            m = (d.groupBy("u").agg(F.min("v").alias("__mn"))
+                 .select("u", F.least("u", "__mn").alias("m")))
+            # large-star: larger neighbors attach to u's min
+            large = (d.join(m, "u").where(F.col("v") > F.col("u"))
+                     .select(F.col("m").alias("a"), F.col("v").alias("b")))
+            e1 = (large.where(F.col("a") != F.col("b"))
+                  .select(F.least("a", "b").alias("a"),
+                          F.greatest("a", "b").alias("b"))
+                  .distinct().localCheckpoint(eager=False))  # materialized
+            # by this round's signature job (one job per round, not three)
+            # small-star over the large-star output
+            d2 = _symmetrize(e1).select(F.col("a").alias("u"),
+                                        F.col("b").alias("v"))
+            m2 = (d2.groupBy("u").agg(F.min("v").alias("__mn"))
+                  .select("u", F.least("u", "__mn").alias("m")))
+            small = (d2.join(m2, "u").where(F.col("v") <= F.col("u"))
+                     .select(F.col("m").alias("a"), F.col("v").alias("b"))
+                     .unionByName(m2.select(F.col("m").alias("a"),
+                                            F.col("u").alias("b"))))
+            e2 = (small.where(F.col("a") != F.col("b"))
+                  .select(F.least("a", "b").alias("a"),
+                          F.greatest("a", "b").alias("b"))
+                  .distinct().localCheckpoint(eager=False))
+            sig = _sig(e2)
+            prev_edges, edges = edges, e2
+            if sig == prev_sig:
+                # Signature equality is (count, Σ xxhash64) — confirm the
+                # fixpoint EXACTLY, once, at convergence: counts already
+                # match, so one empty one-way exceptAll proves the sets
+                # identical (distinct + equal cardinality). A sum collision
+                # (never observed, but the signature alone can't exclude
+                # it) just keeps iterating instead of silently returning
+                # wrong cluster labels. Cost: one extra job at convergence,
+                # zero in steady rounds.
+                if e2.exceptAll(prev_edges).isEmpty():
+                    break
+            prev_sig = sig
 
-    labels = (_symmetrize(edges).groupBy(F.col("a").alias("doc_id"))
-              .agg(F.min("b").alias("__mn"))
-              .select("doc_id", F.least("doc_id", "__mn").alias("cluster_id")))
-    out = (nodes.join(labels, "doc_id", "left")
-           .select("doc_id",
-                   F.coalesce("cluster_id", F.col("doc_id"))
-                   .alias("cluster_id")))
-    mid = persistent_rdd_ids(spark)
-    out = out.localCheckpoint(eager=True)
-    release_persistent_rdds(spark, mid - before)
-    return out
+        labels = (_symmetrize(edges).groupBy(F.col("a").alias("doc_id"))
+                  .agg(F.min("b").alias("__mn"))
+                  .select("doc_id", F.least("doc_id", "__mn")
+                          .alias("cluster_id")))
+        out = (nodes.join(labels, "doc_id", "left")
+               .select("doc_id",
+                       F.coalesce("cluster_id", F.col("doc_id"))
+                       .alias("cluster_id")))
+        return keep(out)
 
 
 def incremental_batch_dedup(documents: DataFrame,
@@ -1314,107 +1301,100 @@ def duplicate_spans(documents: DataFrame, k: int = 10,
     the dup aggregate shuffles 8-byte keys, not 32-byte hex. One hash
     aggregate finds digests in ≥ ``min_docs`` distinct docs; span
     counts and covered positions come from ONE aggregate over the
-    (rare) duplicated spans. Checkpoint hygiene: the token-hash table
-    is eagerly checkpointed (it feeds the span fan-out AND the final
-    join — Spark does not reuse the subtree), and all corpus-sized
-    blocks are RELEASED before returning; only the doc-count-sized
-    result stays pinned (pagerank/CC discipline — see SCALING.md's
-    2.5→14 s session-degradation measurement).
+    (rare) duplicated spans. The token-hash table is eagerly
+    checkpointed (it feeds the span fan-out AND the final join — Spark
+    does not reuse the subtree); under ``session.checkpoint_scope``
+    only the doc-count-sized result stays pinned.
     """
-    from s3_elasticsearch_data_pipeline_spark.session import (
-        persistent_rdd_ids, release_persistent_rdds)
-    spark = documents.sparkSession
-    before = persistent_rdd_ids(spark)
     mod = F.lit(SPAN_HASH_MOD)
-    base = (parallelize_for_compute(documents)
-            .select("doc_id", tokens(F.col("text")).alias("toks"))
-            .select("doc_id",
-                    F.transform("toks",
-                                lambda t: portable_hash60(t) % mod)
-                    .alias("th"),
-                    F.size("toks").alias("n_tokens"))
-            .localCheckpoint(eager=True))  # feeds spans + final join
+    with checkpoint_scope(documents.sparkSession) as keep:
+        base = (parallelize_for_compute(documents)
+                .select("doc_id", tokens(F.col("text")).alias("toks"))
+                .select("doc_id",
+                        F.transform("toks",
+                                    lambda t: portable_hash60(t) % mod)
+                        .alias("th"),
+                        F.size("toks").alias("n_tokens"))
+                .localCheckpoint(eager=True))  # feeds spans + final join
 
-    # Horner weights B^(k-1-j) mod M, precomputed at plan time. In the
-    # kernel every product t·w < 2^62 fits uint64 exactly, and the
-    # ≤k·2^31 term sum fits long before its final mod — bit-identical
-    # to the sequential Horner fold the oracle runs.
-    m_val = SPAN_HASH_MOD
-    w1 = [pow(SPAN_HASH_B1, k - 1 - j, m_val) for j in range(k)]
-    w2 = [pow(SPAN_HASH_B2, k - 1 - j, m_val) for j in range(k)]
+        # Horner weights B^(k-1-j) mod M, precomputed at plan time. In the
+        # kernel every product t·w < 2^62 fits uint64 exactly, and the
+        # ≤k·2^31 term sum fits long before its final mod — bit-identical
+        # to the sequential Horner fold the oracle runs.
+        m_val = SPAN_HASH_MOD
+        w1 = [pow(SPAN_HASH_B1, k - 1 - j, m_val) for j in range(k)]
+        w2 = [pow(SPAN_HASH_B2, k - 1 - j, m_val) for j in range(k)]
 
-    def span_hashes(batches):
-        import numpy as np
-        import pandas as pd
-        a1 = np.asarray(w1, dtype=np.uint64)
-        a2 = np.asarray(w2, dtype=np.uint64)
-        for pdf in batches:
-            docs_out, starts_out, hs_out = [], [], []
-            for doc_id, th in zip(pdf["doc_id"], pdf["th"]):
-                t = np.asarray(th, dtype=np.uint64)
-                if len(t) < k:
+        def span_hashes(batches):
+            import numpy as np
+            import pandas as pd
+            a1 = np.asarray(w1, dtype=np.uint64)
+            a2 = np.asarray(w2, dtype=np.uint64)
+            for pdf in batches:
+                docs_out, starts_out, hs_out = [], [], []
+                for doc_id, th in zip(pdf["doc_id"], pdf["th"]):
+                    t = np.asarray(th, dtype=np.uint64)
+                    if len(t) < k:
+                        continue
+                    win = np.lib.stride_tricks.sliding_window_view(t, k)
+                    h1 = ((win * a1) % m_val).sum(axis=1) % m_val
+                    h2 = ((win * a2) % m_val).sum(axis=1) % m_val
+                    h = (h1.astype(np.int64) << 31) + h2.astype(np.int64)
+                    docs_out.append(np.full(len(h), doc_id, dtype=np.int64))
+                    starts_out.append(np.arange(1, len(h) + 1,
+                                                dtype=np.int32))
+                    hs_out.append(h)
+                if not docs_out:
+                    yield pd.DataFrame({"doc_id": pd.Series(dtype="int64"),
+                                        "start": pd.Series(dtype="int32"),
+                                        "h": pd.Series(dtype="int64")})
                     continue
-                win = np.lib.stride_tricks.sliding_window_view(t, k)
-                h1 = ((win * a1) % m_val).sum(axis=1) % m_val
-                h2 = ((win * a2) % m_val).sum(axis=1) % m_val
-                h = (h1.astype(np.int64) << 31) + h2.astype(np.int64)
-                docs_out.append(np.full(len(h), doc_id, dtype=np.int64))
-                starts_out.append(np.arange(1, len(h) + 1,
-                                            dtype=np.int32))
-                hs_out.append(h)
-            if not docs_out:
-                yield pd.DataFrame({"doc_id": pd.Series(dtype="int64"),
-                                    "start": pd.Series(dtype="int32"),
-                                    "h": pd.Series(dtype="int64")})
-                continue
-            yield pd.DataFrame({"doc_id": np.concatenate(docs_out),
-                                "start": np.concatenate(starts_out),
-                                "h": np.concatenate(hs_out)})
+                yield pd.DataFrame({"doc_id": np.concatenate(docs_out),
+                                    "start": np.concatenate(starts_out),
+                                    "h": np.concatenate(hs_out)})
 
-    # Measured rejection: a .repartition("h") after the mapInPandas (so
-    # the dup aggregate and the spans⋈dup join could share one
-    # exchange) got no exchange reuse — both AQE stage jobs still ran
-    # the Python kernel, and the call stayed at 12 jobs.
-    spans = (base.where(F.col("n_tokens") >= k)
-             .select("doc_id", "th")
-             .mapInPandas(span_hashes,
-                          "doc_id long, start int, h long"))
-    dup = (spans.groupBy("h")
-           .agg(F.count_distinct("doc_id").alias("__nd"))
-           .where(F.col("__nd") >= min_docs)
-           .select("h"))
-    # span count + covered positions in ONE aggregate over duplicated
-    # spans (each start is one span, so distinct-start == span count)
-    stats = (spans.join(dup, "h")
-             .select("doc_id", "start",
-                     F.explode(F.sequence(
-                         "start", F.col("start") + k - 1)).alias("p"))
-             .groupBy("doc_id")
-             .agg(F.count_distinct("start").cast("int")
-                  .alias("n_dup_spans"),
-                  F.count_distinct("p").cast("int")
-                  .alias("n_dup_tokens")))
-    out = (base.select("doc_id", "n_tokens")
-           .join(stats, "doc_id", "left")
-           .select("doc_id", "n_tokens",
-                   F.greatest(F.col("n_tokens") - k + 1, F.lit(0))
-                   .alias("n_spans"),
-                   F.coalesce("n_dup_spans", F.lit(0)).alias("n_dup_spans"),
-                   F.coalesce("n_dup_tokens", F.lit(0))
-                   .alias("n_dup_tokens"),
-                   F.when(F.col("n_tokens") > 0,
-                          # identical-IEEE half-up rounding on both
-                          # engines (see SCALING.md: F.round's exact
-                          # HALF_UP vs DuckDB's float round disagree
-                          # on 7th-digit halves, e.g. n_tokens=128)
-                          F.floor(F.coalesce("n_dup_tokens", F.lit(0))
-                                  / F.col("n_tokens") * 1000000.0
-                                  + 0.5) / 1000000.0)
-                   .otherwise(F.lit(0.0)).alias("dup_token_ratio")))
-    mid = persistent_rdd_ids(spark)
-    out = out.localCheckpoint(eager=True)  # doc-sized result
-    release_persistent_rdds(spark, mid - before)
-    return out
+        # Measured rejection: a .repartition("h") after the mapInPandas (so
+        # the dup aggregate and the spans⋈dup join could share one
+        # exchange) got no exchange reuse — both AQE stage jobs still ran
+        # the Python kernel, and the call stayed at 12 jobs.
+        spans = (base.where(F.col("n_tokens") >= k)
+                 .select("doc_id", "th")
+                 .mapInPandas(span_hashes,
+                              "doc_id long, start int, h long"))
+        dup = (spans.groupBy("h")
+               .agg(F.count_distinct("doc_id").alias("__nd"))
+               .where(F.col("__nd") >= min_docs)
+               .select("h"))
+        # span count + covered positions in ONE aggregate over duplicated
+        # spans (each start is one span, so distinct-start == span count)
+        stats = (spans.join(dup, "h")
+                 .select("doc_id", "start",
+                         F.explode(F.sequence(
+                             "start", F.col("start") + k - 1)).alias("p"))
+                 .groupBy("doc_id")
+                 .agg(F.count_distinct("start").cast("int")
+                      .alias("n_dup_spans"),
+                      F.count_distinct("p").cast("int")
+                      .alias("n_dup_tokens")))
+        out = (base.select("doc_id", "n_tokens")
+               .join(stats, "doc_id", "left")
+               .select("doc_id", "n_tokens",
+                       F.greatest(F.col("n_tokens") - k + 1, F.lit(0))
+                       .alias("n_spans"),
+                       F.coalesce("n_dup_spans", F.lit(0))
+                       .alias("n_dup_spans"),
+                       F.coalesce("n_dup_tokens", F.lit(0))
+                       .alias("n_dup_tokens"),
+                       F.when(F.col("n_tokens") > 0,
+                              # identical-IEEE half-up rounding on both
+                              # engines (see SCALING.md: F.round's exact
+                              # HALF_UP vs DuckDB's float round disagree
+                              # on 7th-digit halves, e.g. n_tokens=128)
+                              F.floor(F.coalesce("n_dup_tokens", F.lit(0))
+                                      / F.col("n_tokens") * 1000000.0
+                                      + 0.5) / 1000000.0)
+                       .otherwise(F.lit(0.0)).alias("dup_token_ratio")))
+        return keep(out)  # doc-sized result
 
 
 def _global_row_number(df: DataFrame, key_cols: list,
@@ -1434,8 +1414,8 @@ def _global_row_number(df: DataFrame, key_cols: list,
     seed, so the offsets collect and the window pass — two separate
     actions — would otherwise re-sample and see DIFFERENT boundaries,
     composing inconsistent global numbers (observed as ~0.7% rank
-    inversions on a 28k-suffix corpus). Callers release the block via
-    the session's persistent-RDD hygiene."""
+    inversions on a 28k-suffix corpus). The caller's
+    ``session.checkpoint_scope`` releases the block."""
     from pyspark.sql import Window
     part = (df.repartitionByRange(n_parts,
                                   *[F.col(c) for c in key_cols])
@@ -1512,106 +1492,96 @@ def duplicate_spans_maximal(documents: DataFrame,
 
     Returns (doc_id, span_start, span_len), 0-based token offsets.
     """
-    from s3_elasticsearch_data_pipeline_spark.session import (
-        persistent_rdd_ids, release_persistent_rdds)
     import math
     spark = documents.sparkSession
     out_schema = "doc_id long, span_start int, span_len int"
-    before = persistent_rdd_ids(spark)
-    toks = (parallelize_for_compute(documents)
-            .select("doc_id",
-                    F.posexplode(tokens(F.col("text")))
-                    .alias("pos", "word"))
-            .localCheckpoint(eager=False))
-    doclen = (toks.groupBy("doc_id")
-              .agg(F.count(F.lit(1)).alias("n_toks"))
-              .localCheckpoint(eager=False))
-    mx = doclen.agg(F.max("n_toks")).collect()[0][0]
-    if not mx:
-        release_persistent_rdds(spark,
-                                persistent_rdd_ids(spark) - before)
-        return spark.createDataFrame([], out_schema)
-    from pyspark.sql import Window
-    rn0 = _global_row_number(toks, ["word"])
-    level = (rn0.withColumn("rank", F.min("rn").over(
-                 Window.partitionBy("word")))
-             .select("doc_id", "pos", "rank")
-             .localCheckpoint(eager=False))
-    levels = [level]  # levels[k] ranks by the first 2^k tokens
-    n_rounds = max(1, math.ceil(math.log2(mx)))
-    for k in range(n_rounds):
-        level = (_suffix_rank_round(level, 1 << k)
+    with checkpoint_scope(spark) as keep:
+        toks = (parallelize_for_compute(documents)
+                .select("doc_id",
+                        F.posexplode(tokens(F.col("text")))
+                        .alias("pos", "word"))
+                .localCheckpoint(eager=False))
+        doclen = (toks.groupBy("doc_id")
+                  .agg(F.count(F.lit(1)).alias("n_toks"))
+                  .localCheckpoint(eager=False))
+        mx = doclen.agg(F.max("n_toks")).collect()[0][0]
+        if not mx:
+            return spark.createDataFrame([], out_schema)
+        from pyspark.sql import Window
+        rn0 = _global_row_number(toks, ["word"])
+        level = (rn0.withColumn("rank", F.min("rn").over(
+                     Window.partitionBy("word")))
+                 .select("doc_id", "pos", "rank")
                  .localCheckpoint(eager=False))
-        levels.append(level)
-    sa = (_global_row_number(levels[-1], ["rank", "doc_id", "pos"])
-          .select("doc_id", "pos", "rn").localCheckpoint(eager=False))
-    pairs = (sa.select("rn", F.col("doc_id").alias("d1"),
-                       F.col("pos").alias("p1"))
-             .join(sa.select((F.col("rn") - 1).alias("rn"),
-                             F.col("doc_id").alias("d2"),
-                             F.col("pos").alias("p2")), "rn")
-             .withColumn("l", F.lit(0).cast("long")))
-    for k in range(len(levels) - 1, -1, -1):
-        gap = 1 << k
-        a = levels[k].select(F.col("doc_id").alias("__da"),
-                             F.col("pos").alias("__pa"),
-                             F.col("rank").alias("__ra"))
-        b = levels[k].select(F.col("doc_id").alias("__db"),
-                             F.col("pos").alias("__pb"),
-                             F.col("rank").alias("__rb"))
-        pairs = (pairs
-                 .withColumn("__ja", F.col("p1") + F.col("l"))
-                 .withColumn("__jb", F.col("p2") + F.col("l"))
-                 .join(a, (F.col("d1") == F.col("__da"))
-                       & (F.col("__ja") == F.col("__pa")), "left")
-                 .join(b, (F.col("d2") == F.col("__db"))
-                       & (F.col("__jb") == F.col("__pb")), "left")
-                 .withColumn("l", F.col("l") + F.when(
-                     F.col("__ra").isNotNull()
-                     & (F.col("__ra") == F.col("__rb")),
-                     F.lit(gap)).otherwise(F.lit(0)))
-                 .drop("__da", "__pa", "__db", "__pb",
-                       "__ja", "__jb", "__ra", "__rb"))
-    # clamp tail-tie overshoot to the remaining document lengths
-    l1 = doclen.select(F.col("doc_id").alias("d1"),
-                       F.col("n_toks").alias("__n1"))
-    l2 = doclen.select(F.col("doc_id").alias("d2"),
-                       F.col("n_toks").alias("__n2"))
-    lcp = (pairs.join(l1, "d1").join(l2, "d2")
-           .select("rn", F.least(F.col("l"),
-                                 F.col("__n1") - F.col("p1"),
-                                 F.col("__n2") - F.col("p2"))
-                   .alias("lcp")))
-    dup = (sa.join(lcp.select("rn", F.col("lcp").alias("__ln")),
-                   "rn", "left")
-           .join(lcp.select((F.col("rn") + 1).alias("rn"),
-                            F.col("lcp").alias("__lp")), "rn", "left")
-           .select("doc_id", "pos",
-                   F.greatest(F.coalesce("__ln", F.lit(0)),
-                              F.coalesce("__lp", F.lit(0)))
-                   .alias("dup_len")))
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    runmax = F.max(F.col("pos") + F.col("dup_len")).over(
-        w.rowsBetween(Window.unboundedPreceding, -1))
-    flagged = (dup.where(F.col("dup_len") >= min_len)
-               .withColumn("__f", F.when(
-                   runmax.isNull() | (F.col("pos") > runmax),
-                   F.lit(1)).otherwise(F.lit(0)))
-               .withColumn("__g", F.sum("__f").over(
-                   w.rowsBetween(Window.unboundedPreceding, 0))))
-    corpus_sized = persistent_rdd_ids(spark) - before
-    result = (flagged.groupBy("doc_id", "__g")
-              .agg(F.min("pos").alias("__s"),
-                   F.max(F.col("pos") + F.col("dup_len")).alias("__e"))
-              .select("doc_id", F.col("__s").cast("int")
-                      .alias("span_start"),
-                      (F.col("__e") - F.col("__s")).cast("int")
-                      .alias("span_len"))
-              .localCheckpoint(eager=True))
-    # free every corpus-sized rank level / token block; only the
-    # span-count-sized result checkpoint stays pinned
-    release_persistent_rdds(spark, corpus_sized)
-    return result
+        levels = [level]  # levels[k] ranks by the first 2^k tokens
+        n_rounds = max(1, math.ceil(math.log2(mx)))
+        for k in range(n_rounds):
+            level = (_suffix_rank_round(level, 1 << k)
+                     .localCheckpoint(eager=False))
+            levels.append(level)
+        sa = (_global_row_number(levels[-1], ["rank", "doc_id", "pos"])
+              .select("doc_id", "pos", "rn").localCheckpoint(eager=False))
+        pairs = (sa.select("rn", F.col("doc_id").alias("d1"),
+                           F.col("pos").alias("p1"))
+                 .join(sa.select((F.col("rn") - 1).alias("rn"),
+                                 F.col("doc_id").alias("d2"),
+                                 F.col("pos").alias("p2")), "rn")
+                 .withColumn("l", F.lit(0).cast("long")))
+        for k in range(len(levels) - 1, -1, -1):
+            gap = 1 << k
+            a = levels[k].select(F.col("doc_id").alias("__da"),
+                                 F.col("pos").alias("__pa"),
+                                 F.col("rank").alias("__ra"))
+            b = levels[k].select(F.col("doc_id").alias("__db"),
+                                 F.col("pos").alias("__pb"),
+                                 F.col("rank").alias("__rb"))
+            pairs = (pairs
+                     .withColumn("__ja", F.col("p1") + F.col("l"))
+                     .withColumn("__jb", F.col("p2") + F.col("l"))
+                     .join(a, (F.col("d1") == F.col("__da"))
+                           & (F.col("__ja") == F.col("__pa")), "left")
+                     .join(b, (F.col("d2") == F.col("__db"))
+                           & (F.col("__jb") == F.col("__pb")), "left")
+                     .withColumn("l", F.col("l") + F.when(
+                         F.col("__ra").isNotNull()
+                         & (F.col("__ra") == F.col("__rb")),
+                         F.lit(gap)).otherwise(F.lit(0)))
+                     .drop("__da", "__pa", "__db", "__pb",
+                           "__ja", "__jb", "__ra", "__rb"))
+        # clamp tail-tie overshoot to the remaining document lengths
+        l1 = doclen.select(F.col("doc_id").alias("d1"),
+                           F.col("n_toks").alias("__n1"))
+        l2 = doclen.select(F.col("doc_id").alias("d2"),
+                           F.col("n_toks").alias("__n2"))
+        lcp = (pairs.join(l1, "d1").join(l2, "d2")
+               .select("rn", F.least(F.col("l"),
+                                     F.col("__n1") - F.col("p1"),
+                                     F.col("__n2") - F.col("p2"))
+                       .alias("lcp")))
+        dup = (sa.join(lcp.select("rn", F.col("lcp").alias("__ln")),
+                       "rn", "left")
+               .join(lcp.select((F.col("rn") + 1).alias("rn"),
+                                F.col("lcp").alias("__lp")), "rn", "left")
+               .select("doc_id", "pos",
+                       F.greatest(F.coalesce("__ln", F.lit(0)),
+                                  F.coalesce("__lp", F.lit(0)))
+                       .alias("dup_len")))
+        w = Window.partitionBy("doc_id").orderBy("pos")
+        runmax = F.max(F.col("pos") + F.col("dup_len")).over(
+            w.rowsBetween(Window.unboundedPreceding, -1))
+        flagged = (dup.where(F.col("dup_len") >= min_len)
+                   .withColumn("__f", F.when(
+                       runmax.isNull() | (F.col("pos") > runmax),
+                       F.lit(1)).otherwise(F.lit(0)))
+                   .withColumn("__g", F.sum("__f").over(
+                       w.rowsBetween(Window.unboundedPreceding, 0))))
+        return keep(flagged.groupBy("doc_id", "__g")
+                    .agg(F.min("pos").alias("__s"),
+                         F.max(F.col("pos") + F.col("dup_len")).alias("__e"))
+                    .select("doc_id", F.col("__s").cast("int")
+                            .alias("span_start"),
+                            (F.col("__e") - F.col("__s")).cast("int")
+                            .alias("span_len")))
 
 
 def exactsubstr_trim(documents: DataFrame,

@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from s3_elasticsearch_data_pipeline_spark.session import (
-    aqe_disabled, job_phases, persistent_rdd_ids, release_persistent_rdds)
+    aqe_disabled, checkpoint_scope, job_phases)
 
 
 #: Estimated broadcast bytes per rank-vector row: 8 B double + a short
@@ -75,27 +75,45 @@ def pagerank(edges: DataFrame, iters: int = 3, damping: float = 0.85,
     Jobs carry the description ``pagerank: degrees`` or ``pagerank:
     iterate``; the caller's description is restored on return.
     """
-    with job_phases(edges.sparkSession, "pagerank") as phase:
-        return _pagerank(edges, iters, damping, broadcast_ranks,
-                         broadcast_budget_bytes, materialize, phase)
+    spark = edges.sparkSession
+    args = (edges, iters, damping, broadcast_ranks, broadcast_budget_bytes)
+    with job_phases(spark, "pagerank") as phase:
+        if not materialize:
+            # Plan-inspection path (tests / explain tooling): return the
+            # lazy plan so the chosen join strategy is visible — an
+            # eager localCheckpoint would replace it with an opaque RDD
+            # scan. The plan reads the intermediate checkpoints, so
+            # they stay pinned until the caller's session GC runs;
+            # production callers use materialize=True.
+            return _pagerank_plan(*args, phase)[0]
+        with checkpoint_scope(spark) as keep:
+            out, broadcast = _pagerank_plan(*args, phase)
+            # In broadcast mode every shuffle of the materializing
+            # action is node-vector-sized and the rank side broadcasts,
+            # so AQE's per-stage re-plan jobs (measured: 17 jobs →
+            # slower wall clock on the 3-iteration loop) buy nothing —
+            # scope it off for that action; the partitioned (huge-graph)
+            # mode keeps AQE for its skew handling. NB: conf toggles are
+            # session-global — OTHER queries planned concurrently in the
+            # same session would see AQE off, so a multi-tenant service
+            # should hand pagerank its own session clone.
+            if not broadcast:
+                return keep(out)
+            with aqe_disabled(spark):
+                return keep(out)
 
 
-def _pagerank(edges: DataFrame, iters: int, damping: float,
-              broadcast_ranks: bool | None, broadcast_budget_bytes: int,
-              materialize: bool, phase) -> DataFrame:
+def _pagerank_plan(edges: DataFrame, iters: int, damping: float,
+                   broadcast_ranks: bool | None,
+                   broadcast_budget_bytes: int,
+                   phase) -> tuple[DataFrame, bool]:
+    """The lazy PageRank plan over checkpointed edges and degrees, and
+    whether it broadcasts the rank vector."""
     # Materialize the incoming edge plan ONCE: callers typically hand in
     # an expensive pipeline (join+distinct), and the degree pass, the
     # edges_d checkpoint, and the node-set derivation would otherwise
     # each re-run it from scratch.
-    # Checkpoint-block hygiene: every intermediate checkpointed here is
-    # released DETERMINISTICALLY before returning (waiting on the async
-    # GC→ContextCleaner path let blocks pile up across repeated calls —
-    # measured 2.5 s → 14 s over eight calls in one session). The
-    # returned ranks are eagerly checkpointed LAST, so they are
-    # self-contained and never named by the release diff.
-    spark = edges.sparkSession
     phase("degrees")
-    before = persistent_rdd_ids(spark)
     # lazy edge checkpoint, materialized as a side effect of the eager
     # degree checkpoint right below — one pass over the edge plan, not
     # two (the degree aggregate has to scan every edge anyway)
@@ -158,34 +176,8 @@ def _pagerank(edges: DataFrame, iters: int, damping: float,
                           + F.lit(damping)
                           * F.coalesce(F.col("__s").cast("double"),
                                        F.lit(0.0))).alias("rank")))
-    out = ranks.select("node", F.round("rank", 12).alias("rank"))
-    if not materialize:
-        # Plan-inspection path (tests / explain tooling): return the
-        # lazy plan so the chosen join strategy is visible — an eager
-        # localCheckpoint would replace it with an opaque RDD scan.
-        # Intermediate checkpoint blocks stay pinned until the caller's
-        # session GC runs; production callers use materialize=True.
-        return out
-    # materialize the result (also forcing the lazy edges_d/base
-    # checkpoints), THEN free every intermediate this call pinned.
-    # In broadcast mode every shuffle here is node-vector-sized and the
-    # rank side broadcasts, so AQE's per-stage re-plan jobs (measured:
-    # 17 jobs → slower wall clock on the 3-iteration loop) buy nothing
-    # — scope it off for the materializing action; the partitioned
-    # (huge-graph) mode keeps AQE for its skew handling.
-    # NB: conf toggles are session-global — _AQE_SCOPE_LOCK serializes
-    # the window across pagerank callers (racing calls can no longer
-    # plan under each other's setting); OTHER queries planned
-    # concurrently in the same session would still see AQE off, so a
-    # multi-tenant service should hand pagerank its own session clone.
-    mid = persistent_rdd_ids(spark)
-    if broadcast_ranks:
-        with aqe_disabled(spark):
-            out = out.localCheckpoint(eager=True)
-    else:
-        out = out.localCheckpoint(eager=True)
-    release_persistent_rdds(spark, mid - before)
-    return out
+    return (ranks.select("node", F.round("rank", 12).alias("rank")),
+            broadcast_ranks)
 
 
 def copurchase_edges(lineitem: DataFrame) -> DataFrame:

@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 
 from s3_elasticsearch_data_pipeline_spark.operators.quantizer import (
     _Quantizer, _kmeans_centroids, _quantizer_cells_fn)
+from s3_elasticsearch_data_pipeline_spark.session import checkpoint_scope
 from s3_elasticsearch_data_pipeline_spark.tables import (
     parallelize_for_compute)
 
@@ -116,8 +117,6 @@ def train_quality_classifier(documents: DataFrame, iters: int = 15,
     # (bpe_train must checkpoint-then-probe because its word-type
     # count is data-dependent; here the expensive extraction runs
     # exactly once on either path, with no below-cap checkpoint job).
-    from s3_elasticsearch_data_pipeline_spark.session import (
-        persistent_rdd_ids, release_persistent_rdds)
     spark = documents.sparkSession
     n_row = documents.count()
     feats = quality_features(documents).select("doc_id", "y", *FEATURES)
@@ -125,46 +124,45 @@ def train_quality_classifier(documents: DataFrame, iters: int = 15,
         return spark.createDataFrame([], "feature string, weight double")
     if n_row <= driver_path_max_rows:
         return _train_driver_side(spark, feats.toPandas(), iters, lr)
-    before = persistent_rdd_ids(spark)
-    feats = feats.localCheckpoint(eager=True)
-    # Right-size the GD tasks: every iteration re-scans this frame with
-    # a tight columnar aggregate, so target ~1M rows per task — at
-    # corpus scale that keeps tasks meaty, and at small SF it avoids
-    # scheduling dozens of near-empty tasks × iters (pure overhead;
-    # the iteration count, not the data, dominates wall time there).
-    target = max(1, min(feats.rdd.getNumPartitions(),
-                        math.ceil(n_row / 1_000_000)))
-    if target < feats.rdd.getNumPartitions():
-        feats = feats.coalesce(target).localCheckpoint(eager=True)
-    w = [0.0] * len(FEATURES)
-    for _ in range(iters):
+    with checkpoint_scope(spark):
+        feats = feats.localCheckpoint(eager=True)
+        # Right-size the GD tasks: every iteration re-scans this frame with
+        # a tight columnar aggregate, so target ~1M rows per task — at
+        # corpus scale that keeps tasks meaty, and at small SF it avoids
+        # scheduling dozens of near-empty tasks × iters (pure overhead;
+        # the iteration count, not the data, dominates wall time there).
+        target = max(1, min(feats.rdd.getNumPartitions(),
+                            math.ceil(n_row / 1_000_000)))
+        if target < feats.rdd.getNumPartitions():
+            feats = feats.coalesce(target).localCheckpoint(eager=True)
+        w = [0.0] * len(FEATURES)
+        for _ in range(iters):
+            z = sum(F.col(f) * F.lit(w[i]) for i, f in enumerate(FEATURES))
+            p = F.lit(1.0) / (F.lit(1.0) + F.exp(-z))
+            err = p - F.col("y")
+            aggs = [F.sum((err * F.col(f)).cast("decimal(38,18)"))
+                    .alias(f"g_{f}") for f in FEATURES]
+            g = feats.agg(*aggs).collect()[0]
+            # round-9 per-iteration weights: the cross-engine determinism
+            # discipline (k-means/PQ round their centroid updates to 6) —
+            # absorbs summation-order and libm 1-ulp noise so the driver
+            # path, this path, and the unrolled DuckDB oracle CTE all walk
+            # the identical weight trajectory; 5e-10 per-step noise is far
+            # inside the 1e-6 tolerance the numpy-reference test pins
+            w = [round(w[i] - lr * float(g[f"g_{f}"]) / n_row, 9)
+                 for i, f in enumerate(FEATURES)]
+        # final loss, same single-pass shape
         z = sum(F.col(f) * F.lit(w[i]) for i, f in enumerate(FEATURES))
         p = F.lit(1.0) / (F.lit(1.0) + F.exp(-z))
-        err = p - F.col("y")
-        aggs = [F.sum((err * F.col(f)).cast("decimal(38,18)"))
-                .alias(f"g_{f}") for f in FEATURES]
-        g = feats.agg(*aggs).collect()[0]
-        # round-9 per-iteration weights: the cross-engine determinism
-        # discipline (k-means/PQ round their centroid updates to 6) —
-        # absorbs summation-order and libm 1-ulp noise so the driver
-        # path, this path, and the unrolled DuckDB oracle CTE all walk
-        # the identical weight trajectory; 5e-10 per-step noise is far
-        # inside the 1e-6 tolerance the numpy-reference test pins
-        w = [round(w[i] - lr * float(g[f"g_{f}"]) / n_row, 9)
-             for i, f in enumerate(FEATURES)]
-    # final loss, same single-pass shape
-    z = sum(F.col(f) * F.lit(w[i]) for i, f in enumerate(FEATURES))
-    p = F.lit(1.0) / (F.lit(1.0) + F.exp(-z))
-    eps = F.lit(1e-12)
-    loss_row = feats.agg(F.sum(
-        (-(F.col("y") * F.log(p + eps)
-           + (F.lit(1.0) - F.col("y")) * F.log(F.lit(1.0) - p + eps)))
-        .cast("decimal(38,18)")).alias("L")).collect()[0]
-    loss = float(loss_row["L"]) / n_row
+        eps = F.lit(1e-12)
+        loss_row = feats.agg(F.sum(
+            (-(F.col("y") * F.log(p + eps)
+               + (F.lit(1.0) - F.col("y")) * F.log(F.lit(1.0) - p + eps)))
+            .cast("decimal(38,18)")).alias("L")).collect()[0]
+        loss = float(loss_row["L"]) / n_row
+    # weights are driver data now; the scope freed the feature checkpoints
     rows = [(f, round(w[i], 10)) for i, f in enumerate(FEATURES)]
     rows.append(("__loss__", round(loss, 8)))  # round-8: see driver path
-    # weights are driver data now — free the feature checkpoints
-    release_persistent_rdds(spark, persistent_rdd_ids(spark) - before)
     return spark.createDataFrame(rows, "feature string, weight double")
 
 

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from s3_elasticsearch_data_pipeline_spark.functions.textfns import (
     fingerprint, token_count, tokens, word_ngrams_from_tokens)
+from s3_elasticsearch_data_pipeline_spark.session import checkpoint_scope
 from s3_elasticsearch_data_pipeline_spark.tables import (
     parallelize_for_compute as _par)  # unsplittable-input guard
 
@@ -1010,49 +1011,44 @@ def bpe_train(documents: DataFrame, n_merges: int = 8,
     # data-sized pass); the word-TYPE aggregate downstream is
     # vocab-sized and AQE already coalesces its shuffle output, so the
     # merge rounds run on right-sized partitions without extra jobs.
-    from s3_elasticsearch_data_pipeline_spark.session import (
-        persistent_rdd_ids, release_persistent_rdds)
     spark = documents.sparkSession
-    before = persistent_rdd_ids(spark)
-    words = (_par(documents)
-             .select(F.explode(tokens(F.col("text"))).alias("word"))
-             .groupBy("word").agg(F.count(F.lit(1)).alias("n"))
-             .select(F.split(F.col("word"), "").alias("syms"), "n")
-             .where(F.size("syms") >= 2))
-    # Checkpoint BEFORE probing (connected_components' discipline): the
-    # corpus-sized tokenize + groupBy runs exactly once either way —
-    # probing the raw plan first would re-run it from scratch on
-    # above-cap vocabularies, since a shuffle-heavy limit() still
-    # executes every upstream stage.
-    words = words.localCheckpoint(eager=True)
-    head = words.limit(driver_path_max_types + 1).toPandas()
-    if len(head) <= driver_path_max_types:
-        out = _bpe_train_driver_side(spark, head, n_merges)
-        release_persistent_rdds(spark, persistent_rdd_ids(spark) - before)
-        return out
-    merges = []
-    for rank in range(1, n_merges + 1):
-        lefts = F.slice(F.col("syms"), F.lit(1), F.size("syms") - 1)
-        rights = F.slice(F.col("syms"), F.lit(2), F.size("syms") - 1)
-        top = (words.where(F.size("syms") >= 2)
-               .select("n", F.explode(F.arrays_zip(
-                   lefts.alias("l"), rights.alias("r"))).alias("pr"))
-               .groupBy(F.col("pr.l").alias("l"), F.col("pr.r").alias("r"))
-               .agg(F.sum("n").alias("cnt"))
-               .orderBy(F.col("cnt").desc(), "l", "r")
-               .limit(1).collect())
-        if not top:
-            break
-        l, r, cnt = top[0]["l"], top[0]["r"], top[0]["cnt"]
-        merges.append((rank, l, r, int(cnt), l + r))
-        # lazy checkpoint: materialized by the next round's pair-count
-        # job (one job per round, not two), reused by the round after
-        words = (words.select(
-            _merge_pair_in_arrays(F.col("syms"), l, r).alias("syms"), "n")
-            .localCheckpoint(eager=False))
-    # the merge table is driver data now — free every checkpoint block
-    # this call pinned (deterministic release, not GC timing)
-    release_persistent_rdds(spark, persistent_rdd_ids(spark) - before)
+    with checkpoint_scope(spark):
+        words = (_par(documents)
+                 .select(F.explode(tokens(F.col("text"))).alias("word"))
+                 .groupBy("word").agg(F.count(F.lit(1)).alias("n"))
+                 .select(F.split(F.col("word"), "").alias("syms"), "n")
+                 .where(F.size("syms") >= 2))
+        # Checkpoint BEFORE probing (connected_components' discipline): the
+        # corpus-sized tokenize + groupBy runs exactly once either way —
+        # probing the raw plan first would re-run it from scratch on
+        # above-cap vocabularies, since a shuffle-heavy limit() still
+        # executes every upstream stage.
+        words = words.localCheckpoint(eager=True)
+        head = words.limit(driver_path_max_types + 1).toPandas()
+        if len(head) <= driver_path_max_types:
+            return _bpe_train_driver_side(spark, head, n_merges)
+        merges = []
+        for rank in range(1, n_merges + 1):
+            lefts = F.slice(F.col("syms"), F.lit(1), F.size("syms") - 1)
+            rights = F.slice(F.col("syms"), F.lit(2), F.size("syms") - 1)
+            top = (words.where(F.size("syms") >= 2)
+                   .select("n", F.explode(F.arrays_zip(
+                       lefts.alias("l"), rights.alias("r"))).alias("pr"))
+                   .groupBy(F.col("pr.l").alias("l"), F.col("pr.r").alias("r"))
+                   .agg(F.sum("n").alias("cnt"))
+                   .orderBy(F.col("cnt").desc(), "l", "r")
+                   .limit(1).collect())
+            if not top:
+                break
+            l, r, cnt = top[0]["l"], top[0]["r"], top[0]["cnt"]
+            merges.append((rank, l, r, int(cnt), l + r))
+            # lazy checkpoint: materialized by the next round's pair-count
+            # job (one job per round, not two), reused by the round after
+            words = (words.select(
+                _merge_pair_in_arrays(F.col("syms"), l, r).alias("syms"), "n")
+                .localCheckpoint(eager=False))
+    # the merge table is driver data now; the scope has released every
+    # checkpoint block this call pinned
     return spark.createDataFrame(
         merges, "merge_rank int, left_tok string, right_tok string, "
                 "pair_count bigint, new_symbol string")

@@ -52,6 +52,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from s3_elasticsearch_data_pipeline_spark.functions.textfns import tokens
+from s3_elasticsearch_data_pipeline_spark.session import checkpoint_scope
 from s3_elasticsearch_data_pipeline_spark.tables import (
     parallelize_for_compute as _par)
 
@@ -200,9 +201,6 @@ def unigram_train(documents: DataFrame, seed_size: int = SEED_SIZE,
     (rank, piece, freq, prob): rank by (freq desc, piece asc), prob
     floor-rounded to 1e-6 exactly as the DuckDB twin rounds it."""
     spark = documents.sparkSession
-    from s3_elasticsearch_data_pipeline_spark.session import (
-        persistent_rdd_ids, release_persistent_rdds)
-    before = persistent_rdd_ids(spark)
     # NB (r11, measured rejection): round-robining this vocab-small
     # checkpoint to cluster width to parallelize the EM Viterbi passes
     # made every round SLOWER (per-round stage 0.17 s -> 0.3-0.47 s;
@@ -210,16 +208,13 @@ def unigram_train(documents: DataFrame, seed_size: int = SEED_SIZE,
     # fan-out wait dominates KB-scale data). The single AQE-coalesced
     # task is the right shape at fixture scale; at real vocab sizes
     # the aggregate's own shuffle keeps it multi-partition anyway.
-    units = _units(documents).localCheckpoint(eager=True)
-    try:
+    with checkpoint_scope(spark):
+        units = _units(documents).localCheckpoint(eager=True)
         counts = _seed_counts(units, seed_size, max_piece_len)
         if not counts:
             return spark.createDataFrame(
                 [], "rank int, piece string, freq bigint, prob double")
         counts = _em_probs(spark, units, counts, iters, max_piece_len)
-    finally:
-        release_persistent_rdds(spark,
-                                persistent_rdd_ids(spark) - before)
     total = sum(counts.values())
     rows = sorted(counts.items(), key=lambda kv: (-kv[1], kv[0]))
     return spark.createDataFrame(
@@ -241,8 +236,6 @@ def unigram_encode(documents: DataFrame, seed_size: int = SEED_SIZE,
     Returns (doc_id, n_words, n_chars, n_pieces, head) — head is the
     first ``head_pieces`` pieces in document order, pipe-joined."""
     spark = documents.sparkSession
-    from s3_elasticsearch_data_pipeline_spark.session import (
-        persistent_rdd_ids, release_persistent_rdds)
     # r11 (VERDICT item 4): tokenize the corpus ONCE. The per-
     # occurrence (doc_id, pos, word) table is a LAZY localCheckpoint
     # (materialized as a side effect of the words aggregate below — no
@@ -260,28 +253,26 @@ def unigram_encode(documents: DataFrame, seed_size: int = SEED_SIZE,
             .localCheckpoint(eager=False))
     words = (toks.groupBy("word").agg(F.count(F.lit(1)).alias("wn"))
              .localCheckpoint(eager=True))  # also materializes toks
-    before = persistent_rdd_ids(spark)
-    units = _units_of_words(words).localCheckpoint(eager=True)
-    counts = _seed_counts(units, seed_size, max_piece_len)
-    if counts:
-        counts = _em_probs(spark, units, counts, iters, max_piece_len)
-        total = sum(counts.values())
-        probs = {p: c / total for p, c in counts.items()}
-    else:
-        probs = {}
-    trained = persistent_rdd_ids(spark)
     # chunk-type segmentation table: kept checkpointed (the returned
     # plan reads it — bpe_encode's word_syms discipline); the
-    # training-side units checkpoint is released deterministically.
+    # training-side units checkpoint is released by the scope.
     # toks/words stay pinned: the returned plan reads BOTH (that is
     # the single-tokenize trade) — callers release them by unpersisting
     # after draining the result, exactly as they already must for
     # unit_pieces.
-    unit_pieces = (units.mapInPandas(
-        _segment_fn(probs, max_piece_len),
-        "unit string, n bigint, pieces array<string>")
-        .select("unit", "pieces").localCheckpoint(eager=True))
-    release_persistent_rdds(spark, trained - before)
+    with checkpoint_scope(spark) as keep:
+        units = _units_of_words(words).localCheckpoint(eager=True)
+        counts = _seed_counts(units, seed_size, max_piece_len)
+        if counts:
+            counts = _em_probs(spark, units, counts, iters, max_piece_len)
+            total = sum(counts.values())
+            probs = {p: c / total for p, c in counts.items()}
+        else:
+            probs = {}
+        unit_pieces = keep(units.mapInPandas(
+            _segment_fn(probs, max_piece_len),
+            "unit string, n bigint, pieces array<string>")
+            .select("unit", "pieces"))
 
     word_units = words.select(
         "word", F.posexplode(F.expr(_CHUNKS_EXPR)).alias("k", "unit"))

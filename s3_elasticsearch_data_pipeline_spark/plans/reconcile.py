@@ -26,7 +26,11 @@ from pyspark.sql import functions as F
 from s3_elasticsearch_data_pipeline_spark import storage
 from s3_elasticsearch_data_pipeline_spark.operators.diff import (
     count_mismatches, fetch_rows_for_ids, missing_ids)
-from s3_elasticsearch_data_pipeline_spark.sinks.keyed import upsert_by_key
+from s3_elasticsearch_data_pipeline_spark.plans.incremental import (
+    load_log_path)
+from s3_elasticsearch_data_pipeline_spark.session import checkpoint_scope
+from s3_elasticsearch_data_pipeline_spark.sinks.keyed import (
+    delete_by_key, upsert_by_key)
 
 
 @dataclass
@@ -70,51 +74,38 @@ def reconcile(spark: SparkSession, source: DataFrame, sink_path: str,
     pred = F.col(key).isin(mismatch_keys)
     todo_ids = missing_ids(source, sink, id_col, partition_pred=pred)
     repair = fetch_rows_for_ids(source, todo_ids, id_col, partition_pred=pred)
-    orphans = None
-    if prune_orphans:
-        from s3_elasticsearch_data_pipeline_spark.session import (
-            persistent_rdd_ids)
-        pinned_before = persistent_rdd_ids(spark)
-        # materialize BEFORE the upsert rewrites the files this plan
-        # reads (same hazard the repair-count collect documents below)
-        orphans = (missing_ids(sink, source, id_col, partition_pred=pred)
-                   .localCheckpoint(eager=True))
-    # Materialize the per-partition repair counts BEFORE the upsert:
-    # the repair plan reads the current sink files (via the id diff),
-    # which the upsert replaces — re-executing it afterwards would hit
-    # deleted files. The counts are tiny (one row per mismatched
-    # partition).
-    log_rows = [(str(r[0]), r[1]) for r in
-                (repair.groupBy(F.col(key).cast("string"))
-                 .agg(F.count(F.lit(1))).collect())]
-    n = sum(c for _, c in log_rows)
-    if n:
-        upsert_by_key(spark, repair, sink_path, key_col=id_col, partition_col=key)
-        # record the repair in the load log (append; the log is an event
-        # log — "what's loaded" = distinct partition keys)
-        from s3_elasticsearch_data_pipeline_spark.plans.incremental import (
-            load_log_path)
-        (spark.createDataFrame(log_rows,
-                               "partition_key string, rows_loaded long")
-         .write.mode("append").parquet(load_log_path(sink_path)))
-    n_pruned = 0
-    if orphans is not None:
-        from s3_elasticsearch_data_pipeline_spark.session import (
-            persistent_rdd_ids, release_persistent_rdds)
-        from s3_elasticsearch_data_pipeline_spark.sinks.keyed import (
-            delete_by_key)
-        # NB: a partition holding both repairs and orphans is rewritten
-        # twice (upsert merge, then orphan delete) — bounded by the
-        # damage-sized mismatch set, accepted over complicating the
-        # keyed merge with a delete channel. Release in finally: a
-        # failed delete must not pin the orphan checkpoint for the
-        # session lifetime (SCALING.md block-squeeze measurement).
-        try:
+    with checkpoint_scope(spark):
+        orphans = None
+        if prune_orphans:
+            # materialize BEFORE the upsert rewrites the files this plan
+            # reads (same hazard the repair-count collect documents below)
+            orphans = (missing_ids(sink, source, id_col, partition_pred=pred)
+                       .localCheckpoint(eager=True))
+        # Materialize the per-partition repair counts BEFORE the upsert:
+        # the repair plan reads the current sink files (via the id diff),
+        # which the upsert replaces — re-executing it afterwards would hit
+        # deleted files. The counts are tiny (one row per mismatched
+        # partition).
+        log_rows = [(str(r[0]), r[1]) for r in
+                    (repair.groupBy(F.col(key).cast("string"))
+                     .agg(F.count(F.lit(1))).collect())]
+        n = sum(c for _, c in log_rows)
+        if n:
+            upsert_by_key(spark, repair, sink_path, key_col=id_col,
+                          partition_col=key)
+            # record the repair in the load log (append; the log is an
+            # event log — "what's loaded" = distinct partition keys)
+            (spark.createDataFrame(log_rows,
+                                   "partition_key string, rows_loaded long")
+             .write.mode("append").parquet(load_log_path(sink_path)))
+        n_pruned = 0
+        if orphans is not None:
+            # NB: a partition holding both repairs and orphans is rewritten
+            # twice (upsert merge, then orphan delete) — bounded by the
+            # damage-sized mismatch set, accepted over complicating the
+            # keyed merge with a delete channel.
             n_pruned = delete_by_key(spark, orphans, sink_path,
                                      key_col=id_col, partition_col=key)
-        finally:
-            release_persistent_rdds(
-                spark, persistent_rdd_ids(spark) - pinned_before)
     return ReconcileReport(
         mismatched_partitions=sorted(map(str, mismatch_keys)),
         rows_repaired=n, rows_pruned=n_pruned)

@@ -169,34 +169,62 @@ def persistent_rdd_ids(spark: SparkSession) -> set[int]:
     return ids
 
 
-def release_persistent_rdds(spark: SparkSession, ids: set[int]) -> int:
-    """Unpersist the persisted/checkpointed RDDs with the given ids.
-    Returns how many were freed.
+def release_persistent_rdds(spark: SparkSession, ids: set[int]) -> None:
+    """Unpersist the persisted/checkpointed RDDs with the given ids and
+    drop their blocks, without blocking.
 
-    Why this exists: iterative operators (PageRank, connected
-    components, trainers) localCheckpoint per round to truncate
-    lineage. Those blocks are reclaimed only when the JVM GCs the
-    frame and the async ContextCleaner runs — under repeated calls in
-    one session (benchmarks, sweeps, long-lived services) blocks pile
-    up in the BlockManager faster than GC notices, and eviction storms
-    showed up as multi-second stalls (2.5 s → 14 s over eight calls,
-    measured). Operators therefore snapshot :func:`persistent_rdd_ids`
-    at entry, snapshot again once every intermediate is materialized,
-    eagerly checkpoint their RESULT last (its blocks are created after
-    the second snapshot, so the diff can never name them), and release
-    the diff deterministically before returning.
-
-    Single-controller discipline: callers must not run this
-    concurrently with other work persisting RDDs in the same session —
-    the id diff cannot tell an intermediate from a neighbor's cache.
+    Each id goes through ``SparkContext.unpersistRDD``, the call Spark's
+    own ContextCleaner makes for an RDD it collects (Scala
+    ``private[spark]``, public in the bytecode). Unlike
+    ``RDD.unpersist`` it logs no per-RDD warning for a local
+    checkpoint; an action that later reads a released checkpoint
+    still fails with ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``.
     """
     sc = spark.sparkContext._jsc.sc()
-    it = sc.getPersistentRDDs().iterator()
-    stale = []
-    while it.hasNext():
-        e = it.next()
-        if e._1() in ids:
-            stale.append(e._2())
-    for rdd in stale:
-        rdd.unpersist(False)
-    return len(stale)
+    for rdd_id in ids:
+        sc.unpersistRDD(rdd_id, False)
+
+
+@contextlib.contextmanager
+def checkpoint_scope(spark: SparkSession):
+    """Own the checkpoint blocks of the ``with`` body: this is who
+    releases them.
+
+    Iterative operators (PageRank, connected components, trainers)
+    ``localCheckpoint`` per round to truncate lineage. Left alone,
+    those blocks are reclaimed only when the JVM collects the frame and
+    the asynchronous ContextCleaner runs; under repeated calls in one
+    session (benchmarks, sweeps, long-lived services) they pile up in
+    the BlockManager faster than that, and eviction storms showed up
+    as multi-second stalls (2.5 s growing to 14 s over eight calls,
+    SCALING.md). So the policy, stated once:
+
+    - The scope snapshots :func:`persistent_rdd_ids` on entry and yields
+      ``keep(df)``, which returns ``df.localCheckpoint(eager=True)``.
+      Those blocks stay pinned after the scope exits; they belong to
+      the caller.
+    - Checkpoint the result last: ``keep`` reads the intermediates,
+      which are still pinned while the body runs.
+    - On every exit, normal return and raise alike, every other RDD
+      persisted or checkpointed inside the body is released, a nested
+      scope's kept result included: only what this scope keeps
+      survives it.
+    - Single-controller discipline: the release works by id difference,
+      so nothing else may persist RDDs in the same session while the
+      body runs; it cannot tell an intermediate from a neighbour's
+      cache.
+    """
+    before = persistent_rdd_ids(spark)
+    kept: set[int] = set()
+
+    def keep(df):
+        pinned = persistent_rdd_ids(spark)
+        df = df.localCheckpoint(eager=True)
+        kept.update(persistent_rdd_ids(spark) - pinned)
+        return df
+
+    try:
+        yield keep
+    finally:
+        release_persistent_rdds(
+            spark, persistent_rdd_ids(spark) - before - kept)

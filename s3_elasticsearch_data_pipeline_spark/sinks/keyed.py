@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 from s3_elasticsearch_data_pipeline_spark import storage
 from s3_elasticsearch_data_pipeline_spark.session import (
-    job_phases, persistent_rdd_ids, release_persistent_rdds, scoped_conf)
+    checkpoint_scope, job_phases, scoped_conf)
 
 _OVERWRITE_MODE = "spark.sql.sources.partitionOverwriteMode"
 
@@ -94,8 +94,7 @@ def delete_by_key(spark: SparkSession, doomed_ids: DataFrame, path: str,
     note as the upsert's read-overwrite caveat.)"""
     if not storage.exists(spark, path):
         return 0
-    before = persistent_rdd_ids(spark)
-    try:
+    with checkpoint_scope(spark):
         existing = spark.read.parquet(path)
         doomed = doomed_ids.select(key_col).distinct() \
             .localCheckpoint(eager=True)  # ids must outlive the rewrite
@@ -127,5 +126,3 @@ def delete_by_key(spark: SparkSession, doomed_ids: DataFrame, path: str,
             if files and storage.children(spark, d) == files:
                 storage.delete(spark, d)
         return n
-    finally:
-        release_persistent_rdds(spark, persistent_rdd_ids(spark) - before)

@@ -25,10 +25,10 @@ once here:
   ``phase`` callable it receives (:func:`session.job_phases`); the
   emptiness check runs as phase ``batch check``. The description that
   was in place before the epoch is restored afterwards.
-- **No leaked blocks.** Every RDD the epoch persists or checkpoints is
-  released when the handler returns — also when it fails, since a
-  replay rebuilds them (single-controller discipline, see
-  :func:`session.release_persistent_rdds`). Handlers that ``persist()``
+- **No leaked blocks.** Every epoch runs inside
+  :func:`session.checkpoint_scope`: every RDD the epoch persists or
+  checkpoints is released when the handler returns — also when it
+  fails, since a replay rebuilds them. Handlers that ``persist()``
   a DataFrame still ``unpersist()`` it themselves, so the cache
   manager forgets the plan too.
 - **Replay.** A handler that raises fails the epoch before its
@@ -51,7 +51,7 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
 from s3_elasticsearch_data_pipeline_spark.session import (
-    job_phases, persistent_rdd_ids, release_persistent_rdds)
+    checkpoint_scope, job_phases)
 
 
 def drain(spark: SparkSession, name: str, source_path: str,
@@ -70,17 +70,13 @@ def drain(spark: SparkSession, name: str, source_path: str,
 
     def run(batch_df: DataFrame, epoch_id: int) -> None:
         sess = batch_df.sparkSession
-        pinned_before = persistent_rdd_ids(sess)
-        with job_phases(sess, f"{name} epoch={epoch_id}") as phase:
-            try:
-                if skip_empty:
-                    phase("batch check")
-                    if batch_df.isEmpty():
-                        return
-                handle(batch_df, epoch_id, phase)
-            finally:
-                release_persistent_rdds(
-                    sess, persistent_rdd_ids(sess) - pinned_before)
+        with (checkpoint_scope(sess),
+              job_phases(sess, f"{name} epoch={epoch_id}") as phase):
+            if skip_empty:
+                phase("batch check")
+                if batch_df.isEmpty():
+                    return
+            handle(batch_df, epoch_id, phase)
 
     (stream.writeStream
      .foreachBatch(run)

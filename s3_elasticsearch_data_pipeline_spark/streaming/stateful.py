@@ -1,9 +1,6 @@
 """Custom stateful streaming operators (M4 extension surface — the
 escape hatch for operators Structured Streaming's built-in
-aggregations can't express), on BOTH stateful APIs:
-``applyInPandasWithState`` (the battle-tested one, used by default)
-and Spark 4's ``transformWithStateInPandas`` successor (typed
-ValueState + timers; gated on protobuf availability).
+aggregations can't express), on ``applyInPandasWithState``.
 
 ``running_user_totals`` maintains per-user counters across micro-
 batches: event count, value sum, last-seen timestamp. Each batch emits
@@ -70,76 +67,6 @@ def running_user_totals(spark: SparkSession, events_path: str) -> DataFrame:
         q.stop()
     # update-mode memory sink appends one row per (batch, user); the
     # cumulative row with the highest n_events per user is the final one
-    from pyspark.sql import Window
-    w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
-    return (spark.table(name)
-            .withColumn("__rn", F.row_number().over(w))
-            .where(F.col("__rn") == 1).drop("__rn"))
-
-
-@_nanos_scoped
-def running_user_totals_tws(spark: SparkSession,
-                            events_path: str) -> DataFrame:
-    """The same per-user running totals on Spark 4's NEW stateful API
-    (``transformWithStateInPandas`` — the successor to
-    ``applyInPandasWithState``): typed per-key ValueState managed by a
-    StatefulProcessor, checkpoint-backed, with timers/TTL available
-    when eviction policies are needed. Kept alongside the legacy-API
-    twin so the two are equivalence-tested — a migration template.
-    """
-    # The new API's Python runner speaks protobuf to the JVM; gate on
-    # the dependency so environments without it get a clear pointer to
-    # the equivalent legacy-API operator instead of a worker crash.
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError as exc:
-        raise NotImplementedError(
-            "transformWithStateInPandas requires the protobuf package, "
-            "absent in this environment; running_user_totals "
-            "(applyInPandasWithState) provides identical semantics"
-        ) from exc
-
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor, StatefulProcessorHandle)
-
-    class RunningTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._totals = handle.getValueState("totals", STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timer_values):
-            (user_id,) = key
-            if self._totals.exists():
-                n, total, last_ts = self._totals.get()
-            else:
-                n, total, last_ts = 0, 0.0, None
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].fillna(0.0).sum())
-                batch_max = pdf["ts"].max()
-                last_ts = (batch_max if last_ts is None
-                           else max(last_ts, batch_max))
-            self._totals.update((n, round(total, 2), last_ts))
-            yield pd.DataFrame({"user_id": [user_id], "n_events": [n],
-                                "total_value": [round(total, 2)],
-                                "last_ts": [last_ts]})
-
-        def close(self) -> None:
-            pass
-
-    updated = (_file_stream(spark, events_path)
-               .select("user_id", "ts", "value")
-               .groupBy("user_id")
-               .transformWithStateInPandas(
-                   statefulProcessor=RunningTotals(),
-                   outputStructType=OUTPUT_SCHEMA,
-                   outputMode="Update", timeMode="None"))
-    name = f"tws_{uuid.uuid4().hex[:8]}"
-    q = (updated.writeStream.outputMode("update")
-         .format("memory").queryName(name).start())
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     from pyspark.sql import Window
     w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
     return (spark.table(name)

@@ -20,6 +20,19 @@ def spelled(path, spelling: str) -> str:
     return ("file://" if spelling == "file_uri" else "") + str(path)
 
 
+def persisted_rdds(spark) -> dict:
+    """Every persisted or checkpointed RDD by id, as JVM references
+    held from Python. The context's own map holds them weakly, so
+    holding these keeps the async ContextCleaner from reclaiming them
+    while a test compares id sets."""
+    it = spark.sparkContext._jsc.sc().getPersistentRDDs().iterator()
+    out = {}
+    while it.hasNext():
+        e = it.next()
+        out[e._1()] = e._2()
+    return out
+
+
 @pytest.fixture(scope="session")
 def spark():
     spark = get_spark("tests")

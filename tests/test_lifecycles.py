@@ -210,34 +210,6 @@ def test_reconcile_is_add_only_for_sink_extra_rows(spark, source, tmp_path):
     assert after.where(F.col("id") == "ghost-row").count() == 1
 
 
-def test_stateful_new_api_twin_or_clear_gate(spark, sf_smoke):
-    """transformWithStateInPandas twin: where the runtime supports it
-    (protobuf present) it must agree exactly with the legacy-API
-    operator; otherwise it must fail with the documented pointer, not
-    a worker crash."""
-    import os as _os
-
-    import pytest as _pytest
-
-    from s3_elasticsearch_data_pipeline_spark.streaming.stateful import (
-        running_user_totals, running_user_totals_tws)
-    path = _os.path.join(sf_smoke, "events.parquet")
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-        have_pb = True
-    except ImportError:
-        have_pb = False
-    if not have_pb:
-        with _pytest.raises(NotImplementedError, match="protobuf"):
-            running_user_totals_tws(spark, path)
-        return
-    legacy = {r["user_id"]: (r["n_events"], r["total_value"])
-              for r in running_user_totals(spark, path).collect()}
-    tws = {r["user_id"]: (r["n_events"], r["total_value"])
-           for r in running_user_totals_tws(spark, path).collect()}
-    assert tws == legacy
-
-
 def test_reconcile_prune_orphans_is_the_inverse_of_damage(spark, source,
                                                           tmp_path):
     """Opt-in orphan pruning makes reconcile a true inverse: orphans

@@ -34,6 +34,9 @@ FAST_CORE = (
     "dedup_embedding_blocked",
     "dedup_incremental_semantic",
     "dedup_duplicate_spans",
+    "dedup_duplicate_spans_maximal",
+    "dedup_fuzzy_clusters",
+    "dedup_connected_components_star",
     "sim_topk_pq",
     "sim_ivf_incremental",
     "stream_ivfpq_ingest",
@@ -42,6 +45,8 @@ FAST_CORE = (
     "text_quality_scores",
     "text_bpe_encode",
     "text_unigram_encode",
+    "text_bpe_train",
+    "text_unigram_train",
     "corpus_quality_filter",
     "corpus_curation_pipeline",
     "corpus_training_set",

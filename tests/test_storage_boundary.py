@@ -1,6 +1,12 @@
-"""Every persisted-state path goes through ``storage.py``: a local-only
-file call anywhere else in the package fails here instead of reading a
-``file://`` or ``s3a://`` path wrong in production."""
+"""Module boundaries the package keeps by grep:
+
+- Every persisted-state path goes through ``storage.py``: a local-only
+  file call anywhere else in the package fails here instead of reading
+  a ``file://`` or ``s3a://`` path wrong in production.
+- Checkpoint blocks are released only through
+  ``session.checkpoint_scope``: a hand-written snapshot/diff/release
+  anywhere else fails here.
+"""
 
 from __future__ import annotations
 
@@ -28,20 +34,32 @@ ALLOWED = {
 }
 
 
-def _hits() -> dict[str, list[str]]:
+RDD_RELEASE = re.compile(r"\b(persistent_rdd_ids|release_persistent_rdds)\b")
+
+
+def _hits(pattern: re.Pattern) -> dict[str, list[str]]:
     hits: dict[str, list[str]] = {}
     for f in sorted(PACKAGE.rglob("*.py")):
         rel = f.relative_to(PACKAGE).as_posix()
         for n, line in enumerate(f.read_text().splitlines(), 1):
-            if LOCAL_ONLY.search(line):
+            if pattern.search(line):
                 hits.setdefault(rel, []).append(f"{rel}:{n}: {line.strip()}")
     return hits
 
 
-def test_no_local_only_file_calls_outside_storage():
-    hits = _hits()
-    stray = [h for rel, lines in hits.items() if rel not in ALLOWED
+def _assert_only_in(pattern: re.Pattern, allowed: set[str], fix: str):
+    hits = _hits(pattern)
+    stray = [h for rel, lines in hits.items() if rel not in allowed
              for h in lines]
-    assert not stray, "route these through storage.py:\n" + "\n".join(stray)
-    assert set(hits) == ALLOWED, "stale allowlist entries: %s" % sorted(
-        ALLOWED - set(hits))
+    assert not stray, f"{fix}:\n" + "\n".join(stray)
+    assert set(hits) == allowed, "stale allowlist entries: %s" % sorted(
+        allowed - set(hits))
+
+
+def test_no_local_only_file_calls_outside_storage():
+    _assert_only_in(LOCAL_ONLY, ALLOWED, "route these through storage.py")
+
+
+def test_checkpoint_release_only_in_session():
+    _assert_only_in(RDD_RELEASE, {"session.py"},
+                    "use session.checkpoint_scope for these")

@@ -23,6 +23,8 @@ import time
 import numpy as np
 import pytest
 
+from tests.conftest import persisted_rdds
+
 
 def _max_job_id(spark) -> int:
     jobs = spark.sparkContext._jsc.sc().statusStore().jobsList(None)
@@ -166,17 +168,6 @@ def _descriptions_after(spark, job_id: int) -> list:
     return out
 
 
-def _persisted_rdds(spark) -> dict:
-    """Every persisted or checkpointed RDD by id, as JVM references
-    held from Python. The context's own map holds them weakly."""
-    it = spark.sparkContext._jsc.sc().getPersistentRDDs().iterator()
-    out = {}
-    while it.hasNext():
-        e = it.next()
-        out[e._1()] = e._2()
-    return out
-
-
 @pytest.mark.parametrize("stream", ["lsh_ingest", "ivf_ingest",
                                     "ivfpq_ingest", "semantic_ingest",
                                     "incremental_stream_load"])
@@ -227,7 +218,7 @@ def test_ingest_epoch_bookkeeping(spark, emb_writer, stream):
         # strong references to the RDDs persisted before the call: the
         # async ContextCleaner cannot reclaim them mid-call, so any that
         # is gone afterwards was freed by the call itself
-        held = _persisted_rdds(spark)
+        held = persisted_rdds(spark)
         pinned = persistent_rdd_ids(spark)
         assert pinned == set(held)
         sc.setJobDescription("caller")
