@@ -412,6 +412,15 @@ def _write_centroid_tables(spark, path: str, q: _Quantizer) -> None:
      .write.mode("overwrite").parquet(path + "/centroids"))
 
 
+def _read_parquet_files(spark, paths, columns=None) -> list:
+    """Parquet files read on the driver through :mod:`storage` (any
+    Hadoop-FS URI, no Spark job) as pyarrow Tables."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    return [pq.read_table(pa.BufferReader(b), columns=columns)
+            for b in storage.read_files(spark, paths)]
+
+
 def _read_param_table(spark, path: str):
     """Driver-side read of one KILOBYTE parameter table (centroids /
     supers / codebooks / meta) as a list of dict rows, or None when
@@ -420,34 +429,16 @@ def _read_param_table(spark, path: str):
     fault) raises: a broken index must never read as untrained, or
     probes return nothing and ingests silently retrain.
 
-    r11: these tables are kilobytes BY DESIGN (the quantizer any IVF
-    structure holds in RAM), yet each Spark-side
-    ``read.parquet(...).orderBy(...).collect()`` scheduled 2-4 jobs
-    (schema inference + range-partition sampling + the collect) —
-    10 of the PQ probe's measured 17 per-call jobs were parameter
-    loads. pyarrow reads the same files driver-side with ZERO jobs
-    (it reads bare paths and ``file://`` URIs, lists an empty
-    directory as 0 rows, and skips ``_SUCCESS`` / ``_temporary``
-    through its default ``_``/``.`` prefix filter); callers sort
-    driver-side. Anything pyarrow cannot read falls back to the Spark
-    read, which reaches every Hadoop-FS scheme and reports absence as
-    ``PATH_NOT_FOUND`` / ``UNABLE_TO_INFER_SCHEMA``."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    from pyspark.errors import AnalysisException
-    try:
-        rows = pq.read_table(path).to_pylist()
-    except FileNotFoundError:
-        return None
-    except (OSError, pa.ArrowException):
-        try:
-            rows = [r.asDict() for r in
-                    spark.read.parquet(path).collect()]
-        except AnalysisException as e:
-            if ("PATH_NOT_FOUND" in str(e)
-                    or "UNABLE_TO_INFER_SCHEMA" in str(e)):
-                return None
-            raise
+    These tables are kilobytes BY DESIGN (the quantizer any IVF
+    structure holds in RAM), yet a Spark-side ``read.parquet(...)
+    .collect()`` schedules 2-4 jobs (schema inference, sampling, the
+    collect). The visible files of the table directory
+    (:func:`storage.list_files`, which skips ``_SUCCESS`` and a
+    pending ``_temporary``) are read with pyarrow instead: zero jobs
+    on every Hadoop-FS scheme. Callers sort driver-side."""
+    files = [f for f, _ in storage.list_files(spark, path)]
+    rows = [r for t in _read_parquet_files(spark, files)
+            for r in t.to_pylist()]
     return rows or None
 
 

@@ -34,8 +34,8 @@ from s3_elasticsearch_data_pipeline_spark import storage
 from s3_elasticsearch_data_pipeline_spark.functions.vector import cosine
 from s3_elasticsearch_data_pipeline_spark.operators.quantizer import (
     _init_rows, _load_quantizer, _q_nearest_cells, _quantizer_cells_fn,
-    _read_param_table, _train_quantizer, _write_centroid_tables,
-    auto_n_cells)
+    _read_param_table, _read_parquet_files, _train_quantizer,
+    _write_centroid_tables, auto_n_cells)
 from s3_elasticsearch_data_pipeline_spark.session import (
     job_phases, log_decision)
 
@@ -439,6 +439,188 @@ def _collect_queries_if_serving_sized(queries: DataFrame):
     return ids, emb
 
 
+def _local_topk(spark, query_id=(), neighbor_id=(), sim=(), null=None,
+                rank=()) -> DataFrame:
+    """A driver-computed top-k (empty by default) as a local relation.
+    It is built from an Arrow table, so it plans as a ``LocalRelation``
+    and drains in 0 jobs whatever the session's Arrow setting (a frame
+    built from a Python list drains in 1). ``null`` masks the NULL
+    sims; ``round(sim, 6)`` is the JVM's, as in every distributed
+    top-k here."""
+    import numpy as np
+    import pyarrow as pa
+    table = pa.table({
+        "query_id": pa.array(np.asarray(query_id, np.int64)),
+        "neighbor_id": pa.array(np.asarray(neighbor_id, np.int64)),
+        "sim": pa.array(np.asarray(sim, np.float64), mask=null),
+        "rank": pa.array(np.asarray(rank, np.int32))})
+    local = spark.createDataFrame(
+        table, "query_id long, neighbor_id long, sim double, rank int")
+    return local.select("query_id", "neighbor_id",
+                        F.round("sim", 6).alias("sim"), "rank")
+
+
+def _top_per_query(query_id, keys, n: int):
+    """Driver twin of ``row_number() OVER (PARTITION BY query_id ORDER
+    BY keys) <= n``: the row indexes kept and their 1-based ranks.
+    ``keys`` are numpy columns, most significant first, ascending."""
+    import numpy as np
+    idx = np.lexsort(tuple(reversed(keys)) + (query_id,))
+    q = query_id[idx]
+    first = np.ones(len(q), dtype=bool)
+    first[1:] = q[1:] != q[:-1]
+    pos = np.arange(len(q)) - np.flatnonzero(first)[np.cumsum(first) - 1]
+    keep = pos < n
+    return idx[keep], pos[keep] + 1
+
+
+def _ranked_local(spark, query_id, neighbor_id, sim, null,
+                  k: int) -> DataFrame:
+    """Driver twin of the rank window over scored pairs, ``row_number()
+    OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) <= k``,
+    as a :func:`_local_topk` frame. Spark orders doubles with NaN above
+    every number, so NaN comes first; NULLs (``null``) come last."""
+    import numpy as np
+    nan = np.isnan(sim) & ~null
+    idx, rank = _top_per_query(
+        query_id,
+        (null, ~nan, np.where(nan | null, 0.0, -sim), neighbor_id), k)
+    return _local_topk(spark, query_id[idx], neighbor_id[idx], sim[idx],
+                       null[idx], rank)
+
+
+def _equi_join(left, right):
+    """Row index pairs of the inner join ``left == right`` over two
+    key columns, with the join's multiplicity."""
+    import numpy as np
+    order = np.argsort(right, kind="stable")
+    lo = np.searchsorted(right[order], left, "left")
+    counts = np.searchsorted(right[order], left, "right") - lo
+    li = np.repeat(np.arange(len(left)), counts)
+    within = np.arange(counts.sum()) - np.repeat(np.cumsum(counts) - counts,
+                                                 counts)
+    return li, order[np.repeat(lo, counts) + within]
+
+
+def _column_array(col):
+    """A parquet column as numpy: a list column as a (rows, width)
+    matrix."""
+    import pyarrow as pa
+    col = col.combine_chunks()
+    if pa.types.is_list(col.type):
+        return col.flatten().to_numpy().reshape(len(col), -1)
+    return col.to_numpy()
+
+
+#: Listed bytes of the probed cells' files above which a serving-sized
+#: probe scans them with Spark instead of reading them on the driver.
+#: Measured (4 cores, local FS, 16-cell indexes of 5k-200k random
+#: 64-dim vectors, warm probe + drain, median of 3): the driver read
+#: beat the Spark scan at every size up to 104 MB while the pairs
+#: stayed under the pair cap's crossover; at 26 MB and one query it
+#: took 0.19 s (IVF) and 0.25 s (IVF-PQ) against 0.55 s and 1.45 s.
+#: So this cap bounds driver memory, not time: at 26 MB the probe's
+#: Python heap peaked at 30-33 MB.
+MAX_DRIVER_CELL_BYTES = 32 << 20
+
+#: (query, candidate) pairs a driver read may score: the sum over the
+#: probed cells of the queries probing the cell times its rows. The
+#: IVF scoring materialises every pair (about 100 B of heap each), so
+#: it sets the bound: in the same measurement its driver read won at
+#: 0.8 M pairs (0.66 s against 0.98 s for the scan), tied at 1.6 M and
+#: lost at 2.6 M (1.83 s against 1.52 s) and 5.1 M (3.1 s against
+#: 2.1 s, 514 MB of heap). IVF-PQ, whose ADC scan keeps only a
+#: shortlist per (query, cell), still won at 5.1 M pairs.
+MAX_DRIVER_PROBE_PAIRS = 1_000_000
+
+
+def _read_probed_cells(spark, path: str, cell_queries: dict, columns,
+                       site: str):
+    """Driver read of the probed cells of the index at ``path``
+    (``cell_queries``: {cell: the query rows probing it}): the rows'
+    cell ids and their ``columns`` as numpy arrays (a list column as a
+    matrix), or None when the caller should scan them with Spark.
+
+    One glob lists the probed ``cells/cell=C/`` and the stream's
+    ``cells/epoch=E/cell=C/`` files alike (:func:`storage.list_files`),
+    so the listing grows with the probed files, not with the index.
+    Two caps send the probe to the Spark scan: the listed bytes over
+    :data:`MAX_DRIVER_CELL_BYTES`, judged before anything is read, and
+    the read rows' (query, candidate) pairs over
+    :data:`MAX_DRIVER_PROBE_PAIRS`. The decision is logged at ``site``
+    (its ``rows`` are the probed files, ``cap`` the one that tripped)."""
+    import numpy as np
+    alts = ",".join(f"cell={c}" for c in sorted(cell_queries))
+    files = [(f, size, int(f.rsplit("/", 2)[-2][len("cell="):]))
+             for f, size in storage.list_files(
+                 spark, path + "/cells", "{{%s},*/{%s}}/*" % (alts, alts))]
+    nbytes = sum(size for _, size, _ in files)
+    cap = "bytes" if nbytes > MAX_DRIVER_CELL_BYTES else None
+    tables = []
+    if cap is None:
+        tables = list(zip(
+            [cell for *_, cell in files],
+            _read_parquet_files(spark, [f for f, *_ in files], columns)))
+        pairs = sum(len(cell_queries[cell]) * t.num_rows
+                    for cell, t in tables)
+        cap = "pairs" if pairs > MAX_DRIVER_PROBE_PAIRS else None
+    log_decision(site, "distributed" if cap else "driver", len(files),
+                 nbytes, cap)
+    if cap:
+        return None
+    tables = [(cell, t) for cell, t in tables if t.num_rows]
+    if not tables:
+        return np.empty(0, dtype=np.int64), []
+    return (np.concatenate([np.full(t.num_rows, cell, dtype=np.int64)
+                            for cell, t in tables]),
+            [np.concatenate([_column_array(t.column(c))
+                             for _, t in tables]) for c in columns])
+
+
+def _cell_query_rows(order) -> dict:
+    """{cell: query row indexes probing it} of an (N, take) cell
+    assignment; -1 padding (tiny two-level quantizers) is dropped, as
+    :func:`_quantizer_cells_fn` drops it."""
+    import numpy as np
+    cell_rows: dict[int, list] = {}
+    for i in range(order.shape[0]):
+        for c in order[i]:
+            if c >= 0:
+                cell_rows.setdefault(int(c), []).append(i)
+    return {c: np.array(rows, dtype=np.int64)
+            for c, rows in cell_rows.items()}
+
+
+def _cell_pair_sims(q_ids, q_emb, qn, cellmap, n_ids, cells, C):
+    """The cell-grouped scoring kernel: (query_id, neighbor_id, sim)
+    arrays of every (query, candidate) pair sharing a probed cell, for
+    candidates ``n_ids`` in ``cells`` with vectors ``C``, or None when
+    no candidate is in a probed cell. Zero norms give NaN. Runs
+    per Arrow batch in :func:`_cell_scored_pairs` and once over the
+    probed cells in :func:`ivf_probe_topk`'s driver read."""
+    import numpy as np
+    cn = np.sqrt(np.einsum("id,id->i", C, C))
+    out_q, out_n, out_s = [], [], []
+    for c in np.unique(cells):
+        qrows = cellmap.get(int(c))
+        if qrows is None:
+            continue
+        crows = np.nonzero(cells == c)[0]
+        Q = q_emb[qrows]
+        dots = np.einsum("id,jd->ij", Q, C[crows])
+        denom = qn[qrows][:, None] * cn[crows][None, :]
+        with np.errstate(divide="ignore", invalid="ignore"):
+            sims = dots / denom
+        sims[denom == 0] = np.nan
+        out_q.append(np.repeat(q_ids[qrows], len(crows)))
+        out_n.append(np.tile(n_ids[crows], len(qrows)))
+        out_s.append(sims.reshape(-1))
+    if not out_q:
+        return None
+    return (np.concatenate(out_q), np.concatenate(out_n),
+            np.concatenate(out_s))
+
+
 def _cell_scored_pairs(cand: DataFrame, q_ids, q_emb, order) -> DataFrame:
     """Score (query, candidate) pairs CELL-GROUPED with one einsum per
     (cell, batch) — the serving-sized twin of the join +
@@ -457,49 +639,24 @@ def _cell_scored_pairs(cand: DataFrame, q_ids, q_emb, order) -> DataFrame:
     einsum forms are oracle-hash-checked against the same fold), the
     same ``dots / (qn * cn)`` expression, and the same zero-norm → NaN
     → NULL mapping. ``order`` is the (N, take) driver-side cell
-    assignment from :func:`_q_nearest_cells`; -1 padding (tiny
-    two-level quantizers) is masked exactly like
-    :func:`_quantizer_cells_fn` drops it."""
+    assignment from :func:`_q_nearest_cells`; the kernel is
+    :func:`_cell_pair_sims`."""
     import numpy as np
     qn = np.sqrt(np.einsum("id,id->i", q_emb, q_emb))
-    cell_rows: dict[int, list] = {}
-    for i in range(order.shape[0]):
-        for c in order[i]:
-            if c >= 0:
-                cell_rows.setdefault(int(c), []).append(i)
-    cellmap = {c: np.array(rows, dtype=np.int64)
-               for c, rows in cell_rows.items()}
+    cellmap = _cell_query_rows(order)
 
     def score(batches):
         import pandas as pd
         for pdf in batches:
             if not len(pdf):
                 continue
-            C = np.stack(pdf["cand_vec"].to_numpy()).astype(np.float64)
-            cn = np.sqrt(np.einsum("id,id->i", C, C))
-            n_ids = pdf["neighbor_id"].to_numpy()
-            cells = pdf["cell"].to_numpy()
-            out_q, out_n, out_s = [], [], []
-            for c in np.unique(cells):
-                qrows = cellmap.get(int(c))
-                if qrows is None:
-                    continue
-                crows = np.nonzero(cells == c)[0]
-                Q = q_emb[qrows]
-                dots = np.einsum("id,jd->ij", Q, C[crows])
-                denom = qn[qrows][:, None] * cn[crows][None, :]
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    sims = dots / denom
-                sims[denom == 0] = np.nan
-                out_q.append(np.repeat(q_ids[qrows], len(crows)))
-                out_n.append(np.tile(n_ids[crows], len(qrows)))
-                out_s.append(sims.reshape(-1))
-            if not out_q:
-                continue
-            yield pd.DataFrame({
-                "query_id": np.concatenate(out_q),
-                "neighbor_id": np.concatenate(out_n),
-                "sim": np.concatenate(out_s)})
+            got = _cell_pair_sims(
+                q_ids, q_emb, qn, cellmap, pdf["neighbor_id"].to_numpy(),
+                pdf["cell"].to_numpy(),
+                np.stack(pdf["cand_vec"].to_numpy()).astype(np.float64))
+            if got is not None:
+                yield pd.DataFrame({"query_id": got[0],
+                                    "neighbor_id": got[1], "sim": got[2]})
 
     raw = cand.mapInPandas(
         score, "query_id long, neighbor_id long, sim double")
@@ -521,47 +678,73 @@ def _ranked_topk(scored: DataFrame, k: int) -> DataFrame:
                     F.round("sim", 6).alias("sim"), "rank"))
 
 
+def _ranked_topk_local(spark, query_id, neighbor_id, sim,
+                       k: int) -> DataFrame:
+    """Driver twin of :func:`_ranked_topk` over the
+    :func:`_cell_pair_sims` arrays, whose NaN sims are the NULLs of
+    :func:`_cell_scored_pairs`."""
+    import numpy as np
+    other = query_id != neighbor_id
+    return _ranked_local(spark, query_id[other], neighbor_id[other],
+                         sim[other], np.isnan(sim[other]), k)
+
+
 def ivf_probe_topk(spark, path: str, queries: DataFrame, k: int = 10,
                    n_probe: int = 4) -> DataFrame:
     """Approximate top-k against a PERSISTED IVF index (the serving
     loop): load the kilobyte centroid table, assign each query its
-    ``n_probe`` nearest cells, and scan ONLY those cells' partitions
-    of the index store — the `.where(cell IN probed)` filter prunes
-    at the directory level, so a 100 TB index reads
-    ~n_probe/n_cells of its bytes per batch of queries. Exact cosine
-    rerank within the probed candidates, deterministic tie-breaks.
-    Queries assign through the SAME quantizer the build used (flat or
-    two-level — ``_load_quantizer`` reconstructs it from the persisted
-    tables), so build/probe cell agreement holds at any n_cells.
+    ``n_probe`` nearest cells, and read ONLY those cells of the index
+    store — the cell directories are the index lookup, so a 100 TB
+    index reads ~n_probe/n_cells of its bytes per batch of queries.
+    Exact cosine rerank within the probed candidates, deterministic
+    tie-breaks. Queries assign through the SAME quantizer the build
+    used (flat or two-level — ``_load_quantizer`` reconstructs it from
+    the persisted tables), so build/probe cell agreement holds at any
+    n_cells.
 
-    Two physical strategies behind one logical result (r10): at or
-    below :data:`MAX_DRIVER_QUERIES` the query batch collects to the
-    driver, assigns cells there with the same kernel, and scores
-    cell-grouped in one Arrow pass (:func:`_cell_scored_pairs`) — no
-    join, each vector crosses the Python boundary once. Above the cap
-    the original distributed join plan runs unchanged. Both produce
-    bit-identical rows (equivalence-tested).
+    Three physical strategies behind one logical result, all
+    bit-identical (equivalence-tested):
+
+    1. driver read: a serving-sized query batch (:data:`MAX_DRIVER_QUERIES`
+       rows and :data:`MAX_DRIVER_QUERY_BYTES`) is collected, assigned
+       its cells on the driver, and when the probed cells fit
+       :data:`MAX_DRIVER_CELL_BYTES` and :data:`MAX_DRIVER_PROBE_PAIRS`
+       they are read on the driver (:func:`_read_probed_cells`), scored
+       by the :func:`_cell_pair_sims` kernel and ranked by
+       :func:`_ranked_topk_local`. The result is a local relation:
+       the query fetch is the only Spark job of the call and draining
+       the result runs none;
+    2. Spark scan: the same, with probed cells over either cap read
+       by a partition-pruned Spark scan and scored cell-grouped in one
+       Arrow pass (:func:`_cell_scored_pairs`) — no join, each vector
+       crosses the Python boundary once;
+    3. distributed: an over-cap query frame keeps the fully
+       distributed join plan.
     """
     q = _load_quantizer(spark, path)
     if q is None:
-        return spark.createDataFrame(
-            [], "query_id long, neighbor_id long, sim double, rank int")
-    # Serving-sized query batches (the per-request contract this probe
-    # exists for) take the driver path: ONE cap-guarded collect (also
-    # the emptiness probe), cell assignment driver-side through the
-    # SAME `_q_nearest_cells` kernel the distributed assign uses, and
-    # cell-grouped einsum scoring with no join — see
-    # :func:`_cell_scored_pairs` for the measured why. Over-cap query
-    # frames keep the fully distributed join plan below.
+        return _local_topk(spark)
     fetched = _collect_queries_if_serving_sized(queries)
     if fetched is not None:
+        import numpy as np
         q_ids, q_emb = fetched
         if not len(q_ids):
-            return spark.createDataFrame(
-                [], "query_id long, neighbor_id long, sim double, "
-                    "rank int")
+            return _local_topk(spark)
         order = _q_nearest_cells(q, q_emb, n_probe)
         probed = sorted({int(c) for c in order.reshape(-1) if c >= 0})
+        cellmap = _cell_query_rows(order)
+        read = _read_probed_cells(spark, path, cellmap,
+                                  ["vec_id", "embedding"],
+                                  "similarity.ivf_probe_topk")
+        if read is not None:
+            cells, cols = read
+            qn = np.sqrt(np.einsum("id,id->i", q_emb, q_emb))
+            got = (_cell_pair_sims(q_ids, q_emb, qn, cellmap, cols[0],
+                                   cells, cols[1])
+                   if len(cells) else None)
+            if got is None:
+                return _local_topk(spark)
+            return _ranked_topk_local(spark, *got, k)
         cand = (spark.read.parquet(path + "/cells")
                 .where(F.col("cell").isin(probed))
                 .select(F.col("vec_id").alias("neighbor_id"), "cell",
@@ -1843,29 +2026,32 @@ def _pq_query_tables(qm, books):
 def _ivfpq_probe_driver_path(spark, path: str, q, books, residual: bool,
                              fetched, k: int, n_probe: int,
                              rerank: int) -> DataFrame:
-    """Serving-sized IVF-PQ probe (r11 — the `_cell_scored_pairs`
-    pattern applied to the ADC pipeline): the query batch is already
+    """Serving-sized IVF-PQ probe (the `_cell_scored_pairs` pattern
+    applied to the ADC pipeline): the query batch is already
     driver-resident, so cell assignment, the probed-cell union, and
     the per-(query, cell) ADC tables are all computed HERE — no
     distributed assign pass, no cells⋈tables plan branch, no cogroup
-    exchange of the code scan. The probed-cell scan ships the table
-    matrix in the task closure (bounded by the row+byte caps — tables
-    are m × k_codes ≈ 1 KB per probed pair) and emits per-(query,
-    cell-fragment) partial shortlists through the SAME
-    :func:`_adc_partial_topk` kernel; the global per-query window then
-    keeps exactly the candidates the cogrouped plan kept (each corpus
-    vector lives in one cell, fragments partition a cell's codes, and
-    every partial is taken under the same (adc_dist, neighbor_id)
-    total order with the same round-8 distances — the standard
-    distributed-top-k argument, equivalence-tested). The exact rerank
-    tail is unchanged except the query-vector side joins from a
-    driver-local relation instead of re-executing the query frame."""
+    exchange of the code scan. Each probed cell's codes go through the
+    SAME :func:`_adc_partial_topk` kernel once per (query, cell-
+    fragment); the per-query shortlist then keeps exactly the
+    candidates the cogrouped plan keeps (each corpus vector lives in
+    one cell, fragments partition a cell's codes, and every partial is
+    taken under the same (adc_dist, neighbor_id) total order with the
+    same round-8 distances — the standard distributed-top-k argument,
+    equivalence-tested).
+
+    When the probed cells fit :data:`MAX_DRIVER_CELL_BYTES` and
+    :data:`MAX_DRIVER_PROBE_PAIRS` they are read on the driver
+    (:func:`_ivfpq_rerank_local`): no Spark job at all. Otherwise a
+    partition-pruned Spark scan ships the table matrix in the task
+    closure (bounded by the row+byte caps — tables are m × k_codes ≈
+    1 KB per probed pair), and the shortlist window and the exact
+    rerank join run in Spark (:func:`_ivfpq_rerank_scan`)."""
     import numpy as np
-    m, k_codes, _ = books.shape
-    out_schema = "query_id long, neighbor_id long, sim double, rank int"
+    m = books.shape[0]
     q_ids, q_emb = fetched
     if not len(q_ids):
-        return spark.createDataFrame([], out_schema)
+        return _local_topk(spark)
     order = _q_nearest_cells(q, q_emb, n_probe)          # (N, take)
     take = order.shape[1]
     rows_rep = np.repeat(np.arange(len(q_ids)), take)
@@ -1873,7 +2059,7 @@ def _ivfpq_probe_driver_path(spark, path: str, q, books, residual: bool,
     ok = cells_rep >= 0                                  # two-level pad
     rows_rep, cells_rep = rows_rep[ok], cells_rep[ok].astype(np.int64)
     if not len(cells_rep):
-        return spark.createDataFrame([], out_schema)
+        return _local_topk(spark)
     probed = sorted({int(c) for c in cells_rep})
     if residual:
         # per-(query, cell) tables over q − centroid[cell] — the FAISS
@@ -1889,23 +2075,85 @@ def _ivfpq_probe_driver_path(spark, path: str, q, books, residual: bool,
     cellmap = {c: np.asarray(ix, dtype=np.int64)
                for c, ix in by_cell.items()}
 
+    def adc_partials(codes, ids, cells) -> list:
+        """Per-(query, cell) partial shortlists of the code rows."""
+        outs = []
+        for c in np.unique(cells):
+            ix = cellmap.get(int(c))
+            if ix is None:
+                continue
+            sel = np.nonzero(cells == c)[0]
+            outs.append(_adc_partial_topk(
+                tbls[ix], pair_qid[ix], codes[sel], ids[sel], rerank, m))
+        return outs
+
+    read = _read_probed_cells(spark, path, cellmap,
+                              ["vec_id", "codes", "embedding"],
+                              "similarity.ivfpq_probe_topk")
+    if read is None:
+        return _ivfpq_rerank_scan(spark, path, probed, adc_partials,
+                                  q_ids, q_emb, k, rerank)
+    return _ivfpq_rerank_local(spark, read, adc_partials, q_ids, q_emb,
+                               k, rerank)
+
+
+def _fold_dot(a, b):
+    """Row-wise dot products of two (n, d) matrices folded left to
+    right from 0.0: bit for bit the JVM's
+    :func:`functions.vector.dot` (``aggregate`` over ``zip_with``),
+    which ``np.dot``/``einsum`` sums are not."""
+    import numpy as np
+    prods = np.hstack([np.zeros((len(a), 1)), a * b])
+    return np.add.accumulate(prods, axis=1)[:, -1]
+
+
+def _ivfpq_rerank_local(spark, read, adc_partials, q_ids, q_emb, k: int,
+                        rerank: int) -> DataFrame:
+    """The IVF-PQ shortlist and exact rerank over driver-read cells,
+    step for step the relational plan of :func:`_ivfpq_rerank_scan`:
+    the shortlist ordered by (adc_dist, neighbor_id); the inner joins
+    to the query rows on query_id and to the probed rows on
+    neighbor_id, with their multiplicity (a vec_id stored twice scores
+    twice); the :func:`functions.vector.cosine` fold with its NULL for
+    a zero norm; the rank by sim descending, NULLs last, then
+    neighbor_id."""
+    import numpy as np
+    import pandas as pd
+    cells, cols = read
+    outs = adc_partials(cols[1], cols[0], cells) if len(cells) else []
+    if not outs:
+        return _local_topk(spark)
+    ids, vecs = cols[0], cols[2]
+    cand = pd.concat(outs, ignore_index=True)
+    cq, cn, cd = (cand[c].to_numpy()
+                  for c in ("query_id", "neighbor_id", "adc_dist"))
+    short, _ = _top_per_query(cq, (cd, cn), rerank)
+    sq, sn = cq[short], cn[short]
+    s_rows, q_rows = _equi_join(sq, q_ids)
+    pairs, n_rows = _equi_join(sn[s_rows], ids)
+    qid, nid = sq[s_rows][pairs], ids[n_rows]
+    qv, nv = q_emb[q_rows[pairs]], vecs[n_rows]
+    na, nb = np.sqrt(_fold_dot(qv, qv)), np.sqrt(_fold_dot(nv, nv))
+    null = (na == 0) | (nb == 0)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        sim = _fold_dot(qv, nv) / (na * nb)
+    return _ranked_local(spark, qid, nid, sim, null, k)
+
+
+def _ivfpq_rerank_scan(spark, path: str, probed, adc_partials, q_ids,
+                       q_emb, k: int, rerank: int) -> DataFrame:
+    """The IVF-PQ ADC scan, shortlist and exact rerank over a
+    partition-pruned Spark read of the probed cells."""
+    import numpy as np
+
     def adc_scan(batches):
         import pandas as pd
         for pdf in batches:
             if not len(pdf):
                 continue
-            codes = np.stack(pdf["codes"].to_numpy()).astype(np.int64)
-            ids = pdf["vec_id"].to_numpy()
-            cells = pdf["cell"].to_numpy()
-            outs = []
-            for c in np.unique(cells):
-                ix = cellmap.get(int(c))
-                if ix is None:
-                    continue
-                sel = np.nonzero(cells == c)[0]
-                outs.append(_adc_partial_topk(
-                    tbls[ix], pair_qid[ix], codes[sel], ids[sel],
-                    rerank, m))
+            outs = adc_partials(
+                np.stack(pdf["codes"].to_numpy()).astype(np.int64),
+                pdf["vec_id"].to_numpy(), pdf["cell"].to_numpy())
             if outs:
                 yield pd.concat(outs, ignore_index=True)
 
@@ -1950,38 +2198,51 @@ def ivfpq_probe_topk(spark, path: str, queries: DataFrame, k: int = 10,
     probe pipeline, each stage reading the minimum bytes it can:
 
     1. coarse prune: each query picks its ``n_probe`` nearest cells
-       from the kilobyte centroid table; the probed-cell union becomes
-       a STATIC partition filter, so only those cell DIRECTORIES are
-       read at all;
-    2. ADC scan: within probed cells the scan projects (vec_id, cell,
-       codes) — column pruning never deserializes the raw vectors —
-       and a per-cell cogroup kernel (:func:`_adc_partial_topk`, the
-       same kernel as ``pq_topk``) emits ≤ ``rerank`` candidates per
-       (query, cell) under the total (adc_dist, neighbor_id) order;
+       from the kilobyte centroid table; only the probed-cell union's
+       DIRECTORIES are read at all;
+    2. ADC scan: within probed cells the scan reads (vec_id, cell,
+       codes) — a Spark scan's column pruning never deserializes the
+       raw vectors — and a per-cell kernel (:func:`_adc_partial_topk`,
+       the same kernel as ``pq_topk``) emits ≤ ``rerank`` candidates
+       per (query, cell) under the total (adc_dist, neighbor_id) order;
     3. global shortlist: a per-query window keeps the ``rerank``
        best candidates across that query's probed cells — two-level
        top-k, so the result equals a flat ADC scan of those cells;
     4. exact rerank: raw vectors are fetched (from the same pruned
        directories) for shortlist rows only; exact cosine, top-k.
 
-    Query ADC tables are computed EXECUTOR-side (mapInPandas with the
-    kilobyte codebooks in the closure) — no driver funnel, any query
-    frame size. A raw-code index gets ONE table per query (repeated
-    across its probed cells); a RESIDUAL index gets one table per
-    (query, cell) over q − centroid[cell] — the FAISS IVFPQ probe
-    shape, n_probe tables per query, still kilobytes each.
+    Three physical strategies behind that one logical result, all
+    bit-identical (equivalence-tested):
+
+    - driver read: a serving-sized query batch (:data:`MAX_DRIVER_QUERIES`
+      rows and :data:`MAX_DRIVER_QUERY_BYTES`) is collected, its cells
+      and ADC tables are computed on the driver, and when the probed
+      cells fit :data:`MAX_DRIVER_CELL_BYTES` and
+      :data:`MAX_DRIVER_PROBE_PAIRS` they are read on the driver and
+      stages 2-4 run in numpy (:func:`_ivfpq_rerank_local`). The query
+      fetch is the only Spark job of the call, and the returned local
+      relation drains in none;
+    - Spark scan: the same with probed cells over either cap, which a
+      partition-pruned Spark scan reads; the shortlist window and the
+      rerank join run in Spark (:func:`_ivfpq_rerank_scan`);
+    - distributed: an over-cap query frame never reaches the driver.
+      Its cells and ADC tables come from one executor-side kernel with
+      the kilobyte codebooks in the closure, and the ADC scan is a
+      per-cell cogroup.
+
+    A raw-code index gets ONE table per query (repeated across its
+    probed cells); a RESIDUAL index gets one table per (query, cell)
+    over q − centroid[cell] — the FAISS IVFPQ probe shape, n_probe
+    tables per query, still kilobytes each.
     Equivalence contract (tested, residual=False): for a single query,
     the result is bit-identical to ``pq_topk`` restricted to that
     query's probed cells with the same codebooks.
 
-    Checkpoint hygiene: NOTHING is pinned — the probed-cell set comes
-    from a separate cheap argmax kernel (``_quantizer_cells_fn``, same
-    nearest-cell math) and the ADC-table kernel runs lazily
-    inside the cogroup. The earlier eager-checkpoint design pinned one
-    query-sized RDD per probe call for the session lifetime — the
-    exact degradation SCALING.md measures (2.5→14 s over eight calls);
-    the price here is scanning the (request-sized) query frame twice,
-    which is kilobytes against a corpus-sized index.
+    Checkpoint hygiene: NOTHING is pinned, on any strategy. The earlier
+    eager-checkpoint design pinned one query-sized RDD per probe call
+    for the session lifetime — the exact degradation SCALING.md
+    measures (2.5→14 s over eight calls). The distributed strategy
+    pays for that by scanning the query frame twice.
 
     Jobs run inside the call are described ``ivfpq_probe_topk:
     <phase>``; the returned frame's own jobs run later, under the
@@ -1999,18 +2260,16 @@ def _ivfpq_probe_topk(spark, path: str, queries: DataFrame, k: int,
     phase("params load")
     params = _load_ivfpq_params(spark, path)
     if params is None:
-        return spark.createDataFrame(
-            [], "query_id long, neighbor_id long, sim double, rank int")
+        return _local_topk(spark)
     q, books, residual = params
     m, k_codes, sub = books.shape
     # Serving-sized query batches (≤ the row AND byte caps) take the
     # driver path: ONE collect replaces the distributed assign pass,
     # the probed-set aggregate, and the cells⋈tables cogroup — see
-    # :func:`_ivfpq_probe_driver_path` (r11; the measured ~20 small
-    # driver-blocking jobs per call collapse to 6 for a one-row
-    # request: the query fetch, one schema read of the cell store and
-    # the four stages of the result plan). Over-cap frames keep the
-    # fully distributed plan below, bit-identical results.
+    # :func:`_ivfpq_probe_driver_path`. A one-row request whose probed
+    # cells fit the cell caps runs that collect and nothing else. Over-
+    # cap frames keep the fully distributed plan below, bit-identical
+    # results.
     phase("query fetch")
     fetched = _collect_queries_if_serving_sized(queries)
     if fetched is not None:
@@ -2060,8 +2319,7 @@ def _ivfpq_probe_topk(spark, path: str, queries: DataFrame, k: int,
                                  "vec_id long, cell int")
                     .select("cell").distinct().collect())
     if not probed:
-        return spark.createDataFrame(
-            [], "query_id long, neighbor_id long, sim double, rank int")
+        return _local_topk(spark)
 
     phase("cell read")
     cells = (spark.read.parquet(path + "/cells")

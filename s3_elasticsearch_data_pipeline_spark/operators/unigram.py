@@ -246,21 +246,20 @@ def unigram_encode(documents: DataFrame, seed_size: int = SEED_SIZE,
     # with one, and the word-distinct aggregate disappears outright —
     # the words table's keys ARE the distinct words. At 100 TB this is
     # the difference between one corpus scan and three.
-    toks = (_par(documents)
-            .select("doc_id",
-                    F.posexplode(tokens(F.col("text")))
-                    .alias("pos", "word"))
-            .localCheckpoint(eager=False))
-    words = (toks.groupBy("word").agg(F.count(F.lit(1)).alias("wn"))
-             .localCheckpoint(eager=True))  # also materializes toks
-    # chunk-type segmentation table: kept checkpointed (the returned
-    # plan reads it — bpe_encode's word_syms discipline); the
-    # training-side units checkpoint is released by the scope.
-    # toks/words stay pinned: the returned plan reads BOTH (that is
-    # the single-tokenize trade) — callers release them by unpersisting
-    # after draining the result, exactly as they already must for
-    # unit_pieces.
+    # Both stay pinned with the result (the returned plan reads BOTH —
+    # that is the single-tokenize trade): callers release them by
+    # unpersisting after draining the result, exactly as they already
+    # must for unit_pieces. The scope owns them from the start, so a
+    # raise inside it releases them too. The chunk-type segmentation
+    # table is kept the same way (bpe_encode's word_syms discipline);
+    # the training-side units checkpoint is released by the scope.
     with checkpoint_scope(spark) as keep:
+        toks = keep(_par(documents)
+                    .select("doc_id",
+                            F.posexplode(tokens(F.col("text")))
+                            .alias("pos", "word")), eager=False)
+        words = keep(toks.groupBy("word")
+                     .agg(F.count(F.lit(1)).alias("wn")))  # fills toks
         units = _units_of_words(words).localCheckpoint(eager=True)
         counts = _seed_counts(units, seed_size, max_piece_len)
         if counts:

@@ -3129,8 +3129,11 @@ def q_sim_ivfpq_persisted(spark, sf_dir):
     in-cell ADC scan reads 8-byte PQ codes (column pruning skips the
     raw vectors), exact cosine rerank touches raw vectors for
     shortlist rows only. Per-query exact equivalence with ``pq_topk``
-    over the probed cells is pytest-pinned; plan tests assert both the
-    partition filter and the codes-only ReadSchema."""
+    over the probed cells is pytest-pinned. These ten queries are
+    serving-sized, so the probe reads its cells on the driver and
+    returns a local relation; the plan test forces the Spark-scan
+    strategy (a zeroed probed-cell byte cap) to assert both the partition
+    filter and the codes-only ReadSchema."""
     emb = _t(spark, sf_dir, "embeddings")
     path = _ivf_scratch(sf_dir, "ivfpq")
     similarity.build_ivfpq_index(emb, path)

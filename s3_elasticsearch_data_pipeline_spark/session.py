@@ -150,8 +150,8 @@ def log_decision(site: str, path: str, rows: int, nbytes: int,
                  cap: str | None) -> None:
     """Record one automatic decision: at ``site`` the engine took
     ``path`` for ``rows`` rows of ``nbytes`` driver bytes; ``cap``
-    names the limit that tripped (``"rows"`` or ``"bytes"``), or is
-    None when none did."""
+    names the limit that tripped (``"rows"``, ``"bytes"`` or
+    ``"pairs"``), or is None when none did."""
     fields = {"site": site, "path": path, "rows": rows, "bytes": nbytes,
               "cap": cap}
     logging.getLogger(DECISION_LOGGER).info(
@@ -200,15 +200,17 @@ def checkpoint_scope(spark: SparkSession):
     SCALING.md). So the policy, stated once:
 
     - The scope snapshots :func:`persistent_rdd_ids` on entry and yields
-      ``keep(df)``, which returns ``df.localCheckpoint(eager=True)``.
-      Those blocks stay pinned after the scope exits; they belong to
-      the caller.
+      ``keep(df, eager=True)``, which returns
+      ``df.localCheckpoint(eager)``. After a normal exit those blocks
+      stay pinned; they belong to the caller. A lazy ``keep`` pins a
+      table the returned plan reads without running a job: its blocks
+      fill at the first action over it.
     - Checkpoint the result last: ``keep`` reads the intermediates,
       which are still pinned while the body runs.
-    - On every exit, normal return and raise alike, every other RDD
-      persisted or checkpointed inside the body is released, a nested
-      scope's kept result included: only what this scope keeps
-      survives it.
+    - On a normal exit every other RDD persisted or checkpointed inside
+      the body is released, a nested scope's kept result included:
+      only what this scope keeps survives it. On a raise nothing
+      survives it, kept blocks included: no caller can read them.
     - Single-controller discipline: the release works by id difference,
       so nothing else may persist RDDs in the same session while the
       body runs; it cannot tell an intermediate from a neighbour's
@@ -217,14 +219,17 @@ def checkpoint_scope(spark: SparkSession):
     before = persistent_rdd_ids(spark)
     kept: set[int] = set()
 
-    def keep(df):
+    def keep(df, eager: bool = True):
         pinned = persistent_rdd_ids(spark)
-        df = df.localCheckpoint(eager=True)
+        df = df.localCheckpoint(eager=eager)
         kept.update(persistent_rdd_ids(spark) - pinned)
         return df
 
     try:
         yield keep
+    except BaseException:
+        kept.clear()
+        raise
     finally:
         release_persistent_rdds(
             spark, persistent_rdd_ids(spark) - before - kept)

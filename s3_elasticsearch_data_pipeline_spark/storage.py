@@ -16,13 +16,25 @@ through :func:`from_file_uri` first.
   value. Where rename refuses an existing target (HDFS, S3A) the old
   marker is deleted first: a reader in that instant sees none, never a
   torn one (an object-store upload appears whole when it closes);
-- :func:`file_status`: (qualified path, length, mtime) of a file.
+- :func:`file_status`: (qualified path, length, mtime) of a file;
+- :func:`list_files`: (path, length) of the files a glob matches under
+  a directory (all its files by default; ``{cell=1,*/cell=1}/*`` for
+  one partition at either of two depths), skipping hidden ``_``/``.``
+  entries at every level below it as Spark's parquet reader does (so a
+  pending ``_temporary`` write is not listed); a missing path has none;
+- :func:`read_bytes` / :func:`read_files`: whole files' bytes. With
+  :func:`list_files` they are the driver-side parquet read of small
+  persisted tables: the index parameter tables and the probed cells of
+  a serving-sized index probe
+  (``pyarrow.parquet.read_table(pyarrow.BufferReader(...))``).
 
 Every call is a driver-side metadata call: none starts a Spark job.
 """
 
 from __future__ import annotations
 
+import os
+import tempfile
 from urllib.parse import unquote
 
 from py4j.protocol import Py4JJavaError
@@ -79,15 +91,36 @@ def rename(spark: SparkSession, src: str, dst: str) -> None:
             raise IOError(f"rename {src} -> {dst} failed")
 
 
+def read_files(spark: SparkSession, paths) -> list[bytes]:
+    """Each file's whole bytes, in order. The driver JVM, on this
+    process's host, copies the files into a local temporary directory
+    and Python reads them there: a payload returned through py4j costs
+    one Python call per byte (a ``byte[]``) or a socket stall of about
+    40 ms (a string of some hundred KB)."""
+    jvm = spark._jvm
+    path_of = jvm.org.apache.hadoop.fs.Path
+    conf = spark._jsc.hadoopConfiguration()
+    copy = jvm.org.apache.hadoop.io.IOUtils.copyBytes
+    local_file = jvm.java.io.FileOutputStream
+    out = []
+    with tempfile.TemporaryDirectory(prefix="storage-read-") as tmp:
+        for i, path in enumerate(paths):
+            src, local = path_of(path), os.path.join(tmp, str(i))
+            copy(src.getFileSystem(conf).open(src), local_file(local),
+                 1 << 16, True)
+            with open(local, "rb") as f:
+                out.append(f.read())
+    return out
+
+
+def read_bytes(spark: SparkSession, path: str) -> bytes:
+    return read_files(spark, [path])[0]
+
+
 def read_text(spark: SparkSession, path: str) -> str | None:
-    fs, p = _fs(spark, path)
-    if not fs.exists(p):
+    if not exists(spark, path):
         return None
-    stream = fs.open(p)
-    try:
-        return stream.readAllBytes().decode("utf-8")
-    finally:
-        stream.close()
+    return read_bytes(spark, path).decode("utf-8")
 
 
 def write_text(spark: SparkSession, path: str, text: str) -> None:
@@ -111,3 +144,26 @@ def file_status(spark: SparkSession, path: str) -> tuple | None:
         return None
     return (fs.makeQualified(st.getPath()).toString(), st.getLen(),
             st.getModificationTime())
+
+
+def list_files(spark: SparkSession, path: str,
+               pattern: str = "*") -> list[tuple[str, int]]:
+    """(qualified path, length) of the visible files that the Hadoop
+    glob ``pattern`` matches under the directory ``path``, sorted by
+    path. The glob is expanded in the JVM, so the py4j calls grow with
+    the matched files only (the names cross in one call, then two per
+    visible file for its length)."""
+    fs, p = _fs(spark, path)
+    jvm = spark._jvm
+    statuses = fs.globStatus(jvm.org.apache.hadoop.fs.Path(p, pattern))
+    if statuses is None or len(statuses) == 0:
+        return []
+    root = fs.makeQualified(p).toString().rstrip("/") + "/"
+    paths = jvm.org.apache.hadoop.fs.FileUtil.stat2Paths(statuses)
+    listed = jvm.scala.Predef.genericWrapArray(paths).mkString("\n")
+    out = []
+    for i, full in enumerate(listed.split("\n")):
+        rel = full[len(root):] if full.startswith(root) else full
+        if not any(part.startswith(("_", ".")) for part in rel.split("/")):
+            out.append((full, statuses[i].getLen()))
+    return sorted(out)

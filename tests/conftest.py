@@ -33,6 +33,29 @@ def persisted_rdds(spark) -> dict:
     return out
 
 
+def count_jobs(spark, label: str, fn) -> int:
+    """Spark jobs run by ``fn()``, counted under the job group ``label``."""
+    import time as _time
+    sc = spark.sparkContext
+    sc.setJobGroup(label, label)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the status tracker is fed by the ASYNC listener bus — poll until
+    # two consecutive reads agree, else a just-finished trailing job
+    # (broadcast build, AQE stage) lands after the first read and the
+    # pin flaps by one (observed 27 vs 28 on the margin-mine flow)
+    prev = -1
+    for _ in range(20):
+        cur = len(sc.statusTracker().getJobIdsForGroup(label))
+        if cur == prev:
+            return cur
+        prev = cur
+        _time.sleep(0.15)
+    return prev
+
+
 @pytest.fixture(scope="session")
 def spark():
     spark = get_spark("tests")

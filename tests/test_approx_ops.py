@@ -129,10 +129,13 @@ def test_ivf_recall_vs_brute_force(spark, embeddings):
     assert found == again
 
 
-def test_ivf_persisted_index_matches_inline(spark, embeddings, tmp_path):
+def test_ivf_persisted_index_matches_inline(spark, embeddings, tmp_path,
+                                            monkeypatch):
     """build_ivf_index + ivf_probe_topk must return EXACTLY the inline
-    ivf_topk result (deterministic centroids + stable tie-breaks), and
-    the probe's scan must carry the probed-cell partition filter —
+    ivf_topk result (deterministic centroids + stable tie-breaks), on
+    the driver read of the probed cells and on the Spark scan (forced
+    by a zero probed-cell byte cap), and that scan must carry the
+    probed-cell partition filter —
     the pruning that makes the persisted index an index at 100 TB."""
     queries = embeddings.where(F.col("vec_id") < 10)
     inline = {(r.query_id, r.neighbor_id, r.sim, r.rank)
@@ -141,11 +144,16 @@ def test_ivf_persisted_index_matches_inline(spark, embeddings, tmp_path):
                   n_cells=8, n_probe=4).collect()}
     path = str(tmp_path / "ivf")
     similarity.build_ivf_index(embeddings, path, n_cells=8)
-    probe = similarity.ivf_probe_topk(spark, path, queries,
-                                      k=10, n_probe=4)
     got = {(r.query_id, r.neighbor_id, r.sim, r.rank)
-           for r in probe.collect()}
+           for r in similarity.ivf_probe_topk(spark, path, queries,
+                                              k=10, n_probe=4).collect()}
     assert got == inline
+    with monkeypatch.context() as m:
+        m.setattr(similarity, "MAX_DRIVER_CELL_BYTES", 0)
+        probe = similarity.ivf_probe_topk(spark, path, queries,
+                                          k=10, n_probe=4)
+    assert {(r.query_id, r.neighbor_id, r.sim, r.rank)
+            for r in probe.collect()} == inline
     plan = probe._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan and \
         "cell" in plan.split("PartitionFilters", 1)[1][:150], \
@@ -752,17 +760,21 @@ def test_ivfpq_probe_equals_pq_topk_on_probed_cells(spark, embeddings,
 
 
 def test_ivfpq_probe_plan_prunes_partitions_and_columns(spark, embeddings,
-                                                        tmp_path):
+                                                        tmp_path,
+                                                        monkeypatch):
     """The two physical properties that make IVF-PQ an index at 100 TB:
     (1) the scans carry the probed-cell PARTITION filter (directory
     pruning), and (2) the ADC-stage scan's ReadSchema has codes but NOT
     the raw embedding column (8-byte codes per vector, not d-dim
-    floats)."""
+    floats). Checked on the Spark-scan strategy, forced by a zero
+    probed-cell byte cap."""
     path = str(tmp_path / "ivfpq")
     similarity.build_ivfpq_index(embeddings, path, n_cells=8)
     queries = embeddings.where(F.col("vec_id") < 3)
-    probe = similarity.ivfpq_probe_topk(spark, path, queries,
-                                        k=10, n_probe=2)
+    with monkeypatch.context() as m:
+        m.setattr(similarity, "MAX_DRIVER_CELL_BYTES", 0)
+        probe = similarity.ivfpq_probe_topk(spark, path, queries,
+                                            k=10, n_probe=2)
     plan = probe._jdf.queryExecution().executedPlan().toString()
     # cell-store scans are the ones carrying the cell partition column
     # (the Location path string is truncated under pytest's long tmp
@@ -782,7 +794,8 @@ def test_ivfpq_probe_plan_prunes_partitions_and_columns(spark, embeddings,
         schema = seg.split("ReadSchema", 1)[-1][:200]
         assert "embedding" not in schema, \
             "ADC scan must not deserialize raw vectors"
-    # build determinism: rebuild → identical probe answer
+    # build determinism: rebuild → identical probe answer (this one
+    # read on the driver)
     path2 = str(tmp_path / "ivfpq2")
     similarity.build_ivfpq_index(embeddings, path2, n_cells=8)
     a = sorted(map(tuple, probe.collect()))

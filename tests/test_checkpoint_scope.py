@@ -76,7 +76,7 @@ def _reconcile(spark, frames, tmp_path):
 #: op -> (call, (module, name, replacement) that raises after the first
 #: checkpoint, RDDs left pinned on return, RDDs left pinned on raise).
 #: ``unigram_encode``'s returned plan reads its token and word-type
-#: tables, which it checkpoints before its scope opens.
+#: tables, which its scope keeps beside the result on return.
 CASES = {
     "connected_components": (
         lambda s, f, t: dedup.connected_components(f.pairs),
@@ -106,7 +106,7 @@ CASES = {
         (text, "_bpe_train_driver_side", _raise), 0, 0),
     "unigram_encode": (
         lambda s, f, t: unigram.unigram_encode(f.docs),
-        (unigram, "_seed_counts", _raise), 3, 2),
+        (unigram, "_seed_counts", _raise), 3, 0),
     "train_quality_classifier": (
         lambda s, f, t: ml.train_quality_classifier(
             f.docs, driver_path_max_rows=0),

@@ -22,34 +22,13 @@ import pytest
 from pyspark.sql import functions as F
 
 from s3_elasticsearch_data_pipeline_spark.operators import similarity as sim
+from tests.conftest import count_jobs
 
 
 @pytest.fixture(scope="module")
 def emb(spark, sf_smoke):
     return spark.read.parquet(os.path.join(sf_smoke,
                                            "embeddings.parquet"))
-
-
-def _count_jobs(spark, label: str, fn) -> int:
-    import time as _time
-    sc = spark.sparkContext
-    sc.setJobGroup(label, label)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    # the status tracker is fed by the ASYNC listener bus — poll until
-    # two consecutive reads agree, else a just-finished trailing job
-    # (broadcast build, AQE stage) lands after the first read and the
-    # pin flaps by one (observed 27 vs 28 on the margin-mine flow)
-    prev = -1
-    for _ in range(20):
-        cur = len(sc.statusTracker().getJobIdsForGroup(label))
-        if cur == prev:
-            return cur
-        prev = cur
-        _time.sleep(0.15)
-    return prev
 
 
 def test_index_surface_job_counts_pinned(spark, emb, tmp_path):
@@ -63,29 +42,29 @@ def test_index_surface_job_counts_pinned(spark, emb, tmp_path):
     dims = len(emb.first()["embedding"])
 
     got = {
-        "ivf_build": _count_jobs(
+        "ivf_build": count_jobs(
             spark, "jc-ivf-build",
             lambda: sim.build_ivf_index(emb, d + "/ivf")),
-        "ivf_append": _count_jobs(
+        "ivf_append": count_jobs(
             spark, "jc-ivf-append",
             lambda: sim.ivf_index_append(spark, d + "/ivf", new_batch)),
-        "ivf_probe": _count_jobs(
+        "ivf_probe": count_jobs(
             spark, "jc-ivf-probe",
             lambda: sim.ivf_probe_topk(spark, d + "/ivf",
                                        queries).collect()),
-        "ivfpq_build": _count_jobs(
+        "ivfpq_build": count_jobs(
             spark, "jc-ivfpq-build",
             lambda: sim.build_ivfpq_index(emb, d + "/ivfpq")),
-        "ivfpq_append": _count_jobs(
+        "ivfpq_append": count_jobs(
             spark, "jc-ivfpq-append",
             lambda: sim.ivfpq_index_append(spark, d + "/ivfpq",
                                            new_batch)),
-        "ivfpq_probe": _count_jobs(
+        "ivfpq_probe": count_jobs(
             spark, "jc-ivfpq-probe",
             lambda: sim.ivfpq_probe_topk(spark, d + "/ivfpq",
                                          queries).collect()),
         # dims= must skip the dims-probe job (the r5 finding)
-        "lsh_topk": _count_jobs(
+        "lsh_topk": count_jobs(
             spark, "jc-lsh-topk",
             lambda: sim.ann_lsh_topk(emb, queries,
                                      dims=dims).collect()),
@@ -97,21 +76,24 @@ def test_index_surface_job_counts_pinned(spark, emb, tmp_path):
         # batch assign/append write (r11: the kilobyte param loads are
         # pyarrow driver reads now — ZERO Spark jobs, was 4 of the 8)
         "ivf_append": 4,
-        # query collect + cell-pruned scan + rerank collect (r10:
-        # driver-path scoring; r11: param loads off the job board,
-        # 8 -> 4)
-        "ivf_probe": 4,
+        # the query collect alone: the probed cells are read, scored
+        # and ranked on the driver and the result is a local relation
+        # that drains in no job (r10: driver-path scoring; r11: param
+        # loads off the job board, 8 -> 4; driver cell read, 4 -> 1)
+        "ivf_probe": 1,
         # training fetch (init + emptiness folded, r6) + Lloyd/PQ
         # train + encode/write + params write
         "ivfpq_build": 11,
         # emptiness probe + assign/encode/append write (r11: the
         # quantizer/codebook/meta loads left the job board, 13 -> 3)
         "ivfpq_append": 3,
-        # query collect + ADC scan + shortlist/rerank (r11: driver
-        # path — no distributed assign, no probed-set aggregate, no
-        # cells⋈tables cogroup; param loads driver-side. 20 -> 7;
-        # one cells read feeds the ADC scan and the rerank, 7 -> 6)
-        "ivfpq_probe": 6,
+        # the query collect alone (r11: driver path — no distributed
+        # assign, no probed-set aggregate, no cells⋈tables cogroup;
+        # param loads driver-side. 20 -> 7; one cells read feeds the
+        # ADC scan and the rerank, 7 -> 6; the probed cells are read
+        # on the driver, ADC scan, shortlist and rerank run in numpy
+        # and the local result drains in no job, 6 -> 1)
+        "ivfpq_probe": 1,
         # hyperplane projection + bucket join + rerank; NO dims probe
         "lsh_topk": 7,
     }
@@ -145,25 +127,25 @@ def test_two_level_index_job_counts_pinned(spark, tmp_path):
     d = str(tmp_path)
 
     got = {
-        "ivf2l_build": _count_jobs(
+        "ivf2l_build": count_jobs(
             spark, "jc2l-ivf-build",
             lambda: sim.build_ivf_index(emb, d + "/ivf", n_cells=64)),
-        "ivf2l_append": _count_jobs(
+        "ivf2l_append": count_jobs(
             spark, "jc2l-ivf-append",
             lambda: sim.ivf_index_append(spark, d + "/ivf", new_batch)),
-        "ivf2l_probe": _count_jobs(
+        "ivf2l_probe": count_jobs(
             spark, "jc2l-ivf-probe",
             lambda: sim.ivf_probe_topk(spark, d + "/ivf",
                                        queries).collect()),
-        "ivfpq2l_build": _count_jobs(
+        "ivfpq2l_build": count_jobs(
             spark, "jc2l-ivfpq-build",
             lambda: sim.build_ivfpq_index(emb, d + "/ivfpq",
                                           n_cells=64, residual=True)),
-        "ivfpq2l_append": _count_jobs(
+        "ivfpq2l_append": count_jobs(
             spark, "jc2l-ivfpq-append",
             lambda: sim.ivfpq_index_append(spark, d + "/ivfpq",
                                            new_batch)),
-        "ivfpq2l_probe": _count_jobs(
+        "ivfpq2l_probe": count_jobs(
             spark, "jc2l-ivfpq-probe",
             lambda: sim.ivfpq_probe_topk(spark, d + "/ivfpq",
                                          queries).collect()),
@@ -176,16 +158,18 @@ def test_two_level_index_job_counts_pinned(spark, tmp_path):
         # driver reads — zero jobs, 14 -> 6)
         "ivf2l_append": 6,
         # r10: driver-path probe; r11: param loads off the job board,
-        # 16 -> 8
-        "ivf2l_probe": 8,
+        # 16 -> 8; driver cell read, 8 -> 4: what is left is the
+        # filtered query frame's limit scale-up over 32 partitions
+        "ivf2l_probe": 4,
         # probe + count + sample + residual sample + encode/write +
         # meta/supers/centroids/codebooks writes
         "ivfpq2l_build": 11,
         # r11: loads driver-side, 17 -> 3
         "ivfpq2l_append": 3,
         # r11: driver path + driver-side loads, 28 -> 12; one cells
-        # read for the ADC scan and the rerank, 12 -> 10
-        "ivfpq2l_probe": 10,
+        # read for the ADC scan and the rerank, 12 -> 10; driver cell
+        # read, 10 -> 4 (the query fetch's scale-up, as ivf2l_probe)
+        "ivfpq2l_probe": 4,
     }
     assert got == pinned, {k: (got[k], pinned[k]) for k in got
                            if got[k] != pinned[k]}
@@ -194,8 +178,8 @@ def test_two_level_index_job_counts_pinned(spark, tmp_path):
 def test_indexed_margin_mine_job_counts_pinned(spark, emb, tmp_path):
     """Per-MINE-call job count for the persisted-index miner — the
     steady-state serving cost of the build-once/mine-many loop. Two
-    ivf_probe_topk passes (each: params load + cell-pruned scan +
-    rerank) + the margin stage collect; the two ivf_probe_topk passes
+    ivf_probe_topk passes (each: query fetch + driver read of the
+    probed cells) + the margin stage collect; the two ivf_probe_topk passes
     are exactly where a stray extra probe job would hide. Pinned for
     the second (warm) call so a regression that sneaks a per-call
     rebuild or re-read into the mine path fails loudly."""
@@ -209,18 +193,20 @@ def test_indexed_margin_mine_job_counts_pinned(spark, emb, tmp_path):
         sim.margin_bitext_pairs_indexed(spark, d + "/src",
                                         d + "/tgt").collect()
     mine()  # warm (codegen etc.)
-    got = _count_jobs(spark, "jc-margin-mine", mine)
-    # 2 x ivf_probe_topk (pruned scan/rerank jobs; the probe queries
-    # here are read from the OTHER index's cell store, adding its scan
-    # jobs) + the final margin collect; re-measured r10 after the
+    got = count_jobs(spark, "jc-margin-mine", mine)
+    # 2 x ivf_probe_topk (the probe queries here are read from the
+    # OTHER index's cell store, adding its scan jobs) + the final
+    # margin collect; re-measured r10 after the
     # driver-path probe landed (27/28 -> 23) and r11 after the
     # kilobyte param loads moved to pyarrow driver reads (23 -> 15),
     # and once unfiltered query scans were fetched from one partition
-    # in one job rather than by a limit scale-up (15 -> 11).
+    # in one job rather than by a limit scale-up (15 -> 11), and once
+    # the probes read their cells on the driver and return local
+    # relations (11 -> 9).
     # The ±1 band covers the known AQE stage-materialization flap —
     # the band still fails loudly on a real regression (a stray
     # per-call probe or rebuild adds ~10 jobs).
-    assert got in (10, 11, 12), got
+    assert got in (8, 9, 10), got
 
 
 def test_query_fetch_is_one_job_unless_filtered(spark, sf_smoke):
@@ -234,7 +220,7 @@ def test_query_fetch_is_one_job_unless_filtered(spark, sf_smoke):
         "vec_id long, embedding array<double>")
     assert sim._projections_over_leaf(spread.select("vec_id",
                                                     "embedding"))
-    got = _count_jobs(spark, "jc-query-fetch",
+    got = count_jobs(spark, "jc-query-fetch",
                       lambda: sim._collect_queries_if_serving_sized(spread))
     assert got == 1, got
     ids, emb = sim._collect_queries_if_serving_sized(spread)
@@ -267,7 +253,7 @@ def test_corpus_training_set_v2_job_count_pinned(spark, sf_smoke):
             spark, sf_smoke).collect()
 
     run()  # warm: codegen + broadcast warmup jobs stay out of the pin
-    got = _count_jobs(spark, "jc-corpus-v2", run)
+    got = count_jobs(spark, "jc-corpus-v2", run)
     assert 19 <= got <= 21, got
 
 
@@ -292,7 +278,7 @@ def test_curation_composite_job_counts_pinned(spark, sf_smoke):
         def run():
             qs[name](spark, sf_smoke).collect()
         run()  # warm
-        got[name] = _count_jobs(spark, f"jc-{name}", run)
+        got[name] = count_jobs(spark, f"jc-{name}", run)
     assert 7 <= got["corpus_training_set"] <= 9, got
     assert 12 <= got["graph_pagerank_trade"] <= 14, got
 
@@ -324,7 +310,7 @@ def test_pagerank_labels_its_jobs_per_phase(spark):
         restored.append(sc.getLocalProperty("spark.job.description"))
 
     try:
-        n = _count_jobs(spark, "jc-pagerank-phases", run)
+        n = count_jobs(spark, "jc-pagerank-phases", run)
     finally:
         sc.setLocalProperty("spark.job.description", None)
     assert restored == ["caller"]
@@ -335,11 +321,14 @@ def test_pagerank_labels_its_jobs_per_phase(spark):
                           "caller"}, descs
 
 
-def test_serving_calls_label_their_jobs_per_phase(spark, emb, tmp_path):
+def test_serving_calls_label_their_jobs_per_phase(spark, emb, tmp_path,
+                                                  monkeypatch):
     """Every job run inside ``ivfpq_index_append``, ``upsert_by_key``
     and ``ivfpq_probe_topk`` is described ``<call>: <phase>``, and the
-    caller's description is back in place after each call; the jobs
-    that drain the probe's returned frame run as the caller's."""
+    caller's description is back in place after each call. A probe that
+    reads its cells on the driver returns a frame that drains in no
+    job; on the Spark-scan strategy (forced by a zero probed-cell byte
+    cap) the drain's jobs run as the caller's."""
     import re
 
     from s3_elasticsearch_data_pipeline_spark.sinks.keyed import (
@@ -355,6 +344,12 @@ def test_serving_calls_label_their_jobs_per_phase(spark, emb, tmp_path):
     upsert_by_key(spark, rows, d + "/sink")
     queries = emb.orderBy("vec_id").limit(1)
     probe: list = []
+
+    def scan_probe():
+        with monkeypatch.context() as m:
+            m.setattr(sim, "MAX_DRIVER_CELL_BYTES", 0)
+            probe.append(sim.ivfpq_probe_topk(spark, d + "/ivfpq", queries))
+
     calls = {
         "ivfpq_index_append": lambda: sim.ivfpq_index_append(
             spark, d + "/ivfpq", new_batch),
@@ -363,6 +358,7 @@ def test_serving_calls_label_their_jobs_per_phase(spark, emb, tmp_path):
             d + "/sink"),
         "ivfpq_probe_topk": lambda: probe.append(sim.ivfpq_probe_topk(
             spark, d + "/ivfpq", queries)),
+        "ivfpq_probe_topk (scan)": scan_probe,
     }
     try:
         for name, call in calls.items():
@@ -374,16 +370,18 @@ def test_serving_calls_label_their_jobs_per_phase(spark, emb, tmp_path):
                 restored.append(sc.getLocalProperty(
                     "spark.job.description"))
 
-            n = _count_jobs(spark, f"jc-labels-{name}", run)
+            n = count_jobs(spark, f"jc-labels-{name}", run)
             descs = _job_descriptions(spark, f"jc-labels-{name}")
             assert restored == ["caller"], name
             assert n and len(descs) == n, (name, n, descs)
-            label = re.compile(rf"{name}: [a-z ]+$")
+            label = re.compile(rf"{name.split()[0]}: [a-z ]+$")
             assert all(x is not None and label.match(x)
                        for x in descs), descs
-        _count_jobs(spark, "jc-labels-drain", lambda: (
-            sc.setJobDescription("caller"), probe[0].collect()))
-        assert set(_job_descriptions(spark, "jc-labels-drain")) == {
+        drains = [count_jobs(spark, f"jc-labels-drain{i}", lambda: (
+            sc.setJobDescription("caller"), p.collect()))
+            for i, p in enumerate(probe)]
+        assert drains[0] == 0 and drains[1] > 0, drains
+        assert set(_job_descriptions(spark, "jc-labels-drain1")) == {
             "caller"}
     finally:
         sc.setLocalProperty("spark.job.description", None)
@@ -406,5 +404,5 @@ def test_maximal_spans_job_count_pinned(spark, sf_smoke):
             spark, sf_smoke).collect()
 
     run()  # warm
-    got = _count_jobs(spark, "jc-maximal-spans", run)
+    got = count_jobs(spark, "jc-maximal-spans", run)
     assert 131 <= got <= 135, got

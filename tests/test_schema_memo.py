@@ -12,7 +12,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 
 from s3_elasticsearch_data_pipeline_spark import tables
-from tests.test_index_job_counts import _count_jobs
+from tests.conftest import count_jobs
 
 
 def _copy(sf_dir: str, name: str, dest) -> str:
@@ -27,8 +27,8 @@ def test_repeat_load_of_unchanged_file_runs_no_job(spark, sf_smoke, tmp_path):
 
     def load():
         tables.load_table(spark, d, "documents")
-    first = _count_jobs(spark, "memo-first", load)
-    second = _count_jobs(spark, "memo-second", load)
+    first = count_jobs(spark, "memo-first", load)
+    second = count_jobs(spark, "memo-second", load)
     assert first == 1, first  # the one schema-inference job
     assert second == 0, second
     a = tables.load_table(spark, d, "documents")
@@ -61,7 +61,7 @@ def test_file_uri_and_bare_path_load_the_same(spark, sf_smoke, tmp_path):
     assert (tables._schema_key(spark, tables.table_path(d, "region"))
             == tables._schema_key(spark, "file://"
                                   + tables.table_path(d, "region")))
-    assert _count_jobs(spark, "memo-uri", lambda: tables.load_table(
+    assert count_jobs(spark, "memo-uri", lambda: tables.load_table(
         spark, "file://" + d, "region")) == 0
 
 
