@@ -340,16 +340,18 @@ def _score_pairs_arrow(matched: DataFrame) -> DataFrame:
 
 
 def serving_cap_tripped(site: str, n_rows: int, row_bytes: int,
-                        max_rows: int) -> bool:
+                        max_rows: int, max_bytes: int | None = None) -> bool:
     """THE serving-size switch: True when ``n_rows`` rows of
     ``row_bytes`` each are too many for a driver-resident path — more
-    than ``max_rows`` rows, or more than :data:`MAX_DRIVER_QUERY_BYTES`
-    in all (the byte cap applies whatever ``max_rows`` says). Every
-    call logs its outcome as a decision event
+    than ``max_rows`` rows, or more than ``max_bytes`` in all (default
+    :data:`MAX_DRIVER_QUERY_BYTES`; the byte cap applies whatever
+    ``max_rows`` says). Every call logs its outcome as a decision event
     (:func:`session.log_decision`) naming ``site`` and the cap that
     tripped."""
+    if max_bytes is None:
+        max_bytes = MAX_DRIVER_QUERY_BYTES
     cap = ("rows" if n_rows > max_rows
-           else "bytes" if n_rows * row_bytes > MAX_DRIVER_QUERY_BYTES
+           else "bytes" if n_rows * row_bytes > max_bytes
            else None)
     log_decision(site, "distributed" if cap else "driver", n_rows,
                  n_rows * row_bytes, cap)

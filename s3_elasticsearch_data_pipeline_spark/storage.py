@@ -41,9 +41,37 @@ from py4j.protocol import Py4JJavaError
 from pyspark.sql import SparkSession
 
 
+class _Jvm:
+    """The JVM classes, static methods and Hadoop conf the calls use,
+    looked up once per SparkContext: ``spark._jvm.org.apache.hadoop.fs
+    .Path`` costs one py4j round trip per name in the chain."""
+
+    def __init__(self, spark: SparkSession):
+        jvm = spark._jvm
+        self.jsc = spark._jsc
+        self.conf = spark._jsc.hadoopConfiguration()
+        self.Path = jvm.org.apache.hadoop.fs.Path
+        self.stat2Paths = jvm.org.apache.hadoop.fs.FileUtil.stat2Paths
+        self.genericWrapArray = jvm.scala.Predef.genericWrapArray
+        self.copyBytes = jvm.org.apache.hadoop.io.IOUtils.copyBytes
+        self.FileOutputStream = jvm.java.io.FileOutputStream
+
+
+_jvm_of_context: _Jvm | None = None
+
+
+def _jvm(spark: SparkSession) -> _Jvm:
+    global _jvm_of_context
+    j = _jvm_of_context
+    if j is None or j.jsc is not spark._jsc:
+        j = _jvm_of_context = _Jvm(spark)
+    return j
+
+
 def _fs(spark: SparkSession, path: str):
-    p = spark._jvm.org.apache.hadoop.fs.Path(path)
-    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
+    j = _jvm(spark)
+    p = j.Path(path)
+    return p.getFileSystem(j.conf), p
 
 
 def from_file_uri(uri: str) -> str:
@@ -68,9 +96,9 @@ def children(spark: SparkSession, path: str) -> list[str]:
         return []
     # all names in one py4j call, not three per child: py4j passes a
     # Path[] only as an Object, the erased type genericWrapArray takes
-    jvm = spark._jvm
-    paths = jvm.org.apache.hadoop.fs.FileUtil.stat2Paths(fs.listStatus(p))
-    listed = jvm.scala.Predef.genericWrapArray(paths).mkString("\n")
+    j = _jvm(spark)
+    listed = j.genericWrapArray(
+        j.stat2Paths(fs.listStatus(p))).mkString("\n")
     names = (s.rsplit("/", 1)[-1] for s in listed.split("\n") if s)
     return sorted(n for n in names if not n.startswith(("_", ".")))
 
@@ -82,7 +110,7 @@ def delete(spark: SparkSession, path: str) -> None:
 
 def rename(spark: SparkSession, src: str, dst: str) -> None:
     fs, s = _fs(spark, src)
-    d = spark._jvm.org.apache.hadoop.fs.Path(dst)
+    d = _jvm(spark).Path(dst)
     # never rename a directory onto an existing one: Hadoop moves it
     # INSIDE the target instead of replacing it
     if fs.isDirectory(s) or not fs.rename(s, d):
@@ -97,17 +125,13 @@ def read_files(spark: SparkSession, paths) -> list[bytes]:
     and Python reads them there: a payload returned through py4j costs
     one Python call per byte (a ``byte[]``) or a socket stall of about
     40 ms (a string of some hundred KB)."""
-    jvm = spark._jvm
-    path_of = jvm.org.apache.hadoop.fs.Path
-    conf = spark._jsc.hadoopConfiguration()
-    copy = jvm.org.apache.hadoop.io.IOUtils.copyBytes
-    local_file = jvm.java.io.FileOutputStream
+    j = _jvm(spark)
     out = []
     with tempfile.TemporaryDirectory(prefix="storage-read-") as tmp:
         for i, path in enumerate(paths):
-            src, local = path_of(path), os.path.join(tmp, str(i))
-            copy(src.getFileSystem(conf).open(src), local_file(local),
-                 1 << 16, True)
+            src, local = j.Path(path), os.path.join(tmp, str(i))
+            j.copyBytes(src.getFileSystem(j.conf).open(src),
+                        j.FileOutputStream(local), 1 << 16, True)
             with open(local, "rb") as f:
                 out.append(f.read())
     return out
@@ -154,13 +178,12 @@ def list_files(spark: SparkSession, path: str,
     the matched files only (the names cross in one call, then two per
     visible file for its length)."""
     fs, p = _fs(spark, path)
-    jvm = spark._jvm
-    statuses = fs.globStatus(jvm.org.apache.hadoop.fs.Path(p, pattern))
+    j = _jvm(spark)
+    statuses = fs.globStatus(j.Path(p, pattern))
     if statuses is None or len(statuses) == 0:
         return []
     root = fs.makeQualified(p).toString().rstrip("/") + "/"
-    paths = jvm.org.apache.hadoop.fs.FileUtil.stat2Paths(statuses)
-    listed = jvm.scala.Predef.genericWrapArray(paths).mkString("\n")
+    listed = j.genericWrapArray(j.stat2Paths(statuses)).mkString("\n")
     out = []
     for i, full in enumerate(listed.split("\n")):
         rel = full[len(root):] if full.startswith(root) else full

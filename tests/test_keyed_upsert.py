@@ -1,0 +1,194 @@
+"""``upsert_by_key``'s two merge plans: the keyed merge a serving-sized
+delta takes (a null-safe anti join, one shuffle by partition column)
+and the window merge over the caps (forced here by a zero
+``keyed.MAX_UPSERT_DRIVER_ROWS``). Both must leave the same sink."""
+
+from __future__ import annotations
+
+import logging
+import os
+import re
+import time
+
+import pytest
+
+from s3_elasticsearch_data_pipeline_spark.session import DECISION_LOGGER
+from s3_elasticsearch_data_pipeline_spark.sinks import keyed
+from s3_elasticsearch_data_pipeline_spark.sinks.keyed import upsert_by_key
+from tests.conftest import count_jobs, spelled
+
+STRATEGIES = ("keyed", "window")
+SCHEMA = "id string, month string, value double"
+
+
+def _force(monkeypatch, strategy: str) -> None:
+    if strategy == "window":
+        monkeypatch.setattr(keyed, "MAX_UPSERT_DRIVER_ROWS", 0)
+
+
+def _rows(spark, rows):
+    return spark.createDataFrame(rows, SCHEMA)
+
+
+def _sink(spark, path) -> list:
+    """The sink's rows as sorted (id, month, value) tuples, the month
+    read as a string."""
+    df = spark.read.schema("id string, value double, month string") \
+        .parquet(path)
+    return sorted(((r.id, r.month, r.value) for r in df.collect()),
+                  key=repr)
+
+
+@pytest.mark.parametrize("strategy", STRATEGIES)
+def test_upsert_keeps_untouched_keys_of_the_null_partition(
+        spark, tmp_path, monkeypatch, strategy, spelling="bare"):
+    """A delta in the NULL partition rewrites
+    ``__HIVE_DEFAULT_PARTITION__`` with the keys it does not carry."""
+    _force(monkeypatch, strategy)
+    path = spelled(tmp_path, spelling) + "/serving"
+    upsert_by_key(spark, _rows(spark, [
+        ("a", None, 1.0), ("b", None, 2.0), ("c", "m1", 3.0)]), path)
+    upsert_by_key(spark, _rows(spark, [("a", None, 9.0)]), path)
+    assert _sink(spark, path) == [
+        ("a", None, 9.0), ("b", None, 2.0), ("c", "m1", 3.0)]
+
+
+@pytest.mark.parametrize("strategy", STRATEGIES)
+def test_upsert_keeps_untouched_keys_of_the_null_partition_file_uri(
+        spark, tmp_path, monkeypatch, strategy):
+    test_upsert_keeps_untouched_keys_of_the_null_partition(
+        spark, tmp_path, monkeypatch, strategy, "file_uri")
+
+
+@pytest.mark.parametrize("strategy", STRATEGIES)
+def test_upsert_rewrites_a_numeric_looking_partition_in_place(
+        spark, tmp_path, monkeypatch, strategy):
+    """A string month ``"01"`` would infer back as the int 1: the merge
+    reads the sink with the incoming frame's partition type, so the
+    second upsert replaces ``month=01`` instead of writing ``month=1``
+    beside it."""
+    _force(monkeypatch, strategy)
+    path = str(tmp_path / "serving")
+    upsert_by_key(spark, _rows(spark, [("a", "01", 1.0), ("b", "01", 2.0)]),
+                  path)
+    upsert_by_key(spark, _rows(spark, [("a", "01", 5.0)]), path)
+    assert sorted(d for d in os.listdir(path)
+                  if d.startswith("month=")) == ["month=01"]
+    assert _sink(spark, path) == [("a", "01", 5.0), ("b", "01", 2.0)]
+
+
+def test_upsert_strategies_leave_the_same_sink(spark, tmp_path, monkeypatch,
+                                               caplog):
+    """One delta with an update, an insert, a key repeated (as the same
+    row), a NULL key and a key moving between two touched partitions:
+    both plans leave the same sink, each logging its decision."""
+    base = [("u1", "m1", 1.0), ("u2", "m2", 2.0), ("mv", "m1", 3.0),
+            (None, "m2", 4.0), ("x", "m3", 5.0)]
+    delta = [("u1", "m1", 10.0), ("mv", "m2", 30.0), (None, "m2", 40.0),
+             ("n1", "m1", 50.0), ("d", "m2", 60.0), ("d", "m2", 60.0)]
+    want = sorted([("u1", "m1", 10.0), ("u2", "m2", 2.0),
+                   ("mv", "m2", 30.0), (None, "m2", 40.0),
+                   ("n1", "m1", 50.0), ("d", "m2", 60.0),
+                   ("x", "m3", 5.0)], key=repr)
+    caplog.set_level(logging.INFO, logger=DECISION_LOGGER)
+    got, events = {}, {}
+    for strategy in STRATEGIES:
+        path = str(tmp_path / strategy)
+        with monkeypatch.context() as m:
+            _force(m, strategy)
+            upsert_by_key(spark, _rows(spark, base), path)
+            caplog.clear()
+            upsert_by_key(spark, _rows(spark, delta), path)
+        got[strategy] = _sink(spark, path)
+        events[strategy] = [
+            (r.path, r.rows, r.cap) for r in caplog.records
+            if r.name == DECISION_LOGGER and r.site == "keyed.upsert_by_key"]
+    assert got["keyed"] == got["window"] == want
+    assert events == {"keyed": [("driver", 6, None)],
+                      "window": [("distributed", 1, "rows")]}
+
+
+def test_upsert_byte_cap_takes_the_window_merge(spark, tmp_path, monkeypatch,
+                                                caplog):
+    """The byte cap alone switches a delta to the window merge."""
+    monkeypatch.setattr(keyed, "MAX_UPSERT_DRIVER_BYTES", 1)
+    caplog.set_level(logging.INFO, logger=DECISION_LOGGER)
+    path = str(tmp_path / "serving")
+    upsert_by_key(spark, _rows(spark, [("a", "m1", 1.0)]), path)
+    upsert_by_key(spark, _rows(spark, [("a", "m1", 2.0), ("b", "m1", 3.0)]),
+                  path)
+    assert _sink(spark, path) == [("a", "m1", 2.0), ("b", "m1", 3.0)]
+    assert [(r.path, r.cap) for r in caplog.records
+            if r.name == DECISION_LOGGER
+            and r.site == "keyed.upsert_by_key"] == [
+        ("distributed", "bytes")] * 2
+
+
+def _write_plan(spark, after: int) -> str:
+    """The physical plan of the one file write that ran as an SQL
+    execution with an id above ``after``."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    for _ in range(40):
+        execs = store.executionsList()
+        writes = [e for e in (execs.apply(i) for i in range(execs.size()))
+                  if e.executionId() > after
+                  and e.completionTime().isDefined()
+                  and "InsertIntoHadoopFsRelationCommand"
+                  in e.physicalPlanDescription()]
+        if writes:
+            assert len(writes) == 1
+            return writes[0].physicalPlanDescription()
+        time.sleep(0.1)
+    raise AssertionError("no write execution recorded")
+
+
+def _shuffle_partitionings(plan: str) -> list[str]:
+    """The partitioning of each shuffle exchange (broadcasts aside) in
+    the plan's tree, as its formatted ``Arguments``."""
+    tree = plan.split("\n\n")[0].split("== Initial Plan ==")[-1]
+    out = []
+    for node in re.findall(r"(?<!Broadcast)Exchange \((\d+)\)", tree):
+        out.append(re.search(rf"^\({node}\) Exchange\n(?:.*\n)*?"
+                             r"Arguments: (.*)$", plan, re.M).group(1))
+    return out
+
+
+def _last_execution_id(spark) -> int:
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    return max((execs.apply(i).executionId() for i in range(execs.size())),
+               default=-1)
+
+
+@pytest.mark.parametrize("strategy", STRATEGIES)
+def test_upsert_merge_write_shuffles_once_by_partition(
+        spark, tmp_path, monkeypatch, strategy):
+    """The keyed merge's write holds one shuffle exchange, hash
+    partitioned on the partition column; the window merge's also
+    shuffles by key."""
+    _force(monkeypatch, strategy)
+    path = str(tmp_path / "serving")
+    upsert_by_key(spark, _rows(spark, [(f"k{i}", f"m{i % 3}", float(i))
+                                       for i in range(30)]), path)
+    before = _last_execution_id(spark)
+    upsert_by_key(spark, _rows(spark, [("k1", "m1", 9.0), ("z", "m2", 1.0)]),
+                  path)
+    shuffles = _shuffle_partitionings(_write_plan(spark, before))
+    if strategy == "keyed":
+        assert len(shuffles) == 1, shuffles
+        assert shuffles[0].startswith("hashpartitioning(month#"), shuffles
+    else:
+        assert any(s.startswith("hashpartitioning(id#") for s in shuffles)
+        assert shuffles[0].startswith("hashpartitioning(month#"), shuffles
+
+
+def test_serving_sized_upsert_job_count(spark, tmp_path):
+    """A warm serving-sized upsert into an existing sink runs the delta
+    facts collect, the sink's schema read and the merge write's broadcast,
+    shuffle map and write jobs: 5 (the window merge ran 6)."""
+    path = str(tmp_path / "serving")
+    upsert_by_key(spark, _rows(spark, [(f"k{i}", f"m{i % 3}", float(i))
+                                       for i in range(30)]), path)
+    delta = _rows(spark, [("k1", "m1", 9.0), ("z", "m2", 1.0)])
+    upsert_by_key(spark, delta, path)
+    assert count_jobs(spark, "keyed-upsert-jobs",
+                      lambda: upsert_by_key(spark, delta, path)) == 5
