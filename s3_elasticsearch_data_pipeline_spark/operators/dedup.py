@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from s3_elasticsearch_data_pipeline_spark import offload
 from s3_elasticsearch_data_pipeline_spark.functions.textfns import (
     tokens, word_ngrams_from_tokens)
 from s3_elasticsearch_data_pipeline_spark.tables import (
@@ -642,14 +643,6 @@ def embedding_near_dup_pairs(embeddings: DataFrame,
             .applyInPandas(_blocked_pair_kernel(threshold), _PAIR_SCHEMA))
 
 
-#: Below this pair count the iterative loop's scheduled jobs (one
-#: join+agg round per graph-diameter step, plus the checkpoint jobs)
-#: are pure overhead next to one 16-byte-per-pair Arrow collect — the
-#: same small-side auto-switch as the GD/BPE trainers. 1M pairs is
-#: ~16 MB on the driver; above it, nothing pair-sized leaves the
-#: executors.
-DRIVER_CC_MAX_PAIRS = 1_000_000
-
 #: Rows per contraction slab in the blocked within-cell pair kernel
 #: (embedding_blocked_near_dup): peak task memory is TWO
 #: block × cell_n float64 slabs live at once (the sims slab plus the
@@ -658,17 +651,17 @@ DRIVER_CC_MAX_PAIRS = 1_000_000
 _PAIR_BLOCK_ROWS = 256
 
 
-def _driver_union_find(spark, pdf, id_type: str,
+def _driver_union_find(spark, pairs, id_type: str,
                        drop_self: bool) -> DataFrame:
-    """Union-find (path-halving) over a collected pair frame; returns
+    """Union-find (path-halving) over a fetched Arrow pair table; returns
     (doc_id, cluster_id=min reachable id) with the same contract as the
     distributed fixpoints. ``drop_self``: the star variant excludes
     nodes that only appear in self-pairs; plain propagation keeps them
     (labeled as their own singleton cluster)."""
     import numpy as np
     import pandas as pd
-    a = pdf["doc_id_a"].to_numpy()
-    b = pdf["doc_id_b"].to_numpy()
+    a = pairs.column("doc_id_a").to_numpy()
+    b = pairs.column("doc_id_b").to_numpy()
     if drop_self:
         keep = a != b
         a, b = a[keep], b[keep]
@@ -699,8 +692,7 @@ def _driver_union_find(spark, pdf, id_type: str,
     return spark.createDataFrame(out, schema=schema)
 
 
-def connected_components(pairs: DataFrame, max_iter: int = 25,
-                         driver_path_max_pairs: int = DRIVER_CC_MAX_PAIRS,
+def connected_components(pairs: DataFrame, max_iter: int = 25
                          ) -> DataFrame:
     """Near-dup clusters from a pair list: connected components, one
     row per non-singleton document, ``cluster_id`` = min doc_id
@@ -719,13 +711,14 @@ def connected_components(pairs: DataFrame, max_iter: int = 25,
     cost model for dedup-shaped graphs.
 
     Two physical strategies behind one logical operator (the trainer
-    auto-switch pattern): below ``driver_path_max_pairs`` the pair list
-    is collected once via Arrow and resolved by driver-side union-find
-    — the iterative loop's ~diameter scheduled jobs are pure overhead
-    next to a ≤16 MB collect. Above the cap, the distributed fixpoint
-    runs unchanged and nothing pair-sized leaves the executors. The
-    path probe and the driver-path data acquisition are ONE job
-    (``limit(cap+1).toPandas()``); both paths are equivalence-tested.
+    auto-switch pattern): below ``offload.DRIVER_CC_MAX_PAIRS`` the
+    pair list is fetched once via Arrow and resolved by driver-side
+    union-find — the iterative loop's ~diameter scheduled jobs are pure
+    overhead next to a ≤16 MB collect. Above the cap, the distributed
+    fixpoint runs unchanged and nothing pair-sized leaves the
+    executors. The path probe and the driver-path data acquisition are
+    ONE unshuffled one-task job (:func:`offload.fetch`); both paths are
+    equivalence-tested.
     """
     # Materialize the incoming pair plan ONCE before bidirecting it:
     # callers hand in an expensive pipeline (e.g. the full ngram-Jaccard
@@ -743,8 +736,9 @@ def connected_components(pairs: DataFrame, max_iter: int = 25,
         if dts["doc_id_a"] == dts["doc_id_b"]:  # mixed-width ids: the driver
             # path would narrow one side — stay distributed (coerces via
             # least/greatest like any join)
-            head = pairs.limit(driver_path_max_pairs + 1).toPandas()
-            if len(head) <= driver_path_max_pairs:
+            head, _ = offload.fetch(pairs, "dedup.connected_components",
+                                    offload.DRIVER_CC_MAX_PAIRS)
+            if head is not None:
                 return _driver_union_find(spark, head, dts["doc_id_a"],
                                           drop_self=False)
         edges = (pairs.select(F.col("doc_id_a").alias("src"),
@@ -858,9 +852,8 @@ def _symmetrize(e: DataFrame) -> DataFrame:
                                   F.col("a").alias("b")))
 
 
-def connected_components_star(pairs: DataFrame, max_iter: int = 20,
-                              driver_path_max_pairs: int =
-                              DRIVER_CC_MAX_PAIRS) -> DataFrame:
+def connected_components_star(pairs: DataFrame, max_iter: int = 20
+                              ) -> DataFrame:
     """Connected components via alternating large-star / small-star
     contractions (Kiveris et al., SoCC 2014): converges in O(log^2 n)
     rounds on ANY graph shape, vs graph-diameter rounds for plain label
@@ -873,7 +866,7 @@ def connected_components_star(pairs: DataFrame, max_iter: int = 20,
     equivalence property-tested on adversarial graph shapes.
 
     Same small-side auto-switch as ``connected_components``: below
-    ``driver_path_max_pairs`` one Arrow collect + driver union-find
+    ``offload.DRIVER_CC_MAX_PAIRS`` one Arrow fetch + driver union-find
     replaces the round-per-log² scheduled jobs; the distributed
     contraction is the unchanged scale path. (Star drops self-pair-only
     nodes — mirrored by ``drop_self=True``.)
@@ -886,8 +879,10 @@ def connected_components_star(pairs: DataFrame, max_iter: int = 20,
                  .localCheckpoint(eager=True))
         dts = dict(pairs.dtypes)
         if dts["doc_id_a"] == dts["doc_id_b"]:
-            head = pairs.limit(driver_path_max_pairs + 1).toPandas()
-            if len(head) <= driver_path_max_pairs:
+            head, _ = offload.fetch(pairs,
+                                    "dedup.connected_components_star",
+                                    offload.DRIVER_CC_MAX_PAIRS)
+            if head is not None:
                 return _driver_union_find(spark, head, dts["doc_id_a"],
                                           drop_self=True)
         edges = (pairs.select(F.col("doc_id_a").alias("a"),

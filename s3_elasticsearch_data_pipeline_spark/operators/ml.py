@@ -35,6 +35,7 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from s3_elasticsearch_data_pipeline_spark import offload
 from s3_elasticsearch_data_pipeline_spark.operators.quantizer import (
     _Quantizer, _kmeans_centroids, _quantizer_cells_fn)
 from s3_elasticsearch_data_pipeline_spark.session import checkpoint_scope
@@ -65,13 +66,6 @@ def quality_features(documents: DataFrame) -> DataFrame:
         ((n_chars - F.size(toks) + 1) / n_toks).alias("mean_word_len"))
 
 
-#: Below this row count the 2×iters scheduled jobs of the distributed
-#: GD loop are pure overhead next to one (n × 6 doubles ≤ ~48 MB)
-#: Arrow collect — the same small-side auto-switch as PageRank's
-#: broadcast limit. Above it, nothing feature-sized ever leaves the
-#: executors.
-DRIVER_GD_MAX_ROWS = 1_000_000
-
 #: Stage salt for the domain-reweight admission LCG (r10). The domain
 #: stage and the source-mixture stage (text.dataset_mixture) both hash
 #: doc_id; UNSALTED they draw the SAME uniform u per doc, so a pipeline
@@ -85,9 +79,7 @@ DOMAIN_LCG_SALT = 524_287
 
 
 def train_quality_classifier(documents: DataFrame, iters: int = 15,
-                             lr: float = 0.5,
-                             driver_path_max_rows: int = DRIVER_GD_MAX_ROWS,
-                             ) -> DataFrame:
+                             lr: float = 0.5) -> DataFrame:
     """Full-batch GD logistic regression over the feature frame.
 
     Returns one row per feature: (feature, weight) plus a final
@@ -100,7 +92,8 @@ def train_quality_classifier(documents: DataFrame, iters: int = 15,
     feature-frame size (feature EXTRACTION is distributed either way —
     it is the only data-sized pass):
 
-    * **distributed** (rows > ``driver_path_max_rows``): one scan +
+    * **distributed** (rows > ``offload.DRIVER_GD_MAX_ROWS``, decision
+      site ``ml.train_quality_classifier``): one scan +
       one 1-row DECIMAL aggregate per iteration; the driver holds only
       the weight vector.
     * **driver** (small frames): the 2×iters near-empty scheduled jobs
@@ -122,7 +115,8 @@ def train_quality_classifier(documents: DataFrame, iters: int = 15,
     feats = quality_features(documents).select("doc_id", "y", *FEATURES)
     if n_row == 0:
         return spark.createDataFrame([], "feature string, weight double")
-    if n_row <= driver_path_max_rows:
+    if offload.decide("ml.train_quality_classifier", n_row, 0,
+                      ("rows", n_row, offload.DRIVER_GD_MAX_ROWS)) is None:
         return _train_driver_side(spark, feats.toPandas(), iters, lr)
     with checkpoint_scope(spark):
         feats = feats.localCheckpoint(eager=True)

@@ -30,14 +30,13 @@ import hashlib
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from s3_elasticsearch_data_pipeline_spark import storage
+from s3_elasticsearch_data_pipeline_spark import offload, storage
 from s3_elasticsearch_data_pipeline_spark.functions.vector import cosine
 from s3_elasticsearch_data_pipeline_spark.operators.quantizer import (
     _init_rows, _load_quantizer, _q_nearest_cells, _quantizer_cells_fn,
     _read_param_table, _read_parquet_files, _train_quantizer,
     _write_centroid_tables, auto_n_cells)
-from s3_elasticsearch_data_pipeline_spark.session import (
-    job_phases, log_decision)
+from s3_elasticsearch_data_pipeline_spark.session import job_phases
 
 
 def _rademacher_plane(plane_id: int, dims: int) -> list[float]:
@@ -141,7 +140,10 @@ def ann_lsh_topk(embeddings: DataFrame, queries: DataFrame,
 
     cand = with_buckets(embeddings, "neighbor_id", "cand_vec")
     qry = with_buckets(queries, "query_id", "query_vec")
-    hint = _query_join_hint(queries)
+    # a forced broadcast of a corpus-sized query side would OOM the
+    # driver: over the row cap the planner picks a shuffle join
+    _, cap = _fetch_queries(queries, "similarity.ann_lsh_topk")
+    hint = (lambda d: d) if cap == "rows" else F.broadcast
     matched = (cand.join(hint(qry), ["tbl", "bucket"])
                .where(F.col("neighbor_id") != F.col("query_id"))
                .select("query_id", "neighbor_id", "query_vec", "cand_vec")
@@ -339,106 +341,36 @@ def _score_pairs_arrow(matched: DataFrame) -> DataFrame:
         .otherwise(F.col("sim")))
 
 
-def serving_cap_tripped(site: str, n_rows: int, row_bytes: int,
-                        max_rows: int, max_bytes: int | None = None) -> bool:
-    """THE serving-size switch: True when ``n_rows`` rows of
-    ``row_bytes`` each are too many for a driver-resident path — more
-    than ``max_rows`` rows, or more than ``max_bytes`` in all (default
-    :data:`MAX_DRIVER_QUERY_BYTES`; the byte cap applies whatever
-    ``max_rows`` says). Every call logs its outcome as a decision event
-    (:func:`session.log_decision`) naming ``site`` and the cap that
-    tripped."""
-    if max_bytes is None:
-        max_bytes = MAX_DRIVER_QUERY_BYTES
-    cap = ("rows" if n_rows > max_rows
-           else "bytes" if n_rows * row_bytes > max_bytes
-           else None)
-    log_decision(site, "distributed" if cap else "driver", n_rows,
-                 n_rows * row_bytes, cap)
-    return cap is not None
-
-
-def collect_if_serving_sized(frame: DataFrame, site: str, row_bytes,
-                             max_rows: int | None = None):
-    """THE serving-size fetch: ONE ``limit(max_rows + 1)`` collect of
-    ``frame`` is both the driver-side fetch and the over-cap switch
-    (:func:`serving_cap_tripped`, logged at ``site``). Returns the
-    collected rows, or None when the frame is over the caps and the
-    caller keeps its distributed plan. ``max_rows`` defaults to
-    :data:`MAX_DRIVER_QUERIES`; ``row_bytes`` is the driver bytes of
-    one row, or a function of the collected rows when only they tell
-    (:func:`_embedding_row_bytes`).
-
-    Cap semantics (documented per the r10 advice): the cap counts RAW
-    ROWS of the frame — ``limit(cap+1)`` — not distinct ids; a query
-    frame with duplicate ids just over the cap takes the distributed
-    plan (results are identical either way, tested). On top of the row
-    cap, a BYTE cap bounds what the driver path ships in task closures:
-    rows × row bytes must stay under :data:`MAX_DRIVER_QUERY_BYTES` —
-    the row cap alone let the closure grow linearly with embedding
-    dim (r11, VERDICT item 7).
-
-    How many rows reach the driver is the caller's to bound: a limit
-    collect scans one partition, then scales up by rounds, and each
-    partition of a round sends up to ``max_rows + 1`` rows."""
-    if max_rows is None:
-        max_rows = MAX_DRIVER_QUERIES
-    rows = frame.limit(max_rows + 1).collect()
-    if callable(row_bytes):
-        row_bytes = row_bytes(rows)
-    if serving_cap_tripped(site, len(rows), row_bytes, max_rows):
-        return None
-    return rows
-
-
-def _embedding_row_bytes(rows) -> int:
-    """Driver bytes of one collected query row: its embedding as
+def _embedding_row_bytes(table) -> int:
+    """Driver bytes of one fetched query row: its embedding as
     doubles."""
-    return 8 * len(rows[0]["embedding"] or ()) if rows else 0
+    emb = table.column("embedding")
+    return 8 * len((emb[0].as_py() if len(emb) else None) or ())
 
 
-def _projections_over_leaf(df: DataFrame) -> bool:
-    """True when ``df``'s optimized plan is projections over one leaf
-    relation: no filter, join or aggregate can discard rows, so every
-    row the scan reads is a row the frame returns."""
-    node = df._jdf.queryExecution().optimizedPlan()
-    while node.children().size() == 1 and node.nodeName() == "Project":
-        node = node.children().apply(0)
-    return node.children().size() == 0
+def _fetch_queries(queries: DataFrame, site: str):
+    """The serving fetch of a query frame (:func:`offload.fetch` under
+    :data:`offload.MAX_DRIVER_QUERIES` rows and
+    :data:`offload.MAX_DRIVER_QUERY_BYTES` of embedding payload):
+    ``((ids, emb), None)`` as numpy arrays, or ``(None, cap)`` when the
+    frame is over a cap and the caller keeps its distributed plan."""
+    import numpy as np
+    table, cap = offload.fetch(
+        queries.select("vec_id", "embedding"), site,
+        offload.MAX_DRIVER_QUERIES, offload.MAX_DRIVER_QUERY_BYTES,
+        _embedding_row_bytes)
+    if table is None:
+        return None, cap
+    return (np.asarray(table.column("vec_id").to_pylist(), dtype=np.int64),
+            np.array(table.column("embedding").to_pylist(),
+                     dtype=np.float64)), None
 
 
 def _collect_queries_if_serving_sized(queries: DataFrame):
-    """Cap-guarded driver fetch of a query frame — the
-    ``brute_force_topk_arrow`` acquisition pattern shared by the IVF
-    probe paths: ONE ``limit(cap+1)`` collect doubles as the emptiness
-    probe and the over-cap strategy switch. Returns ``(ids, emb)``
-    numpy arrays, or None when the frame exceeds
-    :data:`MAX_DRIVER_QUERIES` rows or
-    :data:`MAX_DRIVER_QUERY_BYTES` of embedding payload (callers then
-    keep the fully distributed join plan).
-
-    A limit collect scans one partition, then scales up, so a one-row
-    request spread over several partitions costs two or more jobs. A
-    frame that is projections over one relation reads only the rows it
-    returns, so it is coalesced to one partition first: one job, and
-    the single task stops after ``cap+1`` rows. A filtered (selective)
-    frame keeps the scale-up, which scans its partitions in parallel
-    instead of serially in one task."""
-    import numpy as np
-    frame = queries.select("vec_id", "embedding")
-    if _projections_over_leaf(frame):
-        frame = frame.coalesce(1)
-    rows = collect_if_serving_sized(frame, "similarity.serving_queries",
-                                    _embedding_row_bytes)
-    if rows is None:
-        return None
-    if not rows:
-        return (np.empty(0, dtype=np.int64),
-                np.empty((0, 0), dtype=np.float64))
-    ids = np.array([r["vec_id"] for r in rows], dtype=np.int64)
-    emb = np.array([list(r["embedding"]) for r in rows],
-                   dtype=np.float64)
-    return ids, emb
+    """The IVF probes' query fetch (decision site
+    ``similarity.serving_queries``): ``(ids, emb)`` numpy arrays, or
+    None over the caps."""
+    return _fetch_queries(queries, "similarity.serving_queries")[0]
 
 
 def _local_topk(spark, query_id=(), neighbor_id=(), sim=(), null=None,
@@ -514,28 +446,6 @@ def _column_array(col):
     return col.to_numpy()
 
 
-#: Listed bytes of the probed cells' files above which a serving-sized
-#: probe scans them with Spark instead of reading them on the driver.
-#: Measured (4 cores, local FS, 16-cell indexes of 5k-200k random
-#: 64-dim vectors, warm probe + drain, median of 3): the driver read
-#: beat the Spark scan at every size up to 104 MB while the pairs
-#: stayed under the pair cap's crossover; at 26 MB and one query it
-#: took 0.19 s (IVF) and 0.25 s (IVF-PQ) against 0.55 s and 1.45 s.
-#: So this cap bounds driver memory, not time: at 26 MB the probe's
-#: Python heap peaked at 30-33 MB.
-MAX_DRIVER_CELL_BYTES = 32 << 20
-
-#: (query, candidate) pairs a driver read may score: the sum over the
-#: probed cells of the queries probing the cell times its rows. The
-#: IVF scoring materialises every pair (about 100 B of heap each), so
-#: it sets the bound: in the same measurement its driver read won at
-#: 0.8 M pairs (0.66 s against 0.98 s for the scan), tied at 1.6 M and
-#: lost at 2.6 M (1.83 s against 1.52 s) and 5.1 M (3.1 s against
-#: 2.1 s, 514 MB of heap). IVF-PQ, whose ADC scan keeps only a
-#: shortlist per (query, cell), still won at 5.1 M pairs.
-MAX_DRIVER_PROBE_PAIRS = 1_000_000
-
-
 def _read_probed_cells(spark, path: str, cell_queries: dict, columns,
                        site: str):
     """Driver read of the probed cells of the index at ``path``
@@ -546,29 +456,27 @@ def _read_probed_cells(spark, path: str, cell_queries: dict, columns,
     One glob lists the probed ``cells/cell=C/`` and the stream's
     ``cells/epoch=E/cell=C/`` files alike (:func:`storage.list_files`),
     so the listing grows with the probed files, not with the index.
-    Two caps send the probe to the Spark scan: the listed bytes over
-    :data:`MAX_DRIVER_CELL_BYTES`, judged before anything is read, and
-    the read rows' (query, candidate) pairs over
-    :data:`MAX_DRIVER_PROBE_PAIRS`. The decision is logged at ``site``
-    (its ``rows`` are the probed files, ``cap`` the one that tripped)."""
+    Two caps send the probe to the Spark scan
+    (:func:`offload.decide`, logged at ``site``; its ``rows`` are the
+    probed files): the listed bytes over
+    :data:`offload.MAX_DRIVER_CELL_BYTES`, judged before anything is
+    read, and the read rows' (query, candidate) pairs over
+    :data:`offload.MAX_DRIVER_PROBE_PAIRS`."""
     import numpy as np
     alts = ",".join(f"cell={c}" for c in sorted(cell_queries))
     files = [(f, size, int(f.rsplit("/", 2)[-2][len("cell="):]))
              for f, size in storage.list_files(
                  spark, path + "/cells", "{{%s},*/{%s}}/*" % (alts, alts))]
     nbytes = sum(size for _, size, _ in files)
-    cap = "bytes" if nbytes > MAX_DRIVER_CELL_BYTES else None
     tables = []
-    if cap is None:
+    if nbytes <= offload.MAX_DRIVER_CELL_BYTES:
         tables = list(zip(
             [cell for *_, cell in files],
             _read_parquet_files(spark, [f for f, *_ in files], columns)))
-        pairs = sum(len(cell_queries[cell]) * t.num_rows
-                    for cell, t in tables)
-        cap = "pairs" if pairs > MAX_DRIVER_PROBE_PAIRS else None
-    log_decision(site, "distributed" if cap else "driver", len(files),
-                 nbytes, cap)
-    if cap:
+    pairs = sum(len(cell_queries[cell]) * t.num_rows for cell, t in tables)
+    if offload.decide(site, len(files), nbytes,
+                      ("bytes", nbytes, offload.MAX_DRIVER_CELL_BYTES),
+                      ("pairs", pairs, offload.MAX_DRIVER_PROBE_PAIRS)):
         return None
     tables = [(cell, t) for cell, t in tables if t.num_rows]
     if not tables:
@@ -707,10 +615,9 @@ def ivf_probe_topk(spark, path: str, queries: DataFrame, k: int = 10,
     Three physical strategies behind one logical result, all
     bit-identical (equivalence-tested):
 
-    1. driver read: a serving-sized query batch (:data:`MAX_DRIVER_QUERIES`
-       rows and :data:`MAX_DRIVER_QUERY_BYTES`) is collected, assigned
-       its cells on the driver, and when the probed cells fit
-       :data:`MAX_DRIVER_CELL_BYTES` and :data:`MAX_DRIVER_PROBE_PAIRS`
+    1. driver read: a serving-sized query batch (the ``offload`` caps
+       of site ``similarity.serving_queries``) is fetched, assigned its
+       cells on the driver, and when the probed cells fit the cell caps
        they are read on the driver (:func:`_read_probed_cells`), scored
        by the :func:`_cell_pair_sims` kernel and ranked by
        :func:`_ranked_topk_local`. The result is a local relation:
@@ -756,11 +663,6 @@ def ivf_probe_topk(spark, path: str, queries: DataFrame, k: int = 10,
     query_cells = (queries.select("vec_id", "embedding")
                    .mapInPandas(_quantizer_cells_fn(q, n_probe),
                                 "vec_id long, cell int"))
-    qry = (query_cells
-           .join(queries.select(F.col("vec_id"),
-                                F.col("embedding").cast("array<double>")
-                                .alias("query_vec")), "vec_id")
-           .select(F.col("vec_id").alias("query_id"), "cell", "query_vec"))
     # ONE scalar-aggregate job yields the probed-cell union
     # (≤ n_cells ints → a STATIC partition filter on the index scan).
     # No eager checkpoint: a probe is a per-request call and must pin
@@ -774,13 +676,26 @@ def ivf_probe_topk(spark, path: str, queries: DataFrame, k: int = 10,
             .where(F.col("cell").isin(probed))
             .select(F.col("vec_id").alias("neighbor_id"), "cell",
                     F.col("embedding").alias("cand_vec")))
-    # NO distinct: each corpus vector lives in exactly ONE cell
-    # (take=1 assignment) and a query probes DISTINCT cells, so
-    # (query, neighbor) pairs are unique by construction — the oracle
-    # joins without DISTINCT and hash-matches. The r8 profile measured
-    # the old defensive distinct at ~3 s/direction at sf0.1: it
-    # shuffled rows carrying BOTH 64-dim vectors and row-compared
-    # array columns, for zero semantic effect.
+    return _cell_join_topk(cand, queries, query_cells, k)
+
+
+def _cell_join_topk(cand: DataFrame, queries: DataFrame,
+                    query_cells: DataFrame, k: int) -> DataFrame:
+    """The distributed IVF rerank: the probed candidates (neighbor_id,
+    cell, cand_vec) join the queries on their probed cells
+    (``query_cells``: vec_id, cell), are scored by the Arrow kernel and
+    ranked. NO distinct: each corpus vector lives in exactly ONE cell
+    (take=1 assignment) and a query probes DISTINCT cells, so (query,
+    neighbor) pairs are unique by construction — the oracle joins
+    without DISTINCT and hash-matches. The r8 profile measured the old
+    defensive distinct at ~3 s/direction at sf0.1: it shuffled rows
+    carrying BOTH 64-dim vectors and row-compared array columns, for
+    zero semantic effect."""
+    qry = (query_cells
+           .join(queries.select(F.col("vec_id"),
+                                F.col("embedding").cast("array<double>")
+                                .alias("query_vec")), "vec_id")
+           .select(F.col("vec_id").alias("query_id"), "cell", "query_vec"))
     matched = (cand.join(qry, "cell")
                .where(F.col("neighbor_id") != F.col("query_id"))
                .select("query_id", "neighbor_id", "query_vec",
@@ -834,18 +749,7 @@ def ivf_topk(embeddings: DataFrame, queries: DataFrame, k: int = 10,
     query_cells = (queries.select("vec_id", "embedding")
                    .mapInPandas(_quantizer_cells_fn(q, n_probe),
                                 "vec_id long, cell int"))
-    qry = (query_cells
-           .join(queries.select(F.col("vec_id"),
-                                F.col("embedding").cast("array<double>")
-                                .alias("query_vec")), "vec_id")
-           .select(F.col("vec_id").alias("query_id"), "cell", "query_vec"))
-
-    # no distinct — unique by construction, see ivf_probe_topk
-    matched = (cand.join(qry, "cell")
-               .where(F.col("neighbor_id") != F.col("query_id"))
-               .select("query_id", "neighbor_id", "query_vec",
-                       "cand_vec"))
-    return _ranked_topk(_score_pairs_arrow(matched), k)
+    return _cell_join_topk(cand, queries, query_cells, k)
 
 
 def _build_both_sides(spark, build_fwd, build_bwd):
@@ -933,7 +837,7 @@ def margin_bitext_pairs(embeddings: DataFrame, k: int = 4,
 
     Scale shape: this oracle-scale form scores the full A×B product —
     right for evaluation corpora (the TARGET side collects to the
-    driver under ``MAX_DRIVER_QUERIES`` and ships in the kernel
+    driver under ``offload.MAX_DRIVER_QUERIES`` and ships in the kernel
     closure, the brute_force_topk_arrow pattern; past the cap it falls
     back to the JVM cross join, correct at any size). The 100 TB
     mining path is :func:`margin_bitext_pairs_ann` — the SAME margin
@@ -962,7 +866,9 @@ def margin_bitext_pairs(embeddings: DataFrame, k: int = 4,
         F.col("vec_id").alias("tgt_id"),
         F.col("embedding").alias("__tv"))
     n_tgt = b.count()
-    if 0 < n_tgt <= MAX_DRIVER_QUERIES:
+    if n_tgt and offload.decide(
+            "similarity.margin_bitext_pairs", n_tgt, 0,
+            ("rows", n_tgt, offload.MAX_DRIVER_QUERIES)) is None:
         tgt = b.collect()
         t_ids = np.array([r["tgt_id"] for r in tgt], dtype=np.int64)
         Y = np.stack([np.asarray(r["__tv"], dtype=np.float64)
@@ -1241,38 +1147,8 @@ def quantize_embeddings(embeddings: DataFrame) -> DataFrame:
                         / F.size(emb), 9).alias("mse")))
 
 
-#: Above this query count the Arrow/PQ search paths refuse to funnel
-#: the query frame through the driver: a "query set" is serving-sized
-#: by contract; a corpus-sized frame would silently become a driver
-#: memory bottleneck (the same failure mode PageRank's broadcast limit
-#: guards against).
-MAX_DRIVER_QUERIES = 10_000
-
-#: Byte twin of the row cap (r11): the driver-resident paths ship the
-#: collected query matrix in task closures, and rows × dim × 8 grows
-#: linearly with embedding dim while the row cap stands still. Sized
-#: so the standard 64-dim serving batch keeps its exact r10 behavior
-#: (10_000 × 64 × 8 = 5.12 MB) and anything wider flips to the
-#: distributed plan proportionally earlier.
-MAX_DRIVER_QUERY_BYTES = MAX_DRIVER_QUERIES * 64 * 8
-
-
-def _query_join_hint(queries: DataFrame):
-    """Broadcast the query side only when it is serving-sized: one
-    cheap ``limit(cap+1)`` probe decides. A forced broadcast of a
-    corpus-sized query frame would OOM the driver (the r2-review
-    failure mode the PQ/Arrow paths already guard); above the cap the
-    join runs un-hinted — the optimizer/AQE picks a shuffle join and
-    the plan stays executor-only. Returns a function applied to the
-    query frame at join time."""
-    n = queries.limit(MAX_DRIVER_QUERIES + 1).count()
-    return F.broadcast if n <= MAX_DRIVER_QUERIES else (lambda d: d)
-
-
 def brute_force_topk_arrow(embeddings: DataFrame, queries: DataFrame,
-                           k: int = 10,
-                           max_driver_queries: int = MAX_DRIVER_QUERIES
-                           ) -> DataFrame:
+                           k: int = 10) -> DataFrame:
     """Arrow-vectorized exact top-k: the corpus streams through
     mapInPandas in batches and each batch scores ALL queries with one
     numpy matmul (queries broadcast via closure — they are the small
@@ -1287,7 +1163,8 @@ def brute_force_topk_arrow(embeddings: DataFrame, queries: DataFrame,
     partial top-k)s, so the shuffle carries ≤ k rows per (batch,
     query), not the full score matrix.
 
-    Query frames above ``max_driver_queries`` AUTO-SWITCH to the fully
+    Query frames over the serving caps (:func:`offload.fetch`, site
+    ``similarity.brute_force_topk_arrow``) AUTO-SWITCH to the fully
     distributed :func:`brute_force_topk` (broadcast-join, no driver
     collect) — same exact answer under the same (sim desc, neighbor_id)
     total order, different physical strategy; mirrors the PageRank
@@ -1301,22 +1178,14 @@ def brute_force_topk_arrow(embeddings: DataFrame, queries: DataFrame,
     boundary ties arbitrarily per batch).
     """
     import numpy as np
-    # one action guards AND fetches: collect cap+1 rows — if the extra
-    # row shows up the frame is over-sized and we switch strategies
-    # without ever materializing it driver-side (a separate count()
-    # would execute the query plan twice)
-    q_rows = collect_if_serving_sized(
-        queries.select("vec_id", "embedding").orderBy("vec_id"),
-        "similarity.brute_force_topk_arrow", _embedding_row_bytes,
-        max_driver_queries)
-    if q_rows is None:
+    fetched, _ = _fetch_queries(queries.orderBy("vec_id"),
+                                "similarity.brute_force_topk_arrow")
+    if fetched is None:
         return brute_force_topk(embeddings, queries, k)
-    if not q_rows:
+    q_ids, q_mat = fetched
+    if not len(q_ids):
         return embeddings.sparkSession.createDataFrame(
             [], "query_id long, neighbor_id long, sim double, rank int")
-    q_ids = np.array([r["vec_id"] for r in q_rows])
-    q_mat = np.array([list(r["embedding"]) for r in q_rows],
-                     dtype=np.float64)
     q_unit = q_mat / np.linalg.norm(q_mat, axis=1, keepdims=True)
     kk = k
 
@@ -1656,7 +1525,6 @@ def _pq_adc_candidates_distributed(codes_df, queries, books, m: int,
 def pq_topk(embeddings: DataFrame, queries: DataFrame, k: int = 10,
             m: int = 8, k_codes: int = 16, train_sample: int = 256,
             iters: int = 8, rerank: int = 50,
-            max_driver_queries: int = MAX_DRIVER_QUERIES,
             _books=None) -> DataFrame:
     """Asymmetric-distance (ADC) approximate top-k over PQ codes with
     an exact rerank stage — the canonical two-phase PQ search: each
@@ -1670,7 +1538,8 @@ def pq_topk(embeddings: DataFrame, queries: DataFrame, k: int = 10,
     n_queries × rerank rows of raw vectors — the full corpus is read
     once as 8-byte codes, never as d-dim floats.
 
-    A serving-sized query set (≤ ``max_driver_queries``) rides
+    A serving-sized query set (:func:`offload.fetch`, site
+    ``similarity.pq_topk``) rides
     driver→executor inside the closure; above the cap the search
     AUTO-SWITCHES to :func:`_pq_adc_candidates_distributed` — query
     tables computed executor-side, block-nested-loop cogroup over
@@ -1687,18 +1556,15 @@ def pq_topk(embeddings: DataFrame, queries: DataFrame, k: int = 10,
     batch boundaries, and block/chunk geometry even when exact
     distance ties straddle a per-partial cutoff."""
     import numpy as np
-    # one action guards AND fetches (cap+1 rows; see
-    # brute_force_topk_arrow for why a separate count() is wasteful)
-    q_rows = collect_if_serving_sized(
-        queries.select("vec_id", "embedding"), "similarity.pq_topk",
-        _embedding_row_bytes, max_driver_queries)
-    over_cap = q_rows is None
+    fetched, _ = _fetch_queries(queries, "similarity.pq_topk")
+    over_cap = fetched is None
     # _books: callers with already-trained codebooks (the IVF-PQ probe
     # equivalence test, pipelines sharing one training pass) skip the
     # sample collect + Lloyd loop
     books = (_books if _books is not None else
              _pq_codebooks(embeddings, m, k_codes, train_sample, iters))
-    if books is None or q_rows == []:  # empty corpus / queries → empty
+    if books is None or (fetched is not None and not len(fetched[0])):
+        # empty corpus / queries → empty
         return embeddings.sparkSession.createDataFrame(
             [], "query_id long, neighbor_id long, sim double, rank int")
 
@@ -1713,13 +1579,11 @@ def pq_topk(embeddings: DataFrame, queries: DataFrame, k: int = 10,
         # same contract as every other multi-action consumer here).
         cand = _pq_adc_candidates_distributed(
             codes_df, queries, books, m, k_codes, rerank,
-            chunk_rows=max(max_driver_queries, 1),
+            chunk_rows=max(offload.MAX_DRIVER_QUERIES, 1),
             n_corpus=embeddings.count(), n_queries=queries.count())
         q_hint = lambda d: d  # noqa: E731 — too big to broadcast
     else:
-        q_ids = np.array([r["vec_id"] for r in q_rows])
-        q_mat = np.array([list(r["embedding"]) for r in q_rows],
-                         dtype=np.float64)
+        q_ids, q_mat = fetched
         # (n_q, m, k_codes) squared-L2 lookup tables
         tables = _pq_query_tables(q_mat, books)
 
@@ -2042,8 +1906,8 @@ def _ivfpq_probe_driver_path(spark, path: str, q, books, residual: bool,
     same round-8 distances — the standard distributed-top-k argument,
     equivalence-tested).
 
-    When the probed cells fit :data:`MAX_DRIVER_CELL_BYTES` and
-    :data:`MAX_DRIVER_PROBE_PAIRS` they are read on the driver
+    When the probed cells fit :data:`offload.MAX_DRIVER_CELL_BYTES` and
+    :data:`offload.MAX_DRIVER_PROBE_PAIRS` they are read on the driver
     (:func:`_ivfpq_rerank_local`): no Spark job at all. Otherwise a
     partition-pruned Spark scan ships the table matrix in the task
     closure (bounded by the row+byte caps — tables are m × k_codes ≈
@@ -2216,11 +2080,11 @@ def ivfpq_probe_topk(spark, path: str, queries: DataFrame, k: int = 10,
     Three physical strategies behind that one logical result, all
     bit-identical (equivalence-tested):
 
-    - driver read: a serving-sized query batch (:data:`MAX_DRIVER_QUERIES`
-      rows and :data:`MAX_DRIVER_QUERY_BYTES`) is collected, its cells
+    - driver read: a serving-sized query batch (the ``offload`` caps
+      of site ``similarity.serving_queries``) is fetched, its cells
       and ADC tables are computed on the driver, and when the probed
-      cells fit :data:`MAX_DRIVER_CELL_BYTES` and
-      :data:`MAX_DRIVER_PROBE_PAIRS` they are read on the driver and
+      cells fit the cell caps (site ``similarity.ivfpq_probe_topk``)
+      they are read on the driver and
       stages 2-4 run in numpy (:func:`_ivfpq_rerank_local`). The query
       fetch is the only Spark job of the call, and the returned local
       relation drains in none;
@@ -2273,7 +2137,7 @@ def _ivfpq_probe_topk(spark, path: str, queries: DataFrame, k: int,
     # cap frames keep the fully distributed plan below, bit-identical
     # results.
     phase("query fetch")
-    fetched = _collect_queries_if_serving_sized(queries)
+    fetched, cap = _fetch_queries(queries, "similarity.serving_queries")
     if fetched is not None:
         phase("cell read")
         return _ivfpq_probe_driver_path(spark, path, q, books, residual,
@@ -2360,10 +2224,11 @@ def _ivfpq_probe_topk(spark, path: str, queries: DataFrame, k: int,
     # NB: like pq_topk (and unlike the raw-vector ANN paths), self-
     # matches are NOT excluded — the equivalence contract with pq_topk
     # is exact, and a query inside the corpus legitimately retrieves
-    # itself at sim 1.0
-    phase("query size")
+    # itself at sim 1.0. The failed query fetch sized the query side:
+    # it is broadcast unless it is over the row cap.
+    hint = (lambda d: d) if cap == "rows" else F.broadcast
     reranked = (shortlist
-                .join(_query_join_hint(queries)(qv), "query_id")
+                .join(hint(qv), "query_id")
                 .join(nv, "neighbor_id")
                 .withColumn("sim", cosine(F.col("__qv"), F.col("__nv"))))
     w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(),

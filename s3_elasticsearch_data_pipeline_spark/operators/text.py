@@ -8,9 +8,10 @@ exact ANSI-SQL twin for the DuckDB oracle. No Python in the hot path.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
+from s3_elasticsearch_data_pipeline_spark import offload
 from s3_elasticsearch_data_pipeline_spark.functions.textfns import (
     fingerprint, token_count, tokens, word_ngrams_from_tokens)
 from s3_elasticsearch_data_pipeline_spark.session import checkpoint_scope
@@ -974,18 +975,7 @@ def _merge_pair_in_arrays(syms, left: str, right: str):
         ).otherwise(F.concat(acc, F.array(s))))
 
 
-#: Below this word-TYPE count the per-round scheduled job (hash agg +
-#: 1-row argmax) is pure overhead next to one vocab-sized Arrow collect
-#: — run the identical merge loop driver-side (the type table is a few
-#: MB; the corpus-sized tokenize pass stays distributed either way).
-#: Above it — web-scale vocabularies with noise tokens — every round
-#: stays a distributed aggregate and nothing vocab-sized is collected.
-DRIVER_BPE_MAX_TYPES = 100_000
-
-
-def bpe_train(documents: DataFrame, n_merges: int = 8,
-              driver_path_max_types: int = DRIVER_BPE_MAX_TYPES,
-              ) -> DataFrame:
+def bpe_train(documents: DataFrame, n_merges: int = 8) -> DataFrame:
     """Full byte-pair-encoding training loop (Sennrich et al., ACL 2016)
     as iterated DataFrame algebra — the distributed tokenizer trainer.
 
@@ -1005,7 +995,9 @@ def bpe_train(documents: DataFrame, n_merges: int = 8,
     train is n_merges linear passes over a small-constant table.
 
     Returns the ordered merge table: (merge_rank, left_tok, right_tok,
-    pair_count, new_symbol) — exactly what a tokenizer ships.
+    pair_count, new_symbol) — exactly what a tokenizer ships. A
+    word-type table under ``offload.DRIVER_BPE_MAX_TYPES`` is trained
+    on the driver (:func:`_bpe_train_driver_side`).
     """
     # _par parallelizes the corpus-side tokenize+explode (the only
     # data-sized pass); the word-TYPE aggregate downstream is
@@ -1024,8 +1016,9 @@ def bpe_train(documents: DataFrame, n_merges: int = 8,
         # above-cap vocabularies, since a shuffle-heavy limit() still
         # executes every upstream stage.
         words = words.localCheckpoint(eager=True)
-        head = words.limit(driver_path_max_types + 1).toPandas()
-        if len(head) <= driver_path_max_types:
+        head, _ = offload.fetch(words, "text.bpe_train",
+                                offload.DRIVER_BPE_MAX_TYPES)
+        if head is not None:
             return _bpe_train_driver_side(spark, head, n_merges)
         merges = []
         for rank in range(1, n_merges + 1):
@@ -1054,16 +1047,18 @@ def bpe_train(documents: DataFrame, n_merges: int = 8,
                 "pair_count bigint, new_symbol string")
 
 
-def _bpe_train_driver_side(spark, pdf, n_merges: int) -> DataFrame:
+def _bpe_train_driver_side(spark, words, n_merges: int) -> DataFrame:
     """The small-vocabulary merge loop: identical greedy BPE (same
     deterministic argmax — count desc, then (left, right) asc — and
     the same left-to-right non-overlapping merge fold as
-    :func:`_merge_pair_in_arrays`) over the Arrow-collected word-type
-    table (a pandas frame with ``syms``/``n`` columns). Pure integer
-    counting — bit-identical to the distributed rounds on any input."""
+    :func:`_merge_pair_in_arrays`) over the fetched word-type table
+    (Arrow, with ``syms``/``n`` columns). Pure integer counting —
+    bit-identical to the distributed rounds on any input."""
     from collections import Counter
 
-    vocab = [(list(s), int(n)) for s, n in zip(pdf["syms"], pdf["n"])]
+    vocab = [(list(s), int(n)) for s, n in
+             zip(words.column("syms").to_pylist(),
+                 words.column("n").to_pylist())]
     merges = []
     for rank in range(1, n_merges + 1):
         pairs: Counter = Counter()
@@ -1133,20 +1128,23 @@ def bpe_encode(documents: DataFrame, n_merges: int = 8,
     # tokenize pass, not two (materialized as a side effect of the
     # word_syms checkpoint) — and the join-back broadcasts the VOCAB
     # side cap-guarded (the planner's estimates were broadcasting the
-    # occurrence-sized toks side, which inverts at corpus scale).
-    from s3_elasticsearch_data_pipeline_spark.operators.unigram import (
-        MAX_BROADCAST_WORDS)
+    # occurrence-sized toks side, which inverts at corpus scale),
+    # counted by an Observation on the checkpoint, not an action.
     toks = (_par(documents)
             .select("doc_id",
                     F.posexplode(tokens(F.col("text")))
                     .alias("pos", "word"))
             .localCheckpoint(eager=False))
+    n_obs = Observation()
     word_syms = (toks.select("word").distinct()
                  .withColumn("__syms", encode_word(F.col("word")))
+                 .observe(n_obs, F.count(F.lit(1)).alias("n"))
                  .localCheckpoint(eager=True))  # also materializes toks
-    n_word_types = word_syms.limit(MAX_BROADCAST_WORDS + 1).count()
-    hint = (F.broadcast if n_word_types <= MAX_BROADCAST_WORDS
-            else (lambda d: d))
+    n_word_types = n_obs.get["n"]
+    hint = (F.broadcast if offload.decide(
+        "text.bpe_encode", n_word_types, 0,
+        ("rows", n_word_types, offload.MAX_BROADCAST_WORDS)) is None
+        else (lambda d: d))
     encoded = (toks.join(hint(word_syms), "word")
                .groupBy("doc_id")
                .agg(F.count(F.lit(1)).alias("n_words"),

@@ -48,9 +48,10 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
+from s3_elasticsearch_data_pipeline_spark import offload
 from s3_elasticsearch_data_pipeline_spark.functions.textfns import tokens
 from s3_elasticsearch_data_pipeline_spark.session import checkpoint_scope
 from s3_elasticsearch_data_pipeline_spark.tables import (
@@ -68,14 +69,6 @@ SEED_SIZE = 48
 #: converge-by-threshold across engines).
 EM_ITERS = 2
 
-
-#: Word-type cap below which the encode join-back broadcasts the
-#: vocab-side piece table (the ``_query_join_hint`` discipline): ~1M
-#: word types ≈ low hundreds of MB as a hash relation — inside the
-#: guide's comfortable broadcast range. Above it the join runs
-#: un-hinted and the planner shuffles BOTH sides by word — the correct
-#: corpus-scale shape (never broadcast the occurrence table).
-MAX_BROADCAST_WORDS = 1_000_000
 
 #: The word → UNIT_LEN-chunk explode expression (shared by the
 #: training chunk-type table and the encode join-back so the two can
@@ -258,8 +251,10 @@ def unigram_encode(documents: DataFrame, seed_size: int = SEED_SIZE,
                     .select("doc_id",
                             F.posexplode(tokens(F.col("text")))
                             .alias("pos", "word")), eager=False)
-        words = keep(toks.groupBy("word")
-                     .agg(F.count(F.lit(1)).alias("wn")))  # fills toks
+        n_obs = Observation()
+        words = keep(toks.groupBy("word")  # fills toks
+                     .agg(F.count(F.lit(1)).alias("wn"))
+                     .observe(n_obs, F.count(F.lit(1)).alias("n")))
         units = _units_of_words(words).localCheckpoint(eager=True)
         counts = _seed_counts(units, seed_size, max_piece_len)
         if counts:
@@ -292,10 +287,13 @@ def unigram_encode(documents: DataFrame, seed_size: int = SEED_SIZE,
     # Broadcast the VOCAB side when it is vocab-sized — the planner's
     # size estimate was broadcasting the OCCURRENCE side (toks), which
     # inverts at corpus scale; above the cap the join runs un-hinted
-    # (both sides shuffle by word — the correct 100 TB shape).
-    n_word_types = words.limit(MAX_BROADCAST_WORDS + 1).count()
-    hint = (F.broadcast if n_word_types <= MAX_BROADCAST_WORDS
-            else (lambda d: d))
+    # (both sides shuffle by word — the correct 100 TB shape). The
+    # words checkpoint's Observation counts them, not an action.
+    n_word_types = n_obs.get["n"]
+    hint = (F.broadcast if offload.decide(
+        "unigram.unigram_encode", n_word_types, 0,
+        ("rows", n_word_types, offload.MAX_BROADCAST_WORDS)) is None
+        else (lambda d: d))
     encoded = (toks.join(hint(word_pieces), "word")
                .groupBy("doc_id")
                .agg(F.count(F.lit(1)).alias("n_words"),

@@ -30,7 +30,7 @@ from s3_elasticsearch_data_pipeline_spark.plans.incremental import (
     load_log_path)
 from s3_elasticsearch_data_pipeline_spark.session import checkpoint_scope
 from s3_elasticsearch_data_pipeline_spark.sinks.keyed import (
-    delete_by_key, upsert_by_key)
+    _read_sink, delete_by_key, upsert_by_key)
 
 
 @dataclass
@@ -64,7 +64,9 @@ def reconcile(spark: SparkSession, source: DataFrame, sink_path: str,
     if not storage.exists(spark, sink_path):
         raise FileNotFoundError(
             f"serving table {sink_path} does not exist; run incremental_load first")
-    sink = spark.read.parquet(sink_path)
+    # the sink's partition values as written, typed as the source's: an
+    # inferred ``month=01`` would read as 1 and match no source row
+    sink = _read_sink(spark, sink_path, source.schema[key])
 
     mismatch_keys = [r[0] for r in
                      count_mismatches(source, sink, key).select(key).collect()]

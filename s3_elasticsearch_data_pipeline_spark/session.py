@@ -62,7 +62,6 @@ def get_spark(app_name: str = "s3_elasticsearch_data_pipeline_spark",
 
 
 import contextlib
-import logging
 import threading
 
 #: Serializes AQE-toggle windows across operators (conf toggles are
@@ -138,25 +137,6 @@ def job_phases(spark: SparkSession, prefix: str):
     finally:
         sc.setLocalProperty(_JOB_DESCRIPTION, prior)
         sc.setLocalProperty(_PHASE_DESCRIPTION, prior_phase)
-
-
-#: The one logger of automatic strategy decisions (driver vs
-#: distributed path and the like). Each record carries the fields
-#: ``site``, ``path``, ``rows``, ``bytes`` and ``cap`` as attributes.
-DECISION_LOGGER = "s3_elasticsearch_data_pipeline_spark.decisions"
-
-
-def log_decision(site: str, path: str, rows: int, nbytes: int,
-                 cap: str | None) -> None:
-    """Record one automatic decision: at ``site`` the engine took
-    ``path`` for ``rows`` rows of ``nbytes`` driver bytes; ``cap``
-    names the limit that tripped (``"rows"``, ``"bytes"`` or
-    ``"pairs"``), or is None when none did."""
-    fields = {"site": site, "path": path, "rows": rows, "bytes": nbytes,
-              "cap": cap}
-    logging.getLogger(DECISION_LOGGER).info(
-        "decision site=%s path=%s rows=%d bytes=%d cap=%s",
-        site, path, rows, nbytes, cap, extra=fields)
 
 
 def persistent_rdd_ids(spark: SparkSession) -> set[int]:

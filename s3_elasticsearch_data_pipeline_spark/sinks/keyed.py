@@ -10,10 +10,9 @@ preferred), rewrite only the touched partitions.
 
 :func:`upsert_by_key` merges with one of two plans. The choice is the
 one driver fetch it makes: a ``limit(cap+1)`` one-task Arrow collect
-of the delta's (key, partition) pairs, judged by
-``similarity.serving_cap_tripped`` against :data:`MAX_UPSERT_DRIVER_ROWS`
-and :data:`MAX_UPSERT_DRIVER_BYTES` and logged as a decision event at
-site ``keyed.upsert_by_key``.
+of the delta's (key, partition) pairs (:func:`offload.fetch` against
+``offload.MAX_UPSERT_DRIVER_ROWS`` and ``offload.MAX_UPSERT_DRIVER_BYTES``,
+logged as a decision event at site ``keyed.upsert_by_key``).
 
 - **keyed merge** (a serving-sized delta): the MERGE INTO pattern of
   Delta Lake, anti-join + union. The collected pairs name the touched
@@ -53,36 +52,13 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField
 
-from s3_elasticsearch_data_pipeline_spark import storage
-from s3_elasticsearch_data_pipeline_spark.operators import similarity
+from s3_elasticsearch_data_pipeline_spark import offload, storage
 from s3_elasticsearch_data_pipeline_spark.session import (
     checkpoint_scope, job_phases, scoped_conf)
 
 _OVERWRITE_MODE = "spark.sql.sources.partitionOverwriteMode"
 _PARTITION_TYPE_INFERENCE = \
     "spark.sql.sources.partitionColumnTypeInference.enabled"
-
-#: Delta rows up to which the keyed merge is taken. Set from a
-#: crossover run of both plans (warm upserts of a parquet delta, half
-#: updates and half new keys over 12 partitions, 11-character keys,
-#: median of 3, 4 cores, local FS), as the keyed merge's time over the
-#: window merge's: into a 50 k-row sink 0.61 at 20 k delta rows and
-#: 0.75 at 100 k; into 200 k rows 0.56 at 2 k, 0.71 at 50 k, 0.75 at
-#: 100 k and 0.77 at 200 k; into 1 M rows 0.55 at 50 k, 0.66 at 200 k,
-#: 0.70 at 400 k, 0.65 at 800 k and 0.82 at 1.6 M, where the driver
-#: process's peak RSS grew from 392 to 589 MB. The keyed merge never lost on
-#: 11-character keys; the cap bounds what the collect fetches, and an
-#: over-cap delta pays that collect (``cap+1`` rows) before the window
-#: merge.
-MAX_UPSERT_DRIVER_ROWS = 200_000
-
-#: Byte twin of :data:`MAX_UPSERT_DRIVER_ROWS`: the Arrow bytes of the
-#: collected pairs. In the same run with 200-character keys into the
-#: 200 k-row sink, the keyed merge took 0.74 of the window merge's time
-#: at 100 k rows (about 21 MB of pairs), 0.90 at 200 k (42 MB) and 1.12
-#: at 400 k (84 MB).
-MAX_UPSERT_DRIVER_BYTES = 32 << 20
-
 
 def upsert_by_key(spark: SparkSession, incoming: DataFrame, path: str,
                   key_col: str = "id", partition_col: str = "month") -> None:
@@ -127,27 +103,30 @@ def _delta_facts(incoming: DataFrame, key_col: str, partition_col: str):
     serving-sized delta, from one ``limit(cap+1)`` one-task Arrow
     collect of its (key, partition) pairs; None over the caps. (Arrow,
     not Rows: 50 k pairs collect in about 0.06 s against 0.15 s.)"""
-    pairs = (incoming.select(key_col, partition_col).coalesce(1)
-             .limit(MAX_UPSERT_DRIVER_ROWS + 1).toArrow())
-    n = pairs.num_rows
-    if similarity.serving_cap_tripped(
-            "keyed.upsert_by_key", n, pairs.nbytes // max(n, 1),
-            MAX_UPSERT_DRIVER_ROWS, MAX_UPSERT_DRIVER_BYTES):
+    pairs, _ = offload.fetch(
+        incoming.select(key_col, partition_col), "keyed.upsert_by_key",
+        offload.MAX_UPSERT_DRIVER_ROWS, offload.MAX_UPSERT_DRIVER_BYTES,
+        _one_task=True)
+    if pairs is None:
         return None
+    n = pairs.num_rows
     keys, parts = pairs.columns
     return (set(parts.unique().to_pylist()),
             pc.count_distinct(keys, mode="all").as_py() < n)
 
 
 def _read_sink(spark: SparkSession, path: str,
-               partition: StructField) -> DataFrame:
+               partition: StructField | None = None) -> DataFrame:
     """The sink's rows with the partition column typed as ``partition``:
-    its values read as written, then cast. Left to inference, a
-    partition directory ``month=01`` would read back as the int 1. (A
+    its values read as written (strings), then cast; None keeps the
+    strings. Left to inference, a partition directory ``month=01``
+    would read back as the int 1 and be rewritten as ``month=1``. (A
     second read with a user schema would list the sink's files
     again.)"""
     with scoped_conf(spark, _PARTITION_TYPE_INFERENCE, "false"):
         existing = spark.read.parquet(path)
+    if partition is None:
+        return existing
     return existing.withColumn(
         partition.name, F.col(partition.name).cast(partition.dataType))
 
@@ -206,7 +185,7 @@ def delete_by_key(spark: SparkSession, doomed_ids: DataFrame, path: str,
     if not storage.exists(spark, path):
         return 0
     with checkpoint_scope(spark):
-        existing = spark.read.parquet(path)
+        existing = _read_sink(spark, path)
         doomed = doomed_ids.select(key_col).distinct() \
             .localCheckpoint(eager=True)  # ids must outlive the rewrite
         victims = (existing.withColumn("__file", F.input_file_name())

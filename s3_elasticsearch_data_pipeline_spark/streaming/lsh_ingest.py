@@ -24,17 +24,17 @@ on the driver (see ``lsh_ingest_stream``, *Jobs*).
 
 from __future__ import annotations
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StructField, StructType
 
-from s3_elasticsearch_data_pipeline_spark import storage
+from s3_elasticsearch_data_pipeline_spark import offload, storage
 from s3_elasticsearch_data_pipeline_spark.functions.textfns import tokens
 from s3_elasticsearch_data_pipeline_spark.operators.dedup import (
     _lsh_banded, _resolve_bucket_cap, drop_hot_buckets, portable_hash60,
     sig_agreement)
-from s3_elasticsearch_data_pipeline_spark.operators import similarity
-from s3_elasticsearch_data_pipeline_spark.session import scoped_conf
 # read_corpus is re-exported: callers import it from this module
 from s3_elasticsearch_data_pipeline_spark.streaming.epochs import (
     _read_optional_parquet, drain, read_corpus)  # noqa: F401
@@ -110,37 +110,27 @@ _PROBE_COLUMNS = ("doc_id", "sig", "band", "bucket")
 
 
 def _probe_rows_if_serving_sized(probe: DataFrame, num_hashes: int):
-    """The batch's probe rows in ONE ``limit(cap+1)`` collect, or None
-    over the serving caps of ``similarity`` (decision site
-    ``lsh_ingest.batch``). The collect runs as one task: it reads the
-    batch's partitions in turn and stops after ``cap+1`` rows, so an
-    over-cap batch sends the driver ``cap+1`` rows and signs only the
-    docs they come from, however many partitions it spans."""
-    return similarity.collect_if_serving_sized(
-        probe.select(*_PROBE_COLUMNS).coalesce(1), "lsh_ingest.batch",
-        num_hashes * 8)
+    """The batch's probe rows as an Arrow table, or None over the
+    serving caps (:func:`offload.fetch`, site ``lsh_ingest.batch``).
+    One task reads the batch's partitions in turn and stops after
+    ``cap+1`` rows, so an over-cap batch signs only the docs they come
+    from, however many partitions it spans."""
+    return offload.fetch(
+        probe.select(*_PROBE_COLUMNS), "lsh_ingest.batch",
+        offload.MAX_DRIVER_QUERIES, offload.MAX_DRIVER_QUERY_BYTES,
+        num_hashes * 8, _one_task=True)[0]
 
 
 def _index_rows_if_serving_sized(index: DataFrame, num_hashes: int):
-    """The rows of a filtered index scan in ONE ``limit(cap+1)``
-    collect, or None over the serving caps (decision site
-    ``lsh_ingest.index``). The scan keeps its parallelism: a limit
-    collect scans one partition, then scales up by rounds, one job
-    each, and each task of a round sends up to ``cap+1`` rows. The
-    first round takes as many partitions as the byte cap holds at
-    ``cap+1`` rows each (at least one), so it sends the driver no more
-    than the byte cap, and an index of up to that many files is
-    fetched in one job; a larger index takes Spark's scale-up
-    rounds."""
-    row_bytes = num_hashes * 8
-    first_round = max(similarity.MAX_DRIVER_QUERY_BYTES
-                      // ((similarity.MAX_DRIVER_QUERIES + 1) * row_bytes),
-                      1)
-    with scoped_conf(index.sparkSession,
-                     "spark.sql.limit.initialNumPartitions",
-                     str(first_round)):
-        return similarity.collect_if_serving_sized(
-            index.select(*_PROBE_COLUMNS), "lsh_ingest.index", row_bytes)
+    """The rows of a filtered index scan as an Arrow table, or None over
+    the serving caps (site ``lsh_ingest.index``). The scan keeps its
+    parallelism: the first of its scale-up rounds reads as many
+    partitions as the byte cap holds at ``cap+1`` rows each, so an
+    index of up to that many files is fetched in one job."""
+    return offload.fetch(
+        index.select(*_PROBE_COLUMNS), "lsh_ingest.index",
+        offload.MAX_DRIVER_QUERIES, offload.MAX_DRIVER_QUERY_BYTES,
+        num_hashes * 8)[0]
 
 
 def _joinable(rows, num_hashes: int, max_bucket_docs: int | None):
@@ -151,19 +141,20 @@ def _joinable(rows, num_hashes: int, max_bucket_docs: int | None):
     rows drop out, band −1 exempt. ``keys`` is an (n, 2) array of
     (band, bucket), ``sigs`` an (n, num_hashes) array."""
     import numpy as np
-    rows = [r for r in rows if r["bucket"] is not None]
-    keys = np.array([(r["band"], r["bucket"]) for r in rows],
+    rows = rows.filter(pc.is_valid(rows.column("bucket")))
+    keys = np.array(list(zip(rows.column("band").to_pylist(),
+                             rows.column("bucket").to_pylist())),
                     dtype=np.int64).reshape(-1, 2)
-    if max_bucket_docs is not None and len(rows):
+    if max_bucket_docs is not None and rows.num_rows:
         _, inv, counts = np.unique(keys, axis=0, return_inverse=True,
                                    return_counts=True)
         cool = (counts[inv.reshape(-1)] <= max_bucket_docs) \
             | (keys[:, 0] == -1)
-        rows = [r for r, c in zip(rows, cool) if c]
+        rows = rows.filter(pa.array(cool))
         keys = keys[cool]
-    sigs = np.array([r["sig"] for r in rows],
-                    dtype=np.int64).reshape(len(rows), num_hashes)
-    return [r["doc_id"] for r in rows], keys, sigs
+    sigs = np.array(rows.column("sig").to_pylist(),
+                    dtype=np.int64).reshape(rows.num_rows, num_hashes)
+    return rows.column("doc_id").to_pylist(), keys, sigs
 
 
 def _matched(p_keys, p_sigs, i_keys, i_sigs, num_hashes: int,
@@ -174,7 +165,7 @@ def _matched(p_keys, p_sigs, i_keys, i_sigs, num_hashes: int,
     positions / ``num_hashes``). With ``ids`` = (p ids, i ids), only
     an ``i`` row of a LOWER id counts. Candidate pairs are scored in
     chunks whose compared signatures stay within
-    ``similarity.MAX_DRIVER_QUERY_BYTES``, so a hot bucket never
+    ``offload.MAX_DRIVER_QUERY_BYTES``, so a hot bucket never
     materializes its whole pair space at once."""
     import numpy as np
     n_p = len(p_keys)
@@ -190,7 +181,7 @@ def _matched(p_keys, p_sigs, i_keys, i_sigs, num_hashes: int,
     starts = np.cumsum(counts) - counts
     per_p = counts[gp]
     ends = np.cumsum(per_p)
-    budget = max(similarity.MAX_DRIVER_QUERY_BYTES // (num_hashes * 8), 1)
+    budget = max(offload.MAX_DRIVER_QUERY_BYTES // (num_hashes * 8), 1)
     lo = 0
     while lo < n_p:
         hi = max(int(np.searchsorted(ends, ends[lo] - per_p[lo] + budget,
@@ -214,6 +205,7 @@ def _matched(p_keys, p_sigs, i_keys, i_sigs, num_hashes: int,
 def _driver_drops(probe_rows, prior_rows, num_hashes: int,
                   threshold: float, max_bucket_docs: int | None) -> set:
     """Doc ids of the batch that lose admission, decided on the driver
+    from the Arrow probe rows of the batch and of the prior index,
     with the rules of the distributed decision: the hot-bucket cap is
     counted on each side separately (band −1 exempt), a match against
     a lower id of the same batch or against a prior index row drops
@@ -223,7 +215,7 @@ def _driver_drops(probe_rows, prior_rows, num_hashes: int,
     import numpy as np
     ids, keys, sigs = _joinable(probe_rows, num_hashes, max_bucket_docs)
     hit = np.zeros(len(ids), dtype=bool)
-    if prior_rows:
+    if prior_rows.num_rows:
         _, i_keys, i_sigs = _joinable(prior_rows, num_hashes,
                                       max_bucket_docs)
         hit |= _matched(keys, sigs, i_keys, i_sigs, num_hashes, threshold)
@@ -278,9 +270,10 @@ def lsh_ingest_stream(spark: SparkSession, source_path: str,
     ``"after_corpus_write"`` and ``"after_index_write"`` stages.
 
     Jobs: each epoch decides admission once, on one of two paths,
-    chosen only by the observed size (the serving caps of
-    ``operators.similarity``; each choice is logged as a decision
-    event, sites ``lsh_ingest.batch`` and ``lsh_ingest.index``):
+    chosen only by the observed size (``offload.MAX_DRIVER_QUERIES``
+    rows and ``offload.MAX_DRIVER_QUERY_BYTES``; each choice is logged
+    as a decision event, sites ``lsh_ingest.batch`` and
+    ``lsh_ingest.index``):
 
     - **driver path**, for serving-sized epochs. ``probe build``
       collects the batch's probe rows with one ``limit(cap+1)``
@@ -396,13 +389,13 @@ def lsh_ingest_stream(spark: SparkSession, source_path: str,
         """The prior index rows sharing a bucket with the batch, in one
         pruned scan (this epoch's own rows excluded, as on replay), or
         None when they exceed the serving caps."""
-        buckets = sorted({r["bucket"] for r in probe_rows
-                          if r["bucket"] is not None})
+        buckets = sorted(pc.unique(
+            probe_rows.column("bucket").drop_null()).to_pylist())
         # the layout the index is written in: no schema-inference job
         index = _read_optional_parquet(spark, index_path, StructType(
             layout.fields + [StructField("epoch", IntegerType())]))
         if index is None or not buckets:
-            return []
+            return probe_rows.schema.empty_table()
         return _index_rows_if_serving_sized(
             index.where((F.col("epoch") != epoch_id)
                         & F.col("bucket").isin(buckets)), num_hashes)
@@ -421,11 +414,13 @@ def lsh_ingest_stream(spark: SparkSession, source_path: str,
          .parquet(f"{corpus_path}/epoch={epoch_id}"))
         fault("after_corpus_write", epoch_id)
         phase("index write")
+        doc_id = probe_rows.column("doc_id")  # a null id is kept
+        kept = probe_rows.filter(pc.invert(pc.is_in(
+            doc_id, value_set=pa.array(sorted(drops), doc_id.type))))
+        if not kept.num_rows:  # createDataFrame refuses a chunkless table
+            kept = kept.schema.empty_table()
         # one file per epoch: every later index fetch opens each file
-        (batch_df.sparkSession
-         .createDataFrame([r for r in probe_rows
-                           if r["doc_id"] not in drops],
-                          layout)
+        (batch_df.sparkSession.createDataFrame(kept, layout)
          .coalesce(1)
          .write.mode("overwrite")
          .parquet(f"{index_path}/epoch={epoch_id}"))

@@ -56,6 +56,16 @@ def count_jobs(spark, label: str, fn) -> int:
     return prev
 
 
+def shuffle_bytes(spark, label: str) -> int:
+    """Shuffle bytes written by the jobs of group ``label`` (read after
+    ``count_jobs`` has let the listener bus settle)."""
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+    return sum(store.lastStageAttempt(s).shuffleWriteBytes()
+               for j in sc.statusTracker().getJobIdsForGroup(label)
+               for s in sc.statusTracker().getJobInfo(j).stageIds)
+
+
 @pytest.fixture(scope="session")
 def spark():
     spark = get_spark("tests")

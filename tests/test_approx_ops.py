@@ -15,6 +15,7 @@ import pytest
 pytestmark = pytest.mark.slow
 from pyspark.sql import functions as F
 
+from s3_elasticsearch_data_pipeline_spark import offload
 from s3_elasticsearch_data_pipeline_spark.operators import (
     dedup, quantizer, similarity)
 
@@ -149,7 +150,7 @@ def test_ivf_persisted_index_matches_inline(spark, embeddings, tmp_path,
                                               k=10, n_probe=4).collect()}
     assert got == inline
     with monkeypatch.context() as m:
-        m.setattr(similarity, "MAX_DRIVER_CELL_BYTES", 0)
+        m.setattr(offload, "MAX_DRIVER_CELL_BYTES", 0)
         probe = similarity.ivf_probe_topk(spark, path, queries,
                                           k=10, n_probe=4)
     assert {(r.query_id, r.neighbor_id, r.sim, r.rank)
@@ -177,7 +178,7 @@ def test_ann_query_side_switch_above_cap(spark, embeddings, monkeypatch,
                  for r in similarity.ivf_topk(
                      embeddings, queries, k=10,
                      n_cells=8, n_probe=4).collect()}
-    monkeypatch.setattr(similarity, "MAX_DRIVER_QUERIES", 2)
+    monkeypatch.setattr(offload, "MAX_DRIVER_QUERIES", 2)
     without = similarity.ivf_topk(embeddings, queries, k=10,
                                   n_cells=8, n_probe=4)
     got = {(r.query_id, r.neighbor_id, r.sim, r.rank)
@@ -186,7 +187,7 @@ def test_ann_query_side_switch_above_cap(spark, embeddings, monkeypatch,
     lsh_a = {(r.query_id, r.neighbor_id)
              for r in similarity.ann_lsh_topk(
                  embeddings, queries, k=10).collect()}
-    monkeypatch.setattr(similarity, "MAX_DRIVER_QUERIES", 10_000)
+    monkeypatch.setattr(offload, "MAX_DRIVER_QUERIES", 10_000)
     lsh_b = {(r.query_id, r.neighbor_id)
              for r in similarity.ann_lsh_topk(
                  embeddings, queries, k=10).collect()}
@@ -208,7 +209,7 @@ def test_wide_dim_queries_take_distributed_path(spark, embeddings,
                        n_cells=8, n_probe=4).collect()}
     # 6 queries x 64 dims x 8 B = 3072 B — cap below it so the SAME
     # frame is now "too wide" for the driver path
-    monkeypatch.setattr(similarity, "MAX_DRIVER_QUERY_BYTES", 2048)
+    monkeypatch.setattr(offload, "MAX_DRIVER_QUERY_BYTES", 2048)
     assert similarity._collect_queries_if_serving_sized(queries) is None
     got = {(r.query_id, r.neighbor_id, r.sim, r.rank)
            for r in similarity.ivf_topk(embeddings, queries, k=5,
@@ -546,14 +547,16 @@ def test_pq_topk_empty_queries(spark):
     assert similarity.pq_topk(embs, embs.limit(0), k=5).count() == 0
 
 
-def test_arrow_bruteforce_autoswitches_above_query_cap(spark, embeddings):
-    """A query frame above max_driver_queries must NOT be collected to
+def test_arrow_bruteforce_autoswitches_above_query_cap(spark, embeddings,
+                                                       monkeypatch):
+    """A query frame above MAX_DRIVER_QUERIES must NOT be collected to
     the driver: the Arrow path auto-switches to the fully distributed
     broadcast-join strategy (no Python map node in the plan) and still
     returns the identical exact answer."""
     queries = embeddings.where(F.col("vec_id") < 25)
-    big = similarity.brute_force_topk_arrow(embeddings, queries, k=5,
-                                            max_driver_queries=10)
+    with monkeypatch.context() as m:
+        m.setattr(offload, "MAX_DRIVER_QUERIES", 10)
+        big = similarity.brute_force_topk_arrow(embeddings, queries, k=5)
     assert "MapInPandas" not in big._jdf.queryExecution().executedPlan() \
         .toString(), "over-cap query frame must take the join path"
     small = similarity.brute_force_topk_arrow(embeddings, queries, k=5)
@@ -561,15 +564,18 @@ def test_arrow_bruteforce_autoswitches_above_query_cap(spark, embeddings):
         sorted(map(tuple, small.collect()))
 
 
-def test_pq_topk_autoswitches_above_query_cap(spark, embeddings):
-    """A query frame above max_driver_queries must NOT be collected to
+def test_pq_topk_autoswitches_above_query_cap(spark, embeddings,
+                                              monkeypatch):
+    """A query frame above MAX_DRIVER_QUERIES must NOT be collected to
     the driver: pq_topk auto-switches to the block-nested-loop cogroup
     ADC scan (query tables computed executor-side) and still returns
     the bit-identical answer — same rounded (adc_dist, neighbor_id)
     total order on both paths."""
     queries = embeddings.where(F.col("vec_id") < 25)
-    big = similarity.pq_topk(embeddings, queries, k=5, m=4, k_codes=8,
-                             rerank=12, max_driver_queries=10)
+    with monkeypatch.context() as m:
+        m.setattr(offload, "MAX_DRIVER_QUERIES", 10)
+        big = similarity.pq_topk(embeddings, queries, k=5, m=4, k_codes=8,
+                                 rerank=12)
     plan = big._jdf.queryExecution().executedPlan().toString()
     assert "FlatMapCoGroupsInPandas" in plan, \
         "over-cap query frame must take the cogroup ADC path"
@@ -579,7 +585,8 @@ def test_pq_topk_autoswitches_above_query_cap(spark, embeddings):
         sorted(map(tuple, small.collect()))
 
 
-def test_batch_topk_partitioning_invariant_under_exact_ties(spark):
+def test_batch_topk_partitioning_invariant_under_exact_ties(spark,
+                                                            monkeypatch):
     """Exact score ties straddling Arrow batch boundaries must not make
     the result depend on partitioning: a corpus of duplicated vectors
     (guaranteed distance ties everywhere) must yield byte-identical
@@ -592,14 +599,20 @@ def test_batch_topk_partitioning_invariant_under_exact_ties(spark):
     embs = spark.createDataFrame(
         rows, "vec_id long, label int, embedding array<double>")
     queries = embs.where(F.col("vec_id") < 3)
+
+    def pq_over_cap(e):
+        with monkeypatch.context() as m:
+            m.setattr(offload, "MAX_DRIVER_QUERIES", 1)
+            return similarity.pq_topk(e, queries, k=7, m=4, k_codes=8,
+                                      rerank=9)
+
     for fn in (
         lambda e: similarity.brute_force_topk_arrow(e, queries, k=7),
         lambda e: similarity.pq_topk(e, queries, k=7, m=4, k_codes=8,
                                      rerank=9),
         # the block-nested-loop cogroup ADC path: ties must also be
         # stable across BLOCK/CHUNK geometry, not just Arrow batches
-        lambda e: similarity.pq_topk(e, queries, k=7, m=4, k_codes=8,
-                                     rerank=9, max_driver_queries=1),
+        pq_over_cap,
     ):
         got = [sorted(map(tuple, fn(embs.repartition(n)).collect()))
                for n in (1, 7)]
@@ -772,7 +785,7 @@ def test_ivfpq_probe_plan_prunes_partitions_and_columns(spark, embeddings,
     similarity.build_ivfpq_index(embeddings, path, n_cells=8)
     queries = embeddings.where(F.col("vec_id") < 3)
     with monkeypatch.context() as m:
-        m.setattr(similarity, "MAX_DRIVER_CELL_BYTES", 0)
+        m.setattr(offload, "MAX_DRIVER_CELL_BYTES", 0)
         probe = similarity.ivfpq_probe_topk(spark, path, queries,
                                             k=10, n_probe=2)
     plan = probe._jdf.queryExecution().executedPlan().toString()

@@ -18,6 +18,7 @@ import pytest
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from s3_elasticsearch_data_pipeline_spark import offload
 from s3_elasticsearch_data_pipeline_spark.operators import (
     dedup, graph, ml, text, unigram)
 from s3_elasticsearch_data_pipeline_spark.plans import reconcile
@@ -34,6 +35,13 @@ class Injected(RuntimeError):
 
 def _raise(*_args, **_kwargs):
     raise Injected("injected after the first checkpoint")
+
+
+def _capped(cap: str, call):
+    """``call()`` with ``offload.<cap>`` zeroed: its distributed path."""
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(offload, cap, 0)
+        return call()
 
 
 def _without(module, name):
@@ -82,15 +90,15 @@ CASES = {
         lambda s, f, t: dedup.connected_components(f.pairs),
         (dedup, "_driver_union_find", _raise), 0, 0),
     "connected_components_distributed": (
-        lambda s, f, t: dedup.connected_components(
-            f.pairs, driver_path_max_pairs=0),
+        lambda s, f, t: _capped("DRIVER_CC_MAX_PAIRS", lambda:
+                                dedup.connected_components(f.pairs)),
         (dedup, "F", _without(F, "least")), 1, 0),
     "connected_components_star": (
         lambda s, f, t: dedup.connected_components_star(f.pairs),
         (dedup, "_driver_union_find", _raise), 0, 0),
     "connected_components_star_distributed": (
-        lambda s, f, t: dedup.connected_components_star(
-            f.pairs, driver_path_max_pairs=0),
+        lambda s, f, t: _capped("DRIVER_CC_MAX_PAIRS", lambda:
+                                dedup.connected_components_star(f.pairs)),
         (dedup, "F", _without(F, "least")), 1, 0),
     "duplicate_spans": (
         lambda s, f, t: dedup.duplicate_spans(f.docs),
@@ -108,8 +116,8 @@ CASES = {
         lambda s, f, t: unigram.unigram_encode(f.docs),
         (unigram, "_seed_counts", _raise), 3, 0),
     "train_quality_classifier": (
-        lambda s, f, t: ml.train_quality_classifier(
-            f.docs, driver_path_max_rows=0),
+        lambda s, f, t: _capped("DRIVER_GD_MAX_ROWS", lambda:
+                                ml.train_quality_classifier(f.docs)),
         (ml, "math", _without(ml.math, "ceil")), 0, 0),
     "reconcile": (_reconcile, (reconcile, "upsert_by_key", _raise), 0, 0),
 }

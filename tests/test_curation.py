@@ -8,7 +8,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from s3_elasticsearch_data_pipeline_spark import registry
+from s3_elasticsearch_data_pipeline_spark import offload, registry
 from s3_elasticsearch_data_pipeline_spark.operators import dedup, text
 from s3_elasticsearch_data_pipeline_spark.tables import load_table
 
@@ -167,14 +167,14 @@ def test_star_cc_equals_label_propagation(spark, edges):
     if not edges:
         return
     df = spark.createDataFrame(edges, "doc_id_a long, doc_id_b long")
-    # driver_path_max_pairs=0 pins the DISTRIBUTED paths; the default
+    # a zero DRIVER_CC_MAX_PAIRS pins the DISTRIBUTED paths; the default
     # call takes the driver union-find — all three must agree.
-    a = {(r.doc_id, r.cluster_id)
-         for r in dedup.connected_components(
-             df, driver_path_max_pairs=0).collect()}
-    b = {(r.doc_id, r.cluster_id)
-         for r in dedup.connected_components_star(
-             df, driver_path_max_pairs=0).collect()}
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(offload, "DRIVER_CC_MAX_PAIRS", 0)
+        a = {(r.doc_id, r.cluster_id)
+             for r in dedup.connected_components(df).collect()}
+        b = {(r.doc_id, r.cluster_id)
+             for r in dedup.connected_components_star(df).collect()}
     c = {(r.doc_id, r.cluster_id)
          for r in dedup.connected_components(df).collect()}
     d = {(r.doc_id, r.cluster_id)
@@ -182,7 +182,7 @@ def test_star_cc_equals_label_propagation(spark, edges):
     assert a == b == c == d
 
 
-def test_cc_self_pair_semantics_match_across_paths(spark):
+def test_cc_self_pair_semantics_match_across_paths(spark, monkeypatch):
     """Self-pairs are where the two variants intentionally differ —
     plain propagation keeps a self-pair-only node as its own singleton
     cluster, star drops it — and the GRAPHS strategy above filters
@@ -193,12 +193,11 @@ def test_cc_self_pair_semantics_match_across_paths(spark):
     plain = {(1, 1), (2, 2), (3, 2)}
     star = {(2, 2), (3, 2)}
     for cap in (0, 10**6):  # distributed vs driver union-find
+        monkeypatch.setattr(offload, "DRIVER_CC_MAX_PAIRS", cap)
         got_p = {(r.doc_id, r.cluster_id)
-                 for r in dedup.connected_components(
-                     df, driver_path_max_pairs=cap).collect()}
+                 for r in dedup.connected_components(df).collect()}
         got_s = {(r.doc_id, r.cluster_id)
-                 for r in dedup.connected_components_star(
-                     df, driver_path_max_pairs=cap).collect()}
+                 for r in dedup.connected_components_star(df).collect()}
         assert got_p == plain, (cap, got_p)
         assert got_s == star, (cap, got_s)
 

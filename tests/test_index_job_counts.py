@@ -21,6 +21,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from s3_elasticsearch_data_pipeline_spark import offload
 from s3_elasticsearch_data_pipeline_spark.operators import similarity as sim
 from tests.conftest import count_jobs
 
@@ -214,21 +215,27 @@ def test_query_fetch_is_one_job_unless_filtered(spark, sf_smoke):
     over one relation, so a one-row request spread over several
     partitions is one job, not a limit scale-up. A filtered frame is
     left alone: one task would scan every partition serially to find
-    its few rows."""
+    its few rows. A local relation is fetched in no job."""
+    import pandas as pd
     spread = spark.createDataFrame(
         spark.sparkContext.parallelize([(3, [3.0, 1.0])], 4),
         "vec_id long, embedding array<double>")
-    assert sim._projections_over_leaf(spread.select("vec_id",
-                                                    "embedding"))
     got = count_jobs(spark, "jc-query-fetch",
                       lambda: sim._collect_queries_if_serving_sized(spread))
     assert got == 1, got
     ids, emb = sim._collect_queries_if_serving_sized(spread)
     assert ids.tolist() == [3] and emb.tolist() == [[3.0, 1.0]]
-    scan = spark.read.parquet(os.path.join(sf_smoke, "embeddings.parquet"))
-    assert sim._projections_over_leaf(scan.select("vec_id", "embedding"))
-    assert not sim._projections_over_leaf(
-        scan.where("vec_id < 5").select("vec_id", "embedding"))
+    filtered = spread.where("vec_id < 5")
+    got = count_jobs(spark, "jc-query-fetch-filtered",
+                     lambda: sim._collect_queries_if_serving_sized(filtered))
+    assert got > 1, got
+    local = spark.createDataFrame(pd.DataFrame(
+        {"vec_id": [3], "embedding": [[3.0, 1.0]]}))
+    got = count_jobs(spark, "jc-query-fetch-local",
+                     lambda: sim._collect_queries_if_serving_sized(local))
+    assert got == 0, got
+    ids, emb = sim._collect_queries_if_serving_sized(local)
+    assert ids.tolist() == [3] and emb.tolist() == [[3.0, 1.0]]
 
 
 def test_corpus_training_set_v2_job_count_pinned(spark, sf_smoke):
@@ -347,7 +354,7 @@ def test_serving_calls_label_their_jobs_per_phase(spark, emb, tmp_path,
 
     def scan_probe():
         with monkeypatch.context() as m:
-            m.setattr(sim, "MAX_DRIVER_CELL_BYTES", 0)
+            m.setattr(offload, "MAX_DRIVER_CELL_BYTES", 0)
             probe.append(sim.ivfpq_probe_topk(spark, d + "/ivfpq", queries))
 
     calls = {

@@ -1,7 +1,7 @@
 """``upsert_by_key``'s two merge plans: the keyed merge a serving-sized
 delta takes (a null-safe anti join, one shuffle by partition column)
 and the window merge over the caps (forced here by a zero
-``keyed.MAX_UPSERT_DRIVER_ROWS``). Both must leave the same sink."""
+``offload.MAX_UPSERT_DRIVER_ROWS``). Both must leave the same sink."""
 
 from __future__ import annotations
 
@@ -12,9 +12,10 @@ import time
 
 import pytest
 
-from s3_elasticsearch_data_pipeline_spark.session import DECISION_LOGGER
-from s3_elasticsearch_data_pipeline_spark.sinks import keyed
-from s3_elasticsearch_data_pipeline_spark.sinks.keyed import upsert_by_key
+from s3_elasticsearch_data_pipeline_spark.offload import DECISION_LOGGER
+from s3_elasticsearch_data_pipeline_spark import offload
+from s3_elasticsearch_data_pipeline_spark.sinks.keyed import (
+    delete_by_key, upsert_by_key)
 from tests.conftest import count_jobs, spelled
 
 STRATEGIES = ("keyed", "window")
@@ -23,7 +24,7 @@ SCHEMA = "id string, month string, value double"
 
 def _force(monkeypatch, strategy: str) -> None:
     if strategy == "window":
-        monkeypatch.setattr(keyed, "MAX_UPSERT_DRIVER_ROWS", 0)
+        monkeypatch.setattr(offload, "MAX_UPSERT_DRIVER_ROWS", 0)
 
 
 def _rows(spark, rows):
@@ -77,6 +78,27 @@ def test_upsert_rewrites_a_numeric_looking_partition_in_place(
     assert _sink(spark, path) == [("a", "01", 5.0), ("b", "01", 2.0)]
 
 
+def test_delete_keeps_a_numeric_looking_partition_in_place(
+        spark, tmp_path, spelling="bare"):
+    """A delete rewrites ``month=01`` as ``month=01``: it reads the sink
+    with partition type inference off, as the upsert does, so the
+    surviving row is not moved to ``month=1``."""
+    path = spelled(tmp_path, spelling) + "/serving"
+    upsert_by_key(spark, _rows(spark, [("a", "01", 1.0), ("b", "01", 2.0)]),
+                  path)
+    doomed = spark.createDataFrame([("a",)], "id string")
+    assert delete_by_key(spark, doomed, path) == 1
+    assert sorted(d for d in os.listdir(tmp_path / "serving")
+                  if d.startswith("month=")) == ["month=01"]
+    assert _sink(spark, path) == [("b", "01", 2.0)]
+
+
+def test_delete_keeps_a_numeric_looking_partition_in_place_file_uri(
+        spark, tmp_path):
+    test_delete_keeps_a_numeric_looking_partition_in_place(
+        spark, tmp_path, "file_uri")
+
+
 def test_upsert_strategies_leave_the_same_sink(spark, tmp_path, monkeypatch,
                                                caplog):
     """One delta with an update, an insert, a key repeated (as the same
@@ -111,7 +133,7 @@ def test_upsert_strategies_leave_the_same_sink(spark, tmp_path, monkeypatch,
 def test_upsert_byte_cap_takes_the_window_merge(spark, tmp_path, monkeypatch,
                                                 caplog):
     """The byte cap alone switches a delta to the window merge."""
-    monkeypatch.setattr(keyed, "MAX_UPSERT_DRIVER_BYTES", 1)
+    monkeypatch.setattr(offload, "MAX_UPSERT_DRIVER_BYTES", 1)
     caplog.set_level(logging.INFO, logger=DECISION_LOGGER)
     path = str(tmp_path / "serving")
     upsert_by_key(spark, _rows(spark, [("a", "m1", 1.0)]), path)

@@ -355,7 +355,7 @@ def _admission_state(spark, sf_smoke, root, hash_mode, cap, caplog):
 
     import pytest
 
-    from s3_elasticsearch_data_pipeline_spark.session import (
+    from s3_elasticsearch_data_pipeline_spark.offload import (
         DECISION_LOGGER)
     from s3_elasticsearch_data_pipeline_spark.streaming.lsh_ingest import (
         _read_optional_parquet)
@@ -422,7 +422,7 @@ def test_driver_and_distributed_admission_agree(
     texts in the fallback channel (a null bucket never matches), both
     hash modes, and a replay after a torn epoch, which must not match
     the batch against its own half-written index rows."""
-    from s3_elasticsearch_data_pipeline_spark.operators import similarity
+    from s3_elasticsearch_data_pipeline_spark import offload
     from s3_elasticsearch_data_pipeline_spark.streaming import lsh_ingest
     for hash_mode, cap in cases:
         root = spelled(tmp_path / f"{hash_mode}-{cap}", spelling)
@@ -431,7 +431,7 @@ def test_driver_and_distributed_admission_agree(
         assert set(events) == {("lsh_ingest.batch", "driver"),
                                ("lsh_ingest.index", "driver")}, events
         with monkeypatch.context() as m:
-            m.setattr(similarity, "MAX_DRIVER_QUERIES", 0)
+            m.setattr(offload, "MAX_DRIVER_QUERIES", 0)
             events, d_corpus, d_index = _admission_state(
                 spark, sf_smoke, root + "/dist", hash_mode, cap, caplog)
         assert set(events) == {("lsh_ingest.batch", "distributed")}, \
@@ -475,9 +475,10 @@ def test_driver_decision_matches_a_pairwise_reference(monkeypatch):
     import random
     from collections import Counter
 
+    import pyarrow as pa
     from pyspark.sql import Row
 
-    from s3_elasticsearch_data_pipeline_spark.operators import similarity
+    from s3_elasticsearch_data_pipeline_spark import offload
     from s3_elasticsearch_data_pipeline_spark.streaming import lsh_ingest
     rng = random.Random(7)
     h, threshold = 8, 0.5
@@ -507,14 +508,21 @@ def test_driver_decision_matches_a_pairwise_reference(monkeypatch):
             or any(hit(p, i) and i.doc_id is not None
                    and i.doc_id < p.doc_id for i in probe))}
 
+    def table(rows):
+        """The rows as the Arrow table the driver path fetches."""
+        return pa.Table.from_pylist(
+            [r.asDict() for r in rows], schema=pa.schema([
+                ("doc_id", pa.int64()), ("sig", pa.list_(pa.int64())),
+                ("band", pa.int32()), ("bucket", pa.int64())]))
+
     for trial in range(6):
         probe, prior = rows(40, 1000), rows(60, 0)
         for cap in (None, 3):
             want = reference(probe, prior, cap)
-            assert lsh_ingest._driver_drops(probe, prior, h, threshold,
-                                            cap) == want
+            assert lsh_ingest._driver_drops(table(probe), table(prior), h,
+                                            threshold, cap) == want
             with monkeypatch.context() as m:
-                m.setattr(similarity, "MAX_DRIVER_QUERY_BYTES", 1)
-                assert lsh_ingest._driver_drops(probe, prior, h,
-                                                threshold, cap) == want
+                m.setattr(offload, "MAX_DRIVER_QUERY_BYTES", 1)
+                assert lsh_ingest._driver_drops(table(probe), table(prior),
+                                                h, threshold, cap) == want
         assert want and want != {r.doc_id for r in probe} - {None}

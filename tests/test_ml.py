@@ -7,6 +7,7 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
+from s3_elasticsearch_data_pipeline_spark import offload
 from s3_elasticsearch_data_pipeline_spark.operators import ml
 from s3_elasticsearch_data_pipeline_spark.tables import load_table
 
@@ -19,30 +20,32 @@ def _numpy_reference(X, y, iters, lr):
     return w
 
 
-@pytest.mark.parametrize("driver_cap", [0, ml.DRIVER_GD_MAX_ROWS],
+@pytest.mark.parametrize("driver_cap", [0, offload.DRIVER_GD_MAX_ROWS],
                          ids=["distributed", "driver"])
-def test_trainer_matches_numpy_reference(spark, sf_smoke, driver_cap):
+def test_trainer_matches_numpy_reference(spark, sf_smoke, driver_cap,
+                                         monkeypatch):
     docs = load_table(spark, sf_smoke, "documents")
     feats = ml.quality_features(docs).orderBy("doc_id").collect()
     X = np.array([[r[f] for f in ml.FEATURES] for r in feats])
     y = np.array([r["y"] for r in feats])
     want = _numpy_reference(X, y, iters=15, lr=0.5)
+    monkeypatch.setattr(offload, "DRIVER_GD_MAX_ROWS", driver_cap)
     got_rows = {r["feature"]: r["weight"]
-                for r in ml.train_quality_classifier(
-                    docs, driver_path_max_rows=driver_cap).collect()}
+                for r in ml.train_quality_classifier(docs).collect()}
     got = np.array([got_rows[f] for f in ml.FEATURES])
     assert np.allclose(got, want, atol=1e-6), (got, want)
     assert got_rows["__loss__"] > 0
 
 
-def test_trainer_paths_agree(spark, sf_smoke):
+def test_trainer_paths_agree(spark, sf_smoke, monkeypatch):
     """The distributed decimal-aggregate loop and the driver numpy loop
     are the same algorithm — their weights must agree to float
     tolerance on the same corpus."""
     docs = load_table(spark, sf_smoke, "documents")
-    dist = {r["feature"]: r["weight"]
-            for r in ml.train_quality_classifier(
-                docs, driver_path_max_rows=0).collect()}
+    with monkeypatch.context() as m:
+        m.setattr(offload, "DRIVER_GD_MAX_ROWS", 0)
+        dist = {r["feature"]: r["weight"]
+                for r in ml.train_quality_classifier(docs).collect()}
     drv = {r["feature"]: r["weight"]
            for r in ml.train_quality_classifier(docs).collect()}
     for f in ml.FEATURES + ("__loss__",):

@@ -9,7 +9,7 @@ import os
 
 from pyspark.sql import functions as F
 
-from s3_elasticsearch_data_pipeline_spark import registry
+from s3_elasticsearch_data_pipeline_spark import offload, registry
 from s3_elasticsearch_data_pipeline_spark.operators import analytics, diff
 from s3_elasticsearch_data_pipeline_spark.sinks.partitioned import write_partitioned
 
@@ -194,16 +194,18 @@ def test_q16_not_in_is_broadcast_anti_join(spark, sf_oracle):
         "NOT IN exclusion should be a broadcast anti-join on the tiny set"
 
 
-def test_connected_components_rounds_are_compact(spark, sf_oracle):
+def test_connected_components_rounds_are_compact(spark, sf_oracle,
+                                                 monkeypatch):
     """Each propagation round operates on (long, long) label rows —
     the edge list must not re-materialize document text."""
     from s3_elasticsearch_data_pipeline_spark.operators import dedup as dd
     docs = registry.queries()["dedup_exact"](spark, sf_oracle)  # warm
     from s3_elasticsearch_data_pipeline_spark.tables import load_table
     pairs = dd.ngram_jaccard_pairs(load_table(spark, sf_oracle, "documents"))
-    # driver_path_max_pairs=0 pins the DISTRIBUTED fixpoint (the small
-    # input would otherwise take the driver union-find fast path)
-    labels = dd.connected_components(pairs, driver_path_max_pairs=0)
+    # a zero DRIVER_CC_MAX_PAIRS pins the DISTRIBUTED fixpoint (the
+    # small input would otherwise take the driver union-find fast path)
+    monkeypatch.setattr(offload, "DRIVER_CC_MAX_PAIRS", 0)
+    labels = dd.connected_components(pairs)
     # post-fixpoint frame is checkpointed: its plan must be a scan of
     # the checkpoint RDD, not the full recursive join tree
     plan = labels._jdf.queryExecution().executedPlan().toString()

@@ -1,8 +1,8 @@
 """Serving-sized index probes read their probed cells on the driver.
 
 ``ivfpq_probe_topk`` and ``ivf_probe_topk`` answer a serving-sized
-query batch whose probed cells fit ``similarity.MAX_DRIVER_CELL_BYTES``
-and ``similarity.MAX_DRIVER_PROBE_PAIRS`` from a driver read of those
+query batch whose probed cells fit ``offload.MAX_DRIVER_CELL_BYTES``
+and ``offload.MAX_DRIVER_PROBE_PAIRS`` from a driver read of those
 cells' files: the query fetch is the call's one Spark job, and the
 returned local relation drains in none. A zero byte cap forces the
 Spark-scan strategy, whose rows the driver read must reproduce
@@ -21,10 +21,10 @@ import pytest
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 
-from s3_elasticsearch_data_pipeline_spark import storage
+from s3_elasticsearch_data_pipeline_spark import offload, storage
 from s3_elasticsearch_data_pipeline_spark.operators import quantizer
 from s3_elasticsearch_data_pipeline_spark.operators import similarity as sim
-from s3_elasticsearch_data_pipeline_spark.session import DECISION_LOGGER
+from s3_elasticsearch_data_pipeline_spark.offload import DECISION_LOGGER
 from s3_elasticsearch_data_pipeline_spark.streaming.ivfpq_ingest import (
     ivfpq_ingest_stream)
 from s3_elasticsearch_data_pipeline_spark.tables import load_table
@@ -60,7 +60,7 @@ def _driver_and_scan(monkeypatch, caplog, site: str, probe,
     caplog.clear()
     driver = _rows(probe())
     with monkeypatch.context() as m:
-        m.setattr(sim, cap, 0)
+        m.setattr(offload, cap, 0)
         scan = _rows(probe())
     paths = [path for path, *_ in _decisions(caplog, site)]
     assert paths == ["driver", "distributed"], paths

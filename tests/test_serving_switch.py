@@ -1,6 +1,6 @@
 """The serving-size switch: the row and byte caps that send a
 serving-sized call down a driver-resident path, and the decision event
-each switch logs (``session.log_decision``).
+each switch logs (``offload.decide``).
 
 Default selection: these are the thin, fast twins of the byte-cap
 checks in the all-``slow`` ``test_approx_ops.py``."""
@@ -13,9 +13,12 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from s3_elasticsearch_data_pipeline_spark.operators import similarity
-from s3_elasticsearch_data_pipeline_spark.session import DECISION_LOGGER
+from s3_elasticsearch_data_pipeline_spark import offload
+from s3_elasticsearch_data_pipeline_spark.operators import (
+    dedup, ml, similarity, text, unigram)
+from s3_elasticsearch_data_pipeline_spark.offload import DECISION_LOGGER
 from s3_elasticsearch_data_pipeline_spark.streaming import lsh_ingest
+from tests.conftest import count_jobs, shuffle_bytes
 
 
 @pytest.fixture(scope="module")
@@ -48,7 +51,7 @@ def test_wide_dim_queries_take_distributed_path_smoke(
     assert _decisions(caplog, "similarity.serving") == [
         ("similarity.serving_queries", "driver", 6, 3072, None)]
     caplog.clear()
-    monkeypatch.setattr(similarity, "MAX_DRIVER_QUERY_BYTES", 2048)
+    monkeypatch.setattr(offload, "MAX_DRIVER_QUERY_BYTES", 2048)
     assert similarity._collect_queries_if_serving_sized(queries) is None
     assert topk() == with_driver
     assert set(_decisions(caplog, "similarity.serving")) == {
@@ -95,7 +98,7 @@ def test_lsh_ingest_switch_logs_each_side(spark, tmp_path, monkeypatch,
     _ingest(spark, root, family)
     caplog.clear()
     with monkeypatch.context() as m:
-        m.setattr(similarity, "MAX_DRIVER_QUERIES", 10)
+        m.setattr(offload, "MAX_DRIVER_QUERIES", 10)
         assert _ingest(spark, root, [(100, boiler)]) == \
             list(range(12)) + [100]
     assert _decisions(caplog, "lsh") == [
@@ -107,10 +110,136 @@ def test_lsh_ingest_switch_logs_each_side(spark, tmp_path, monkeypatch,
             ("bytes", "MAX_DRIVER_QUERY_BYTES", 40 * width, 48)):
         caplog.clear()
         with monkeypatch.context() as m:
-            m.setattr(similarity, attr, value)
+            m.setattr(offload, attr, value)
             got = _ingest(spark, str(tmp_path / f"over-{cap_name}"),
                           family)
         assert got == list(range(12))
         assert _decisions(caplog, "lsh") == [
             ("lsh_ingest.batch", "distributed", rows, rows * width,
              cap_name)]
+
+
+_TEXT = ("the quick brown fox jumps over the lazy dog and then it runs "
+         "far away into the deep green forest")
+
+
+@pytest.fixture(scope="module")
+def small(spark, embeddings, tmp_path_factory):
+    """Tiny inputs for every switch: documents, a pair list, a query
+    batch, and an IVF and an IVF-PQ index over the smoke embeddings."""
+    import types
+    root = str(tmp_path_factory.mktemp("switch"))
+    similarity.build_ivf_index(embeddings, root + "/ivf", n_cells=8)
+    similarity.build_ivfpq_index(embeddings, root + "/ivfpq", n_cells=8)
+    docs = spark.createDataFrame(
+        [(1, _TEXT, "en"), (2, _TEXT + " again today", "en"),
+         (3, "le renard brun saute par dessus le chien paresseux", "fr")],
+        "doc_id long, text string, lang string")
+    pairs = spark.createDataFrame([(1, 2), (2, 3), (5, 6)],
+                                  "doc_id_a long, doc_id_b long")
+    return types.SimpleNamespace(
+        root=root, docs=docs, pairs=pairs,
+        queries=embeddings.where(F.col("vec_id") < 3))
+
+
+def _upsert(spark, s):
+    from s3_elasticsearch_data_pipeline_spark.sinks.keyed import (
+        upsert_by_key)
+    upsert_by_key(spark, spark.createDataFrame(
+        [("a", "m1", 1.0)], "id string, month string, value double"),
+        s.root + "/sink")
+
+
+#: site -> (the offload cap that a zero forces over, the cap the event
+#: names then, the call that decides once)
+SWITCHES = {
+    "similarity.serving_queries": (
+        "MAX_DRIVER_QUERIES", "rows", lambda sp, e, s: similarity.ivf_topk(
+            e, s.queries, k=5, n_cells=8, n_probe=4).collect()),
+    "similarity.brute_force_topk_arrow": (
+        "MAX_DRIVER_QUERY_BYTES", "bytes",
+        lambda sp, e, s: similarity.brute_force_topk_arrow(
+            e, s.queries, k=5).collect()),
+    "similarity.pq_topk": (
+        "MAX_DRIVER_QUERIES", "rows", lambda sp, e, s: similarity.pq_topk(
+            e, s.queries, k=5, m=4, k_codes=8, rerank=12).collect()),
+    "similarity.ann_lsh_topk": (
+        "MAX_DRIVER_QUERIES", "rows",
+        lambda sp, e, s: similarity.ann_lsh_topk(
+            e, s.queries, k=5, dims=64).collect()),
+    "similarity.margin_bitext_pairs": (
+        "MAX_DRIVER_QUERIES", "rows",
+        lambda sp, e, s: similarity.margin_bitext_pairs(
+            e.where(F.col("vec_id") < 40)).collect()),
+    "similarity.ivf_probe_topk": (
+        "MAX_DRIVER_CELL_BYTES", "bytes",
+        lambda sp, e, s: similarity.ivf_probe_topk(
+            sp, s.root + "/ivf", s.queries, k=5).collect()),
+    "similarity.ivfpq_probe_topk": (
+        "MAX_DRIVER_PROBE_PAIRS", "pairs",
+        lambda sp, e, s: similarity.ivfpq_probe_topk(
+            sp, s.root + "/ivfpq", s.queries, k=5).collect()),
+    "keyed.upsert_by_key": (
+        "MAX_UPSERT_DRIVER_ROWS", "rows", lambda sp, e, s: _upsert(sp, s)),
+    "dedup.connected_components": (
+        "DRIVER_CC_MAX_PAIRS", "rows",
+        lambda sp, e, s: dedup.connected_components(s.pairs).collect()),
+    "dedup.connected_components_star": (
+        "DRIVER_CC_MAX_PAIRS", "rows",
+        lambda sp, e, s: dedup.connected_components_star(
+            s.pairs).collect()),
+    "ml.train_quality_classifier": (
+        "DRIVER_GD_MAX_ROWS", "rows",
+        lambda sp, e, s: ml.train_quality_classifier(
+            s.docs, iters=2).collect()),
+    "text.bpe_train": (
+        "DRIVER_BPE_MAX_TYPES", "rows",
+        lambda sp, e, s: text.bpe_train(s.docs, n_merges=2).collect()),
+    "text.bpe_encode": (
+        "MAX_BROADCAST_WORDS", "rows",
+        lambda sp, e, s: text.bpe_encode(s.docs, n_merges=2).collect()),
+    "unigram.unigram_encode": (
+        "MAX_BROADCAST_WORDS", "rows",
+        lambda sp, e, s: unigram.unigram_encode(s.docs, iters=1).collect()),
+}
+
+
+@pytest.mark.parametrize("site", sorted(SWITCHES))
+def test_every_switch_logs_one_event_per_side(spark, embeddings, small,
+                                              monkeypatch, caplog, site):
+    """Each driver-vs-distributed switch decides through ``offload`` and
+    logs exactly one decision event per call at its site: the driver
+    side under the default caps, the distributed side naming the cap
+    once that cap is zeroed. The other fields are pinned per site by
+    the tests of each operator."""
+    cap_name, cap, call = SWITCHES[site]
+    caplog.set_level(logging.INFO, logger=DECISION_LOGGER)
+
+    def sides():
+        return [(path, c) for s, path, _, _, c in _decisions(caplog, site)
+                if s == site]
+
+    caplog.clear()
+    call(spark, embeddings, small)
+    assert sides() == [("driver", None)]
+    caplog.clear()
+    with monkeypatch.context() as m:
+        m.setattr(offload, cap_name, 0)
+        call(spark, embeddings, small)
+    assert sides() == [("distributed", cap)]
+
+
+def test_cc_driver_fetch_is_one_unshuffled_job(spark):
+    """A serving-sized ``connected_components`` runs two jobs and
+    shuffles nothing: the checkpoint of its pairs, and one fetch of one
+    task over that checkpoint. (A ``limit(cap+1).toPandas()`` fetch
+    shuffles every fetched pair into one partition first.)"""
+    pairs = spark.createDataFrame(
+        spark.sparkContext.parallelize([(1, 2), (2, 3), (5, 6), (7, 8)], 4),
+        "doc_id_a long, doc_id_b long")
+    got = []
+    assert count_jobs(spark, "cc-fetch-shape", lambda: got.extend(
+        dedup.connected_components(pairs).collect())) == 2
+    assert shuffle_bytes(spark, "cc-fetch-shape") == 0
+    assert sorted(map(tuple, got)) == [(1, 1), (2, 1), (3, 1), (5, 5),
+                                       (6, 5), (7, 7), (8, 7)]

@@ -6,6 +6,10 @@
 - Checkpoint blocks are released only through
   ``session.checkpoint_scope``: a hand-written snapshot/diff/release
   anywhere else fails here.
+- The driver-offload policy lives in ``offload.py``: a driver cap
+  defined anywhere else, a ``.limit(<cap> + 1)`` action run anywhere
+  else, or ``sinks/``/``streaming/`` importing ``operators.similarity``
+  (once done for its caps) fails here.
 """
 
 from __future__ import annotations
@@ -37,18 +41,41 @@ ALLOWED = {
 RDD_RELEASE = re.compile(r"\b(persistent_rdd_ids|release_persistent_rdds)\b")
 
 
-def _hits(pattern: re.Pattern) -> dict[str, list[str]]:
+#: A module-level cap of the driver-offload policy: a name with MAX and
+#: DRIVER or BROADCAST in it, assigned at the start of a line.
+DRIVER_CAP = re.compile(r"^(?=\w*MAX)\w*(DRIVER|BROADCAST)\w*\s*(:[^=]*)?=")
+
+CAPPED_LIMIT = re.compile(r"\.limit\([^()]*\+\s*1\s*\)")
+
+SIMILARITY_IMPORT = re.compile(
+    r"operators\.similarity\b|operators import .*\bsimilarity\b")
+
+#: ``sinks/``/``streaming/`` modules allowed to import
+#: ``operators.similarity``, and why.
+SIMILARITY_IMPORTERS = {
+    # the streaming index ingests write cells through the batch
+    # index's writers and layout guard
+    "streaming/ivf_ingest.py",
+    "streaming/ivfpq_ingest.py",
+}
+
+
+def _hits(pattern: re.Pattern, under: str = "") -> dict[str, list[str]]:
     hits: dict[str, list[str]] = {}
     for f in sorted(PACKAGE.rglob("*.py")):
         rel = f.relative_to(PACKAGE).as_posix()
+        if not rel.startswith(under):
+            continue
         for n, line in enumerate(f.read_text().splitlines(), 1):
             if pattern.search(line):
                 hits.setdefault(rel, []).append(f"{rel}:{n}: {line.strip()}")
     return hits
 
 
-def _assert_only_in(pattern: re.Pattern, allowed: set[str], fix: str):
-    hits = _hits(pattern)
+def _assert_only_in(pattern: re.Pattern, allowed: set[str], fix: str,
+                    under: tuple[str, ...] = ("",)):
+    hits = {rel: lines for u in under
+            for rel, lines in _hits(pattern, u).items()}
     stray = [h for rel, lines in hits.items() if rel not in allowed
              for h in lines]
     assert not stray, f"{fix}:\n" + "\n".join(stray)
@@ -63,3 +90,19 @@ def test_no_local_only_file_calls_outside_storage():
 def test_checkpoint_release_only_in_session():
     _assert_only_in(RDD_RELEASE, {"session.py"},
                     "use session.checkpoint_scope for these")
+
+
+def test_driver_caps_only_in_offload():
+    _assert_only_in(DRIVER_CAP, {"offload.py"},
+                    "define driver caps in offload.py")
+
+
+def test_capped_limit_actions_only_in_offload():
+    _assert_only_in(CAPPED_LIMIT, {"offload.py"},
+                    "fetch through offload.fetch")
+
+
+def test_sinks_and_streaming_do_not_import_similarity_for_caps():
+    _assert_only_in(SIMILARITY_IMPORT, SIMILARITY_IMPORTERS,
+                    "read caps from offload, not operators.similarity",
+                    under=("sinks/", "streaming/"))

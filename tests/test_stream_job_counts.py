@@ -263,7 +263,7 @@ def test_over_cap_lsh_batch_sends_the_driver_cap_rows(
     that reads the first source file and stops, whatever the partition
     count. The rest of the epoch is the distributed plan (distinct
     docs: all admitted)."""
-    from s3_elasticsearch_data_pipeline_spark.operators import similarity
+    from s3_elasticsearch_data_pipeline_spark import offload
     from s3_elasticsearch_data_pipeline_spark.streaming.lsh_ingest import (
         lsh_ingest_stream, read_corpus)
     src = str(tmp_path / "src")
@@ -275,7 +275,7 @@ def test_over_cap_lsh_batch_sends_the_driver_cap_rows(
             [(f * 1000 + i, " ".join(f"w{f}x{i}x{j}" for j in range(6)))
              for i in range(per_file)], "doc_id long, text string")
          .coalesce(1).write.mode("append").parquet(src))
-    monkeypatch.setattr(similarity, "MAX_DRIVER_QUERIES", 10)
+    monkeypatch.setattr(offload, "MAX_DRIVER_QUERIES", 10)
     before = _stable_max_job_id(spark)
     lsh_ingest_stream(spark, src, str(tmp_path / "c"),
                       str(tmp_path / "i"), str(tmp_path / "k"))

@@ -8,6 +8,7 @@ from collections import Counter
 
 from pyspark.sql import functions as F
 
+from s3_elasticsearch_data_pipeline_spark import offload
 from s3_elasticsearch_data_pipeline_spark.operators.text import bpe_train
 from s3_elasticsearch_data_pipeline_spark.tables import load_table
 
@@ -45,12 +46,13 @@ import pytest
 
 @pytest.mark.parametrize("driver_cap", [0, 100_000],
                          ids=["distributed", "driver"])
-def test_bpe_train_matches_reference(spark, sf_smoke, driver_cap):
+def test_bpe_train_matches_reference(spark, sf_smoke, driver_cap,
+                                     monkeypatch):
     docs = load_table(spark, sf_smoke, "documents")
+    monkeypatch.setattr(offload, "DRIVER_BPE_MAX_TYPES", driver_cap)
     got = [(r["merge_rank"], r["left_tok"], r["right_tok"],
             r["pair_count"], r["new_symbol"])
-           for r in bpe_train(docs, n_merges=8,
-                              driver_path_max_types=driver_cap)
+           for r in bpe_train(docs, n_merges=8)
            .orderBy("merge_rank").collect()]
     counts = {r["word"]: r["n"] for r in
               docs.select(F.explode(F.split(
