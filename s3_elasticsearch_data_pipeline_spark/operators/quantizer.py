@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from s3_elasticsearch_data_pipeline_spark import storage
+from s3_elasticsearch_data_pipeline_spark import offload, storage
 
 #: Target vectors per cell under auto-sizing: n_cells ∝ n keeps the
 #: within-cell pair term LINEAR in the corpus (occupancy constant),
@@ -264,8 +264,12 @@ def _train_quantizer(embeddings: DataFrame, n_cells: int, iters: int,
     ``n_rows`` spares its ``count()`` when the caller has counted
     already), with the sub-centroids flattened into the global
     (n_cells × dims) matrix the persistence layer and residual encode
-    speak."""
-    if n_cells < IVF_TWO_LEVEL_MIN_CELLS:
+    speak. The choice is logged as one decision event at site
+    ``quantizer.train`` (path ``flat`` or ``two_level``, cap
+    ``cells``)."""
+    if not offload.decide("quantizer.train", n_cells, 0,
+                          ("cells", n_cells, IVF_TWO_LEVEL_MIN_CELLS - 1),
+                          paths=("flat", "two_level")):
         return _Quantizer(_kmeans_centroids(embeddings, n_cells, iters,
                                             init_rows=init_rows))
     import numpy as np

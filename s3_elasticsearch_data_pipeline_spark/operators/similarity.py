@@ -221,14 +221,8 @@ def _assign_and_write(embeddings: DataFrame, q, cells_dir: str,
                       mode: str) -> None:
     """Assign every vector its nearest cell under the quantizer ``q``
     and write into the cell-partitioned store at ``cells_dir`` (callers
-    pass ``{index}/cells`` or a per-epoch subdir of it). Repartitions on the
-    partition column BEFORE the partitioned write: otherwise every
-    upstream task opens a writer per cell it sees — up to tasks ×
-    n_cells tiny files (the classic partitioned-write small-files bug;
-    measured 512 files for 16 cells here). One shuffle keyed on cell
-    gives one well-sized file per cell per task; at corpus scale cap
-    file size with spark.sql.files.maxRecordsPerFile instead of more
-    partitions."""
+    pass ``{index}/cells`` or a per-epoch subdir of it), one file per
+    cell (:func:`offload.by_partition`)."""
     assigned = (embeddings.select("vec_id", "embedding")
                 .mapInPandas(_quantizer_cells_fn(q, 1),
                              "vec_id long, cell int")
@@ -236,7 +230,7 @@ def _assign_and_write(embeddings: DataFrame, q, cells_dir: str,
                     "vec_id",
                     F.col("embedding").cast("array<double>")
                     .alias("embedding")), "vec_id"))
-    (assigned.repartition("cell")
+    (offload.by_partition(assigned, "similarity.ivf_cells_write", "cell")
      .write.mode(mode).partitionBy("cell")
      .parquet(cells_dir))
 
@@ -1731,8 +1725,8 @@ def _ivfpq_append_cells(embeddings: DataFrame, q, books,
                .mapInPandas(_ivfpq_assign_encode_fn(q, books, residual),
                             "vec_id long, cell int, codes array<bigint>, "
                             "embedding array<double>"))
-    (encoded.repartition("cell")  # see _assign_and_write: one shuffle
-     .write.mode(mode).partitionBy("cell")  # beats tasks×cells files
+    (offload.by_partition(encoded, "similarity.ivfpq_cells_write", "cell")
+     .write.mode(mode).partitionBy("cell")
      .parquet(cells_dir))
 
 

@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from s3_elasticsearch_data_pipeline_spark import storage
+from s3_elasticsearch_data_pipeline_spark import offload, storage
 
 
 def maintain_rollup(spark: SparkSession, source: DataFrame,
@@ -58,11 +58,7 @@ def maintain_rollup(spark: SparkSession, source: DataFrame,
                 .agg(F.count(F.lit(1)).alias("n_rows"),
                      F.sum(F.col(value_col).cast("decimal(28,6)"))
                       .alias("sum_value")))
-    # repartition on the partition key first — the groupBy leaves the
-    # frame hashed on (key, dim), which would fan each month's rows
-    # across every task's writer (small-files bug); the frame is
-    # aggregate-sized, so this shuffle is trivial
-    (partials.repartition(partition_key)
+    (offload.by_partition(partials, "rollup.partials_write", partition_key)
      .write.mode("append").partitionBy(partition_key)
      .format("parquet").save(rollup_path))
     return sorted(keys)

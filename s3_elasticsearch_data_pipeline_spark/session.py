@@ -97,7 +97,11 @@ def aqe_disabled(spark: SparkSession):
     slower wall clock). Same caveats as the PageRank scope: other
     queries planned concurrently in this session would also see AQE
     off — multi-tenant services should hand such operators a session
-    clone."""
+    clone. Each scope logs one decision event (site
+    ``session.aqe_disabled``, path ``aqe_off``)."""
+    from s3_elasticsearch_data_pipeline_spark import offload  # imports session
+    offload.decide("session.aqe_disabled", 0, 0,
+                   paths=("aqe_off", "aqe_on"))
     with _AQE_SCOPE_LOCK, scoped_conf(spark, "spark.sql.adaptive.enabled",
                                       "false"):
         yield

@@ -20,14 +20,20 @@ logged as a decision event at site ``keyed.upsert_by_key``).
   touched partitions (a literal partition filter, pruned statically)
   lose every row whose key the delta carries (a null-safe broadcast
   left-anti join against the delta's keys); the delta is deduplicated
-  by key only when a key repeats; the union is shuffled once, by
-  partition column, for the write. The merged rows never shuffle by
+  by key only when a key repeats. The merged rows never shuffle by
   key.
 - **window merge** (over the caps): the union of the delta and the
   touched partitions' rows (a null-safe broadcast semi join against
   the delta's distinct partition values) keeps the first row per key
-  by a ``row_number`` window that prefers the delta, then shuffles
-  again by partition column for the write.
+  by a ``row_number`` window that prefers the delta.
+
+Either merge is written through :func:`offload.by_partition` (site
+``keyed.upsert_write``): from one task when the merge's planned bytes
+(the delta plus every file of the sink) fit
+``offload.MAX_ONE_TASK_WRITE_BYTES``, else after one shuffle by
+partition column. A delta Spark cannot size (built from a Python list)
+takes the shuffle. :func:`delete_by_key` writes the same way (site
+``keyed.delete_write``).
 
 Both rewrite only the touched partitions (dynamic partition
 overwrite), so the rewrite is proportional to the delta's partitions,
@@ -89,12 +95,9 @@ def upsert_by_key(spark: SparkSession, incoming: DataFrame, path: str,
         else:
             merged = _keyed_merge(incoming, existing, *facts, key_col,
                                   partition_col)
-        # one shuffle keyed on the partition column before the
-        # partitioned write: without it every task would open a writer
-        # per month it sees (tasks × months tiny files — the classic
-        # partitioned-write small-files bug)
         phase("merge write")
-        (merged.repartition(partition_col).write.mode("overwrite")
+        (offload.by_partition(merged, "keyed.upsert_write", partition_col)
+         .write.mode("overwrite")
          .partitionBy(partition_col).format("parquet").save(path))
 
 
@@ -210,7 +213,8 @@ def delete_by_key(spark: SparkSession, doomed_ids: DataFrame, path: str,
         listing_before = {d: storage.children(spark, d) for d in
                           map(storage.from_file_uri, stats["dirs"])}
         with scoped_conf(spark, _OVERWRITE_MODE, "dynamic"):
-            (keep.repartition(partition_col).write.mode("overwrite")
+            (offload.by_partition(keep, "keyed.delete_write", partition_col)
+             .write.mode("overwrite")
              .partitionBy(partition_col).format("parquet").save(path))
         for d, files in listing_before.items():
             if files and storage.children(spark, d) == files:

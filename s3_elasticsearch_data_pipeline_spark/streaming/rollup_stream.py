@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from s3_elasticsearch_data_pipeline_spark import offload
 from s3_elasticsearch_data_pipeline_spark.streaming.epochs import drain
 
 
@@ -26,15 +27,13 @@ def rollup_stream(spark: SparkSession, source_path: str, rollup_path: str,
     appends nothing, so the loop's emptiness check is skipped."""
     def add_partials(batch_df, _batch_id, phase):
         phase("partials write")
-        (batch_df
-         .groupBy(partition_key, dim)
-         .agg(F.count(F.lit(1)).alias("n_rows"),
-              F.sum(F.col(value_col).cast("decimal(28,6)"))
-               .alias("sum_value"))
-         # shuffle on the partition key before the partitioned write —
-         # the groupBy hashes on (key, dim), which would open a writer
-         # per key per task (small-files bug); partials are tiny
-         .repartition(partition_key)
+        partials = (batch_df
+                    .groupBy(partition_key, dim)
+                    .agg(F.count(F.lit(1)).alias("n_rows"),
+                         F.sum(F.col(value_col).cast("decimal(28,6)"))
+                          .alias("sum_value")))
+        (offload.by_partition(partials, "rollup_stream.partials_write",
+                              partition_key)
          .write.mode("append").partitionBy(partition_key)
          .format("parquet").save(rollup_path))
 

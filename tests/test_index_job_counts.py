@@ -72,22 +72,26 @@ def test_index_surface_job_counts_pinned(spark, emb, tmp_path):
     }
     pinned = {
         # init fetch (doubles as emptiness check) + k-means iters +
-        # assign/write + centroid write
-        "ivf_build": 9,
+        # assign/write + centroid write (a kilobyte cell write runs as
+        # one task, with no shuffle map job by cell: 9 -> 8)
+        "ivf_build": 8,
         # batch assign/append write (r11: the kilobyte param loads are
-        # pyarrow driver reads now — ZERO Spark jobs, was 4 of the 8)
-        "ivf_append": 4,
+        # pyarrow driver reads now — ZERO Spark jobs, was 4 of the 8;
+        # the one-task cell write drops the shuffle map job, 4 -> 3)
+        "ivf_append": 3,
         # the query collect alone: the probed cells are read, scored
         # and ranked on the driver and the result is a local relation
         # that drains in no job (r10: driver-path scoring; r11: param
         # loads off the job board, 8 -> 4; driver cell read, 4 -> 1)
         "ivf_probe": 1,
         # training fetch (init + emptiness folded, r6) + Lloyd/PQ
-        # train + encode/write + params write
-        "ivfpq_build": 11,
+        # train + encode/write + params write (one-task cell write,
+        # no shuffle map job: 11 -> 10)
+        "ivfpq_build": 10,
         # emptiness probe + assign/encode/append write (r11: the
-        # quantizer/codebook/meta loads left the job board, 13 -> 3)
-        "ivfpq_append": 3,
+        # quantizer/codebook/meta loads left the job board, 13 -> 3;
+        # the one-task cell write drops the shuffle map job, 3 -> 2)
+        "ivfpq_append": 2,
         # the query collect alone (r11: driver path — no distributed
         # assign, no probed-set aggregate, no cells⋈tables cogroup;
         # param loads driver-side. 20 -> 7; one cells read feeds the

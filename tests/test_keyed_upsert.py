@@ -1,6 +1,6 @@
 """``upsert_by_key``'s two merge plans: the keyed merge a serving-sized
-delta takes (a null-safe anti join, one shuffle by partition column)
-and the window merge over the caps (forced here by a zero
+delta takes (a null-safe anti join, then at most one shuffle, by
+partition column) and the window merge over the caps (forced here by a zero
 ``offload.MAX_UPSERT_DRIVER_ROWS``). Both must leave the same sink."""
 
 from __future__ import annotations
@@ -181,36 +181,57 @@ def _last_execution_id(spark) -> int:
                default=-1)
 
 
-@pytest.mark.parametrize("strategy", STRATEGIES)
+def _local_rows(spark, rows):
+    """``rows`` as a local relation, which Spark can size (a list-built
+    frame's size is unknown, so its write always shuffles)."""
+    import pandas as pd
+    return spark.createDataFrame(pd.DataFrame(rows, columns=[
+        "id", "month", "value"]))
+
+
+@pytest.mark.parametrize("strategy", STRATEGIES + ("keyed_one_task",))
 def test_upsert_merge_write_shuffles_once_by_partition(
         spark, tmp_path, monkeypatch, strategy):
-    """The keyed merge's write holds one shuffle exchange, hash
-    partitioned on the partition column; the window merge's also
-    shuffles by key."""
+    """With the one-task write cap zeroed, the keyed merge's write
+    holds one shuffle exchange, hash partitioned on the partition
+    column; the window merge's also shuffles by key. Under the default
+    caps a serving-sized keyed merge's write holds no shuffle exchange
+    at all: one task writes it."""
     _force(monkeypatch, strategy)
+    if strategy in STRATEGIES:
+        monkeypatch.setattr(offload, "MAX_ONE_TASK_WRITE_BYTES", 0)
     path = str(tmp_path / "serving")
     upsert_by_key(spark, _rows(spark, [(f"k{i}", f"m{i % 3}", float(i))
                                        for i in range(30)]), path)
     before = _last_execution_id(spark)
-    upsert_by_key(spark, _rows(spark, [("k1", "m1", 9.0), ("z", "m2", 1.0)]),
-                  path)
+    upsert_by_key(spark, _local_rows(spark, [("k1", "m1", 9.0),
+                                             ("z", "m2", 1.0)]), path)
     shuffles = _shuffle_partitionings(_write_plan(spark, before))
     if strategy == "keyed":
         assert len(shuffles) == 1, shuffles
         assert shuffles[0].startswith("hashpartitioning(month#"), shuffles
-    else:
+    elif strategy == "window":
         assert any(s.startswith("hashpartitioning(id#") for s in shuffles)
         assert shuffles[0].startswith("hashpartitioning(month#"), shuffles
+    else:
+        assert shuffles == [], shuffles
 
 
 def test_serving_sized_upsert_job_count(spark, tmp_path):
-    """A warm serving-sized upsert into an existing sink runs the delta
-    facts collect, the sink's schema read and the merge write's broadcast,
-    shuffle map and write jobs: 5 (the window merge ran 6)."""
+    """A warm serving-sized upsert of a parquet delta into an existing
+    sink runs the delta facts collect, the sink's schema read and the
+    merge write's broadcast and one-task write jobs: 4 (the window
+    merge ran 6; the shuffled write's map job made 5). A list-built
+    delta, whose size Spark cannot plan, keeps the shuffle and its 5
+    jobs."""
     path = str(tmp_path / "serving")
     upsert_by_key(spark, _rows(spark, [(f"k{i}", f"m{i % 3}", float(i))
                                        for i in range(30)]), path)
-    delta = _rows(spark, [("k1", "m1", 9.0), ("z", "m2", 1.0)])
-    upsert_by_key(spark, delta, path)
-    assert count_jobs(spark, "keyed-upsert-jobs",
-                      lambda: upsert_by_key(spark, delta, path)) == 5
+    rows = [("k1", "m1", 9.0), ("z", "m2", 1.0)]
+    _rows(spark, rows).write.parquet(str(tmp_path / "delta"))
+    for label, delta, jobs in (
+            ("parquet", spark.read.parquet(str(tmp_path / "delta")), 4),
+            ("listed", _rows(spark, rows), 5)):
+        upsert_by_key(spark, delta, path)
+        assert count_jobs(spark, f"keyed-upsert-jobs-{label}",
+                          lambda: upsert_by_key(spark, delta, path)) == jobs

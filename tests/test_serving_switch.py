@@ -1,5 +1,6 @@
 """The serving-size switch: the row and byte caps that send a
-serving-sized call down a driver-resident path, and the decision event
+serving-sized call down a driver-resident path, the byte cap that
+writes a small partitioned output from one task, and the decision event
 each switch logs (``offload.decide``).
 
 Default selection: these are the thin, fast twins of the byte-cap
@@ -7,6 +8,7 @@ checks in the all-``slow`` ``test_approx_ops.py``."""
 
 from __future__ import annotations
 
+import itertools
 import logging
 import os
 
@@ -150,9 +152,72 @@ def _upsert(spark, s):
         s.root + "/sink")
 
 
+_fresh = itertools.count()
+
+
+def _sized_rows(spark):
+    """Keyed rows Spark can size (a local relation, not a list-built
+    RDD), so a partitioned write of them runs as one task."""
+    import pandas as pd
+    return spark.createDataFrame(pd.DataFrame(
+        {"id": ["a", "b"], "month": ["m1", "m2"], "value": [1.0, 2.0]}))
+
+
+def _upsert_write(spark, s):
+    from s3_elasticsearch_data_pipeline_spark.sinks.keyed import (
+        upsert_by_key)
+    upsert_by_key(spark, _sized_rows(spark), f"{s.root}/w{next(_fresh)}")
+
+
+def _delete_write(spark, s):
+    from s3_elasticsearch_data_pipeline_spark.sinks.keyed import (
+        delete_by_key, upsert_by_key)
+    path = f"{s.root}/w{next(_fresh)}"
+    upsert_by_key(spark, _sized_rows(spark), path)
+    delete_by_key(spark, spark.createDataFrame([("a",)], "id string"), path)
+
+
+def _rollup_write(spark, s):
+    from s3_elasticsearch_data_pipeline_spark.plans.rollup import (
+        maintain_rollup)
+    maintain_rollup(spark, _sized_rows(spark).withColumn(
+        "event_type", F.lit("click")), f"{s.root}/w{next(_fresh)}")
+
+
+def _rollup_stream_write(spark, s):
+    from s3_elasticsearch_data_pipeline_spark.streaming.rollup_stream \
+        import rollup_stream
+    root = f"{s.root}/w{next(_fresh)}"
+    _sized_rows(spark).withColumn("event_type", F.lit("click")) \
+        .write.parquet(root + "/src")
+    rollup_stream(spark, root + "/src", root + "/rollup", root + "/ckpt")
+
+
 #: site -> (the offload cap that a zero forces over, the cap the event
 #: names then, the call that decides once)
 SWITCHES = {
+    "keyed.upsert_write": (
+        "MAX_ONE_TASK_WRITE_BYTES", "bytes",
+        lambda sp, e, s: _upsert_write(sp, s)),
+    "keyed.delete_write": (
+        "MAX_ONE_TASK_WRITE_BYTES", "bytes",
+        lambda sp, e, s: _delete_write(sp, s)),
+    "similarity.ivf_cells_write": (
+        "MAX_ONE_TASK_WRITE_BYTES", "bytes",
+        lambda sp, e, s: similarity.build_ivf_index(
+            e, f"{s.root}/w{next(_fresh)}", n_cells=8)),
+    "similarity.ivfpq_cells_write": (
+        "MAX_ONE_TASK_WRITE_BYTES", "bytes",
+        lambda sp, e, s: similarity.ivfpq_index_append(
+            sp, s.root + "/ivfpq", e.where(F.col("vec_id") < 20)
+            .withColumn("vec_id", F.col("vec_id") + 10_000 * (
+                1 + next(_fresh))))),
+    "rollup.partials_write": (
+        "MAX_ONE_TASK_WRITE_BYTES", "bytes",
+        lambda sp, e, s: _rollup_write(sp, s)),
+    "rollup_stream.partials_write": (
+        "MAX_ONE_TASK_WRITE_BYTES", "bytes",
+        lambda sp, e, s: _rollup_stream_write(sp, s)),
     "similarity.serving_queries": (
         "MAX_DRIVER_QUERIES", "rows", lambda sp, e, s: similarity.ivf_topk(
             e, s.queries, k=5, n_cells=8, n_probe=4).collect()),
@@ -203,16 +268,23 @@ SWITCHES = {
         lambda sp, e, s: unigram.unigram_encode(s.docs, iters=1).collect()),
 }
 
+#: The two paths of a site that does not choose between the driver and
+#: Spark: (under its caps, over one).
+PATHS = {site: ("one_task", "shuffle")
+         for site, (cap_name, _, _) in SWITCHES.items()
+         if cap_name == "MAX_ONE_TASK_WRITE_BYTES"}
+
 
 @pytest.mark.parametrize("site", sorted(SWITCHES))
 def test_every_switch_logs_one_event_per_side(spark, embeddings, small,
                                               monkeypatch, caplog, site):
-    """Each driver-vs-distributed switch decides through ``offload`` and
-    logs exactly one decision event per call at its site: the driver
-    side under the default caps, the distributed side naming the cap
-    once that cap is zeroed. The other fields are pinned per site by
-    the tests of each operator."""
+    """Each switch decides through ``offload`` and logs exactly one
+    decision event per call at its site: the driver (or one-task) side
+    under the default caps, the distributed (or shuffle) side naming
+    the cap once that cap is zeroed. The other fields are pinned per
+    site by the tests of each operator."""
     cap_name, cap, call = SWITCHES[site]
+    under, over = PATHS.get(site, ("driver", "distributed"))
     caplog.set_level(logging.INFO, logger=DECISION_LOGGER)
 
     def sides():
@@ -221,12 +293,41 @@ def test_every_switch_logs_one_event_per_side(spark, embeddings, small,
 
     caplog.clear()
     call(spark, embeddings, small)
-    assert sides() == [("driver", None)]
+    assert sides() == [(under, None)]
     caplog.clear()
     with monkeypatch.context() as m:
         m.setattr(offload, cap_name, 0)
         call(spark, embeddings, small)
-    assert sides() == [("distributed", cap)]
+    assert sides() == [(over, cap)]
+
+
+def test_quantizer_logs_flat_or_two_level(spark, embeddings, monkeypatch,
+                                          caplog):
+    """Training the coarse quantizer logs its construction once: flat
+    below ``quantizer.IVF_TWO_LEVEL_MIN_CELLS`` cells, two-level (cap
+    ``cells``) at or above it."""
+    from s3_elasticsearch_data_pipeline_spark.operators import quantizer
+    caplog.set_level(logging.INFO, logger=DECISION_LOGGER)
+    emb = embeddings.select("vec_id", "embedding")
+    quantizer._train_quantizer(emb, 8, 1)
+    assert _decisions(caplog, "quantizer") == [
+        ("quantizer.train", "flat", 8, 0, None)]
+    caplog.clear()
+    monkeypatch.setattr(quantizer, "IVF_TWO_LEVEL_MIN_CELLS", 8)
+    assert quantizer._train_quantizer(emb, 8, 1).two_level
+    assert _decisions(caplog, "quantizer") == [
+        ("quantizer.train", "two_level", 8, 0, "cells")]
+
+
+def test_aqe_disabled_scope_logs_one_event(spark, caplog):
+    """Each AQE-off scope logs one event as it opens."""
+    from s3_elasticsearch_data_pipeline_spark.session import aqe_disabled
+    caplog.set_level(logging.INFO, logger=DECISION_LOGGER)
+    with aqe_disabled(spark):
+        assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    assert _decisions(caplog, "session") == [
+        ("session.aqe_disabled", "aqe_off", 0, 0, None)]
 
 
 def test_cc_driver_fetch_is_one_unshuffled_job(spark):

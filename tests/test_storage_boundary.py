@@ -10,6 +10,10 @@
   defined anywhere else, a ``.limit(<cap> + 1)`` action run anywhere
   else, or ``sinks/``/``streaming/`` importing ``operators.similarity``
   (once done for its caps) fails here.
+- A partitioned write is laid out by ``offload.by_partition`` (one task
+  or a shuffle by the partition column, decided on planned bytes): a
+  ``repartition(...)`` written ``partitionBy(...)`` right after it
+  anywhere else fails here.
 """
 
 from __future__ import annotations
@@ -60,22 +64,46 @@ SIMILARITY_IMPORTERS = {
 }
 
 
-def _hits(pattern: re.Pattern, under: str = "") -> dict[str, list[str]]:
+#: A ``repartition(...)`` whose frame is written ``.write…partitionBy(``
+#: within the next two lines (matched across lines).
+SHUFFLED_WRITE = re.compile(
+    r"\.repartition\((?:.*\n){0,2}?.*?\.write\b.*?(?:\n.*?)?\.partitionBy\(")
+
+#: Modules allowed to shuffle before a partitioned write, and why.
+SHUFFLED_WRITERS = {
+    # compaction: repartition(n_files) sizes the rewritten files on
+    # purpose, so the file count is the point of the shuffle
+    "maintenance.py",
+    # the bucketed sink: repartition(partition, bucket) writes the
+    # caller's files_per_partition files per partition, by request
+    "sinks/partitioned.py",
+}
+
+
+def _hits(pattern: re.Pattern, under: str = "",
+          across_lines: bool = False) -> dict[str, list[str]]:
     hits: dict[str, list[str]] = {}
     for f in sorted(PACKAGE.rglob("*.py")):
         rel = f.relative_to(PACKAGE).as_posix()
         if not rel.startswith(under):
             continue
-        for n, line in enumerate(f.read_text().splitlines(), 1):
-            if pattern.search(line):
-                hits.setdefault(rel, []).append(f"{rel}:{n}: {line.strip()}")
+        text = f.read_text()
+        lines = text.splitlines()
+        found = ((text.count("\n", 0, m.start()) + 1
+                  for m in pattern.finditer(text)) if across_lines else
+                 (n for n, line in enumerate(lines, 1)
+                  if pattern.search(line)))
+        for n in found:
+            hits.setdefault(rel, []).append(
+                f"{rel}:{n}: {lines[n - 1].strip()}")
     return hits
 
 
 def _assert_only_in(pattern: re.Pattern, allowed: set[str], fix: str,
-                    under: tuple[str, ...] = ("",)):
+                    under: tuple[str, ...] = ("",),
+                    across_lines: bool = False):
     hits = {rel: lines for u in under
-            for rel, lines in _hits(pattern, u).items()}
+            for rel, lines in _hits(pattern, u, across_lines).items()}
     stray = [h for rel, lines in hits.items() if rel not in allowed
              for h in lines]
     assert not stray, f"{fix}:\n" + "\n".join(stray)
@@ -106,3 +134,9 @@ def test_sinks_and_streaming_do_not_import_similarity_for_caps():
     _assert_only_in(SIMILARITY_IMPORT, SIMILARITY_IMPORTERS,
                     "read caps from offload, not operators.similarity",
                     under=("sinks/", "streaming/"))
+
+
+def test_partitioned_writes_laid_out_by_offload():
+    _assert_only_in(SHUFFLED_WRITE, SHUFFLED_WRITERS,
+                    "lay the write out with offload.by_partition",
+                    across_lines=True)

@@ -120,8 +120,10 @@ def test_ivf_ingest_epoch_job_counts(spark, emb_writer):
     # steady swaps training for the quantizer load — a pyarrow driver
     # read since r11, zero Spark jobs (10 -> 6); the "is it trained?"
     # decision is that load alone, no Spark re-read of the centroid
-    # table to tell absent from broken (6 -> 5)
-    assert (boot, steady) == (11, 5), (boot, steady)
+    # table to tell absent from broken (6 -> 5); a kilobyte epoch's
+    # cells write runs as one task, with no shuffle map job by cell
+    # ((11, 5) -> (10, 4))
+    assert (boot, steady) == (10, 4), (boot, steady)
 
 
 def test_ivfpq_ingest_epoch_job_counts(spark, emb_writer):
@@ -136,8 +138,10 @@ def test_ivfpq_ingest_epoch_job_counts(spark, emb_writer):
     # r11: the steady epoch's quantizer/codebooks/meta loads are
     # pyarrow driver reads — zero Spark jobs (17 -> 7); the shared
     # params loader no longer re-reads meta, centroids and codebooks
-    # through Spark first (7 -> 4)
-    assert (boot, steady) == (13, 4), (boot, steady)
+    # through Spark first (7 -> 4); a kilobyte epoch's cells write
+    # runs as one task, with no shuffle map job by cell
+    # ((13, 4) -> (12, 3))
+    assert (boot, steady) == (12, 3), (boot, steady)
 
 
 def test_semantic_ingest_epoch_job_counts(spark, emb_writer):
